@@ -68,6 +68,17 @@ object SparkEntry {
     * "ivfindex-n8i1") — the scratch dir is process-shared, and two
     * queries demanding different parameters under one name would
     * silently reuse whichever staged first. */
+  /** A flat (vec_id, embedding) IVF index at `root` over a codebook
+    * trained from `corpus` itself: the `nCells` lowest-id seeds plus
+    * `iters` Lloyd steps. */
+  private def buildTrainedFlat(corpus: DataFrame, root: java.io.File,
+                               nCells: Int, iters: Int,
+                               payload: Seq[String] = Nil): Unit =
+    Similarity.build(corpus, "vec_id", "embedding", root.getAbsolutePath,
+      IndexLayout.Flat,
+      Seq(Similarity.trainCodebook(corpus, "vec_id", "embedding", nCells,
+        iters)), payload)
+
   private def stagedOnce(name: String, dir: String)(
       build: java.io.File => Unit): java.io.File = {
     val root = scratch(name, dir)
@@ -101,10 +112,10 @@ object SparkEntry {
     * file-skip through the cells manifests. */
   private def maxsimIndexPath(s: SparkSession, dir: String): java.io.File =
     stagedOnce("maxsim-idx-n64", dir) { root =>
-      Similarity.buildIndexJoined(maxsimDocTokenInstances(s, dir),
-        "tok_id", "d_vec",
-        Similarity.syntheticCodebook(s, nCells = 64, dims = MaxsimDims),
-        root.getAbsolutePath, payload = Seq("doc_id"))
+      Similarity.build(maxsimDocTokenInstances(s, dir), "tok_id", "d_vec",
+        root.getAbsolutePath, IndexLayout.Flat,
+        Seq(Similarity.syntheticCodebook(s, nCells = 64, dims = MaxsimDims)),
+        payload = Seq("doc_id"))
       Similarity.compactIndexCells(s, root.getAbsolutePath, "tok_id",
         Similarity.maxsimIndexMaintenanceOptions("tok_id", "doc_id")): Unit
     }
@@ -248,7 +259,7 @@ object SparkEntry {
     * ranked top-k. Generated so the SAME builder replays any step
     * count the engine runs — the CTE chain IS the training loop.
     * `nProbe > 1` ranks each query's cells over the FINAL centroids
-    * and probes the best `nProbe` (the engine's ivfTopKIndexed /
+    * and probes the best `nProbe` (the engine's indexed search /
     * ivfTopKMultiProbe query side); corpus assignment stays rn = 1,
     * so no candidate pair repeats. */
   private def ivfTrainedSql(nCells: Int, iters: Int, qMax: Int, k: Int,
@@ -316,7 +327,7 @@ object SparkEntry {
     * the brute truth over the FILTERED corpus — recall@k per
     * (nProbe, query). Measures how filtered selectivity eats IVF
     * recall (matching rows live only in probed cells), the operating
-    * knob ivfTopKIndexedWhere's scaladoc names. */
+    * knob Similarity.search's scaladoc names. */
   private def ivfFilteredRecallSql(nCells: Int, iters: Int, qMax: Int,
                                    k: Int, probes: Seq[Int],
                                    memberSql: String): String = {
@@ -481,7 +492,7 @@ object SparkEntry {
   }
 
   /** DuckDB oracle for the COMPOSED IVF×PQ index
-    * (Similarity.buildIndexPqJoined / ivfTopKIndexedPq): the
+    * (Similarity.build / search over IndexLayout.Pq): the
     * md5-synthetic coarse codebook + cos-argmax cell assignment of
     * the joined-IVF oracle, the per-subspace L2 Lloyd + encode +
     * decode of [[pqSql]], candidates restricted to each query's
@@ -1067,15 +1078,9 @@ object SparkEntry {
   }
 
   private def maxsimDocTokens(s: SparkSession, dir: String): DataFrame =
-    // r20: typed memoized vector pass — same values, one md5 set per
-    // distinct token per task instead of per row (see
-    // Similarity.withTokenVectors)
-    graft.pipeline.Similarity.withTokenVectors(
-      Tables.documents(s, dir).filter(col("doc_id") < 1500)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-        .filter(length(col("token")) > 0)
-        .distinct(),
-      "token", MaxsimDims, "d_vec")
+    graft.pipeline.Similarity.docTokenVectors(
+      Tables.documents(s, dir).filter(col("doc_id") < 1500),
+      "doc_id", "text", MaxsimDims, "d_vec")
 
   /** Token INSTANCES with a deterministic id for the maxsim token
     * index — THE shared derivation (JsonApi.maxsimTokenInstances:
@@ -2994,7 +2999,7 @@ object SparkEntry {
     }),
 
     // Hybrid with the SEMANTIC half served from a persisted IVF
-    // artifact (semantic.index → ivfTopKIndexedJoined): probing ALL
+    // artifact (semantic.index → Similarity.search): probing ALL
     // 8 cells makes the ANN list exactly the brute list (one
     // candidate per row, identical scoring and tie-breaks), so
     // q_hybrid_search's oracle replays the route while the plan reads
@@ -3002,10 +3007,9 @@ object SparkEntry {
     // nProbe < nCells is q_ann_recall's business, not this oracle's.
     "q_json_hybrid_indexed" -> ((s, dir) => {
       val idx = stagedOnce("ivfjoined-hybrid-n8", dir)(root =>
-        Similarity.buildIndexJoined(Tables.embeddings(s, dir),
-          "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 8, dims = 64),
-          root.getAbsolutePath))
+        Similarity.build(Tables.embeddings(s, dir), "vec_id", "embedding",
+          root.getAbsolutePath, IndexLayout.Flat,
+          Seq(Similarity.syntheticCodebook(s, nCells = 8, dims = 64))))
       JsonApi.search(Tables.documents(s, dir),
           s"""{"terms": ["column", "scan", "window"], "topK": 20,
               "semantic": {"queryId": 0, "k": 20, "nProbe": 8,
@@ -3028,10 +3032,9 @@ object SparkEntry {
     }),
     "q_json_semantic_indexed" -> ((s, dir) => {
       val idx = stagedOnce("ivfjoined-hybrid-n8", dir)(root =>
-        Similarity.buildIndexJoined(Tables.embeddings(s, dir),
-          "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 8, dims = 64),
-          root.getAbsolutePath))
+        Similarity.build(Tables.embeddings(s, dir), "vec_id", "embedding",
+          root.getAbsolutePath, IndexLayout.Flat,
+          Seq(Similarity.syntheticCodebook(s, nCells = 8, dims = 64))))
       JsonApi.search(Tables.documents(s, dir),
         s"""{"semantic": {"queryId": 0, "k": 20, "nProbe": 8,
              "index": "${idx.getAbsolutePath}"}}""",
@@ -3039,8 +3042,8 @@ object SparkEntry {
     }),
 
     // LAYOUT-DISPATCHED semantic serving: the same JSON shape against
-    // a COMPOSED IVF×PQ artifact routes (JsonApi.semanticIndexed, the
-    // query plane's retrainDispatch) to ivfTopKIndexedPq — the
+    // a COMPOSED IVF×PQ artifact serves (Similarity.search under the
+    // detected IndexLayout.Pq) by the
     // codes-only candidate scan + bounded float re-rank, i.e. the
     // artifact answers in its STORED form, never a float rescan of
     // probed cells. Restrictive nProbe=8/64; the generated oracle
@@ -3049,9 +3052,10 @@ object SparkEntry {
     "q_json_semantic_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = stagedOnce("ivfpq-n64m8k16i1", dir)(root =>
-        Similarity.buildIndexPqJoined(emb, "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 64, dims = 64),
-          dims = 64, m = 8, kCents = 16, iters = 1, root.getAbsolutePath))
+        Similarity.build(emb, "vec_id", "embedding", root.getAbsolutePath,
+          IndexLayout.Pq(m = 8, kCents = 16),
+          Seq(Similarity.syntheticCodebook(s, nCells = 64, dims = 64)),
+          pqIters = 1))
       JsonApi.search(Tables.documents(s, dir),
         s"""{"semantic": {"queryId": 0, "k": 20, "nProbe": 8,
              "shortlist": 80, "index": "${idx.getAbsolutePath}"}}""",
@@ -3060,7 +3064,7 @@ object SparkEntry {
 
     // FILTERED ("nearest WHERE") vector search over the JSON request
     // layer: the semantic block's `where` compiles payload-column
-    // predicates INSIDE the probed-cell scan (ivfTopKIndexedWhere —
+    // predicates INSIDE the probed-cell scan (Similarity.search —
     // PushedFilters before scoring, contiguous ranks over the
     // matching set), closing the last serving gap of the library's
     // flagship primitive. Same artifact/predicate/operating point as
@@ -3068,8 +3072,7 @@ object SparkEntry {
     "q_json_semantic_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = stagedOnce("ivffilt-n8i1", dir)(root =>
-        Similarity.buildIndex(emb, "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 1,
+        buildTrainedFlat(emb, root, nCells = 8, iters = 1,
           payload = Seq("label")))
       JsonApi.search(Tables.documents(s, dir),
         s"""{"semantic": {"queryId": 0, "k": 3, "nProbe": 2,
@@ -3599,12 +3602,13 @@ object SparkEntry {
       // contract): the persisted codebooks + codes are staged, the
       // timed body is load-codebook → decode-score → float re-rank
       val idx = stagedOnce("pqindex-m8k16i1", dir)(root =>
-        Similarity.buildPqIndex(emb, "vec_id", "embedding",
-          dims = 64, m = 8, kCents = 16, iters = 1, root.getAbsolutePath))
+        Similarity.build(emb, "vec_id", "embedding", root.getAbsolutePath,
+          IndexLayout.PqCodes(m = 8, kCents = 16), Nil, pqIters = 1))
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.pqTopKIndexed(s, q, "q_id", "q_vec", idx.getAbsolutePath,
-          emb, "vec_id", "embedding", k = 3, shortlist = 10)
+      Similarity.search(s, q, "q_id", "q_vec", idx.getAbsolutePath,
+          "vec_id", "embedding", k = 3, shortlist = Some(10),
+          floats = Some(emb))
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
     }),
@@ -3615,18 +3619,19 @@ object SparkEntry {
     // decoded PQ codes (the scan projects the m-code column, never
     // floats), the shortlist re-ranks on true floats. The generated
     // oracle replays coarse codebook, assignment, PQ training,
-    // encoding and both rankings (Similarity.ivfTopKIndexedPq).
+    // encoding and both rankings (Similarity.search, IndexLayout.Pq).
     "q_knn_ivf_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = stagedOnce("ivfpq-n64m8k16i1", dir)(root =>
-        Similarity.buildIndexPqJoined(emb, "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 64, dims = 64),
-          dims = 64, m = 8, kCents = 16, iters = 1, root.getAbsolutePath))
+        Similarity.build(emb, "vec_id", "embedding", root.getAbsolutePath,
+          IndexLayout.Pq(m = 8, kCents = 16),
+          Seq(Similarity.syntheticCodebook(s, nCells = 64, dims = 64)),
+          pqIters = 1))
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexedPq(s, q, "q_id", "q_vec",
+      Similarity.search(s, q, "q_id", "q_vec",
           idx.getAbsolutePath, "vec_id", "embedding",
-          k = 3, shortlist = 10, nProbe = 8)
+          k = 3, nProbe = 8, shortlist = Some(10))
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
     }),
@@ -3642,14 +3647,15 @@ object SparkEntry {
     "q_knn_ivf_pq_residual" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = stagedOnce("ivfpqres-n64m8k16i1", dir)(root =>
-        Similarity.buildIndexPqResidual(emb, "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 64, dims = 64),
-          dims = 64, m = 8, kCents = 16, iters = 1, root.getAbsolutePath))
+        Similarity.build(emb, "vec_id", "embedding", root.getAbsolutePath,
+          IndexLayout.Pq(m = 8, kCents = 16, residual = true),
+          Seq(Similarity.syntheticCodebook(s, nCells = 64, dims = 64)),
+          pqIters = 1))
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexedPqResidual(s, q, "q_id", "q_vec",
+      Similarity.search(s, q, "q_id", "q_vec",
           idx.getAbsolutePath, "vec_id", "embedding",
-          k = 3, shortlist = 10, nProbe = 8)
+          k = 3, nProbe = 8, shortlist = Some(10))
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
     }),
@@ -3657,7 +3663,7 @@ object SparkEntry {
     // FILTERED vector search on the COMPOSED IVF×PQ layout — the
     // 100 TB serving form of "nearest neighbors WHERE tenant/label":
     // the index carries the label payload in its cells rows
-    // (buildIndexPqJoined payload), the predicate applies inside the
+    // (build payload), the predicate applies inside the
     // probed-cell scan BEFORE any code decodes (PushedFilters on the
     // codes scan — non-matching rows never ship their m-code column),
     // and the shortlist/re-rank run over the matching set only, so
@@ -3666,15 +3672,15 @@ object SparkEntry {
     "q_knn_ivf_pq_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = stagedOnce("ivfpqfilt-n64m8k16i1", dir)(root =>
-        Similarity.buildIndexPqJoined(emb, "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 64, dims = 64),
-          dims = 64, m = 8, kCents = 16, iters = 1, root.getAbsolutePath,
-          payload = Seq("label")))
+        Similarity.build(emb, "vec_id", "embedding", root.getAbsolutePath,
+          IndexLayout.Pq(m = 8, kCents = 16),
+          Seq(Similarity.syntheticCodebook(s, nCells = 64, dims = 64)),
+          payload = Seq("label"), pqIters = 1))
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexedPq(s, q, "q_id", "q_vec",
+      Similarity.search(s, q, "q_id", "q_vec",
           idx.getAbsolutePath, "vec_id", "embedding",
-          k = 3, shortlist = 10, nProbe = 8,
+          k = 3, nProbe = 8, shortlist = Some(10),
           where = Some(col("label").isin(2, 5)))
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
@@ -3697,8 +3703,8 @@ object SparkEntry {
           "vec_id", "embedding",
           Similarity.seedCodebook(corpus, "vec_id", "embedding", 32),
           maxIters = 3, eps = 0.0)
-        Similarity.buildIndexPqJoined(corpus, "vec_id", "embedding", cb,
-          dims = 64, m = 8, kCents = 16, iters = 1, root.getAbsolutePath)
+        Similarity.build(corpus, "vec_id", "embedding", root.getAbsolutePath,
+          IndexLayout.Pq(m = 8, kCents = 16), Seq(cb), pqIters = 1)
       }
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -3709,9 +3715,9 @@ object SparkEntry {
         () => Similarity.bruteForceTopK(q, emb, "q_id", "q_vec",
             "vec_id", "embedding", k = 3)
           .select(col("q_id"), col("vec_id").as("neighbor_id")),
-        () => Similarity.ivfTopKIndexedPq(s, q, "q_id", "q_vec",
+        () => Similarity.search(s, q, "q_id", "q_vec",
             idx.getAbsolutePath, "vec_id", "embedding",
-            k = 3, shortlist = 30, nProbe = 2)
+            k = 3, nProbe = 2, shortlist = Some(30))
           .select(col("q_id"), col("vec_id").as("neighbor_id"),
             lit(1).as("__hit"))))
       truth.join(broadcast(ann), Seq("q_id", "neighbor_id"), "left")
@@ -3736,8 +3742,9 @@ object SparkEntry {
           "vec_id", "embedding",
           Similarity.seedCodebook(corpus, "vec_id", "embedding", 32),
           maxIters = 3, eps = 0.0)
-        Similarity.buildIndexPqResidual(corpus, "vec_id", "embedding", cb,
-          dims = 64, m = 8, kCents = 16, iters = 1, root.getAbsolutePath)
+        Similarity.build(corpus, "vec_id", "embedding", root.getAbsolutePath,
+          IndexLayout.Pq(m = 8, kCents = 16, residual = true), Seq(cb),
+          pqIters = 1)
       }
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -3747,9 +3754,9 @@ object SparkEntry {
         () => Similarity.bruteForceTopK(q, emb, "q_id", "q_vec",
             "vec_id", "embedding", k = 3)
           .select(col("q_id"), col("vec_id").as("neighbor_id")),
-        () => Similarity.ivfTopKIndexedPqResidual(s, q, "q_id", "q_vec",
+        () => Similarity.search(s, q, "q_id", "q_vec",
             idx.getAbsolutePath, "vec_id", "embedding",
-            k = 3, shortlist = 30, nProbe = 2)
+            k = 3, nProbe = 2, shortlist = Some(30))
           .select(col("q_id"), col("vec_id").as("neighbor_id"),
             lit(1).as("__hit"))))
       truth.join(broadcast(ann), Seq("q_id", "neighbor_id"), "left")
@@ -3863,10 +3870,10 @@ object SparkEntry {
     // corpus — same (nProbe, candTok) restriction, same ranks.
     "q_erasure_maxsim" -> ((s, dir) => {
       val idx = stagedOnce("maxsim-idx-del-n64", dir) { root =>
-        Similarity.buildIndexJoined(maxsimDocTokenInstances(s, dir),
-          "tok_id", "d_vec",
-          Similarity.syntheticCodebook(s, nCells = 64, dims = MaxsimDims),
-          root.getAbsolutePath, payload = Seq("doc_id"))
+        Similarity.build(maxsimDocTokenInstances(s, dir), "tok_id", "d_vec",
+          root.getAbsolutePath, IndexLayout.Flat,
+          Seq(Similarity.syntheticCodebook(s, nCells = 64, dims = MaxsimDims)),
+          payload = Seq("doc_id"))
         def cohort(r: Int) = maxsimDocTokenInstances(s, dir)
           .filter(col("doc_id") % 7 === r)
           .select(col("doc_id")).distinct()
@@ -3969,7 +3976,7 @@ object SparkEntry {
     }),
 
     // pipeline: search THROUGH a persisted IVF index
-    // (Similarity.buildIndex: trained codebook parquet + the corpus
+    // (Similarity.build: trained codebook parquet + the corpus
     // rewritten cell-partitioned). Staged once per process; the timed
     // body is what a 100 TB deployment runs per query: load the tiny
     // codebook, rank probe cells, scan ONLY the probed cell
@@ -3978,11 +3985,10 @@ object SparkEntry {
     // so the generated one-step oracle replays it bit for bit.
     "q_knn_ivf_indexed" -> ((s, dir) => {
       val idx = stagedOnce("ivfindex-n8i1", dir)(root =>
-        Similarity.buildIndex(Tables.embeddings(s, dir), "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 1))
+        buildTrainedFlat(Tables.embeddings(s, dir), root, nCells = 8, iters = 1))
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexed(s, q, "q_id", "q_vec", idx.getAbsolutePath,
+      Similarity.search(s, q, "q_id", "q_vec", idx.getAbsolutePath,
         "vec_id", "embedding", k = 3, nProbe = 1)
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
@@ -3990,15 +3996,14 @@ object SparkEntry {
 
     // INDEX DRIFT report (Similarity.indexDriftReport) — the
     // measurement behind "rebuild when drift warrants it" and the
-    // trigger for retrainIndex: per cell, live rows and the mean
+    // trigger for retrain: per cell, live rows and the mean
     // angular distance to the stored centroid as exact micro-longs
     // (per-row floor before the sum, one division, one floor — the
     // BM25 integer trick, so the oracle replays it digit for digit
     // from the same trained-assignment chain).
     "q_index_drift" -> ((s, dir) => {
       val idx = stagedOnce("ivfindex-n8i1", dir)(root =>
-        Similarity.buildIndex(Tables.embeddings(s, dir), "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 1))
+        buildTrainedFlat(Tables.embeddings(s, dir), root, nCells = 8, iters = 1))
       Similarity.indexDriftReport(s, idx.getAbsolutePath,
         "vec_id", "embedding")
     }),
@@ -4023,7 +4028,7 @@ object SparkEntry {
         .select(col("id"), col("rrf_micro"), col("lists_hit"), col("rank"))
     }),
 
-    // ATOMIC RETRAIN (Similarity.retrainIndex + IndexGen): the index
+    // ATOMIC RETRAIN (Similarity.retrain + IndexGen): the index
     // is built UNTRAINED (iters=0: the seed codebook), then retrained
     // in place — live cells re-read through their manifests, one
     // Lloyd step from the persisted codebook, and the refreshed
@@ -4034,14 +4039,13 @@ object SparkEntry {
     // are pinned in IndexGenSpec (old XOR new, never a mix).
     "q_index_retrain" -> ((s, dir) => {
       val idx = stagedOnce("ivfretrain-n8", dir) { root =>
-        Similarity.buildIndex(Tables.embeddings(s, dir), "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 0)
-        Similarity.retrainIndex(s, root.getAbsolutePath,
+        buildTrainedFlat(Tables.embeddings(s, dir), root, nCells = 8, iters = 0)
+        Similarity.retrain(s, root.getAbsolutePath,
           "vec_id", "embedding", maxIters = 1): Unit
       }
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexed(s, q, "q_id", "q_vec", idx.getAbsolutePath,
+      Similarity.search(s, q, "q_id", "q_vec", idx.getAbsolutePath,
         "vec_id", "embedding", k = 3, nProbe = 1)
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
@@ -4056,17 +4060,16 @@ object SparkEntry {
     // exactly where an off-by-one in cell ranking would hide).
     "q_knn_ivf_indexed_mp" -> ((s, dir) => {
       val idx = stagedOnce("ivfindex-n8i1", dir)(root =>
-        Similarity.buildIndex(Tables.embeddings(s, dir), "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 1))
+        buildTrainedFlat(Tables.embeddings(s, dir), root, nCells = 8, iters = 1))
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexed(s, q, "q_id", "q_vec", idx.getAbsolutePath,
+      Similarity.search(s, q, "q_id", "q_vec", idx.getAbsolutePath,
         "vec_id", "embedding", k = 3, nProbe = 2)
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
     }),
 
-    // FILTERED vector search (Similarity.ivfTopKIndexedWhere): the
+    // FILTERED vector search (Similarity.search with `where`): the
     // index carries the label payload IN its cells rows, so
     // "neighbors WHERE label IN (2,5)" pushes the predicate into the
     // probed-cell parquet scan (PushedFilters) and scores only
@@ -4075,21 +4078,20 @@ object SparkEntry {
     // side with the same membership predicate.
     "q_knn_ivf_filtered" -> ((s, dir) => {
       val idx = stagedOnce("ivffilt-n8i1", dir)(root =>
-        Similarity.buildIndex(Tables.embeddings(s, dir), "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 1,
-          payload = Seq("label")))
+        buildTrainedFlat(Tables.embeddings(s, dir), root, nCells = 8,
+          iters = 1, payload = Seq("label")))
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexedWhere(s, q, "q_id", "q_vec",
+      Similarity.search(s, q, "q_id", "q_vec",
         idx.getAbsolutePath, "vec_id", "embedding", k = 3, nProbe = 2,
-        where = col("label").isin(2, 5))
+        where = Some(col("label").isin(2, 5)))
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
     }),
 
     // RECALL of FILTERED vector search vs the brute truth over the
     // filtered corpus, across nProbe — the measured answer to
-    // ivfTopKIndexedWhere's "filtered selectivity eats recall"
+    // filtered search's "filtered selectivity eats recall"
     // caveat: matching rows live only in probed cells, so a sharp
     // filter starves restrictive probes and recall climbs with
     // nProbe. Same fixture as q_knn_ivf_filtered; the oracle replays
@@ -4098,9 +4100,8 @@ object SparkEntry {
     // arithmetic. Measured table in BENCHMARKS.md.
     "q_ann_recall_filtered" -> ((s, dir) => {
       val idx = stagedOnce("ivffilt-n8i1", dir)(root =>
-        Similarity.buildIndex(Tables.embeddings(s, dir), "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 1,
-          payload = Seq("label")))
+        buildTrainedFlat(Tables.embeddings(s, dir), root, nCells = 8,
+          iters = 1, payload = Seq("label")))
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -4116,9 +4117,9 @@ object SparkEntry {
             "vec_id", "embedding", k = 3)
           .select(col("q_id"), col("vec_id").as("neighbor_id"))) +:
         FilteredRecallProbes.map(np => () =>
-          Similarity.ivfTopKIndexedWhere(s, q, "q_id", "q_vec",
+          Similarity.search(s, q, "q_id", "q_vec",
               idx.getAbsolutePath, "vec_id", "embedding", k = 3,
-              nProbe = np, where = col("label").isin(2, 5))
+              nProbe = np, where = Some(col("label").isin(2, 5)))
             .select(lit(np).as("n_probe"), col("q_id"),
               col("vec_id").as("neighbor_id"), lit(1).as("__hit"))))
       val truth = built.head
@@ -4147,8 +4148,7 @@ object SparkEntry {
     "q_erasure_ann" -> ((s, dir) => {
       val idx = stagedOnce("ivfdel-n8i1", dir) { root =>
         val emb = Tables.embeddings(s, dir)
-        Similarity.buildIndex(emb, "vec_id", "embedding",
-          root.getAbsolutePath, nCells = 8, iters = 1)
+        buildTrainedFlat(emb, root, nCells = 8, iters = 1)
         def cohort(r: Int) = emb.filter(col("vec_id") % 10 === r)
           .select(col("vec_id"))
         Similarity.deleteFromIndex(s, root.getAbsolutePath,
@@ -4159,7 +4159,7 @@ object SparkEntry {
       }
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexed(s, q, "q_id", "q_vec", idx.getAbsolutePath,
+      Similarity.search(s, q, "q_id", "q_vec", idx.getAbsolutePath,
         "vec_id", "embedding", k = 3, nProbe = 1)
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
@@ -4177,13 +4177,12 @@ object SparkEntry {
     // cells over this corpus.
     "q_knn_ivf_joined" -> ((s, dir) => {
       val idx = stagedOnce("ivfjoined-n4096", dir)(root =>
-        Similarity.buildIndexJoined(Tables.embeddings(s, dir),
-          "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 4096, dims = 64),
-          root.getAbsolutePath))
+        Similarity.build(Tables.embeddings(s, dir), "vec_id", "embedding",
+          root.getAbsolutePath, IndexLayout.Flat,
+          Seq(Similarity.syntheticCodebook(s, nCells = 4096, dims = 64))))
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexedJoined(s, q, "q_id", "q_vec",
+      Similarity.search(s, q, "q_id", "q_vec",
         idx.getAbsolutePath, "vec_id", "embedding", k = 3, nProbe = 32)
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
@@ -4197,15 +4196,14 @@ object SparkEntry {
     // partition-pruned index).
     "q_knn_ivf_quantized" -> ((s, dir) => {
       val idx = stagedOnce("ivfquant-n4096", dir)(root =>
-        Similarity.buildIndexQuantizedJoined(Tables.embeddings(s, dir),
-          "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 4096, dims = 64),
-          root.getAbsolutePath))
+        Similarity.build(Tables.embeddings(s, dir), "vec_id", "embedding",
+          root.getAbsolutePath, IndexLayout.Quantized(),
+          Seq(Similarity.syntheticCodebook(s, nCells = 4096, dims = 64))))
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexedQuantized(s, q, "q_id", "q_vec",
+      Similarity.search(s, q, "q_id", "q_vec",
         idx.getAbsolutePath, "vec_id", "embedding", k = 3,
-        shortlist = 10, nProbe = 32)
+        nProbe = 32, shortlist = Some(10))
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
     }),
@@ -4223,11 +4221,11 @@ object SparkEntry {
     // refineUntilConverged) and recall follows coarseProbe/nProbe.
     "q_ann_recall_two_level" -> ((s, dir) => {
       val idx = stagedOnce("ivf2lvl-f4096c64", dir)(root =>
-        Similarity.buildIndexTwoLevel(Tables.embeddings(s, dir),
-          "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 4096, dims = 64),
-          Similarity.syntheticCodebook(s, nCells = 64, dims = 64, tag = "cc"),
-          coarseProbe = 2, root.getAbsolutePath))
+        Similarity.build(Tables.embeddings(s, dir), "vec_id", "embedding",
+          root.getAbsolutePath, IndexLayout.TwoLevel(coarseProbe = 2),
+          Seq(Similarity.syntheticCodebook(s, nCells = 4096, dims = 64),
+            Similarity.syntheticCodebook(s, nCells = 64, dims = 64,
+              tag = "cc"))))
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -4237,9 +4235,8 @@ object SparkEntry {
         () => Similarity.bruteForceTopK(q, emb, "q_id", "q_vec",
             "vec_id", "embedding", k = 3)
           .select(col("q_id"), col("vec_id").as("neighbor_id")),
-        () => Similarity.ivfTopKIndexedTwoLevel(s, q, "q_id", "q_vec",
-            idx.getAbsolutePath, "vec_id", "embedding", k = 3,
-            coarseProbe = 2, nProbe = 8)
+        () => Similarity.search(s, q, "q_id", "q_vec",
+            idx.getAbsolutePath, "vec_id", "embedding", k = 3, nProbe = 8)
           .select(col("q_id"), col("vec_id").as("neighbor_id"),
             lit(1).as("__hit"))))
       truth.join(broadcast(ann), Seq("q_id", "neighbor_id"), "left")
@@ -4259,16 +4256,15 @@ object SparkEntry {
     // partition-pruned search tail over `cell_id=N/` directories.
     "q_knn_ivf_two_level" -> ((s, dir) => {
       val idx = stagedOnce("ivf2lvl-f4096c64", dir)(root =>
-        Similarity.buildIndexTwoLevel(Tables.embeddings(s, dir),
-          "vec_id", "embedding",
-          Similarity.syntheticCodebook(s, nCells = 4096, dims = 64),
-          Similarity.syntheticCodebook(s, nCells = 64, dims = 64, tag = "cc"),
-          coarseProbe = 2, root.getAbsolutePath))
+        Similarity.build(Tables.embeddings(s, dir), "vec_id", "embedding",
+          root.getAbsolutePath, IndexLayout.TwoLevel(coarseProbe = 2),
+          Seq(Similarity.syntheticCodebook(s, nCells = 4096, dims = 64),
+            Similarity.syntheticCodebook(s, nCells = 64, dims = 64,
+              tag = "cc"))))
       val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopKIndexedTwoLevel(s, q, "q_id", "q_vec",
-        idx.getAbsolutePath, "vec_id", "embedding", k = 3,
-        coarseProbe = 2, nProbe = 8)
+      Similarity.search(s, q, "q_id", "q_vec",
+        idx.getAbsolutePath, "vec_id", "embedding", k = 3, nProbe = 8)
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
           round(col("cos_sim"), 4).as("cos_sim_r"))
     }),

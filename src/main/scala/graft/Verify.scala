@@ -9,6 +9,13 @@ object Verify {
     // optional extra args = run only these queries (local iteration;
     // the driver always passes exactly two args)
     val only = args.drop(2).toSet
+    // a typo'd name would run nothing and "succeed"
+    val unknown = only -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

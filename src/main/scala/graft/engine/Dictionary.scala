@@ -75,13 +75,7 @@ object Dictionary {
       df.select(col(valueCol).as("value")).filter(col("value").isNotNull).distinct()
     // TakeOrderedAndProject: one job, no full-sort shuffle for the probe
     val head = distinct.orderBy(col("value")).limit(maxLocalValues + 1).collect()
-    val byteBudget = {
-      val b = try {
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-      } catch { case _: Exception => 10L << 20 }
-      if (b > 0) b else 10L << 20 // threshold -1 disables broadcast, not dicts
-    }
+    val byteBudget = Staging.broadcastBudget(spark)
     def approxBytes: Long = {
       var b = 0L
       var i = 0

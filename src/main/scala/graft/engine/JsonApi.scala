@@ -92,31 +92,23 @@ object JsonApi {
     Records.searchGroups(events, JsonDsl.groupRecordsSearch(json, registry))
 
   /** The canonical token-INSTANCE derivation shared by maxsim index
-    * builds and the indexed request route: DISTINCT (doc, token)
-    * pairs (maxsim's max over a multiset equals the max over its
-    * set), md5 token vectors, and the deterministic instance id
+    * builds and the indexed request route: the
+    * [[graft.pipeline.Similarity.docTokenVectors]] pairs plus the
+    * deterministic instance id
     * `doc·1e6 + rank-of-token-within-doc` — the composite that keeps
     * every id < 1e12 for corpora with < 1e6 distinct tokens per doc
     * and ids < ~9e5 million. An index named by a maxsim request MUST
     * have been built over exactly this frame
-    * (`Similarity.buildIndexJoined(tokenInstances(...), "tok_id",
-    * "d_vec", …, payload = Seq(idCol))`) — one definition here, so
+    * (`Similarity.build(tokenInstances(...), "tok_id", "d_vec", …,
+    * IndexLayout.Flat, …, payload = Seq(idCol))`) — one definition here, so
     * build and serving can never drift. */
   def maxsimTokenInstances(docs: DataFrame, idCol: String, textCol: String,
                            dims: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("__tok"))
-    // r20: vectors via the typed memoized pass (Similarity
-    // .withTokenVectors) — the Catalyst tokenVector chain re-derived
-    // dims md5s per (doc, token) row and dominated every maxsim
-    // body's cost; values are bit-identical
-    graft.pipeline.Similarity.withTokenVectors(
-      docs
-        .select(col(idCol), explode(split(col(textCol), " ")).as("__tok"))
-        .filter(length(col("__tok")) > 0)
-        .distinct(),
-      "__tok", dims, "d_vec")
+    graft.pipeline.Similarity.docTokenVectors(docs, idCol, textCol, dims,
+        "d_vec")
       .withColumn("tok_id",
         col(idCol) * 1000000L + row_number().over(w))
       .select(col("tok_id"), col(idCol), col("d_vec"))
@@ -209,14 +201,8 @@ object JsonApi {
             "__q_id", "__q_pos", "__q_vec", path, "tok_id", "d_vec",
             idCol, k, ms.nProbe, ms.candTok)
         case None =>
-          // r20: typed memoized vector pass (values identical) — see
-          // maxsimTokenInstances
-          val dt = graft.pipeline.Similarity.withTokenVectors(
-            docs
-              .select(col(idCol), explode(split(col(textCol), " ")).as("__tok"))
-              .filter(length(col("__tok")) > 0)
-              .distinct(),
-            "__tok", ms.dims, "__d_vec")
+          val dt = graft.pipeline.Similarity.docTokenVectors(docs, idCol,
+            textCol, ms.dims, "__d_vec")
           graft.pipeline.Similarity.maxSimTopK(qt, dt,
             "__q_id", "__q_pos", "__q_vec", idCol, "__d_vec", k)
       }
@@ -414,73 +400,26 @@ object JsonApi {
       req.snippet.get, restrictTo = Some(hits))
   }
 
-  /** LAYOUT-DISPATCHED ANN serving for a semantic block naming an
-    * index — the query plane's twin of the maintenance plane's
-    * `Similarity.retrainDispatch`: the ARTIFACT'S detected layout
-    * picks the serving form, so every artifact answers in its STORED
-    * form. A composed IVF×PQ / residual artifact serves by its
-    * codes-only candidate scan (the memory/IO advantage those layouts
-    * exist for — never a float rescan), quantized by the int8
-    * candidate pass, two-level through its coarse hierarchy
-    * (coarseProbe from the artifact's own `twolevel_meta`; the
-    * request knob covers only pre-meta artifacts), codes-only PQ by
-    * the asymmetric decode with the embeddings frame re-ranking
-    * floats, and flat by the probed joined tail.
-    *
+  /** ANN serving for a semantic block naming an index: the ARTIFACT'S
+    * detected [[graft.pipeline.IndexLayout]] picks the serving form
+    * inside [[graft.pipeline.Similarity.search]], so every artifact
+    * answers in its STORED form (codes or int8 candidates for the
+    * lossy layouts, the coarse hierarchy for two-level; the
+    * embeddings frame re-ranks a codes-only artifact's shortlist).
     * `where` (payload-column predicates) compiles once and applies
-    * INSIDE the probed-cell scan on every cells layout — parquet
-    * PushedFilters before any vector/code bytes decode, ranks
-    * contiguous over the matching set. */
+    * INSIDE the probed-cell scan — parquet PushedFilters before any
+    * vector/code bytes decode, ranks contiguous over the matching
+    * set. */
   private def semanticIndexed(spark: SparkSession, q: DataFrame,
                               path: String, emb: DataFrame,
                               embId: String, embVec: String,
-                              s: graft.model.SemanticSearch): DataFrame = {
-    import graft.pipeline.{IndexGen, Similarity}
-    val root = IndexGen.resolveRoot(spark, path)
-    val where =
-      if (s.where.isEmpty) None
-      else Some(Exprs.and(s.where.map(Exprs.propPredicate)))
-    val sl = s.shortlist.getOrElse(4 * s.k)
-    Similarity.indexLayout(spark, root) match {
-      case "pq" =>
-        if (Similarity.readPqMeta(spark, root).getOrElse(false))
-          Similarity.ivfTopKIndexedPqResidual(spark, q, "__q_id", "__q_vec",
-            path, embId, embVec, k = s.k, shortlist = sl,
-            nProbe = s.nProbe, where = where)
-        else
-          Similarity.ivfTopKIndexedPq(spark, q, "__q_id", "__q_vec",
-            path, embId, embVec, k = s.k, shortlist = sl,
-            nProbe = s.nProbe, where = where)
-      case "quantized" =>
-        Similarity.ivfTopKIndexedQuantized(spark, q, "__q_id", "__q_vec",
-          path, embId, embVec, k = s.k, shortlist = sl,
-          nProbe = s.nProbe, where = where)
-      case "two_level" =>
-        val cp = Similarity.readTwoLevelMeta(spark, root)
-          .orElse(s.coarseProbe)
-          .getOrElse(throw new IllegalArgumentException(
-            s"$path predates twolevel_meta — supply semantic.coarseProbe"))
-        Similarity.ivfTopKIndexedTwoLevel(spark, q, "__q_id", "__q_vec",
-          path, embId, embVec, k = s.k, coarseProbe = cp,
-          nProbe = s.nProbe, where = where)
-      case "pq_codes" =>
-        if (where.nonEmpty)
-          throw new IllegalArgumentException(
-            "a codes-only PQ artifact stores no payload columns — " +
-              "filtered search needs a cells layout")
-        Similarity.pqTopKIndexed(spark, q, "__q_id", "__q_vec",
-          path, emb, embId, embVec, k = s.k, shortlist = sl)
-      case _ =>
-        where match {
-          case Some(w) =>
-            Similarity.ivfTopKIndexedWhere(spark, q, "__q_id", "__q_vec",
-              path, embId, embVec, k = s.k, nProbe = s.nProbe, where = w)
-          case None =>
-            Similarity.ivfTopKIndexedJoined(spark, q, "__q_id", "__q_vec",
-              path, embId, embVec, k = s.k, nProbe = s.nProbe)
-        }
-    }
-  }
+                              s: graft.model.SemanticSearch): DataFrame =
+    graft.pipeline.Similarity.search(spark, q, "__q_id", "__q_vec", path,
+      embId, embVec, k = s.k, nProbe = s.nProbe, shortlist = s.shortlist,
+      where =
+        if (s.where.isEmpty) None
+        else Some(Exprs.and(s.where.map(Exprs.propPredicate))),
+      floats = Some(emb))
 
   /** Run a SAVED report (reference platform/src/reports.rs +
     * query dispatch on `Type`): the stored JSON body replays through

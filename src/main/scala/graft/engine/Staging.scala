@@ -54,6 +54,19 @@ object Staging {
         s"$ModeKey must be local|reliable|parquet, got '$other'")
     }
 
+  /** The session's broadcast budget in bytes:
+    * `spark.sql.autoBroadcastJoinThreshold`, 10 MB when unset or
+    * unparsable — and when ≤ 0: -1 disables broadcast JOINS, not the
+    * byte budgets that gate small driver-side or broadcast frames. */
+  private[graft] def broadcastBudget(
+      spark: SparkSession): Long = {
+    val b = try {
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
+    } catch { case _: Exception => 10L << 20 }
+    if (b > 0) b else 10L << 20
+  }
+
   /** Materialize an intermediate frame and cut its lineage under the
     * session's staging mode. `eager` defers materialization to the
     * first action in `local` mode (a frame that might not be consumed

@@ -311,9 +311,6 @@ object JsonDsl {
         val shortlist = s.asOpt("shortlist").map(_.int)
         if (shortlist.exists(_ < 1))
           throw JsonError("semantic shortlist must be >= 1")
-        val coarseProbe = s.asOpt("coarseProbe").map(_.int)
-        if (coarseProbe.exists(_ < 1))
-          throw JsonError("semantic coarseProbe must be >= 1")
         // the filtered-search predicate: payload COLUMNS of the named
         // index (index-local physical names, deliberately NOT
         // registry-resolved properties), each {"column", "op",
@@ -328,8 +325,7 @@ object JsonDsl {
         SemanticSearch(
           (s / "queryId").long, s.asOpt("k").map(_.int).getOrElse(20),
           index = s.asOpt("index").map(_.str),
-          nProbe = nProbe, where = where, shortlist = shortlist,
-          coarseProbe = coarseProbe)
+          nProbe = nProbe, where = where, shortlist = shortlist)
       },
       fuseTopK = j.asOpt("fuseTopK").map(_.int).getOrElse(10),
       weights = weights,

@@ -392,14 +392,13 @@ final case class AnalyzerSpec(lowercase: Boolean = false,
   * Filtered selectivity eats recall like any IVF restriction — raise
   * `nProbe` as filters sharpen. `shortlist` bounds the re-rank
   * candidate set of the compressed layouts (PQ/residual/quantized
-  * and the codes-only artifact; default 4·k); `coarseProbe` covers
-  * only pre-twolevel_meta artifacts, which cannot say their own. */
+  * and the codes-only artifact; default 4·k). A two-level index
+  * probes under its own persisted coarseProbe. */
 final case class SemanticSearch(queryId: Long, k: Int = 20,
                                 index: Option[String] = None,
                                 nProbe: Int = 1,
                                 where: Seq[PropFilter] = Nil,
-                                shortlist: Option[Int] = None,
-                                coarseProbe: Option[Int] = None)
+                                shortlist: Option[Int] = None)
 
 /** The passage mode of a [[SearchRequest]]: chunk the corpus into
   * `window`-token spans with `stride` overlap, BM25 the chunk corpus,

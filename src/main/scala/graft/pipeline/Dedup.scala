@@ -335,30 +335,18 @@ object Dedup {
     df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        // token → hash memo, task-lived: natural-language token
-        // frequency is Zipfian, so most md5 calls are repeats of a
-        // small vocabulary — hashing each DISTINCT token once per
-        // task cuts the digest count by the corpus's repetition
-        // factor (same values: the memo stores exactly the function
-        // of the token). Size-capped so an adversarial all-unique
-        // token stream degrades to the uncached cost, never to an
-        // unbounded map.
-        val memo = new java.util.HashMap[String, java.lang.Long](1 << 16)
-        val memoCap = 1 << 20
-        def tokHash(t: String): Long = {
-          val hit = memo.get(t)
-          if (hit != null) hit.longValue
-          else {
-            val d = md.digest(t.getBytes("UTF-8"))
-            var h = 0L
-            var j = 0
-            while (j < 7) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-            h = (h << 4) | ((d(7) & 0xf0L) >> 4) // first 15 hex digits = top 60 bits
-            h = h % mod
-            if (memo.size < memoCap) memo.put(t, java.lang.Long.valueOf(h)): Unit
-            h
-          }
-        }
+        // task-lived token → hash memo (TaskMemo: byte-bounded, values
+        // exactly the function of the token)
+        val memo = new TaskMemo[java.lang.Long](TaskMemo.MaxBytes,
+            TaskMemo.LongBytes)({ t =>
+          val d = md.digest(t.getBytes("UTF-8"))
+          var h = 0L
+          var j = 0
+          while (j < 7) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
+          h = (h << 4) | ((d(7) & 0xf0L) >> 4) // first 15 hex digits = top 60 bits
+          java.lang.Long.valueOf(h % mod)
+        })
+        def tokHash(t: String): Long = memo(t).longValue
         it.map { case (id, text) =>
           // split(" ", -1) keeps empty tokens like Spark's split() and
           // DuckDB's string_split
@@ -663,25 +651,17 @@ object Dedup {
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        // task-lived token→hash memo, same rationale and cap as
-        // [[portableShingleHashes]]: Zipfian token repetition means
-        // most digests are recomputations of a small vocabulary
-        val memo = new java.util.HashMap[String, java.lang.Long](1 << 16)
-        val memoCap = 1 << 20
-        def tokHash(t: String): Long = {
-          val hit = memo.get(t)
-          if (hit != null) hit.longValue
-          else {
-            val d = md.digest(t.getBytes("UTF-8"))
-            // first 15 hex chars = 7.5 bytes, big-endian
-            var h = 0L
-            var i = 0
-            while (i < 7) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
-            h = (h << 4) | ((d(7) & 0xf0L) >> 4)
-            if (memo.size < memoCap) memo.put(t, java.lang.Long.valueOf(h)): Unit
-            h
-          }
-        }
+        // task-lived token→hash memo, as in [[portableShingleHashes]]
+        val memo = new TaskMemo[java.lang.Long](TaskMemo.MaxBytes,
+            TaskMemo.LongBytes)({ t =>
+          val d = md.digest(t.getBytes("UTF-8"))
+          // first 15 hex chars = 7.5 bytes, big-endian
+          var h = 0L
+          var i = 0
+          while (i < 7) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
+          java.lang.Long.valueOf((h << 4) | ((d(7) & 0xf0L) >> 4))
+        })
+        def tokHash(t: String): Long = memo(t).longValue
         it.map { case (id, toks) =>
           val votes = new Array[Int](60)
           toks.foreach { t =>

@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
   *  - IVF-style coarse quantization: assign each vector to the nearest
   *    of k seed centroids (deterministic: corpus rows with lowest ids
   *    act as seeds), probe only matching cells.
+  *  - PERSISTED indexes: one generic path — [[build]], [[append]]
+  *    (exactly once per batch id), [[streamingAppend]], [[retrain]]
+  *    (atomic, as a new [[IndexGen]] generation) and [[search]]
+  *    (probe → probed-cell scan → score → optional float re-rank →
+  *    top-k) — over an [[IndexLayout]] that supplies only what
+  *    differs between storage layouts: flat floats, int8-quantized,
+  *    IVF×PQ (raw or residual codes), two-level coarse→fine, and
+  *    codes-only PQ. The layout is detected from the artifact itself.
   *
   * All dot products run as Catalyst `zip_with`+`aggregate` over
   * doubles — codegen'd, no UDF (float→double widening is exact).
@@ -122,15 +130,16 @@ object Similarity {
     * `spark.sql.autoBroadcastJoinThreshold` (10 MB fallback; -1
     * disables broadcast joins, not this gate's budget). */
   private[graft] def boundedBroadcast(queries: DataFrame, qVec: String,
+                                      ctx: String): DataFrame =
+    broadcast(boundedQuerySide(queries, qVec, ctx))
+
+  /** [[boundedBroadcast]]'s measured, materialized frame WITHOUT the
+    * hint — for callers that also read it outside a join (a hint on a
+    * frame that never reaches a join relation is dropped with a
+    * HintErrorLogger warning); hint it at the join site. */
+  private[graft] def boundedQuerySide(queries: DataFrame, qVec: String,
                                       ctx: String): DataFrame = {
-    val spark = queries.sparkSession
-    val budget = {
-      val b = try {
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-      } catch { case _: Exception => 10L << 20 }
-      if (b > 0) b else 10L << 20
-    }
+    val budget = graft.engine.Staging.broadcastBudget(queries.sparkSession)
     // Always MEASURED — never Catalyst's stats estimate: sizeInBytes
     // assigns array columns a fixed default width, so a frame of long
     // embedding vectors under-estimates unboundedly and a
@@ -167,7 +176,7 @@ object Similarity {
     require(bytes <= budget,
       s"$ctx: query side exceeds the broadcast budget — ${widths.length} rows, " +
         s"~$bytes B measured, $pointer")
-    broadcast(capped)
+    capped
   }
 
   /** Brute-force cosine top-k: for each query vector, the k nearest
@@ -177,15 +186,12 @@ object Similarity {
     * tail is the two-stage bounded top-k. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      qId: String, qVec: String, cId: String, cVec: String,
-                     k: Int): DataFrame = {
-    val ca = corpus.withColumn("__cn", norm(col(cVec)))
-    val qa = queries.withColumn("__qn", norm(col(qVec)))
-    val scored = ca.crossJoin(boundedBroadcast(qa, qVec, "bruteForceTopK"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col(cVec)),
-        col("__qn"), col("__cn")))
-    topKPerQuery(scored, qId, cId, k)
-  }
+                     k: Int): DataFrame =
+    rankCandidates(
+      boundedQuerySide(queries.withColumn("__qn", norm(col(qVec))), qVec,
+        "bruteForceTopK"),
+      corpus.select(col(cId), col(cVec).as("__cv")), qId, qVec, cId, k,
+      on = None, rerank = None)
 
   /** Two-stage quantized retrieval: int8 candidate generation + exact
     * float re-rank — the memory-bound ANN layout at 100 TB, where the
@@ -211,30 +217,13 @@ object Similarity {
                           qId: String, qVec: String, cId: String, cVec: String,
                           k: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val cq = withQuantizedInt8(corpus.select(col(cId), col(cVec)), cVec)
-      .withColumn("__cqd", transform(col("q_vec"), x => x.cast("double")))
-      .withColumn("__cqn", norm(col("__cqd")))
-      .select(col(cId), col("__cqd"), col("__cqn"))
-    val qa = boundedBroadcast(
-      queries.select(col(qId), col(qVec)).withColumn("__qn", norm(col(qVec))),
-      qVec, "quantizedRerankTopK")
-    val candidates = cq.crossJoin(qa)
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cqd")),
-        col("__qn"), col("__cqn")))
-    val shortlisted =
-      topKPerQuery(candidates.select(col(qId), col(cId), col("cos_sim")),
-        qId, cId, shortlist)
-      .select(col(qId), col(cId))
-    val rescored = shortlisted
-      .join(qa.select(col(qId), col(qVec), col("__qn")), Seq(qId))
-      .join(corpus.select(col(cId), col(cVec).as("__cv")), Seq(cId))
-      // float norms AFTER the join: computed for |Q|·shortlist
-      // survivors, never once per corpus row
-      .withColumn("__cn", norm(col("__cv")))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cv")),
-        col("__qn"), col("__cn")))
-    topKPerQuery(rescored.select(col(qId), col(cId), col("cos_sim")), qId, cId, k)
+    rankCandidates(
+      boundedQuerySide(queries.select(col(qId), col(qVec))
+        .withColumn("__qn", norm(col(qVec))), qVec, "quantizedRerankTopK"),
+      withQuantizedInt8(corpus.select(col(cId), col(cVec)), cVec)
+        .select(col(cId), transform(col("q_vec"), x => x.cast("double")).as("__cv")),
+      qId, qVec, cId, k, on = None,
+      rerank = Some((shortlist, corpus.select(col(cId), col(cVec).as("__fv")))))
   }
 
   /** Random-hyperplane LSH signature: `planes` sign bits packed into a
@@ -248,17 +237,14 @@ object Similarity {
     * Recall < 1 by construction; the scale path for 100 TB corpora. */
   def lshTopK(queries: DataFrame, corpus: DataFrame,
               qId: String, qVec: String, cId: String, cVec: String,
-              k: Int, planes: Int = 8): DataFrame = {
-    val qb = queries.withColumn("__bucket", lshSignature(col(qVec), planes))
-      .withColumn("__qn", norm(col(qVec)))
-    val cb = corpus.withColumn("__bucket", lshSignature(col(cVec), planes))
-      .withColumn("__cn", norm(col(cVec)))
-    val scored = cb.join(boundedBroadcast(qb, qVec, "lshTopK"), Seq("__bucket"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col(cVec)),
-        col("__qn"), col("__cn")))
-    topKPerQuery(scored, qId, cId, k)
-  }
+              k: Int, planes: Int = 8): DataFrame =
+    rankCandidates(
+      boundedQuerySide(queries
+        .withColumn("__bucket", lshSignature(col(qVec), planes))
+        .withColumn("__qn", norm(col(qVec))), qVec, "lshTopK"),
+      corpus.select(col(cId), col(cVec).as("__cv"),
+        lshSignature(col(cVec), planes).as("__bucket")),
+      qId, qVec, cId, k, on = Some("__bucket"), rerank = None)
 
   /** Multi-probe expansion of an existing LSH bucket column: one row
     * per probed bucket — the query's own signature plus every
@@ -362,18 +348,24 @@ object Similarity {
               qId: String, qVec: String, cId: String, cVec: String,
               k: Int, nCells: Int = 16): DataFrame = {
     val assign = ivfAssigner(corpus, cId, cVec, nCells)
-    val qa = queries.select(col(qId), col(qVec))
-      .withColumn("cell_id", assign(col(qVec)))
-      .withColumn("__qn", norm(col(qVec)))
-    val ca = corpus.select(col(cId), col(cVec))
-      .withColumn("cell_id", assign(col(cVec)))
-      .withColumn("__cn", norm(col(cVec)))
-    val scored = ca.join(boundedBroadcast(qa, qVec, "ivfTopK"), Seq("cell_id"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col(cVec)),
-        col("__qn"), col("__cn")))
-    topKPerQuery(scored, qId, cId, k)
+    cellsTopK(queries, corpus, qId, qVec, cId, cVec, k, assign, assign,
+      "ivfTopK")
   }
+
+  /** The shared non-persisted IVF tail: corpus rows keyed by
+    * `assign`, queries by `probe` (one row per probed cell; `probe` may
+    * explode), scored within matching cells only. */
+  private def cellsTopK(queries: DataFrame, corpus: DataFrame, qId: String,
+                        qVec: String, cId: String, cVec: String, k: Int,
+                        assign: Column => Column, probe: Column => Column,
+                        ctx: String): DataFrame =
+    rankCandidates(
+      boundedQuerySide(queries.select(col(qId), col(qVec))
+        .withColumn("cell_id", probe(col(qVec)))
+        .withColumn("__qn", norm(col(qVec))), qVec, ctx),
+      corpus.select(col(cId), col(cVec).as("__cv"))
+        .withColumn("cell_id", assign(col("__cv"))),
+      qId, qVec, cId, k, on = Some("cell_id"), rerank = None)
 
   /** The `nCells` lowest-id corpus vectors as literal seed centroids —
     * collected ONCE (tiny) and inlined, so cell assignment and probe
@@ -497,17 +489,8 @@ object Similarity {
     val (cents, _) = refineUntilConverged(corpus, cId, cVec,
       seedCentroids(corpus, cId, cVec, nCells), iters, eps, scale)
     val assign = assignerFromCents(cents)
-    val ca = corpus.select(col(cId), col(cVec))
-      .withColumn("cell_id", assign(col(cVec)))
-      .withColumn("__cn", norm(col(cVec)))
-    val qa = queries.select(col(qId), col(qVec))
-      .withColumn("cell_id", assign(col(qVec)))
-      .withColumn("__qn", norm(col(qVec)))
-    val scored = ca.join(boundedBroadcast(qa, qVec, "ivfTopKTrained"), Seq("cell_id"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col(cVec)),
-        col("__qn"), col("__cn")))
-    topKPerQuery(scored, qId, cId, k)
+    cellsTopK(queries, corpus, qId, qVec, cId, cVec, k, assign, assign,
+      "ivfTopKTrained")
   }
 
   /** [[ivfTopK]] with `nProbe` cells probed per query — IVF's
@@ -522,213 +505,183 @@ object Similarity {
                         qId: String, qVec: String, cId: String, cVec: String,
                         k: Int, nCells: Int = 16, nProbe: Int = 2): DataFrame = {
     val cents = seedCentroids(corpus, cId, cVec, nCells)
-    val ca = corpus.select(col(cId), col(cVec))
-      .withColumn("cell_id", assignerFromCents(cents)(col(cVec)))
-      .withColumn("__cn", norm(col(cVec)))
-    val qa = queries.select(col(qId), col(qVec))
-      .withColumn("cell_id", explode(probeCellsCol(cents, col(qVec), nProbe)))
-      .withColumn("__qn", norm(col(qVec)))
-    val scored = ca.join(boundedBroadcast(qa, qVec, "ivfTopKMultiProbe"), Seq("cell_id"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col(cVec)),
-        col("__qn"), col("__cn")))
-    topKPerQuery(scored, qId, cId, k)
+    cellsTopK(queries, corpus, qId, qVec, cId, cVec, k,
+      assignerFromCents(cents), v => explode(probeCellsCol(cents, v, nProbe)),
+      "ivfTopKMultiProbe")
   }
 
-  /** Build a PERSISTED IVF index at `path`: a trained codebook
-    * (`codebook/` — one tiny parquet of (cell_id, centroid)) plus the
-    * corpus REWRITTEN cell-partitioned (`cells/cell_id=N/`). This is
-    * the artifact that turns IVF from a per-query demo (centroids
-    * recomputed, full corpus scanned) into an operator at 100 TB:
-    * training cost is paid once at build, and a search lists ONLY the
-    * probed cells' directories — the same partition-pruning story as
-    * the tenant+date events layout. Training is
-    * [[refineUntilConverged]] (deterministic quantized means), so the
-    * same SQL oracle that replays [[ivfTopKTrained]] replays a search
-    * through the index bit for bit. */
-  def buildIndex(corpus: DataFrame, cId: String, cVec: String, path: String,
-                 nCells: Int = 16, iters: Int = 1, eps: Double = 0.0,
-                 scale: Long = 1L << 20,
-                 payload: Seq[String] = Nil): Unit = {
-    // ONE build path: seed + train as codebook FRAMES
-    // ([[seedCodebook]]/[[refineCodebookUntilConverged]] — bit-equal
-    // to the driver-literal Lloyd, nothing codebook-sized on the
-    // driver), then the joined build tail. The literal family is now
-    // a pure specialization of the joined one, so the driver ceiling
-    // is gone from every index path.
-    val (cb, _) = refineCodebookUntilConverged(corpus, cId, cVec,
-      seedCodebook(corpus, cId, cVec, nCells), iters, eps, scale)
-    buildIndexJoined(corpus, cId, cVec, cb, path, payload)
-  }
+  // ---- persisted IVF indexes: ONE generic path over IndexLayout -----
+  // A persisted index is `codebook/` (+ the layout's extra codebooks
+  // and meta row) plus its rows: cell-partitioned `cells/cell_id=N/`
+  // for every layout but the codes-only one (`codes/`). Training is
+  // paid once at build; a search lists ONLY the probed cells'
+  // directories. What differs between layouts — encoding, candidate
+  // scoring, probing, retrainability, meta — is [[IndexLayout]]'s;
+  // everything else lives once, here.
 
-  /** Append new vectors to an EXISTING [[buildIndex]] artifact: each
-    * batch is assigned against the index's own codebook (centroids
-    * are NOT retrained — the append is cheap and the cell meaning is
-    * stable, the standard IVF maintenance contract; rebuild when
-    * drift warrants it) and written into the same `cells/` layout in
-    * Append mode, so searches see old and new vectors alike and the
-    * probed-cell pruning is unchanged. Many small appends produce
-    * many small files per cell — the same L0-accumulation story as
-    * the events store, foldable by the Compact machinery (or an
-    * occasional [[buildIndex]] rebuild, which also retrains). */
-  def appendToIndex(batch: DataFrame, cId: String, cVec: String,
-                    path: String, payload: Seq[String] = Nil): Unit =
-    // one maintenance path: the joined append (persisted codebook
-    // broadcast-joined, never collected) — identical assignment
-    appendToIndexJoined(batch, cId, cVec, path, payload)
+  /** A trained coarse codebook FRAME: the `nCells` lowest-id seeds
+    * refined by up to `iters` exact Lloyd steps
+    * ([[refineCodebookUntilConverged]] — bit-equal to the driver-literal
+    * [[refineUntilConverged]], so the SQL oracle that replays
+    * [[ivfTopKTrained]] replays a search through the index). */
+  def trainCodebook(corpus: DataFrame, cId: String, cVec: String,
+                    nCells: Int = 16, iters: Int = 1, eps: Double = 0.0,
+                    scale: Long = 1L << 20): DataFrame =
+    refineCodebookUntilConverged(corpus, cId, cVec,
+      seedCodebook(corpus, cId, cVec, nCells), iters, eps, scale)._1
 
-  /** [[appendToIndex]] with PER-BATCH IDEMPOTENCE, the form a
-    * streaming writer needs: the assigned batch lands in a temp dir,
-    * then each cell's single file (repartition by cell → one
-    * partition per cell) is RENAMED to the deterministic name
-    * `cells/cell_id=N/batch-<batchId>.parquet`. Assignment is
-    * deterministic, so a replayed batch rewrites byte-equivalent
-    * files over the same names instead of appending duplicate rows —
-    * a duplicate (id, vec) row would otherwise surface as a duplicate
-    * neighbor in every later top-k. */
-  def appendToIndexAtomic(batch: DataFrame, cId: String, cVec: String,
-                          path0: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    // maintenance lands in the COMMITTED generation (resolved once;
-    // flat artifacts resolve to themselves)
-    val path = IndexGen.resolveRoot(spark, path0)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.tmp-batch-$batchId")
-    val fs = tmp.getFileSystem(hconf)
-    // the hidden .done marker — not the batch files — is the replay
-    // guard: [[compactIndexCells]] legitimately folds batch files
-    // into merged parts and deletes them, so "file exists" cannot
-    // mean "batch applied". Marker-AFTER-rename is deliberate (the
-    // inverse order would read a crash between marker and renames as
-    // applied and LOSE the batch); the one remaining window — crash
-    // after the renames but before the marker, AND a compaction
-    // folding those files before restart — re-appends one batch's
-    // rows, and that duplication is physically collapsed by the next
-    // [[compactIndexCells]] fold (replacing on the vector id), which
-    // is why it is the REQUIRED maintenance path for this store —
-    // the exact contract of StreamingDedup's signature store.
-    val marker = new org.apache.hadoop.fs.Path(path, f".batch-$batchId%09d.done")
-    if (fs.exists(marker)) return
-    requireNotQuantizedLayout(spark, path, "appendToIndexAtomic")
-    val cb = readArtifact(spark, path, "codebook")
-    atomicCellsWrite(spark,
-      assignCellsByJoin(batch.select(col(cId), col(cVec)), cId, cVec, cb),
-      path, batchId)
-  }
-
-  /** Flat-append guard for the QUANTIZED layout — the
-    * [[requireEncodingMatch]] class of failure on a different column:
-    * a flat append aimed at a [[buildIndexQuantizedJoined]] artifact
-    * would write rows lacking `q_vec`/`q_vec_scale`, which the
-    * quantized candidate pass reads as null scores and silently never
-    * returns. Detection is the artifact's own `quantized_meta`
-    * (pre-meta quantized artifacts cannot say, exactly like the PQ
-    * guards). */
-  private def requireNotQuantizedLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String, caller: String): Unit =
-    require(readQuantizedPayloadMeta(spark, root).isEmpty,
-      s"index at $root is a QUANTIZED layout (quantized_meta present) — " +
-        s"$caller would write rows without q_vec/q_vec_scale that " +
-        "quantized search silently never returns; use appendToIndexQuantized")
-
-  /** The shared idempotent cells write: `rows` (carrying `cell_id`)
-    * land as one deterministic `batch-<id>.parquet` per cell via the
-    * tmp→rename→marker dance of [[appendToIndexAtomic]]. Assumes the
-    * caller already checked the marker (skip-before-compute). */
-  private def atomicCellsWrite(spark: org.apache.spark.sql.SparkSession,
-                               rows: DataFrame, path: String,
-                               batchId: Long): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.tmp-batch-$batchId")
-    val fs = tmp.getFileSystem(hconf)
-    val marker = new org.apache.hadoop.fs.Path(path, f".batch-$batchId%09d.done")
-    rows.repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite")
-      .parquet(tmp.toString)
-    for (cellDir <- fs.listStatus(tmp).filter(s =>
-        s.isDirectory && s.getPath.getName.startsWith("cell_id="))) {
-      val parts = fs.listStatus(cellDir.getPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      require(parts.length == 1,
-        s"expected one file per cell after repartition, got ${parts.length}")
-      val dest = new org.apache.hadoop.fs.Path(
-        s"$path/cells/${cellDir.getPath.getName}/batch-$batchId.parquet")
-      fs.mkdirs(dest.getParent)
-      if (fs.exists(dest)) fs.delete(dest, false) // replay: overwrite
-      require(fs.rename(parts.head.getPath, dest), s"rename to $dest failed")
+  /** Build a PERSISTED index of `layout` at `path`. `codebooks` are the
+    * layout's [[IndexLayout.codebookDirs]] in order (fine then coarse
+    * for two-level, none for codes-only); PQ layouts train
+    * `pq_codebook` with `pqIters` Lloyd steps unless it is passed as
+    * one trailing codebook. `payload` columns of the corpus ride into
+    * every stored row (filtered search's metadata) and are recorded in
+    * the layout's meta row. Assignment broadcast-joins the codebook
+    * frame ([[assignCellsByJoin]]), so nothing driver-side scales with
+    * nCells. */
+  def build(corpus: DataFrame, cId: String, cVec: String, path: String,
+            layout: IndexLayout, codebooks: Seq[DataFrame],
+            payload: Seq[String] = Nil, pqIters: Int = 1,
+            scale: Long = 1L << 20): Unit = {
+    val spark = corpus.sparkSession
+    require(layout.payload.isEmpty || layout.payload.sorted == payload.sorted,
+      s"layout payload ${layout.payload.mkString("[", ",", "]")} contradicts " +
+        s"the build's ${payload.mkString("[", ",", "]")}")
+    val l = layout.withPayload(payload)
+    val dirs = l.codebookDirs
+    require(codebooks.size == dirs.size ||
+        (l.pq.nonEmpty && codebooks.size == dirs.size + 1),
+      s"a ${l.name} build takes codebooks ${dirs.mkString("[", ",", "]")}" +
+        (if (l.pq.nonEmpty) " (+ an optional fixed pq_codebook)" else "") +
+        s", got ${codebooks.size}")
+    (dirs :+ "pq_codebook").zip(codebooks).foreach { case (d, cb) =>
+      cb.coalesce(1).write.mode("overwrite").parquet(s"$path/$d")
     }
-    fs.delete(tmp, true)
-    fs.create(marker, true).close()
-    // the one legitimate mutation of a committed generation: new cell
-    // files can RAISE the memoized footer-stats bound
-    GenCache.invalidate(path, "footerMax:")
+    l.metaDir.zip(l.metaRow(spark)).foreach { case (d, row) =>
+      row.coalesce(1).write.mode("overwrite").parquet(s"$path/$d")
+    }
+    val pqCodebook = (vecs: DataFrame, v: String) =>
+      codebooks.lift(dirs.size).getOrElse {
+        val (m, kCents) = l.pq.get
+        val dims = vecs.select(size(col(v))).head().getInt(0)
+        val cb = pqTrainCodebooks(vecs, cId, v, dims, m, kCents, pqIters, scale)
+        cb.coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebook")
+        cb
+      }
+    val rows = l.encode(corpus, cId, cVec, payload, codebooks.take(dirs.size),
+      pqCodebook)
+    if (l.hasCells)
+      rows.repartition(col("cell_id"))
+        .write.partitionBy("cell_id").mode("overwrite")
+        .parquet(s"$path/cells")
+    else rows.write.mode("overwrite").parquet(s"$path/codes")
   }
 
-  /** [[appendToIndexAtomic]] for the IVF×PQ families: the batch is
-    * cell-assigned and PQ-encoded by the PERSISTED codebooks, then
-    * lands through the same deterministic-name replay guard, so a
-    * foreachBatch restart is exactly-once. The ENCODING comes from
-    * the artifact's own `pq_meta` — a residual-built index gets
-    * residual encoding no matter what the caller passed, so a
-    * mis-flagged append can never write plain codes that the residual
-    * search would decode as residuals (silently wrong rankings). The
-    * `residual` flag covers only pre-meta artifacts, which cannot
-    * say. `payload` columns of the batch ride into the cells rows
-    * exactly as in [[appendToIndexPqJoined]] — a filtered
-    * (payload-built) index is streaming-maintainable like every other
-    * layout; a payload-MISMATCHED batch is still refused loudly. */
-  def appendToIndexPqAtomic(batch: DataFrame, cId: String, cVec: String,
-                            dims: Int, m: Int, path0: String, batchId: Long,
-                            residual: Boolean = false,
-                            payload: Seq[String] = Nil): Unit = {
+  /** Append a batch to an EXISTING index of any layout, exactly once
+    * per `batchId`: rows are assigned and encoded at the artifact's
+    * FIXED codebooks (nothing retrains — cell and code meanings stay
+    * stable; drift is [[maybeRetrain]]'s concern) and land in the
+    * committed generation under the deterministic name
+    * `cells/cell_id=N/batch-<batchId>.parquet` (`codes/batch-…` for
+    * codes-only). Layout metadata always comes from the artifact —
+    * a residual index gets residual codes, a two-level one its own
+    * coarseProbe — and `payload` must equal the columns the index
+    * was built with (rows missing payload would read back null and
+    * never match a filtered search), so a mismatched batch is
+    * refused.
+    *
+    * The hidden `.done` marker, not the batch files, is the replay
+    * guard: [[compactIndexCells]] legitimately folds batch files into
+    * merged parts, so "file exists" cannot mean "batch applied".
+    * Marker-AFTER-rename is deliberate (the inverse order would read a
+    * crash between marker and renames as applied and LOSE the batch);
+    * the one remaining window — crash after the renames but before
+    * the marker, AND a compaction folding those files before restart
+    * — re-appends one batch's rows, collapsed by the next
+    * [[compactIndexCells]] fold (replacing on the vector id). */
+  def append(batch: DataFrame, cId: String, cVec: String, path0: String,
+             batchId: Long, payload: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
     val path = IndexGen.resolveRoot(spark, path0)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(path, f".batch-$batchId%09d.done")
-    if (fs.exists(marker)) return
-    requirePayloadMatch(spark, path, payload)
-    val res = readPqMeta(spark, path).getOrElse(residual)
-    val cb = readArtifact(spark, path, "codebook")
-    val pqcb = readArtifact(spark, path, "pq_codebook")
-    val assigned = graft.engine.Staging.stage(
-      assignCellsByJoin(batch.select(col(cId), col(cVec)), cId, cVec, cb))
-    val enc =
-      if (res)
-        pqEncode(withResiduals(assigned, cVec, cb)
-          .select(col(cId), col("__res")), cId, "__res", dims, m, pqcb)
-      else pqEncode(batch.select(col(cId), col(cVec)), cId, cVec, dims, m, pqcb)
-    atomicCellsWrite(spark,
-      withPqPayload(assigned.join(enc, Seq(cId)), batch, cId, payload),
-      path, batchId)
+    if (fs.exists(batchMarker(path, batchId))) return
+    val layout = IndexLayout.detect(spark, path)
+    // a flat artifact records its payload only in the cells schema
+    val built =
+      if (layout != IndexLayout.Flat) layout.payload
+      else spark.read.parquet(s"$path/cells").columns.toSeq
+        .filterNot(Set(cId, cVec, "cell_id"))
+    require(payload.sorted == built.sorted,
+      s"${layout.name} index at $path was built with payload columns " +
+        s"${built.mkString("[", ",", "]")} — appends must carry the same " +
+        s"(got ${payload.mkString("[", ",", "]")})")
+    atomicWrite(spark,
+      layout.encode(batch, cId, cVec, payload,
+        layout.codebookDirs.map(readArtifact(spark, path, _)),
+        (_, _) => readArtifact(spark, path, "pq_codebook")),
+      path, batchId, layout.hasCells)
   }
 
-  /** Started-able streaming maintenance for an IVF×PQ (or residual)
-    * index — [[streamingIndexAppend]]'s twin: every micro-batch
-    * assigns, encodes (residual-or-plain per the artifact's own
-    * pq_meta) and lands exactly-once under a batchId-deterministic
-    * name, payload columns riding for filtered search; fold
-    * accumulated batch files with [[compactIndexCells]] off the hot
-    * path. */
-  def streamingIndexAppendPq(vectors: DataFrame, cId: String, cVec: String,
-                             dims: Int, m: Int, path: String,
-                             residual: Boolean = false,
-                             payload: Seq[String] = Nil) =
+  private def batchMarker(path: String, batchId: Long) =
+    new org.apache.hadoop.fs.Path(path, f".batch-$batchId%09d.done")
+
+  /** The idempotent rows write behind [[append]]: `rows` land in a temp
+    * dir as one file per cell (or one file), each RENAMED to its
+    * deterministic batch name, then the marker is created. A replay
+    * rewrites byte-equivalent files over the same names instead of
+    * appending duplicate rows. Assumes the caller checked the marker. */
+  private def atomicWrite(spark: org.apache.spark.sql.SparkSession,
+                          rows: DataFrame, path: String, batchId: Long,
+                          cells: Boolean): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(s"$path/.tmp-batch-$batchId")
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (if (cells) rows.repartition(col("cell_id")).write.partitionBy("cell_id")
+     else rows.repartition(1).write)
+      .mode("overwrite").parquet(tmp.toString)
+    val written =
+      if (!cells) Seq(tmp -> s"$path/codes")
+      else fs.listStatus(tmp).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell_id="))
+        .map(s => s.getPath -> s"$path/cells/${s.getPath.getName}")
+    for ((dir, destDir) <- written) {
+      val parts = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
+      require(parts.length <= 1,
+        s"expected one file per cell after repartition, got ${parts.length}")
+      parts.headOption.foreach { part =>
+        val dest = new org.apache.hadoop.fs.Path(s"$destDir/batch-$batchId.parquet")
+        fs.mkdirs(dest.getParent)
+        if (fs.exists(dest)) fs.delete(dest, false) // replay: overwrite
+        require(fs.rename(part.getPath, dest), s"rename to $dest failed")
+      }
+    }
+    fs.delete(tmp, true)
+    fs.create(batchMarker(path, batchId), true).close()
+    // the one legitimate mutation of a committed generation: new files
+    // can RAISE the memoized footer-stats bound
+    GenCache.invalidate(path, "footerMax:")
+  }
+
+  /** Started-able streaming index maintenance: every micro-batch goes
+    * through [[append]] under its batchId, so a foreachBatch restart is
+    * exactly-once; fold accumulated batch files per cell with
+    * [[compactIndexCells]] (safe concurrently with searches — the
+    * search tail reads through the cells' manifests). The caller picks
+    * trigger/checkpoint and calls `.start()`. */
+  def streamingAppend(vectors: DataFrame, cId: String, cVec: String,
+                      path: String, payload: Seq[String] = Nil) =
     vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendToIndexPqAtomic(batch, cId, cVec, dims, m, path, batchId,
-        residual, payload)
+      append(batch, cId, cVec, path, batchId, payload)
     }
 
   /** The index cells store's REQUIRED compaction entry point:
     * replacing on the vector id, so rows duplicated by the
-    * crash-between-rename-and-marker replay window (see
-    * [[appendToIndexAtomic]]) collapse back to one row per vector at
-    * the next fold. Safe to run CONCURRENTLY with searches: the
-    * search tail reads each probed cell through the cell's Compact
-    * manifest ([[readProbedCells]]), so a search racing a fold's
-    * commit sees the pre-fold inputs or the merged part — one
-    * committed generation, never a mix. */
+    * crash-between-rename-and-marker replay window (see [[append]])
+    * collapse back to one row per vector at the next fold. Safe to run
+    * CONCURRENTLY with searches: the search tail reads each probed
+    * cell through the cell's Compact manifest ([[readProbedCells]]),
+    * so a search racing a fold's commit sees the pre-fold inputs or
+    * the merged part — one committed generation, never a mix. */
   def compactIndexCells(spark: org.apache.spark.sql.SparkSession,
                         path: String, cId: String,
                         opts: graft.sources.Compact.Options =
@@ -737,20 +690,6 @@ object Similarity {
     graft.sources.Compact.runPartitioned(spark,
       s"${IndexGen.resolveRoot(spark, path)}/cells",
       opts.copy(replaceOn = Seq(cId), versionCol = None))
-
-  /** Started-able streaming index maintenance: each micro-batch of
-    * `(cId, cVec)` vectors is assigned by the persisted codebook and
-    * appended idempotently ([[appendToIndexAtomic]]: deterministic
-    * batch filenames + a replay marker) — the ANN analog of the
-    * streaming ingest→store path; fold accumulated batch files per
-    * cell with [[compactIndexCells]] (safe concurrently with
-    * searches — the search tail reads through the cells' manifests).
-    * The caller picks trigger/checkpoint and calls `.start()`. */
-  def streamingIndexAppend(vectors: DataFrame, cId: String, cVec: String,
-                           path: String) =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendToIndexAtomic(batch, cId, cVec, path, batchId)
-    }
 
   // ---- index deletion (right-to-be-forgotten for ANN artifacts) ---
 
@@ -917,273 +856,55 @@ object Similarity {
     val dirs = fs.listStatus(cellsDir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell_id="))
       .map(_.getPath).sortBy(_.getName).toIndexedSeq
-    val files = dirs
-      .map { d =>
-        manifestPool.submit(new java.util.concurrent.Callable[Seq[String]] {
-          def call(): Seq[String] = {
-            val (kept, _) = graft.sources.Compact.prunedParts(
-              spark, d.toString, preds)
-            kept.map(p => new org.apache.hadoop.fs.Path(d, p.name).toString)
-          }
-        })
-      }
-      .flatMap { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }
+    val files = onManifestPool(dirs) { d =>
+      val (kept, _) = graft.sources.Compact.prunedParts(spark, d.toString, preds)
+      kept.map(p => new org.apache.hadoop.fs.Path(d, p.name).toString)
+    }.flatten
     val base = spark.read.option("basePath", cellsDir.toString)
     val df = if (files.nonEmpty) base.parquet(files: _*)
              else spark.read.parquet(cellsDir.toString).filter(lit(false))
     minusIndexDeletes(spark, root, df)
   }
 
-  /** RETRAIN a [[buildIndexJoined]]-family index IN PLACE, atomically:
-    * the committed generation's live rows (manifest-snapshot reads,
-    * deletes dropped — erasure carries forward physically) are the
-    * training corpus, the current codebook seeds
-    * [[refineCodebookUntilConverged]], and the refreshed artifact
-    * lands as a NEW generation under `path/gen=N/` committed by one
-    * marker create ([[IndexGen.commitNewGeneration]]). Searches
-    * concurrent with the retrain resolve one committed generation end
-    * to end — old until the marker lands, new after, never a mix —
-    * and a crash mid-retrain leaves the old generation serving. This
-    * closes the append contract's "rebuild when drift warrants it"
-    * loop (see [[appendToIndex]]). The new generation starts with NO
-    * delete set: erased ids are already gone from its rows and become
-    * reinsertable, like a purge. Returns (generation, Lloyd steps
-    * run). */
-  def retrainIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                   cId: String, cVec: String, maxIters: Int,
-                   eps: Double = 0.0, scale: Long = 1L << 20): (Long, Int) = {
+  /** RETRAIN an index IN PLACE, atomically: the committed generation's
+    * live rows (manifest-snapshot reads, deletes dropped — erasure
+    * carries forward physically) are the training corpus, each of the
+    * layout's codebooks is refined by up to `maxIters` Lloyd steps
+    * seeded by its persisted self (PQ layouts retrain `pq_codebook`
+    * with `pqIters` steps; residual-ness, coarseProbe and payload come
+    * from the artifact), and the rebuilt artifact lands as a NEW
+    * generation under `path/gen=N/` committed by one marker create
+    * ([[IndexGen.commitNewGeneration]]). Searches concurrent with the
+    * retrain resolve one committed generation end to end — old until
+    * the marker lands, new after, never a mix — and a crash
+    * mid-retrain leaves the old generation serving. The new
+    * generation starts with NO delete set: erased ids are already gone
+    * from its rows and become reinsertable, like a purge. A codes-only
+    * artifact stores no floats and is refused. Returns (generation,
+    * Lloyd steps run over all refined codebooks). */
+  def retrain(spark: org.apache.spark.sql.SparkSession, path: String,
+              cId: String, cVec: String, maxIters: Int,
+              eps: Double = 0.0, pqIters: Int = 1,
+              scale: Long = 1L << 20): (Long, Int) = {
     val cur = IndexGen.resolveRoot(spark, path)
-    // a TWO-LEVEL artifact must not silently degrade to a flat
-    // rebuild (the hierarchy is the point of its layout): rebuild it
-    // with buildIndexTwoLevel under IndexGen.commitNewGeneration
-    val fsC = new org.apache.hadoop.fs.Path(cur)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fsC.exists(new org.apache.hadoop.fs.Path(s"$cur/codebook_coarse")),
-      s"$path is a two-level artifact — use retrainIndexTwoLevel")
+    val layout = IndexLayout.detect(spark, cur)
+    require(layout.retrainable,
+      s"$path is a codes-only PQ artifact — no float vectors are stored, " +
+        "so it cannot retrain; keep the source corpus and rebuild via " +
+        "Similarity.build with IndexLayout.PqCodes")
     val live = graft.engine.Staging.stage(readLiveCells(spark, cur))
-    require(!live.columns.contains("codes"),
-      s"$path holds a composed IVF×PQ layout — use retrainIndexPq")
-    // q_vec/q_vec_scale are DERIVED columns (the quantized layout);
-    // everything else beside the id/vector/cell is caller payload and
-    // must survive the rebuild
+    // storage columns are re-derived at rebuild; everything else
+    // beside id/vector/cell is caller payload and must survive
     val payloadCols = live.columns.toSeq
-      .filterNot(Set(cId, cVec, "cell_id", "q_vec", "q_vec_scale"))
+      .filterNot((Set(cId, cVec, "cell_id") ++ layout.storageCols).contains)
     val corpus = live.select((cId +: cVec +: payloadCols).map(col): _*)
-    val cb0 = readArtifact(spark, cur, "codebook")
-    val (cb, steps) =
-      refineCodebookUntilConverged(corpus, cId, cVec, cb0, maxIters, eps, scale)
-    // the quantized layout re-derives its int8 patterns at rebuild
-    // (q_vec is storage, not payload); payload columns survive either
-    // branch
-    val quantized = live.columns.contains("q_vec")
-    val gen = IndexGen.commitNewGeneration(spark, path) { dir =>
-      if (quantized)
-        buildIndexQuantizedJoined(corpus, cId, cVec, cb, dir, payloadCols)
-      else buildIndexJoined(corpus, cId, cVec, cb, dir, payloadCols)
-    }
-    (gen, steps)
-  }
-
-  /** [[retrainIndex]] for the composed IVF×PQ families: refine the
-    * coarse codebook from the live rows, retrain the PQ sub-codebooks
-    * (`pqIters` Lloyd steps; on residuals when the artifact was built
-    * residual — the persisted `pq_meta` flag decides, an explicit
-    * `residual` only overrides pre-meta artifacts), re-encode, and
-    * commit the whole artifact as one new generation. Payload columns
-    * (everything beside id/vector/cell/codes) survive the rebuild, so
-    * filtered search keeps working across retrains. */
-  def retrainIndexPq(spark: org.apache.spark.sql.SparkSession, path: String,
-                     cId: String, cVec: String, dims: Int, m: Int,
-                     kCents: Int, pqIters: Int, coarseIters: Int,
-                     eps: Double = 0.0, scale: Long = 1L << 20,
-                     residual: Option[Boolean] = None): (Long, Int) = {
-    val cur = IndexGen.resolveRoot(spark, path)
-    val live = graft.engine.Staging.stage(readLiveCells(spark, cur))
-    require(live.columns.contains("codes"),
-      s"$path is not a composed IVF×PQ layout — use retrainIndex")
-    val res = readPqMeta(spark, cur).orElse(residual).getOrElse(false)
-    val payloadCols = live.columns.toSeq
-      .filterNot(Set(cId, cVec, "cell_id", "codes"))
-    val corpus = live.select((cId +: cVec +: payloadCols).map(col): _*)
-    val cb0 = readArtifact(spark, cur, "codebook")
-    val (cb, steps) = refineCodebookUntilConverged(corpus, cId, cVec, cb0,
-      coarseIters, eps, scale)
-    val gen = IndexGen.commitNewGeneration(spark, path) { dir =>
-      if (res)
-        buildIndexPqResidual(corpus, cId, cVec, cb, dims, m, kCents,
-          pqIters, dir, scale, payloadCols)
-      else
-        buildIndexPqJoined(corpus, cId, cVec, cb, dims, m, kCents,
-          pqIters, dir, scale, payloadCols)
-    }
-    (gen, steps)
-  }
-
-  /** [[retrainIndex]] for a TWO-LEVEL artifact: BOTH codebooks refine
-    * from the live rows (exact Lloyd, seeded by the persisted
-    * centroids — `fineIters`/`coarseIters` steps respectively), then
-    * the whole artifact rebuilds with [[buildIndexTwoLevel]] under the
-    * SAME persisted `coarseProbe` (the build-time hierarchy knob
-    * rides `twolevel_meta`; an explicit `coarseProbe` only covers
-    * pre-meta artifacts) and commits as one new generation. Payload
-    * columns survive the rebuild. Returns (generation, coarse + fine
-    * Lloyd steps run). */
-  def retrainIndexTwoLevel(spark: org.apache.spark.sql.SparkSession,
-                           path: String, cId: String, cVec: String,
-                           fineIters: Int, coarseIters: Int,
-                           eps: Double = 0.0, scale: Long = 1L << 20,
-                           coarseProbe: Option[Int] = None): (Long, Int) = {
-    val cur = IndexGen.resolveRoot(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(cur)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$cur/codebook_coarse")),
-      s"$path is not a two-level artifact — use retrainIndex/retrainIndexPq")
-    val cp = readTwoLevelMeta(spark, cur).orElse(coarseProbe).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path predates twolevel_meta — pass coarseProbe explicitly"))
-    val live = graft.engine.Staging.stage(readLiveCells(spark, cur))
-    val payloadCols = live.columns.toSeq
-      .filterNot(Set(cId, cVec, "cell_id"))
-    val corpus = live.select((cId +: cVec +: payloadCols).map(col): _*)
-    val (coarse, stepsC) = refineCodebookUntilConverged(corpus, cId, cVec,
-      readArtifact(spark, cur, "codebook_coarse"), coarseIters, eps, scale)
-    val (fine, stepsF) = refineCodebookUntilConverged(corpus, cId, cVec,
-      readArtifact(spark, cur, "codebook"), fineIters, eps, scale)
-    val gen = IndexGen.commitNewGeneration(spark, path) { dir =>
-      buildIndexTwoLevel(corpus, cId, cVec, fine, coarse, cp, dir,
-        payloadCols)
-    }
-    (gen, stepsC + stepsF)
-  }
-
-  /** The persisted `coarseProbe` of a two-level artifact (None for a
-    * pre-meta index). `root` must be a RESOLVED generation root. */
-  def readTwoLevelMeta(spark: org.apache.spark.sql.SparkSession,
-                       root: String): Option[Int] =
-    // build-time constant — memoized per committed generation (the
-    // serving dispatch resolves coarseProbe from it per request)
-    GenCache.memo(spark, root, "twolevel_coarse_probe") {
-      val p = new org.apache.hadoop.fs.Path(s"$root/twolevel_meta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else Some(spark.read.parquet(p.toString)
-        .select(col("coarse_probe")).head().getInt(0))
-    }
-
-  /** The persisted payload column names of a two-level artifact (None
-    * for a pre-meta or pre-payload-meta index) — [[readPqPayloadMeta]]
-    * for the hierarchical layout. */
-  def readTwoLevelPayloadMeta(spark: org.apache.spark.sql.SparkSession,
-                              root: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/twolevel_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val df = spark.read.parquet(p.toString)
-      if (!df.columns.contains("payload")) None
-      else Some(df.select(col("payload")).head().getSeq[String](0))
-    }
-  }
-
-  /** Marker-idempotent APPEND for a TWO-LEVEL artifact — the path
-    * that makes hierarchical indexes maintainable without the full
-    * [[retrainIndexTwoLevel]] rebuild: the batch assigns through the
-    * persisted coarse→fine hierarchy at FIXED codebooks (the
-    * artifact's own `coarseProbe` from twolevel_meta — never a caller
-    * flag), payload columns ride for filtered search (mismatches
-    * refused loudly, pq_meta's contract), and rows land in the fine
-    * `cell_id=N/` layout through the deterministic-name replay guard
-    * of [[atomicCellsWrite]] — a foreachBatch restart is
-    * exactly-once. Search/Compact/erasure machinery is unchanged:
-    * appended rows are ordinary cells rows. Like every fixed-codebook
-    * append, accumulated drift is the retrain trigger
-    * ([[maybeRetrain]]), not this path's concern. */
-  def appendToIndexTwoLevel(batch: DataFrame, cId: String, cVec: String,
-                            path0: String, batchId: Long,
-                            payload: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val path = IndexGen.resolveRoot(spark, path0)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(path, f".batch-$batchId%09d.done")
-    if (fs.exists(marker)) return
-    readTwoLevelPayloadMeta(spark, path).foreach { built =>
-      require(payload.sorted == built.sorted,
-        s"two-level index at $path was built with payload columns " +
-          s"${built.mkString("[", ",", "]")} — appends must carry the " +
-          s"same (got ${payload.mkString("[", ",", "]")})")
-    }
-    val cp = readTwoLevelMeta(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path predates twolevel_meta — rebuild via retrainIndexTwoLevel " +
-          "before appending (the artifact cannot say its coarseProbe)"))
-    val fine = readArtifact(spark, path, "codebook")
-    val coarse = readArtifact(spark, path, "codebook_coarse")
-    val assigned = probeCellsTwoLevel(batch.select(col(cId), col(cVec)),
-      cId, cVec, fine, coarse, cp, nProbe = 1)
-    val rows =
-      if (payload.isEmpty) assigned
-      else assigned.join(
-        batch.select(col(cId) +: payload.map(col): _*), Seq(cId))
-    atomicCellsWrite(spark, rows, path, batchId)
-  }
-
-  /** Started-able streaming maintenance for a two-level index —
-    * [[streamingIndexAppendPq]]'s hierarchical twin. */
-  def streamingIndexAppendTwoLevel(vectors: DataFrame, cId: String,
-                                   cVec: String, path: String,
-                                   payload: Seq[String] = Nil) =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendToIndexTwoLevel(batch, cId, cVec, path, batchId, payload)
-    }
-
-  /** The layout family of a cells-layout vector artifact at its
-    * RESOLVED root — the dispatch key for kind-agnostic maintenance
-    * (HTTP retrain, [[maybeRetrain]]) AND for layout-dispatched
-    * serving (the JSON semantic route): `two_level` (hierarchical
-    * codebooks), `pq` (composed IVF×PQ — cells rows carry codes),
-    * `pq_codes` (a [[buildPqIndex]] codes-only artifact — no floats
-    * stored, so UNRETRAINABLE by design; maintenance planes report
-    * that instead of attempting a rebuild), `quantized`
-    * ([[buildIndexQuantizedJoined]] — int8 patterns beside the
-    * floats), or `flat` (plain float joined layout). Detection is
-    * directory-existence only for every artifact this repo builds —
-    * `pq_meta`/`pq_codebook`/`quantized_meta` are written at build
-    * time, so the probes never list the (large, partitioned) cells
-    * directory; the cells-SCHEMA sniff survives only as the fallback
-    * for composed/quantized artifacts that predate their meta, and
-    * it is the one branch that pays a directory listing. */
-  def indexLayout(spark: org.apache.spark.sql.SparkSession,
-                  root: String): String =
-    // the layout of a COMMITTED generation is immutable (appends keep
-    // the layout by contract — the mismatch guards refuse the rest),
-    // so the serving dispatch pays the existence probes once per
-    // generation, not per request ([[GenCache]]; flat roots read
-    // through, exactly the codebook-read contract)
-    GenCache.memo(spark, root, "layout")(detectIndexLayout(spark, root))
-
-  private def detectIndexLayout(spark: org.apache.spark.sql.SparkSession,
-                                root: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def has(d: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$root/$d"))
-    if (has("codebook_coarse")) "two_level"
-    else if (!has("cells") && has("codes")) "pq_codes"
-    else if (has("pq_meta") || has("pq_codebook")) "pq"
-    else if (has("quantized_meta")) "quantized"
-    else if (has("cells")) {
-      val cols = spark.read.parquet(s"$root/cells").columns
-      if (cols.contains("codes")) "pq"
-      else if (cols.contains("q_vec")) "quantized"
-      else "flat"
-    }
-    else "flat"
+    val refined = layout.codebookDirs.map(d =>
+      refineCodebookUntilConverged(corpus, cId, cVec,
+        readArtifact(spark, cur, d), maxIters, eps, scale))
+    val gen = IndexGen.commitNewGeneration(spark, path)(dir =>
+      build(corpus, cId, cVec, dir, layout, refined.map(_._1), payloadCols,
+        pqIters, scale))
+    (gen, refined.map(_._2).sum)
   }
 
   /** The vector WIDTH an artifact was built with, read from its own
@@ -1203,65 +924,10 @@ object Similarity {
           .select(size(col("centroid"))).head().getInt(0))).intValue
   }
 
-  /** The RETRAINABILITY contract of a layout: every cells-bearing
-    * layout retrains through [[retrainDispatch]]; a codes-only PQ
-    * artifact stores no float vectors to re-encode from, so it is
-    * unretrainable BY DESIGN — the operator must keep the source
-    * corpus and rebuild via [[buildPqIndex]]. Recorded here (one
-    * definition) so the registry listing, the maybe-retrain report
-    * and the dispatcher can never disagree. */
-  def layoutRetrainable(layout: String): Boolean = layout != "pq_codes"
-
-  /** Retrain ANY cells-layout artifact by its DETECTED kind — the one
-    * entry point a maintenance plane (HTTP retrain, a scheduled
-    * drift job) needs: two-level artifacts rebuild hierarchically
-    * ([[retrainIndexTwoLevel]]), composed IVF×PQ retrains coarse + PQ
-    * codebooks with dims/m/kCents INFERRED from the persisted
-    * `pq_codebook` and the residual flag from `pq_meta`
-    * ([[retrainIndexPq]]), and flat float/quantized layouts take the
-    * plain Lloyd retrain ([[retrainIndex]]). Returns (generation,
-    * Lloyd steps run). */
-  def retrainDispatch(spark: org.apache.spark.sql.SparkSession,
-                      path: String, cId: String, cVec: String,
-                      maxIters: Int, eps: Double = 0.0,
-                      pqIters: Int = 1,
-                      scale: Long = 1L << 20,
-                      /** pre-twolevel_meta artifacts only: the build's
-                        * coarseProbe, since the artifact cannot say. */
-                      coarseProbe: Option[Int] = None): (Long, Int) = {
-    val cur = IndexGen.resolveRoot(spark, path)
-    indexLayout(spark, cur) match {
-      case "pq_codes" =>
-        throw new IllegalArgumentException(
-          s"$path is a codes-only PQ artifact — no float vectors are " +
-            "stored, so it cannot retrain; keep the source corpus and " +
-            "rebuild via Similarity.buildPqIndex")
-      case "two_level" =>
-        retrainIndexTwoLevel(spark, path, cId, cVec,
-          fineIters = maxIters, coarseIters = maxIters, eps = eps,
-          scale = scale, coarseProbe = coarseProbe)
-      case "pq" =>
-        // geometry from the persisted sub-codebooks: m subspaces ×
-        // kCents centroids of dims/m elements each — a tiny frame
-        val pqcb = readArtifact(spark, cur, "pq_codebook")
-        val g = pqcb.agg(max(col("sub")).cast("long"),
-          max(col("cent_id")).cast("long"),
-          max(size(col("centroid")))).head()
-        val m = g.getLong(0).toInt + 1
-        val kCents = g.getLong(1).toInt + 1
-        val dims = m * g.getInt(2)
-        retrainIndexPq(spark, path, cId, cVec, dims = dims, m = m,
-          kCents = kCents, pqIters = pqIters, coarseIters = maxIters,
-          eps = eps, scale = scale)
-      case _ =>
-        retrainIndex(spark, path, cId, cVec, maxIters, eps, scale)
-    }
-  }
-
   /** DRIFT-TRIGGERED retrain policy — the building block of a
     * scheduled maintenance job (and the decision loop behind the
     * append contract's "rebuild when drift warrants it"): read ONE
-    * [[indexDriftReport]], retrain ([[retrainDispatch]]) iff the
+    * [[indexDriftReport]], [[retrain]] iff the
     * worst per-cell drift exceeds `maxDriftMicro` OR the fattest cell
     * holds more than `maxCellSkew`× the mean cell population, and
     * return the decision WITH its evidence either way. The report
@@ -1287,23 +953,21 @@ object Similarity {
   def maybeRetrain(spark: org.apache.spark.sql.SparkSession, path: String,
                    cId: String, cVec: String, maxDriftMicro: Long,
                    maxCellSkew: Double, maxIters: Int = 1,
-                   eps: Double = 0.0, pqIters: Int = 1,
-                   coarseProbe: Option[Int] = None): RetrainDecision = {
+                   eps: Double = 0.0, pqIters: Int = 1): RetrainDecision = {
     val rows = indexDriftReport(spark, path, cId, cVec).collect()
     val (drift, skew) = driftSummary(rows.toSeq)
     if (drift <= maxDriftMicro && skew <= maxCellSkew)
       RetrainDecision(retrained = false, drift, skew, None, 0)
     else {
-      val (gen, steps) = retrainDispatch(spark, path, cId, cVec,
-        maxIters = maxIters, eps = eps, pqIters = pqIters,
-        coarseProbe = coarseProbe)
+      val (gen, steps) = retrain(spark, path, cId, cVec,
+        maxIters = maxIters, eps = eps, pqIters = pqIters)
       RetrainDecision(retrained = true, drift, skew, Some(gen), steps)
     }
   }
 
   /** DRIFT report of a persisted IVF index — the measurement behind
     * the append contract's "rebuild when drift warrants it"
-    * ([[appendToIndex]]) and the trigger for [[retrainIndex]]: per
+    * ([[append]]) and the trigger for [[retrain]]: per
     * cell, the live row count and the average angular distance of
     * members to their OWN stored centroid, as exact micro-longs
     * (each row's (1 − cos) floors to a long before the sum; the
@@ -1334,52 +998,196 @@ object Similarity {
       .orderBy(col("cell_id"))
   }
 
-  /** ANN top-k THROUGH a [[buildIndex]] artifact, never touching the
-    * raw corpus: ONE search path — [[ivfTopKIndexedJoined]]'s. The
-    * persisted codebook is read as a frame and broadcast (never
-    * collected, so nProbe ranking works at any nCells), the probed
-    * cell set — bounded by the broadcast-gated query count × nProbe —
-    * collects once, and the cells store is scanned with a
-    * `cell_id IN (...)` PARTITION filter listing only probed
-    * directories. Ranking semantics are identical to
-    * [[ivfTopKTrained]] with the same codebook. */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                     queries: DataFrame, qId: String, qVec: String,
-                     path: String, cId: String, cVec: String,
-                     k: Int, nProbe: Int = 1): DataFrame =
-    ivfTopKIndexedJoined(spark, queries, qId, qVec, path, cId, cVec,
-      k, nProbe)
+  /** ANN top-k THROUGH a persisted index of any layout, never touching
+    * the raw corpus: queries probe their `nProbe` best cells (through
+    * the coarse→fine hierarchy for two-level; codes-only probes every
+    * code) against the broadcast codebook frame (never collected, so
+    * probe ranking works at any nCells), the query side passes the
+    * measured broadcast gate, the (bounded) probed-cell set collects
+    * once, and ONLY those `cell_id=N/` directories are read
+    * ([[readProbedCells]]: manifest-snapshot, erasure-aware). Lossy
+    * layouts score their stored form (int8 patterns or decoded codes
+    * — the IO advantage they exist for), keep a per-query `shortlist`
+    * (default 4·k) and re-rank it on floats: the probed cells' own,
+    * or `floats` (cId, cVec) for the codes-only layout. Ranking is the
+    * shared (cos DESC, id ASC) order at every stage, so a SQL oracle
+    * replays it; flat results equal [[ivfTopKTrained]]'s with the same
+    * codebook.
+    *
+    * `where` = FILTERED vector search: a predicate over the payload
+    * columns the index was built with, applied inside the probed-cell
+    * scan BEFORE any scoring — for simple comparisons it reaches
+    * parquet as a pushed filter, so non-matching rows never decode
+    * their vector bytes, and ranks stay contiguous over the matching
+    * set. Filtered selectivity eats recall like any IVF restriction:
+    * raise `nProbe` as filters sharpen. */
+  def search(spark: org.apache.spark.sql.SparkSession,
+             queries: DataFrame, qId: String, qVec: String,
+             path0: String, cId: String, cVec: String, k: Int,
+             nProbe: Int = 1, shortlist: Option[Int] = None,
+             where: Option[Column] = None,
+             floats: Option[DataFrame] = None): DataFrame = {
+    // ONE resolution for codebooks + cells + deletes: a search racing a
+    // rebuild reads a single committed generation end to end
+    shortlist.foreach(sl => require(sl >= k, s"shortlist $sl must be >= k $k"))
+    val path = IndexGen.resolveRoot(spark, path0)
+    val layout = IndexLayout.detect(spark, path)
+    val qs = boundedQuerySide(
+      layout.probe(spark, path, queries, qId, qVec, nProbe), qVec,
+      s"search(${layout.name})")
+    val stored =
+      if (layout.hasCells) {
+        // the gate bounded the query side, so this collect is
+        // ≤ min(|queries|·nProbe, nCells) longs
+        val probed = qs.select(col("cell_id")).distinct()
+          .collect().map(_.getLong(0)).sorted.toIndexedSeq
+        readProbedCells(spark, path, probed)
+          .withColumn("cell_id", col("cell_id").cast("long"))
+      } else {
+        require(where.isEmpty, "a codes-only PQ artifact stores no payload " +
+          "columns — filtered search needs a cells layout")
+        minusIndexDeletes(spark, path, spark.read.parquet(s"$path/codes"))
+      }
+    val rows = where.map(stored.filter).getOrElse(stored)
+    val rerank =
+      if (!layout.lossy) None
+      else {
+        val fl = if (layout.hasCells) rows else floats.getOrElse(
+          throw new IllegalArgumentException(s"a ${layout.name} search " +
+            "re-ranks on floats the artifact does not store — pass `floats`"))
+        Some((shortlist.getOrElse(4 * k), fl.select(col(cId), col(cVec).as("__fv"))))
+      }
+    rankCandidates(qs, layout.candidates(spark, path, rows, cId, cVec),
+      qId, qVec, cId, k, if (layout.hasCells) Some("cell_id") else None,
+      rerank)
+  }
 
-  /** The shared index-search tail: gate + broadcast the probe-tagged
-    * query frame, collect the (bounded) probed cell set, scan ONLY
-    * those `cell_id=N/` directories, score, top-k. */
-  private def searchProbedCells(spark: org.apache.spark.sql.SparkSession,
-                                qa: DataFrame, qId: String, qVec: String,
-                                path: String, cId: String, cVec: String,
-                                k: Int, tag: String,
-                                where: Option[Column] = None): DataFrame = {
-    val qb = boundedBroadcast(qa, qVec, tag)
-    // the broadcast gate above already bounded the query side, so the
-    // distinct probed-cell collect is ≤ min(|queries|·nProbe, nCells)
-    // longs — driver-safe by construction
-    val probed = qb.select(col("cell_id")).distinct()
-      .collect().map(_.getLong(0)).sorted.toIndexedSeq
-    // project the search columns only: a richer artifact (e.g. the
-    // quantized layout's q_vec/q_vec_scale) must not collide with the
-    // caller's query columns. A metadata predicate (filtered vector
-    // search) applies BEFORE the projection so it sees the payload
-    // columns — and lands on the parquet scan as a pushed filter.
-    val caw = readProbedCells(spark, path, probed)
-    val ca = where.map(caw.filter).getOrElse(caw)
-      .select(col("cell_id"), col(cId), col(cVec))
-    val scored = ca
-      .withColumn("cell_id", col("cell_id").cast("long"))
-      .withColumn("__cn", norm(col(cVec)))
-      .join(qb, Seq("cell_id"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col(cVec)),
-        col("__qn"), col("__cn")))
-    topKPerQuery(scored, qId, cId, k)
+  /** The ONE scoring tail of every cosine top-k here: candidates
+    * (cId, [on,] __cv) meet the gated query side (qId, qVec, [on,] __qn)
+    * — equi-joined on the `on` key (cell, bucket), else all-pairs —
+    * minus self-matches, scored by cosine over pre-staged norms and
+    * ranked top-k; with `rerank` = (shortlist, (cId, __fv) floats) the
+    * top-`shortlist` candidates re-score on those floats first (float
+    * norms computed for the shortlist survivors only). */
+  private def rankCandidates(qs: DataFrame, cand: DataFrame, qId: String,
+                             qVec: String, cId: String, k: Int,
+                             on: Option[String],
+                             rerank: Option[(Int, DataFrame)]): DataFrame = {
+    val cn = cand.withColumn("__cn", norm(col("__cv")))
+    val scored =
+      on.fold(cn.crossJoin(broadcast(qs)))(key => cn.join(broadcast(qs), Seq(key)))
+        .filter(col(qId) =!= col(cId))
+        .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cv")),
+          col("__qn"), col("__cn")))
+    rerank match {
+      case None => topKPerQuery(scored, qId, cId, k)
+      case Some((shortlist, floats)) =>
+        val shortlisted =
+          topKPerQuery(scored.select(col(qId), col(cId), col("cos_sim")),
+            qId, cId, shortlist)
+          .select(col(qId), col(cId))
+        val rescored = shortlisted
+          .join(qs.select(col(qId), col(qVec), col("__qn"))
+            .dropDuplicates(Seq(qId)), Seq(qId))
+          .join(floats, Seq(cId))
+          .withColumn("__fn", norm(col("__fv")))
+          .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__fv")),
+            col("__qn"), col("__fn")))
+        topKPerQuery(rescored.select(col(qId), col(cId), col("cos_sim")),
+          qId, cId, k)
+    }
+  }
+
+  /** A codebook-family frame (`codebook` / `pq_codebook` /
+    * `codebook_coarse`) of a RESOLVED artifact root, memoized per
+    * generation ([[GenCache]]): the parquet open/footer round trip is
+    * paid once per generation instead of once per search operation.
+    * Committed generations are immutable, so the cached plan can
+    * never go stale; flat roots read through every call. */
+  private[pipeline] def readArtifact(spark: org.apache.spark.sql.SparkSession,
+                                     root: String, name: String): DataFrame =
+    GenCache.memo(spark, root, name)(spark.read.parquet(s"$root/$name"))
+
+  /** Shared bounded pool behind [[readProbedCells]]'s manifest
+    * round trips: daemon threads (they must never pin a JVM exit),
+    * lazily created once, sized to the store-concurrency bound. */
+  private lazy val manifestPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(16,
+      new java.util.concurrent.ThreadFactory {
+        private val n = new java.util.concurrent.atomic.AtomicInteger()
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"graft-manifest-${n.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      })
+
+  /** [[footerMaxLong]] memoized per committed generation under
+    * `footerMax:<column>` ([[GenCache]] — flat roots read through).
+    * Every cells-append path invalidates the key
+    * ([[GenCache.invalidate]]), so a batch landing violating ids is
+    * still caught by the next search; deletes/purges/compactions can
+    * only LOWER the true max, so a stale bound stays safe in the
+    * guard direction. */
+  private[graft] def cachedFooterMaxLong(
+      spark: org.apache.spark.sql.SparkSession,
+      root: String, column: String): Option[Long] =
+    GenCache.memo(spark, root, s"footerMax:$column")(
+      footerMaxLong(spark, root, column))
+
+  /** Test hook: number of physical footer sweeps actually run (cache
+    * hits don't count). */
+  private[graft] val footerSweeps =
+    new java.util.concurrent.atomic.AtomicLong()
+
+  /** `f` over `items` on [[manifestPool]], results in input order; a
+    * failed task rethrows its ORIGINAL cause, not the
+    * ExecutionException wrapper. */
+  private def onManifestPool[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    items.map(a => manifestPool.submit(new java.util.concurrent.Callable[B] {
+      def call(): B = f(a)
+    })).map { fut =>
+      try fut.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          throw Option(e.getCause).getOrElse(e)
+      }
+    }
+
+  /** Upper bound of a LONG column across every LIVE data file of a
+    * cells store, from parquet FOOTER statistics alone — metadata
+    * round trips (per-cell manifest list + per-file footer, both
+    * through the shared pool), never a data scan. This is what makes
+    * cheap-and-loud precondition guards possible on the serving path:
+    * the [[maxSimTopKIndexed]] token-id bound reads footers instead
+    * of aggregating a corpus column per search. Returns None when the
+    * store is empty or any file lacks usable stats for the column
+    * (schema drift, all-null chunk) — callers fall back to their
+    * exact check rather than trusting a partial bound. Deletes are
+    * ignored deliberately: a deleted id only makes the bound more
+    * conservative, never less safe. */
+  private[graft] def footerMaxLong(spark: org.apache.spark.sql.SparkSession,
+                                   path: String,
+                                   column: String): Option[Long] = {
+    footerSweeps.incrementAndGet(): Unit
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(s"$path/cells")
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) return None
+    val cellDirs = fs.listStatus(root)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell_id="))
+      .map(_.getPath).toSeq
+    // one pool task per cell: manifest list + that cell's footers —
+    // the same bound-parallel shape (and pool) as readProbedCells
+    val perCell = onManifestPool(cellDirs) { d =>
+      val maxes = graft.sources.Compact.livePartPaths(spark, d)
+        .map(partMaxLong(conf, _, column))
+      if (maxes.isEmpty) Some(Long.MinValue) // empty cell: no rows
+      else if (maxes.exists(_.isEmpty)) None
+      else Some(maxes.flatten.max)
+    }
+    if (perCell.isEmpty || perCell.exists(_.isEmpty)) None
+    else Some(perCell.flatten.max).filter(_ != Long.MinValue)
   }
 
   /** The probed slice of a `cells/cell_id=N/` artifact, listing ONLY
@@ -1404,115 +1212,34 @@ object Similarity {
     * superseded inputs on disk for time travel). Per-cell manifest
     * reads are driver-side and tiny — the same cost class as the
     * existence probe they extend. */
-  /** A codebook-family frame (`codebook` / `pq_codebook` /
-    * `codebook_coarse`) of a RESOLVED artifact root, memoized per
-    * generation ([[GenCache]]): the parquet open/footer round trip is
-    * paid once per generation instead of once per search operation.
-    * Committed generations are immutable, so the cached plan can
-    * never go stale; flat roots read through every call. */
-  private def readArtifact(spark: org.apache.spark.sql.SparkSession,
-                           root: String, name: String): DataFrame =
-    GenCache.memo(spark, root, name)(spark.read.parquet(s"$root/$name"))
-
-  /** Shared bounded pool behind [[readProbedCells]]'s manifest
-    * round trips: daemon threads (they must never pin a JVM exit),
-    * lazily created once, sized to the store-concurrency bound. */
-  private lazy val manifestPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(16,
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger()
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-manifest-${n.incrementAndGet()}")
-          t.setDaemon(true)
-          t
-        }
-      })
-
-  /** Upper bound of a LONG column across every LIVE data file of a
-    * cells store, from parquet FOOTER statistics alone — metadata
-    * round trips (per-cell manifest list + per-file footer, both
-    * through the shared pool), never a data scan. This is what makes
-    * cheap-and-loud precondition guards possible on the serving path:
-    * the [[maxSimTopKIndexed]] token-id bound reads footers instead
-    * of aggregating a corpus column per search. Returns None when the
-    * store is empty or any file lacks usable stats for the column
-    * (schema drift, all-null chunk) — callers fall back to their
-    * exact check rather than trusting a partial bound. Deletes are
-    * ignored deliberately: a deleted id only makes the bound more
-    * conservative, never less safe. */
-  /** [[footerMaxLong]] memoized per committed generation under
-    * `footerMax:<column>` ([[GenCache]] — flat roots read through).
-    * Every cells-append path invalidates the key
-    * ([[GenCache.invalidate]]), so a batch landing violating ids is
-    * still caught by the next search; deletes/purges/compactions can
-    * only LOWER the true max, so a stale bound stays safe in the
-    * guard direction. */
-  private[graft] def cachedFooterMaxLong(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String, column: String): Option[Long] =
-    GenCache.memo(spark, root, s"footerMax:$column")(
-      footerMaxLong(spark, root, column))
-
-  /** Test hook: number of physical footer sweeps actually run (cache
-    * hits don't count). */
-  private[graft] val footerSweeps =
-    new java.util.concurrent.atomic.AtomicLong()
-
-  private[graft] def footerMaxLong(spark: org.apache.spark.sql.SparkSession,
-                                   path: String,
-                                   column: String): Option[Long] = {
-    footerSweeps.incrementAndGet(): Unit
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return None
-    val cellDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell_id="))
-      .map(_.getPath).toSeq
-    // one pool task per cell: manifest list + that cell's footers —
-    // the same bound-parallel shape (and pool) as readProbedCells
-    val perCell = cellDirs.map { d =>
-      manifestPool.submit(new java.util.concurrent.Callable[Option[Long]] {
-        def call(): Option[Long] = {
-          val files = graft.sources.Compact.livePartPaths(spark, d)
-          val maxes = files.map { f =>
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-            try {
-              val chunks = scala.jdk.CollectionConverters
-                .ListHasAsScala(r.getFooter.getBlocks).asScala
-                .flatMap(b => scala.jdk.CollectionConverters
-                  .ListHasAsScala(b.getColumns).asScala)
-                .filter(_.getPath.toDotString == column)
-              if (chunks.isEmpty) None // column absent from this file
-              else {
-                val ms = chunks.map { c =>
-                  val st = c.getStatistics
-                  if (st == null || !st.hasNonNullValue) None
-                  else st.genericGetMax match {
-                    case l: java.lang.Long => Some(l.longValue)
-                    case i: java.lang.Integer => Some(i.longValue)
-                    case _ => None // not an integral column
-                  }
-                }
-                if (ms.exists(_.isEmpty)) None else Some(ms.flatten.max)
-              }
-            } finally r.close()
+  /** Max of an integral `column` in ONE parquet file from its footer
+    * statistics; None when the column is absent or any chunk lacks
+    * usable stats. */
+  private def partMaxLong(conf: org.apache.hadoop.conf.Configuration,
+                          f: org.apache.hadoop.fs.Path,
+                          column: String): Option[Long] = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+    try {
+      val chunks = scala.jdk.CollectionConverters
+        .ListHasAsScala(r.getFooter.getBlocks).asScala
+        .flatMap(b => scala.jdk.CollectionConverters
+          .ListHasAsScala(b.getColumns).asScala)
+        .filter(_.getPath.toDotString == column)
+      if (chunks.isEmpty) None // column absent from this file
+      else {
+        val ms = chunks.map { c =>
+          val st = c.getStatistics
+          if (st == null || !st.hasNonNullValue) None
+          else st.genericGetMax match {
+            case l: java.lang.Long => Some(l.longValue)
+            case i: java.lang.Integer => Some(i.longValue)
+            case _ => None // not an integral column
           }
-          if (maxes.isEmpty) Some(Long.MinValue) // empty cell: no rows
-          else if (maxes.exists(_.isEmpty)) None
-          else Some(maxes.flatten.max)
         }
-      })
-    }.map { f =>
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
+        if (ms.exists(_.isEmpty)) None else Some(ms.flatten.max)
       }
-    }
-    if (perCell.isEmpty || perCell.exists(_.isEmpty)) None
-    else Some(perCell.flatten.max).filter(_ != Long.MinValue)
+    } finally r.close()
   }
 
   private def readProbedCells(spark: org.apache.spark.sql.SparkSession,
@@ -1531,23 +1258,11 @@ object Similarity {
     // search); results join in probe order, so the file list stays
     // deterministic, and a failed manifest read rethrows its ORIGINAL
     // cause, not the ExecutionException wrapper.
-    val files = probed
-      .map { c =>
-        val d = new org.apache.hadoop.fs.Path(root, s"cell_id=$c")
-        manifestPool.submit(new java.util.concurrent.Callable[Seq[String]] {
-          def call(): Seq[String] =
-            if (!fs.exists(d)) Nil
-            else graft.sources.Compact.livePartPaths(spark, d)
-              .map(_.toString)
-        })
-      }
-      .flatMap { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }
+    val files = onManifestPool(probed) { c =>
+      val d = new org.apache.hadoop.fs.Path(root, s"cell_id=$c")
+      if (!fs.exists(d)) Nil
+      else graft.sources.Compact.livePartPaths(spark, d).map(_.toString)
+    }.flatten
     val base = spark.read.option("basePath", root.toString)
     val df = if (files.nonEmpty) base.parquet(files: _*)
              else spark.read.parquet(root.toString).filter(lit(false))
@@ -1687,57 +1402,12 @@ object Similarity {
         payload.map(p => col("__m").getField("row").getField(p).as(p)) :+
         (-col("__m").getField("nc")).as("cell_id"): _*)
 
-  /** [[buildIndex]] with a CALLER-SUPPLIED codebook DataFrame and
-    * join-based assignment — the build path for codebooks past the
-    * driver ceiling (the codebook is persisted and assignment
-    * broadcast-joins it; nothing driver-side scales with nCells).
-    * The artifact layout is identical to [[buildIndex]]'s
-    * (codebook parquet + `cells/cell_id=N/`), so Compact maintenance
-    * and the partition-pruned search tail apply unchanged. */
-  def buildIndexJoined(corpus: DataFrame, cId: String, cVec: String,
-                       codebook: DataFrame, path: String,
-                       payload: Seq[String] = Nil): Unit = {
-    codebook.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    // payload columns (FILTERED vector search's metadata: labels,
-    // tenants, timestamps) land IN the cells rows, so a search
-    // predicate over them pushes into the probed-cell parquet scan
-    assignCellsByJoin(corpus, cId, cVec, codebook, payload)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite")
-      .parquet(s"$path/cells")
-  }
-
-  /** [[appendToIndex]] for a join-built index: the batch is assigned
-    * by broadcast-joining the PERSISTED codebook frame (never
-    * collected — the maintenance path keeps the same
-    * past-the-driver-ceiling property as the build), written into the
-    * same `cells/cell_id=N/` layout in Append mode. Small-file
-    * accumulation folds via [[compactIndexCells]] exactly like the
-    * literal-codebook index. */
-  def appendToIndexJoined(batch: DataFrame, cId: String, cVec: String,
-                          path0: String, payload: Seq[String] = Nil): Unit = {
-    val path = IndexGen.resolveRoot(batch.sparkSession, path0)
-    requireNotQuantizedLayout(batch.sparkSession, path, "appendToIndexJoined")
-    val cb = batch.sparkSession.read.parquet(s"$path/codebook")
-    assignCellsByJoin(batch, cId, cVec, cb, payload)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("append")
-      .parquet(s"$path/cells")
-    GenCache.invalidate(path, "footerMax:")
-  }
-
-  /** [[ivfTopKIndexed]] with JOIN-BASED probe ranking: the persisted
-    * codebook is read as a DataFrame and broadcast — never collected —
-    * so nProbe cell ranking works at any nCells; each query keeps its
-    * `nProbe` best cells by the same (cos DESC, cell_id ASC) order,
-    * then the shared partition-pruned search tail runs unchanged
-    * (`cell_id IN (...)` PartitionFilters over only the probed
-    * directories). */
   /** JOIN-BASED top-`nProbe` cell ranking against a codebook FRAME
     * (broadcast, never collected): one row per (vId, probed cell),
     * `__qn` staged. Shared by the joined search paths. */
-  private def rankProbesJoined(vectors: DataFrame, vId: String, vVec: String,
-                               cb: DataFrame, nProbe: Int): DataFrame = {
+  private[pipeline] def rankProbesJoined(vectors: DataFrame, vId: String,
+                                         vVec: String, cb: DataFrame,
+                                         nProbe: Int): DataFrame = {
     val w = Window.partitionBy(col(vId))
       .orderBy(col("__cos").desc, col("cell_id").asc)
     vectors.select(col(vId), col(vVec))
@@ -1748,173 +1418,6 @@ object Similarity {
       .filter(col("__rn") <= nProbe)
       .select(col(vId), col(vVec), col("cell_id"))
       .withColumn("__qn", norm(col(vVec)))
-  }
-
-  def ivfTopKIndexedJoined(spark: org.apache.spark.sql.SparkSession,
-                           queries: DataFrame, qId: String, qVec: String,
-                           path0: String, cId: String, cVec: String,
-                           k: Int, nProbe: Int = 1): DataFrame = {
-    // ONE resolution for codebook + cells + deletes: a search racing
-    // a rebuild reads a single committed generation end to end
-    val path = IndexGen.resolveRoot(spark, path0)
-    val cb = readArtifact(spark, path, "codebook")
-    val qa = rankProbesJoined(queries, qId, qVec, cb, nProbe)
-    searchProbedCells(spark, qa, qId, qVec, path, cId, cVec, k,
-      "ivfTopKIndexedJoined")
-  }
-
-  /** FILTERED vector search — top-k among only the index rows
-    * matching `where`, a predicate over the payload columns the index
-    * was built with ([[buildIndexJoined]]'s `payload`): the classic
-    * "nearest neighbors WHERE tenant = X / label IN (…)" primitive.
-    * The predicate applies before scoring INSIDE the probed-cell
-    * scan — for simple comparisons it reaches parquet as a pushed
-    * filter, so non-matching rows never decode their vector bytes —
-    * and composes with the delete set and snapshot isolation
-    * unchanged. Post-filtering a plain top-k would instead RETURN
-    * FEWER than k (or scan k≫ deep); pushing the predicate into the
-    * candidate pass is the correct-by-construction form. Filtered
-    * selectivity eats recall like any IVF restriction: matching rows
-    * live only in probed cells, so raise `nProbe` as filters
-    * sharpen. */
-  def ivfTopKIndexedWhere(spark: org.apache.spark.sql.SparkSession,
-                          queries: DataFrame, qId: String, qVec: String,
-                          path0: String, cId: String, cVec: String,
-                          k: Int, nProbe: Int, where: Column): DataFrame = {
-    val path = IndexGen.resolveRoot(spark, path0)
-    val cb = readArtifact(spark, path, "codebook")
-    val qa = rankProbesJoined(queries, qId, qVec, cb, nProbe)
-    searchProbedCells(spark, qa, qId, qVec, path, cId, cVec, k,
-      "ivfTopKIndexedWhere", Some(where))
-  }
-
-  /** [[buildIndexJoined]] storing the int8 QUANTIZATION beside each
-    * vector: cells rows are `(cId, cVec, q_vec, q_vec_scale)` under
-    * `cell_id=N/`. Parquet is columnar, so a candidate pass that
-    * selects only `q_vec` reads a quarter of the vector bytes — the
-    * memory-bound ANN layout ([[quantizedRerankTopK]]) composed with
-    * the partition-pruned index. */
-  def buildIndexQuantizedJoined(corpus: DataFrame, cId: String, cVec: String,
-                                codebook: DataFrame, path: String,
-                                payload: Seq[String] = Nil): Unit = {
-    codebook.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    // payload columns recorded with the artifact (pq_meta's contract
-    // on this layout), so appends can refuse a mismatched batch
-    locally {
-      import corpus.sparkSession.implicits._
-      Seq(Tuple1(payload)).toDF("payload")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/quantized_meta")
-    }
-    withPqPayload(
-      withQuantizedInt8(
-        assignCellsByJoin(corpus.select(col(cId), col(cVec)), cId, cVec,
-          codebook), cVec), corpus, cId, payload)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite")
-      .parquet(s"$path/cells")
-  }
-
-  /** The persisted payload column names of a quantized artifact (None
-    * for a pre-meta index). */
-  def readQuantizedPayloadMeta(spark: org.apache.spark.sql.SparkSession,
-                               root: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/quantized_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString)
-      .select(col("payload")).head().getSeq[String](0))
-  }
-
-  /** Marker-idempotent APPEND for a QUANTIZED artifact — the last
-    * cells layout without one: the batch assigns by the persisted
-    * codebook, derives its int8 patterns ([[withQuantizedInt8]] —
-    * q_vec is storage, re-derived here exactly as a retrain would),
-    * payload columns ride (mismatches refused against
-    * `quantized_meta`), and rows land through [[atomicCellsWrite]]'s
-    * replay guard — exactly-once under foreachBatch restarts. */
-  def appendToIndexQuantized(batch: DataFrame, cId: String, cVec: String,
-                             path0: String, batchId: Long,
-                             payload: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val path = IndexGen.resolveRoot(spark, path0)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(path, f".batch-$batchId%09d.done")
-    if (fs.exists(marker)) return
-    readQuantizedPayloadMeta(spark, path).foreach { built =>
-      require(payload.sorted == built.sorted,
-        s"quantized index at $path was built with payload columns " +
-          s"${built.mkString("[", ",", "]")} — appends must carry the " +
-          s"same (got ${payload.mkString("[", ",", "]")})")
-    }
-    val cb = readArtifact(spark, path, "codebook")
-    atomicCellsWrite(spark,
-      withPqPayload(
-        withQuantizedInt8(
-          assignCellsByJoin(batch.select(col(cId), col(cVec)), cId, cVec,
-            cb), cVec), batch, cId, payload),
-      path, batchId)
-  }
-
-  /** Started-able streaming maintenance for a quantized index —
-    * [[streamingIndexAppendPq]]'s int8 twin. */
-  def streamingIndexAppendQuantized(vectors: DataFrame, cId: String,
-                                    cVec: String, path: String,
-                                    payload: Seq[String] = Nil) =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendToIndexQuantized(batch, cId, cVec, path, batchId, payload)
-    }
-
-  /** Quantized-candidate search through a [[buildIndexQuantizedJoined]]
-    * artifact: probe cells via the broadcast codebook, score
-    * candidates against the STORED int8 patterns (the scan projects
-    * only `q_vec` — the narrow column), keep a per-query `shortlist`,
-    * then re-rank ONLY the shortlist against the float vectors
-    * (second pruned scan projecting `cVec`). Candidate and final
-    * orderings use the shared deterministic tie-break, so a SQL
-    * oracle replays both stages. `where` filters on the payload
-    * columns inside the probed-cell scan before any int8 pattern is
-    * scored, [[ivfTopKIndexedPq]]'s contract on this layout. */
-  def ivfTopKIndexedQuantized(spark: org.apache.spark.sql.SparkSession,
-                              queries: DataFrame, qId: String, qVec: String,
-                              path0: String, cId: String, cVec: String,
-                              k: Int, shortlist: Int,
-                              nProbe: Int = 1,
-                              where: Option[Column] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val path = IndexGen.resolveRoot(spark, path0)
-    val cb = readArtifact(spark, path, "codebook")
-    val qa = rankProbesJoined(queries, qId, qVec, cb, nProbe)
-    val qb = boundedBroadcast(qa, qVec, "ivfTopKIndexedQuantized")
-    val probed = qb.select(col("cell_id")).distinct()
-      .collect().map(_.getLong(0)).sorted.toIndexedSeq
-    val cellsAll = readProbedCells(spark, path, probed)
-      .withColumn("cell_id", col("cell_id").cast("long"))
-    val cells = where.map(cellsAll.filter).getOrElse(cellsAll)
-    // candidate pass: int8 pattern column only (renamed — the caller's
-    // query-vector column may legitimately be called q_vec too)
-    val cand = cells.select(col(cId), col("cell_id"),
-        col("q_vec").as("__cq"))
-      .withColumn("__cqd", transform(col("__cq"), x => x.cast("double")))
-      .withColumn("__cqn", norm(col("__cqd")))
-      .join(qb, Seq("cell_id"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cqd")),
-        col("__qn"), col("__cqn")))
-    val shortlisted =
-      topKPerQuery(cand.select(col(qId), col(cId), col("cos_sim")),
-        qId, cId, shortlist)
-      .select(col(qId), col(cId))
-    // re-rank: float vectors of the shortlist only
-    val rescored = shortlisted
-      .join(qb.select(col(qId), col(qVec), col("__qn"))
-        .dropDuplicates(Seq(qId)), Seq(qId))
-      .join(cells.select(col(cId), col(cVec).as("__cv")), Seq(cId))
-      .withColumn("__cn", norm(col("__cv")))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cv")),
-        col("__qn"), col("__cn")))
-    topKPerQuery(rescored.select(col(qId), col(cId), col("cos_sim")),
-      qId, cId, k)
   }
 
   // ---- Product quantization (PQ) ---------------------------------
@@ -2054,279 +1557,52 @@ object Similarity {
              dims: Int, k: Int, shortlist: Int,
              m: Int = 8, kCents: Int = 16, iters: Int = 1,
              scale: Long = 1L << 20): DataFrame = {
-    val cb = pqTrainCodebooks(corpus, cId, cVec, dims, m, kCents, iters, scale)
-    val codes = pqEncode(corpus, cId, cVec, dims, m, cb)
-    pqSearch(queries, qId, qVec, cb, codes, corpus, cId, cVec, k, shortlist)
-  }
-
-  /** Persist a PQ index at `path`: the m sub-codebooks
-    * (`pq_codebook/` — m·kCents tiny rows) and the corpus CODES
-    * (`codes/` — m small ints per vector, the 32×-at-dims-64 form a
-    * 100 TB deployment scans instead of floats). Training is paid
-    * ONCE at build; searches load both artifacts and touch the float
-    * corpus only for their shortlists. */
-  def buildPqIndex(corpus: DataFrame, cId: String, cVec: String,
-                   dims: Int, m: Int, kCents: Int, iters: Int,
-                   path: String, scale: Long = 1L << 20): Unit = {
-    val cb = pqTrainCodebooks(corpus, cId, cVec, dims, m, kCents, iters, scale)
-    cb.coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebook")
-    pqEncode(corpus, cId, cVec, dims, m, cb)
-      .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  /** PQ search THROUGH a [[buildPqIndex]] artifact: candidates score
-    * against the stored codes (decoded on the fly from the broadcast
-    * codebook), the float `corpus` is joined for the shortlist
-    * re-rank alone. Identical results to [[pqTopK]] with the same
-    * build knobs — the artifact is a storage layout, not a semantic
-    * change. */
-  def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                    queries: DataFrame, qId: String, qVec: String,
-                    path0: String, corpus: DataFrame, cId: String,
-                    cVec: String, k: Int, shortlist: Int): DataFrame = {
-    val path = IndexGen.resolveRoot(spark, path0)
-    pqSearch(queries, qId, qVec,
-      readArtifact(spark, path, "pq_codebook"),
-      // the PQ-only layout's delete choke point (cell layouts take
-      // theirs in readProbedCells)
-      minusIndexDeletes(spark, path, spark.read.parquet(s"$path/codes")),
-      corpus, cId, cVec, k, shortlist)
-  }
-
-  /** The shared PQ search tail: asymmetric cosine over decoded codes,
-    * bounded shortlist, float re-rank. */
-  private def pqSearch(queries: DataFrame, qId: String, qVec: String,
-                       cb: DataFrame, codes: DataFrame,
-                       corpus: DataFrame, cId: String, cVec: String,
-                       k: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val recon = pqDecode(codes, cId, cb)
-      .withColumn("__rn", norm(col("__rv")))
-    val qa = boundedBroadcast(
+    val cb = pqTrainCodebooks(corpus, cId, cVec, dims, m, kCents, iters, scale)
+    val qs = boundedQuerySide(
       queries.select(col(qId), col(qVec)).withColumn("__qn", norm(col(qVec))),
-      qVec, "pqSearch")
-    val cand = recon.crossJoin(qa)
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__rv")),
-        col("__qn"), col("__rn")))
-    val shortlisted =
-      topKPerQuery(cand.select(col(qId), col(cId), col("cos_sim")),
-        qId, cId, shortlist)
-      .select(col(qId), col(cId))
-    val rescored = shortlisted
-      .join(qa.select(col(qId), col(qVec), col("__qn"))
-        .dropDuplicates(Seq(qId)), Seq(qId))
-      .join(corpus.select(col(cId), col(cVec).as("__cv")), Seq(cId))
-      .withColumn("__cn", norm(col("__cv")))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cv")),
-        col("__qn"), col("__cn")))
-    topKPerQuery(rescored.select(col(qId), col(cId), col("cos_sim")),
-      qId, cId, k)
+      qVec, "pqTopK")
+    rankCandidates(qs,
+      pqDecode(pqEncode(corpus, cId, cVec, dims, m, cb), cId, cb)
+        .withColumnRenamed("__rv", "__cv"),
+      qId, qVec, cId, k, on = None,
+      rerank = Some((shortlist, corpus.select(col(cId), col(cVec).as("__fv")))))
   }
 
-  /** The COMPOSED IVF×PQ index — both 100 TB answers in one
-    * artifact: the corpus is cell-partitioned by the coarse codebook
-    * (searches list only probed `cell_id=N/` directories) AND each
-    * row carries its PQ codes beside the float vector, so the
-    * candidate pass within probed cells scans the m-code column
-    * alone (32× fewer vector bytes at dims=64, m=8) and floats load
-    * for the shortlist re-rank only. PQ codebooks are trained on the
-    * FULL corpus (raw vectors, no residual encoding — deterministic
-    * and oracle-replayable); layout = `codebook` (coarse) +
-    * `pq_codebook` + `cells/cell_id=N/(cId, cVec, codes)`. Compact
-    * maintenance and the snapshot-isolated read path apply
-    * unchanged. */
-  def buildIndexPqJoined(corpus: DataFrame, cId: String, cVec: String,
-                         codebook: DataFrame, dims: Int, m: Int,
-                         kCents: Int, iters: Int, path: String,
-                         scale: Long = 1L << 20,
-                         payload: Seq[String] = Nil): Unit = {
-    codebook.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    writePqMeta(corpus.sparkSession, path, residual = false, payload)
-    val pqcb = pqTrainCodebooks(corpus, cId, cVec, dims, m, kCents, iters, scale)
-    pqcb.coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebook")
-    val codes = pqEncode(corpus, cId, cVec, dims, m, pqcb)
-    withPqPayload(
-      assignCellsByJoin(corpus.select(col(cId), col(cVec)), cId, cVec, codebook)
-        .join(codes, Seq(cId)), corpus, cId, payload)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite")
-      .parquet(s"$path/cells")
+  /** [[pqEncode]] at the width the PQ codebook itself implies
+    * (m × sub-centroid length) — what a layout's encode step uses, so
+    * no caller threads `dims` beside a persisted codebook. */
+  private[pipeline] def pqEncodeWith(corpus: DataFrame, cId: String,
+                                     cVec: String, m: Int,
+                                     cb: DataFrame): DataFrame =
+    pqEncode(corpus, cId, cVec,
+      m * cb.select(size(col("centroid"))).head().getInt(0), m, cb)
+
+  /** (m, kCents) of a PQ artifact from its `pq_codebook` parquet
+    * FOOTERS (max sub + 1, max cent_id + 1) — metadata only, no job;
+    * one tiny aggregate only when the stats are unusable. */
+  private[pipeline] def pqGeometry(spark: org.apache.spark.sql.SparkSession,
+                                   root: String): (Int, Int) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new org.apache.hadoop.fs.Path(s"$root/pq_codebook")
+    val files = dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    def count(c: String): Int = {
+      val ms = files.map(partMaxLong(conf, _, c))
+      (if (ms.nonEmpty && ms.forall(_.nonEmpty)) ms.flatten.max
+       else spark.read.parquet(dir.toString).agg(max(col(c)).cast("long"))
+         .head().getLong(0)).toInt + 1
+    }
+    (count("sub"), count("cent_id"))
   }
 
-  /** `payload` columns (for filtered search — [[buildIndexJoined]]'s
-    * contract extended to the composed layouts) join back ONCE at
-    * build/append time, exactly like [[buildIndexTwoLevel]]'s. */
-  private def withPqPayload(rows: DataFrame, corpus: DataFrame,
-                            cId: String, payload: Seq[String]): DataFrame =
+  /** `payload` columns of `corpus` joined back ONCE onto encoded rows
+    * (the layouts whose encoders work on (id, vector) alone). */
+  private[pipeline] def withPayloadCols(rows: DataFrame, corpus: DataFrame,
+                                        cId: String,
+                                        payload: Seq[String]): DataFrame =
     if (payload.isEmpty) rows
     else rows.join(corpus.select(col(cId) +: payload.map(col): _*), Seq(cId))
-
-  /** Build-time metadata of a composed IVF×PQ artifact — one tiny
-    * parquet row recording whether codes encode residuals AND which
-    * payload columns the cells rows carry, so maintenance paths (HTTP
-    * retrain dispatch, [[retrainIndexPq]]) can pair the rebuild with
-    * how the index was built instead of trusting a caller flag, and
-    * appends can REFUSE a payload-mismatched batch instead of
-    * silently writing rows whose missing payload reads back null (and
-    * so never matches a filtered search). Written at the UNRESOLVED
-    * build dir (each generation carries its own copy). */
-  private def writePqMeta(spark: org.apache.spark.sql.SparkSession,
-                          path: String, residual: Boolean,
-                          payload: Seq[String] = Nil): Unit = {
-    import spark.implicits._
-    Seq((residual, payload)).toDF("residual", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_meta")
-  }
-
-  /** The persisted residual flag of a composed artifact (None for a
-    * pre-meta index). `root` must be a RESOLVED generation root. */
-  def readPqMeta(spark: org.apache.spark.sql.SparkSession,
-                 root: String): Option[Boolean] =
-    // build-time constant of the artifact — memoized per committed
-    // generation like the codebooks (the serving dispatch reads it
-    // per request)
-    GenCache.memo(spark, root, "pq_meta_residual") {
-      val p = new org.apache.hadoop.fs.Path(s"$root/pq_meta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else Some(spark.read.parquet(p.toString)
-        .select(col("residual")).head().getBoolean(0))
-    }
-
-  /** The persisted payload column names of a composed artifact (None
-    * for a pre-meta or pre-payload-meta index). */
-  def readPqPayloadMeta(spark: org.apache.spark.sql.SparkSession,
-                        root: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/pq_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val df = spark.read.parquet(p.toString)
-      if (!df.columns.contains("payload")) None
-      else Some(df.select(col("payload")).head().getSeq[String](0))
-    }
-  }
-
-  /** Append-side payload validation: an index built WITH payload must
-    * be appended WITH the same columns — a payload-less append writes
-    * rows whose payload reads back null, and a filtered search would
-    * silently never return them. Pre-meta artifacts (no recorded
-    * payload) skip the check. */
-  private def requirePayloadMatch(spark: org.apache.spark.sql.SparkSession,
-                                  root: String,
-                                  payload: Seq[String]): Unit =
-    readPqPayloadMeta(spark, root).foreach { built =>
-      require(payload.sorted == built.sorted,
-        s"index at $root was built with payload columns ${built.mkString("[", ",", "]")} — " +
-          s"appends must carry the same (got ${payload.mkString("[", ",", "]")})")
-    }
-
-  /** Append-side ENCODING validation — [[requirePayloadMatch]]'s twin
-    * for the residual flag: appending plain-encoded codes to a
-    * residual-built index (or vice versa) corrupts nothing physically
-    * but makes the paired search decode them under the WRONG scheme —
-    * silently wrong rankings, never an error. The named append
-    * functions each assert the artifact's persisted flag matches the
-    * scheme they encode; pre-meta artifacts (no recorded flag) skip
-    * the check, exactly like the payload guard. */
-  private def requireEncodingMatch(spark: org.apache.spark.sql.SparkSession,
-                                   root: String, residual: Boolean,
-                                   other: String): Unit =
-    readPqMeta(spark, root).foreach { built =>
-      require(built == residual,
-        s"index at $root was built with residual=$built — use $other " +
-          "(or appendToIndexPqAtomic, which derives the encoding from " +
-          "pq_meta)")
-    }
-
-  /** [[appendToIndexJoined]] for a composed IVF×PQ index: the batch
-    * is cell-assigned by the persisted coarse codebook AND encoded by
-    * the persisted PQ codebooks (neither retrained — cells and code
-    * meanings stay stable, the standard maintenance contract), then
-    * appended into the same `cells/cell_id=N/(cId, cVec, codes)`
-    * layout. Small-file accumulation folds via [[compactIndexCells]]
-    * unchanged. */
-  def appendToIndexPqJoined(batch: DataFrame, cId: String, cVec: String,
-                            dims: Int, m: Int, path0: String,
-                            payload: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val path = IndexGen.resolveRoot(spark, path0)
-    requirePayloadMatch(spark, path, payload)
-    requireEncodingMatch(spark, path, residual = false,
-      "appendToIndexPqResidual")
-    val cb = readArtifact(spark, path, "codebook")
-    val pqcb = readArtifact(spark, path, "pq_codebook")
-    val codes = pqEncode(batch, cId, cVec, dims, m, pqcb)
-    withPqPayload(
-      assignCellsByJoin(batch.select(col(cId), col(cVec)), cId, cVec, cb)
-        .join(codes, Seq(cId)), batch, cId, payload)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("append")
-      .parquet(s"$path/cells")
-    GenCache.invalidate(path, "footerMax:")
-  }
-
-  /** Search a [[buildIndexPqJoined]] artifact: probe cells via the
-    * broadcast coarse codebook, score candidates against the DECODED
-    * PQ codes of the probed cells only (the scan projects `codes`,
-    * never the float column), keep a per-query `shortlist`, re-rank
-    * the shortlist against the float vectors from the same pruned
-    * cells. Deterministic tie-breaks at every stage, so a generated
-    * SQL oracle replays codebooks, assignment, encoding and both
-    * rankings.
-    *
-    * `where` = the FILTERED-search predicate over payload columns the
-    * index was built with ([[ivfTopKIndexedWhere]]'s contract on the
-    * compressed layout): it applies inside the probed-cell scan
-    * BEFORE any code decodes — for simple comparisons it reaches
-    * parquet as a pushed filter, so non-matching rows never ship
-    * their m-code column, and ranks stay contiguous over the
-    * matching set. Filtered selectivity eats recall like any IVF
-    * restriction: raise `nProbe` as filters sharpen. */
-  def ivfTopKIndexedPq(spark: org.apache.spark.sql.SparkSession,
-                       queries: DataFrame, qId: String, qVec: String,
-                       path0: String, cId: String, cVec: String,
-                       k: Int, shortlist: Int, nProbe: Int = 1,
-                       where: Option[Column] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val path = IndexGen.resolveRoot(spark, path0)
-    val cb = readArtifact(spark, path, "codebook")
-    val pqcb = readArtifact(spark, path, "pq_codebook")
-    val qa = rankProbesJoined(queries, qId, qVec, cb, nProbe)
-    val qb = boundedBroadcast(qa, qVec, "ivfTopKIndexedPq")
-    val probed = qb.select(col("cell_id")).distinct()
-      .collect().map(_.getLong(0)).sorted.toIndexedSeq
-    val cellsAll = readProbedCells(spark, path, probed)
-      .withColumn("cell_id", col("cell_id").cast("long"))
-    // the metadata predicate lands on the SHARED cells frame: the
-    // candidate pass decodes only matching rows' codes, and the
-    // re-rank float scan inherits the same pushed filter
-    val cells = where.map(cellsAll.filter).getOrElse(cellsAll)
-    // candidate pass: decode the probed cells' CODES (narrow column);
-    // cell_id rides the decode aggregate (constant per id), so the
-    // probe join needs no re-join back to the cells scan
-    val recon = pqDecode(cells.select(col(cId), col("cell_id"), col("codes")),
-        cId, pqcb, carry = Seq("cell_id"))
-      .withColumn("__rn", norm(col("__rv")))
-    val cand = recon.join(qb, Seq("cell_id"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__rv")),
-        col("__qn"), col("__rn")))
-    val shortlisted =
-      topKPerQuery(cand.select(col(qId), col(cId), col("cos_sim")),
-        qId, cId, shortlist)
-      .select(col(qId), col(cId))
-    val rescored = shortlisted
-      .join(qb.select(col(qId), col(qVec), col("__qn"))
-        .dropDuplicates(Seq(qId)), Seq(qId))
-      .join(cells.select(col(cId), col(cVec).as("__cv")), Seq(cId))
-      .withColumn("__cn", norm(col("__cv")))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cv")),
-        col("__qn"), col("__cn")))
-    topKPerQuery(rescored.select(col(qId), col(cId), col("cos_sim")),
-      qId, cId, k)
-  }
 
   // ---- Residual IVF×PQ (IVFADC) ----------------------------------
   // PQ over RESIDUALS r = x − c(cell) instead of raw vectors: within
@@ -2340,122 +1616,12 @@ object Similarity {
     * assigned coarse centroid as `__res` (array<double>). Double
     * IEEE subtraction of exactly the doubles both engines derive, so
     * the generated oracle replays it bit for bit. */
-  private def withResiduals(assigned: DataFrame, cVec: String,
-                            codebook: DataFrame): DataFrame =
+  private[pipeline] def withResiduals(assigned: DataFrame, cVec: String,
+                                      codebook: DataFrame): DataFrame =
     assigned.join(broadcast(codebook), Seq("cell_id"))
       .withColumn("__res", zip_with(col(cVec).cast("array<double>"),
         col("centroid"), (x, c) => x - c))
       .drop("centroid")
-
-  /** [[buildIndexPqJoined]] with RESIDUAL encoding: PQ codebooks are
-    * trained on (and codes encode) r = x − c(cell), not x. Layout is
-    * identical (`codebook` + `pq_codebook` + `cells/cell_id=N/(cId,
-    * cVec, codes)`); the search adds the centroid back after decode,
-    * so the artifact pairs with [[ivfTopKIndexedPqResidual]]. The
-    * cell assignment is STAGED once — training, encoding and the
-    * cells write all reuse it instead of re-running the broadcast
-    * argmax per consumer. */
-  def buildIndexPqResidual(corpus: DataFrame, cId: String, cVec: String,
-                           codebook: DataFrame, dims: Int, m: Int,
-                           kCents: Int, iters: Int, path: String,
-                           scale: Long = 1L << 20,
-                           payload: Seq[String] = Nil): Unit = {
-    codebook.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    writePqMeta(corpus.sparkSession, path, residual = true, payload)
-    val assigned = graft.engine.Staging.stage(
-      assignCellsByJoin(corpus.select(col(cId), col(cVec)), cId, cVec,
-        codebook))
-    val res = graft.engine.Staging.stage(
-      withResiduals(assigned, cVec, codebook).select(col(cId), col("__res")))
-    val pqcb = pqTrainCodebooks(res, cId, "__res", dims, m, kCents, iters,
-      scale)
-    pqcb.coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebook")
-    val codes = pqEncode(res, cId, "__res", dims, m, pqcb)
-    withPqPayload(assigned.join(codes, Seq(cId)), corpus, cId, payload)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite")
-      .parquet(s"$path/cells")
-  }
-
-  /** [[appendToIndexPqJoined]] for a residual index: the batch is
-    * cell-assigned by the persisted coarse codebook, RESIDUALIZED
-    * against it, and encoded by the persisted (residual-trained) PQ
-    * codebooks — nothing retrains, cells and code meanings stay
-    * stable. */
-  def appendToIndexPqResidual(batch: DataFrame, cId: String, cVec: String,
-                              dims: Int, m: Int, path0: String,
-                              payload: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val path = IndexGen.resolveRoot(spark, path0)
-    requirePayloadMatch(spark, path, payload)
-    requireEncodingMatch(spark, path, residual = true,
-      "appendToIndexPqJoined")
-    val cb = readArtifact(spark, path, "codebook")
-    val pqcb = readArtifact(spark, path, "pq_codebook")
-    val assigned = graft.engine.Staging.stage(
-      assignCellsByJoin(batch.select(col(cId), col(cVec)), cId, cVec, cb))
-    val res = withResiduals(assigned, cVec, cb).select(col(cId), col("__res"))
-    val codes = pqEncode(res, cId, "__res", dims, m, pqcb)
-    withPqPayload(assigned.join(codes, Seq(cId)), batch, cId, payload)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("append")
-      .parquet(s"$path/cells")
-    GenCache.invalidate(path, "footerMax:")
-  }
-
-  /** Search a [[buildIndexPqResidual]] artifact: identical shape to
-    * [[ivfTopKIndexedPq]] — probed-cell pruning, codes-only candidate
-    * scan, float re-rank — except the reconstruction is
-    * x̂ = c(cell) + r̂: decode the residual codes, add the candidate's
-    * OWN cell centroid back (a broadcast join on the tiny codebook),
-    * then score asymmetrically. Deterministic end to end, so the
-    * generated oracle replays the full chain. `where` filters on the
-    * payload columns inside the probed-cell scan before any decode,
-    * exactly as in [[ivfTopKIndexedPq]]. */
-  def ivfTopKIndexedPqResidual(spark: org.apache.spark.sql.SparkSession,
-                               queries: DataFrame, qId: String, qVec: String,
-                               path0: String, cId: String, cVec: String,
-                               k: Int, shortlist: Int,
-                               nProbe: Int = 1,
-                               where: Option[Column] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val path = IndexGen.resolveRoot(spark, path0)
-    val cb = readArtifact(spark, path, "codebook")
-    val pqcb = readArtifact(spark, path, "pq_codebook")
-    val qa = rankProbesJoined(queries, qId, qVec, cb, nProbe)
-    val qb = boundedBroadcast(qa, qVec, "ivfTopKIndexedPqResidual")
-    val probed = qb.select(col("cell_id")).distinct()
-      .collect().map(_.getLong(0)).sorted.toIndexedSeq
-    val cellsAll = readProbedCells(spark, path, probed)
-      .withColumn("cell_id", col("cell_id").cast("long"))
-    val cells = where.map(cellsAll.filter).getOrElse(cellsAll)
-    // candidate pass: decode residual codes (cell_id rides the decode
-    // aggregate — no re-join to the cells scan), add the centroid back
-    val recon = pqDecode(cells.select(col(cId), col("cell_id"), col("codes")),
-        cId, pqcb, carry = Seq("cell_id"))
-      .join(broadcast(cb.select(col("cell_id"),
-        col("centroid").as("__cc"))), Seq("cell_id"))
-      .withColumn("__rv", zip_with(col("__rv"), col("__cc"), (r, c) => r + c))
-      .drop("__cc")
-      .withColumn("__rn", norm(col("__rv")))
-    val cand = recon.join(qb, Seq("cell_id"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__rv")),
-        col("__qn"), col("__rn")))
-    val shortlisted =
-      topKPerQuery(cand.select(col(qId), col(cId), col("cos_sim")),
-        qId, cId, shortlist)
-      .select(col(qId), col(cId))
-    val rescored = shortlisted
-      .join(qb.select(col(qId), col(qVec), col("__qn"))
-        .dropDuplicates(Seq(qId)), Seq(qId))
-      .join(cells.select(col(cId), col(cVec).as("__cv")), Seq(cId))
-      .withColumn("__cn", norm(col("__cv")))
-      .withColumn("cos_sim", cosinePreNormed(dot(col(qVec), col("__cv")),
-        col("__qn"), col("__cn")))
-    topKPerQuery(rescored.select(col(qId), col(cId), col("cos_sim")),
-      qId, cId, k)
-  }
 
   /** The fine→coarse cell map of a TWO-LEVEL quantizer: every fine
     * centroid labeled with its nearest coarse cell (same argmax order
@@ -2503,62 +1669,6 @@ object Similarity {
       .select(col(vId), col(vVec), col("__fine").as("cell_id"))
   }
 
-  /** [[buildIndexJoined]] with TWO-LEVEL assignment: the same
-    * `codebook` + `cells/cell_id=N/` artifact (fine cells key the
-    * layout; searches and Compact maintenance are unchanged), plus
-    * the coarse codebook persisted as `codebook_coarse` so searches
-    * replay the hierarchy. A vector's cell is its best fine cell
-    * among its `coarseProbe` best coarse cells' members. */
-  def buildIndexTwoLevel(corpus: DataFrame, cId: String, cVec: String,
-                         fine: DataFrame, coarse: DataFrame,
-                         coarseProbe: Int, path: String,
-                         payload: Seq[String] = Nil): Unit = {
-    fine.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    coarse.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/codebook_coarse")
-    // build-time hierarchy knob AND payload columns persisted with
-    // the artifact, so a retrain replays assignment with the SAME
-    // coarseProbe the build used and appends can refuse a
-    // payload-mismatched batch (pq_meta's contract)
-    locally {
-      import corpus.sparkSession.implicits._
-      Seq((coarseProbe, payload)).toDF("coarse_probe", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/twolevel_meta")
-    }
-    val assigned = probeCellsTwoLevel(corpus.select(col(cId), col(cVec)),
-      cId, cVec, fine, coarse, coarseProbe, nProbe = 1)
-    // payload columns for filtered search join back once at build
-    // time (the hierarchy assigner stays vector-only)
-    val rows =
-      if (payload.isEmpty) assigned
-      else assigned.join(
-        corpus.select(col(cId) +: payload.map(col): _*), Seq(cId))
-    rows.repartition(col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite")
-      .parquet(s"$path/cells")
-  }
-
-  /** Search through a [[buildIndexTwoLevel]] artifact: queries rank
-    * fine cells through the same coarse→fine hierarchy, then the
-    * shared partition-pruned tail scans only the probed fine-cell
-    * directories. */
-  def ivfTopKIndexedTwoLevel(spark: org.apache.spark.sql.SparkSession,
-                             queries: DataFrame, qId: String, qVec: String,
-                             path0: String, cId: String, cVec: String,
-                             k: Int, coarseProbe: Int, nProbe: Int,
-                             where: Option[Column] = None): DataFrame = {
-    val path = IndexGen.resolveRoot(spark, path0)
-    val fine = readArtifact(spark, path, "codebook")
-    val coarse = readArtifact(spark, path, "codebook_coarse")
-    val qa = probeCellsTwoLevel(queries.select(col(qId), col(qVec)),
-      qId, qVec, fine, coarse, coarseProbe, nProbe)
-      .withColumn("__qn", norm(col(qVec)))
-    // `where` = the filtered-search predicate over payload columns,
-    // applied inside the probed-cell scan like ivfTopKIndexedWhere
-    searchProbedCells(spark, qa, qId, qVec, path, cId, cVec, k,
-      "ivfTopKIndexedTwoLevel", where)
-  }
-
   // ---- Late-interaction (maxsim / multi-vector) retrieval ----------
   // The quality step between BM25/bi-encoder retrieval and a
   // cross-encoder in training-data mining: documents and queries are
@@ -2588,8 +1698,9 @@ object Similarity {
     * bit-identical: MessageDigest md5 = SQL md5, the first 5 hex
     * digits are the digest's top 20 bits, and the `% 2001 - 1000`
     * then IEEE `/1000.0` arithmetic is replayed exactly (same oracle
-    * formula). Size-capped memo: adversarial all-unique token streams
-    * degrade to the uncached cost, never an unbounded map. */
+    * formula). The memo is a byte-bounded [[TaskMemo]]: adversarial
+    * all-unique token streams degrade to the uncached cost, and wide
+    * vectors cannot multiply its footprint. */
   def withTokenVectors(df: DataFrame, tokenCol: String, dims: Int,
                        out: String, tag: String = "tv"): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
@@ -2600,26 +1711,20 @@ object Similarity {
     val enc = org.apache.spark.sql.Encoders.row(schema)
     df.mapPartitions { it =>
       val md = java.security.MessageDigest.getInstance("MD5")
-      val memo = new java.util.HashMap[String, Array[Double]](1 << 12)
-      val memoCap = 1 << 18
-      def vecOf(t: String): Array[Double] = {
-        val hit = memo.get(t)
-        if (hit != null) hit
-        else {
-          val v = new Array[Double](dims)
-          var j = 0
-          while (j < dims) {
-            val d = md.digest(s"$tag-$t-$j".getBytes("UTF-8"))
-            // first 5 hex digits = top 20 bits of the digest
-            val h = ((d(0) & 0xffL) << 12) | ((d(1) & 0xffL) << 4) |
-              ((d(2) & 0xf0L) >> 4)
-            v(j) = (h % 2001L - 1000L).toDouble / 1000.0
-            j += 1
-          }
-          if (memo.size < memoCap) memo.put(t, v): Unit
-          v
+      val vecOf = new TaskMemo[Array[Double]](TaskMemo.MaxBytes,
+          TaskMemo.DoublesBytes)({ t =>
+        val v = new Array[Double](dims)
+        var j = 0
+        while (j < dims) {
+          val d = md.digest(s"$tag-$t-$j".getBytes("UTF-8"))
+          // first 5 hex digits = top 20 bits of the digest
+          val h = ((d(0) & 0xffL) << 12) | ((d(1) & 0xffL) << 4) |
+            ((d(2) & 0xf0L) >> 4)
+          v(j) = (h % 2001L - 1000L).toDouble / 1000.0
+          j += 1
         }
-      }
+        v
+      })
       it.map { r =>
         val t = r.getString(tokIdx)
         val vec: Seq[Double] =
@@ -2629,6 +1734,19 @@ object Similarity {
       }
     }(enc)
   }
+
+  /** THE corpus token-vector derivation of the maxsim family: the
+    * DISTINCT (doc, token) pairs of a space-split text column
+    * (maxsim's max over a multiset equals the max over its set; empty
+    * tokens dropped) with each token's md5 vector as `out`, via the
+    * memoized [[withTokenVectors]] pass. Returns (idCol, `__tok`, out). */
+  def docTokenVectors(docs: DataFrame, idCol: String, textCol: String,
+                      dims: Int, out: String): DataFrame =
+    withTokenVectors(
+      docs.select(col(idCol), explode(split(col(textCol), " ")).as("__tok"))
+        .filter(length(col("__tok")) > 0)
+        .distinct(),
+      "__tok", dims, out)
 
   /** MaxSim (late-interaction) top-k over multi-vector frames:
     * `queryTokens` (qId, qPos, qVec) × `docTokens` (dId, dVec) →
@@ -2684,7 +1802,7 @@ object Similarity {
   }
 
   /** [[maxSimTopK]] with IVF-INDEXED candidate generation — the scale
-    * form: doc TOKENS live in a [[buildIndexJoined]] artifact keyed by
+    * form: doc TOKENS live in a persisted index ([[build]]) keyed by
     * a token-instance id with the doc id as payload; each query token
     * retrieves its `candTok` nearest token instances through the
     * probed-cell index (partition-pruned, snapshot-isolated, erasure-
@@ -2713,7 +1831,8 @@ object Similarity {
     * skip even the footer sweep; the query-side guards are
     * frame-bounded and always run. */
   /** The composite-id preconditions of the indexed maxsim forms,
-    * ENFORCED (not just documented): a violating caller would
+    * ENFORCED (not just documented), then the probe frame
+    * (`__qt` = qId·1e6 + qPos + 1e12, qVec): a violating caller would
     * otherwise get silently wrong candidate sets (probe-id collisions
     * with real instances) or misattributed query ids (qPos under/
     * overflow), never an error. The query frame is broadcast-gated
@@ -2721,8 +1840,11 @@ object Similarity {
     * matter: a negative qPos would floor-divide into the WRONG query
     * id (and at qId=0 underflow below the 1e12 offset into token-id
     * space), and a huge qId would overflow the Long composite. */
-  private def maxsimRequireQueryBounds(queryTokens: DataFrame,
-                                       qId: String, qPos: String): Unit = {
+  private def maxsimProbeTokens(spark: org.apache.spark.sql.SparkSession,
+                                root: String, queryTokens: DataFrame,
+                                qId: String, qPos: String, qVec: String,
+                                tokId: String, validateTokenIds: Boolean,
+                                tokens: => DataFrame): DataFrame = {
     val qg = queryTokens.agg(
       min(col(qId).cast("long")), max(col(qId).cast("long")),
       min(col(qPos).cast("long")), max(col(qPos).cast("long"))).head()
@@ -2736,6 +1858,28 @@ object Similarity {
       require(qg.getLong(3) < 1000000L,
         s"maxSimTopKIndexed needs $qPos < 1e6 (composite probe-id scheme)")
     }
+    if (validateTokenIds)
+      // bound the ids IN THE INDEX (where a collision with the
+      // composite probe-id space would corrupt the candidate tail)
+      // from footer stats, memoized per committed generation (appends
+      // invalidate the key); one exact aggregate over `tokens` only
+      // when the stats are unusable
+      cachedFooterMaxLong(spark, root, tokId) match {
+        case Some(mx) =>
+          require(mx < 1000000000000L,
+            s"maxSimTopKIndexed needs token-instance ids < 1e12 ($tokId): " +
+              s"index at $root holds $mx")
+        case None =>
+          val tg = tokens.agg(max(col(tokId).cast("long"))).head()
+          require(tg.isNullAt(0) || tg.getLong(0) < 1000000000000L,
+            s"maxSimTopKIndexed needs token-instance ids < 1e12 ($tokId)")
+      }
+    // composite probe id offset above any token-instance id (< 1e12),
+    // so the index tail's query≠candidate self-exclusion (meant for
+    // corpus-queries) can never collide with a real instance
+    queryTokens.select(
+      (col(qId).cast("long") * 1000000L + col(qPos) +
+        lit(1000000000000L)).as("__qt"), col(qVec))
   }
 
   def maxSimTopKIndexed(spark: org.apache.spark.sql.SparkSession,
@@ -2745,35 +1889,9 @@ object Similarity {
                         dId: String, dVec: String,
                         k: Int, nProbe: Int, candTok: Int,
                         validateTokenIds: Boolean = true): DataFrame = {
-    maxsimRequireQueryBounds(queryTokens, qId, qPos)
-    if (validateTokenIds) {
-      // bound the ids IN THE INDEX (where a collision with the
-      // composite probe-id space would corrupt the candidate tail)
-      // from footer stats; exact docTokens aggregate only as the
-      // stats-unusable fallback. MEMOIZED per committed generation
-      // (the answer is immutable until an append lands, and the
-      // append paths invalidate the key) — without this every search
-      // re-opened every live file's footer for a constant: thousands
-      // of driver↔store round trips per request at real nCells.
-      cachedFooterMaxLong(spark, IndexGen.resolveRoot(spark, path),
-          tokId) match {
-        case Some(mx) =>
-          require(mx < 1000000000000L,
-            s"maxSimTopKIndexed needs token-instance ids < 1e12 ($tokId): " +
-              s"index at $path holds $mx")
-        case None =>
-          val tg = docTokens.agg(max(col(tokId).cast("long"))).head()
-          require(tg.isNullAt(0) || tg.getLong(0) < 1000000000000L,
-            s"maxSimTopKIndexed needs token-instance ids < 1e12 ($tokId)")
-      }
-    }
-    // composite probe id offset above any token-instance id (< 1e12),
-    // so the index tail's query≠candidate self-exclusion (meant for
-    // corpus-queries) can never collide with a real instance
-    val qt = queryTokens.select(
-      (col(qId).cast("long") * 1000000L + col(qPos) +
-        lit(1000000000000L)).as("__qt"), col(qVec))
-    val hits = ivfTopKIndexedJoined(spark, qt, "__qt", qVec, path,
+    val qt = maxsimProbeTokens(spark, IndexGen.resolveRoot(spark, path),
+      queryTokens, qId, qPos, qVec, tokId, validateTokenIds, docTokens)
+    val hits = search(spark, qt, "__qt", qVec, path,
       tokId, tokVec, k = candTok, nProbe = nProbe)
     val cand = hits
       .join(docTokens.select(col(tokId), col(dId)), Seq(tokId))
@@ -2822,24 +1940,10 @@ object Similarity {
                             k: Int, nProbe: Int, candTok: Int,
                             validateTokenIds: Boolean = true): DataFrame = {
     val path = IndexGen.resolveRoot(spark, path0)
-    maxsimRequireQueryBounds(queryTokens, qId, qPos)
-    if (validateTokenIds)
-      cachedFooterMaxLong(spark, path, tokId) match {
-        case Some(mx) =>
-          require(mx < 1000000000000L,
-            s"maxSimTopKIndexed needs token-instance ids < 1e12 ($tokId): " +
-              s"index at $path holds $mx")
-        case None =>
-          // stats-unusable fallback: ONE narrow-column aggregate over
-          // the artifact itself (this form has no caller frame)
-          val tg = readLiveCells(spark, path)
-            .agg(max(col(tokId).cast("long"))).head()
-          require(tg.isNullAt(0) || tg.getLong(0) < 1000000000000L,
-            s"maxSimTopKIndexed needs token-instance ids < 1e12 ($tokId)")
-      }
-    val qt = queryTokens.select(
-      (col(qId).cast("long") * 1000000L + col(qPos) +
-        lit(1000000000000L)).as("__qt"), col(qVec))
+    // no caller frame here: the stats-unusable fallback aggregates
+    // the artifact itself
+    val qt = maxsimProbeTokens(spark, path, queryTokens, qId, qPos, qVec,
+      tokId, validateTokenIds, readLiveCells(spark, path))
     // candidate stage: probed-cell INSET scan, ≤ |qTokens|·candTok
     // rows — staged because three consumers read it (id collect,
     // doc-map join, query-id recovery). LAZY: the skip-key collect
@@ -2848,7 +1952,7 @@ object Similarity {
     // boundedBroadcast probe-fusion pattern) instead of spending a
     // separate eager-checkpoint job per request.
     val hits = graft.engine.Staging.stage(
-      ivfTopKIndexedJoined(spark, qt, "__qt", qVec, path0,
+      search(spark, qt, "__qt", qVec, path0,
         tokId, tokVec, k = candTok, nProbe = nProbe), eager = false)
     // driver skip-set cap: the candidate set is |qTokens|·candTok by
     // construction, but candTok is caller-chosen — over the cap the
@@ -2883,13 +1987,7 @@ object Similarity {
     // wider future schema or a huge batched request withholds the
     // hint instead of silently promising executors an OOM. Over the
     // skip-key cap the hint is withheld along with the file skipping.
-    val hintBudget = {
-      val b = try {
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-      } catch { case _: Exception => 10L << 20 }
-      if (b > 0) b else 10L << 20
-    }
+    val hintBudget = graft.engine.Staging.broadcastBudget(spark)
     val hitKeys = skipKeys(hits, tokId)
     def hinted(df: DataFrame, evidence: Option[SkipEvidence]): DataFrame =
       evidence match {

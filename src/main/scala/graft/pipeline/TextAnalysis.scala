@@ -713,7 +713,7 @@ object TextAnalysis {
     * ([[IndexGen.commitNewGeneration]]) — searches concurrent with
     * the rebuild read old XOR new, a crash mid-rebuild leaves the old
     * generation serving. The text twin of
-    * [[Similarity.retrainIndex]]. Returns the committed generation. */
+    * [[Similarity.retrain]]. Returns the committed generation. */
   def rebuildTextIndex(docs: DataFrame, idCol: String, textCol: String,
                        path: String,
                        analyzer: Analyzer = Analyzer.identity): Long =
@@ -815,7 +815,7 @@ object TextAnalysis {
     * documents appends to the text index under a batchId-deterministic
     * name, so a foreachBatch restart replaying the last batch is
     * exactly-once in BOTH stores — the text twin of
-    * Similarity.streamingIndexAppend. The caller picks
+    * Similarity.streamingAppend. The caller picks
     * trigger/checkpoint and calls `.start()`; fold accumulated batches
     * with Compact off the hot path. */
   def streamingTextIndexAppend(docs: DataFrame, idCol: String,

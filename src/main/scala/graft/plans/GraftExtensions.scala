@@ -324,14 +324,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           .toDF("__q_id", "__q_pos", "__tok")
           .withColumn("__q_vec",
             graft.pipeline.Similarity.tokenVector(col("__tok"), dims))
-        // r20: typed memoized vector pass for the corpus side (values
-        // identical — see Similarity.withTokenVectors)
-        val dt = graft.pipeline.Similarity.withTokenVectors(
-          spark.table(stringLit(args.head, "maxsim_search table"))
-            .select(col(idCol), explode(split(col(textCol), " ")).as("__tok"))
-            .filter(length(col("__tok")) > 0)
-            .distinct(),
-          "__tok", dims, "__d_vec")
+        val dt = graft.pipeline.Similarity.docTokenVectors(
+          spark.table(stringLit(args.head, "maxsim_search table")),
+          idCol, textCol, dims, "__d_vec")
         graft.pipeline.Similarity.maxSimTopK(qt, dt,
             "__q_id", "__q_pos", "__q_vec", idCol, "__d_vec",
             longLit(args(5), "maxsim_search topK").toInt)

@@ -985,7 +985,7 @@ final class GraftHttpServer(
 
       // admin index maintenance — the erasure/retrain operations the
       // retrieval artifacts expose library-side (Similarity
-      // .deleteFromIndex/purgeIndexDeletes/retrainIndex, TextAnalysis
+      // .deleteFromIndex/purgeIndexDeletes/retrain, TextAnalysis
       // .deleteFromTextIndex/purgeTextIndex), reachable over the
       // request layer like backups: a GDPR deletion request should
       // not require a spark-shell. Same admin gate; the id→path
@@ -1136,14 +1136,13 @@ final class GraftHttpServer(
             keep = keep)
           200 -> s"""{"dropped":[${dropped.mkString(",")}]}"""
         })
-      // retrain DISPATCHES on the artifact's detected layout
-      // (Similarity.retrainDispatch): two-level artifacts rebuild
-      // hierarchically under their persisted coarseProbe, composed
-      // IVF×PQ retrains coarse + sub-codebooks with geometry inferred
-      // from the persisted pq_codebook and the residual flag from
-      // pq_meta, flat layouts take the plain Lloyd retrain — so the
-      // families most likely deployed at scale are drivable over the
-      // request layer, not just a spark-shell.
+      // retrain follows the artifact's detected layout
+      // (Similarity.retrain over IndexLayout.detect): two-level
+      // artifacts rebuild hierarchically under their persisted
+      // coarseProbe, composed IVF×PQ retrains coarse + sub-codebooks
+      // with geometry and residual flag from the artifact — so every
+      // cells layout is drivable over the request layer, not just a
+      // spark-shell.
       case ("POST", List("admin", "indexes", id, "retrain")) =>
         if (!indexesMounted) return 404 -> err("not found")
         adminGate(ex).getOrElse(indexLocked(id) {
@@ -1152,19 +1151,15 @@ final class GraftHttpServer(
           if (indexKind(path) != "vector")
             return 400 -> err("retrain applies to vector indexes; rebuild a " +
               "text index from its corpus via TextAnalysis.rebuildTextIndex")
-          val cur = graft.pipeline.IndexGen.resolveRoot(spark, path)
-          val fs = new org.apache.hadoop.fs.Path(cur)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(s"$cur/cells")))
+          if (!vectorLayout(path).retrainable)
             return 400 -> err("retrain needs a cells-layout artifact; a " +
               "codes-only PQ index has no coarse quantizer — rebuild it " +
-              "from its corpus via Similarity.buildPqIndex")
-          val (gen, steps) = graft.pipeline.Similarity.retrainDispatch(
+              "from its corpus via Similarity.build with IndexLayout.PqCodes")
+          val (gen, steps) = graft.pipeline.Similarity.retrain(
             spark, path, idColOf(body), vecColOf(body),
             maxIters = j.asOpt("maxIters").map(_.int).getOrElse(1),
             eps = j.asOpt("eps").map(_.num).getOrElse(0.0),
-            pqIters = j.asOpt("pqIters").map(_.int).getOrElse(1),
-            coarseProbe = j.asOpt("coarseProbe").map(_.int))
+            pqIters = j.asOpt("pqIters").map(_.int).getOrElse(1))
           200 -> s"""{"generation":$gen,"steps":$steps}"""
         })
       // the complete drift→retrain decision as ONE request
@@ -1182,13 +1177,11 @@ final class GraftHttpServer(
           // request error: a scheduled maintenance job polling this
           // route should learn the contract ("keep the corpus"), not
           // retry a 400 forever
-          val cur0 = graft.pipeline.IndexGen.resolveRoot(spark, path)
-          if (!graft.pipeline.Similarity.layoutRetrainable(
-              graft.pipeline.Similarity.indexLayout(spark, cur0)))
+          if (!vectorLayout(path).retrainable)
             return 200 -> ("""{"retrained":false,"retrainable":false,""" +
               """"reason":"codes-only PQ artifact stores no float """ +
               """vectors — keep the source corpus and rebuild via """ +
-              """Similarity.buildPqIndex"}""")
+              """Similarity.build with IndexLayout.PqCodes"}""")
           val d = graft.pipeline.Similarity.maybeRetrain(spark, path,
             idColOf(body), vecColOf(body),
             maxDriftMicro = (j / "maxDriftMicro").long,
@@ -1196,8 +1189,7 @@ final class GraftHttpServer(
               .getOrElse(Double.MaxValue),
             maxIters = j.asOpt("maxIters").map(_.int).getOrElse(1),
             eps = j.asOpt("eps").map(_.num).getOrElse(0.0),
-            pqIters = j.asOpt("pqIters").map(_.int).getOrElse(1),
-            coarseProbe = j.asOpt("coarseProbe").map(_.int))
+            pqIters = j.asOpt("pqIters").map(_.int).getOrElse(1))
           val gen = d.generation.map(_.toString).getOrElse("null")
           200 -> (s"""{"retrained":${d.retrained},""" +
             s""""maxDriftMicro":${d.maxDriftMicro},""" +
@@ -1346,6 +1338,10 @@ final class GraftHttpServer(
     try Json.parse(body).asOpt("vecCol").map(_.str).getOrElse("embedding")
     catch { case _: Json.JsonError => "embedding" }
 
+  private def vectorLayout(path: String): graft.pipeline.IndexLayout =
+    graft.pipeline.IndexLayout.detect(spark,
+      graft.pipeline.IndexGen.resolveRoot(spark, path))
+
   private def indexJson(id: String): String = {
     val path = indexReg(id)
     val gen = graft.pipeline.IndexGen.currentGen(spark, path)
@@ -1353,16 +1349,13 @@ final class GraftHttpServer(
     val kind = indexKind(path)
     // the retrainability CONTRACT surfaces in the listing, so an
     // operator learns "keep the corpus" at registration time, not at
-    // maintenance time: vector layouts answer Similarity's one shared
-    // definition (codes-only PQ = false); text indexes rebuild from
-    // their corpus via rebuildTextIndex, so the vector-retrain
-    // contract reads false for them too.
-    val layout =
-      if (kind != "vector") kind
-      else graft.pipeline.Similarity.indexLayout(spark,
-        graft.pipeline.IndexGen.resolveRoot(spark, path))
-    val retrainable = kind == "vector" &&
-      graft.pipeline.Similarity.layoutRetrainable(layout)
+    // maintenance time: vector layouts answer their IndexLayout
+    // (codes-only PQ = false); text indexes rebuild from their corpus
+    // via rebuildTextIndex, so the vector-retrain contract reads false
+    // for them too.
+    val vl = if (kind == "vector") Some(vectorLayout(path)) else None
+    val layout = vl.map(_.name).getOrElse(kind)
+    val retrainable = vl.exists(_.retrainable)
     s"""{"id":${JStr(id).render},"path":${JStr(path).render},""" +
       s""""kind":${JStr(kind).render},"layout":${JStr(layout).render},""" +
       s""""generation":$gen,"retrainable":$retrainable}"""

@@ -49,10 +49,11 @@ object MaxsimSoak {
     if (!marker.exists()) {
       val inst = graft.engine.JsonApi.maxsimTokenInstances(
         docs, "doc_id", "text", dims)
-      graft.pipeline.Similarity.buildIndexJoined(inst, "tok_id", "d_vec",
-        graft.pipeline.Similarity.syntheticCodebook(spark, nCells = 64,
-          dims = dims),
-        idxPath, payload = Seq("doc_id"))
+      graft.pipeline.Similarity.build(inst, "tok_id", "d_vec", idxPath,
+        graft.pipeline.IndexLayout.Flat,
+        Seq(graft.pipeline.Similarity.syntheticCodebook(spark, nCells = 64,
+          dims = dims)),
+        payload = Seq("doc_id"))
       // SOAK_NO_FOLD=1 measures the CONTROL: without the stats fold
       // no part carries skipping metadata, so the pruned reads keep
       // every file — exactly the r18 (unpruned) serving cost

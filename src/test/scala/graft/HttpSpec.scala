@@ -1019,15 +1019,17 @@ class HttpSpec extends SparkTestBase {
       (i.toLong,
         (0 until 8).map(j => (((i * 37 + j * 11) % 2001) - 1000) / 1000.0f))
     }.toDF("vec_id", "embedding")
-    graft.pipeline.Similarity.buildIndex(emb, "vec_id", "embedding",
-      s"$root/vec", nCells = 4, iters = 1)
+    graft.pipeline.Similarity.build(emb, "vec_id", "embedding", s"$root/vec",
+      graft.pipeline.IndexLayout.Flat,
+      Seq(graft.pipeline.Similarity.trainCodebook(emb, "vec_id", "embedding",
+        nCells = 4, iters = 1)))
     val docs = Seq((1L, "alpha beta"), (2L, "alpha gamma"),
       (3L, "beta gamma")).toDF("doc_id", "text")
     graft.pipeline.TextAnalysis.buildTextIndex(docs, "doc_id", "text", s"$root/txt")
     def neighbors(): Set[Long] = {
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      graft.pipeline.Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec",
+      graft.pipeline.Similarity.search(spark, q, "q_id", "q_vec",
           s"$root/vec", "vec_id", "embedding", k = 3, nProbe = 2)
         .select("vec_id").as[Long].collect().toSet
     }
@@ -1112,13 +1114,14 @@ class HttpSpec extends SparkTestBase {
         (((cl * 997 + j * 131) % 2001) - 1000) / 1000.0f +
           (((i * 31 + j * 7) % 201) - 100) / 2000.0f))
     }.toDF("vec_id", "embedding")
-    graft.pipeline.Similarity.buildIndexPqJoined(emb, "vec_id", "embedding",
-      graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 4),
-      dims = 8, m = 2, kCents = 4, iters = 1, s"$root/pq")
-    graft.pipeline.Similarity.buildIndexTwoLevel(emb, "vec_id", "embedding",
-      fine = graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 8),
-      coarse = graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 2),
-      coarseProbe = 2, path = s"$root/2l")
+    graft.pipeline.Similarity.build(emb, "vec_id", "embedding", s"$root/pq",
+      graft.pipeline.IndexLayout.Pq(m = 2, kCents = 4),
+      Seq(graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 4)),
+      pqIters = 1)
+    graft.pipeline.Similarity.build(emb, "vec_id", "embedding", s"$root/2l",
+      graft.pipeline.IndexLayout.TwoLevel(coarseProbe = 2),
+      Seq(graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 8),
+        graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 2)))
     withServer(new GraftHttpServer(spark, ev, tenancy = Some(tenancy),
         auth = Some(auth),
         indexes = Map("pq" -> s"$root/pq", "2l" -> s"$root/2l"),
@@ -1147,26 +1150,26 @@ class HttpSpec extends SparkTestBase {
       assert(rc == 200 && rbody.contains("\"generation\":0"), rbody)
       val q = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      assert(graft.pipeline.Similarity.ivfTopKIndexedPq(spark, q,
+      assert(graft.pipeline.Similarity.search(spark, q,
         "q_id", "q_vec", s"$root/pq", "vec_id", "embedding",
-        k = 3, shortlist = 6, nProbe = 2).collect().nonEmpty)
+        k = 3, shortlist = Some(6), nProbe = 2).collect().nonEmpty)
       // two-level retrain dispatches to retrainIndexTwoLevel under
       // the persisted coarseProbe; byte parity with the library call
       // on a twin artifact built+retrained the same way
       val twin = s"$root/2l-twin"
-      graft.pipeline.Similarity.buildIndexTwoLevel(emb, "vec_id", "embedding",
-        fine = graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 8),
-        coarse = graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 2),
-        coarseProbe = 2, path = twin)
-      graft.pipeline.Similarity.retrainIndexTwoLevel(spark, twin,
-        "vec_id", "embedding", fineIters = 1, coarseIters = 1)
+      graft.pipeline.Similarity.build(emb, "vec_id", "embedding", twin,
+        graft.pipeline.IndexLayout.TwoLevel(coarseProbe = 2),
+        Seq(graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 8),
+          graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 2)))
+      graft.pipeline.Similarity.retrain(spark, twin,
+        "vec_id", "embedding", maxIters = 1)
       val (rc2, rbody2) = req(srv.port, "POST", "/api/v1/admin/indexes/2l/retrain",
         """{"maxIters": 1}""", bearer = tok)
       assert(rc2 == 200 && rbody2.contains("\"generation\":0") &&
         rbody2.contains("\"steps\":2"), rbody2)
       def rows2l(path: String) = graft.pipeline.Similarity
-        .ivfTopKIndexedTwoLevel(spark, q, "q_id", "q_vec", path,
-          "vec_id", "embedding", k = 3, coarseProbe = 2, nProbe = 4)
+        .search(spark, q, "q_id", "q_vec", path,
+          "vec_id", "embedding", k = 3, nProbe = 4)
         .select(col("q_id"), col("vec_id"), col("rank"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq.sorted
@@ -1174,8 +1177,10 @@ class HttpSpec extends SparkTestBase {
         "HTTP retrain must equal the library retrain")
       // registry CRUD lifecycle: register → get → maintenance → delete → 404
       val extra = s"$root/extra"
-      graft.pipeline.Similarity.buildIndex(emb, "vec_id", "embedding",
-        extra, nCells = 4, iters = 1)
+      graft.pipeline.Similarity.build(emb, "vec_id", "embedding", extra,
+        graft.pipeline.IndexLayout.Flat,
+        Seq(graft.pipeline.Similarity.trainCodebook(emb, "vec_id", "embedding",
+          nCells = 4, iters = 1)))
       assert(req(srv.port, "POST", "/api/v1/admin/indexes/extra",
         s"""{"path": "$extra"}""", bearer = tok)._1 == 200)
       val (gc2, gbody2) = req(srv.port, "GET", "/api/v1/admin/indexes/extra",
@@ -1239,8 +1244,10 @@ class HttpSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
     // seed centroids (iters=0): high drift by design, so the policy
     // has something real to trip on
-    graft.pipeline.Similarity.buildIndex(emb, "vec_id", "embedding",
-      s"$root/mr", nCells = 4, iters = 0)
+    graft.pipeline.Similarity.build(emb, "vec_id", "embedding", s"$root/mr",
+      graft.pipeline.IndexLayout.Flat,
+      Seq(graft.pipeline.Similarity.trainCodebook(emb, "vec_id", "embedding",
+        nCells = 4, iters = 0)))
     // auth-less servers keep the open pre-auth surface — this test is
     // about the policy/persistence mechanics, gates are covered above
     withServer(new GraftHttpServer(spark, ev, indexRoot = Some(root))) { srv =>
@@ -1303,11 +1310,11 @@ class HttpSpec extends SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("graft-http-srv").toString
     graft.pipeline.TextAnalysis.buildTextIndex(docs, "doc_id", "text",
       s"$root/text")
-    graft.pipeline.Similarity.buildIndexJoined(
+    graft.pipeline.Similarity.build(
       graft.engine.JsonApi.maxsimTokenInstances(docs, "doc_id", "text", 8),
-      "tok_id", "d_vec",
-      graft.pipeline.Similarity.syntheticCodebook(spark, nCells = 4, dims = 8),
-      s"$root/tok", payload = Seq("doc_id"))
+      "tok_id", "d_vec", s"$root/tok", graft.pipeline.IndexLayout.Flat,
+      Seq(graft.pipeline.Similarity.syntheticCodebook(spark, nCells = 4, dims = 8)),
+      payload = Seq("doc_id"))
     val registry = Map("docs-idx" -> s"$root/text", "tok-idx" -> s"$root/tok")
     val resolver: Option[String => String] = Some(id => registry(id))
     withServer(new GraftHttpServer(spark, ev, documents = Some(docs),
@@ -1387,13 +1394,16 @@ class HttpSpec extends SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("graft-http-cs").toString
     graft.pipeline.TextAnalysis.buildTextIndex(docs, "doc_id", "text",
       s"$root/text")
-    graft.pipeline.Similarity.buildIndex(emb, "vec_id", "embedding",
-      s"$root/vec", nCells = 4, iters = 1, payload = Seq("label"))
-    graft.pipeline.Similarity.buildIndexJoined(
+    graft.pipeline.Similarity.build(emb, "vec_id", "embedding", s"$root/vec",
+      graft.pipeline.IndexLayout.Flat,
+      Seq(graft.pipeline.Similarity.trainCodebook(emb, "vec_id", "embedding",
+        nCells = 4, iters = 1)),
+      payload = Seq("label"))
+    graft.pipeline.Similarity.build(
       graft.engine.JsonApi.maxsimTokenInstances(docs, "doc_id", "text", 8),
-      "tok_id", "d_vec",
-      graft.pipeline.Similarity.syntheticCodebook(spark, nCells = 4, dims = 8),
-      s"$root/tok", payload = Seq("doc_id"))
+      "tok_id", "d_vec", s"$root/tok", graft.pipeline.IndexLayout.Flat,
+      Seq(graft.pipeline.Similarity.syntheticCodebook(spark, nCells = 4, dims = 8)),
+      payload = Seq("doc_id"))
     val registry = Map("docs-idx" -> s"$root/text", "vec-idx" -> s"$root/vec",
       "tok-idx" -> s"$root/tok")
     val resolver: Option[String => String] = Some(id => registry(id))
@@ -1514,9 +1524,9 @@ class HttpSpec extends SparkTestBase {
         (((cl * 997 + j * 131) % 2001) - 1000) / 1000.0f +
           (((i * 31 + j * 7) % 201) - 100) / 2000.0f))
     }.toDF("vec_id", "embedding")
-    graft.pipeline.Similarity.buildIndexJoined(emb, "vec_id", "embedding",
-      graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 3),
-      s"$root/vec")
+    graft.pipeline.Similarity.build(emb, "vec_id", "embedding", s"$root/vec",
+      graft.pipeline.IndexLayout.Flat,
+      Seq(graft.pipeline.Similarity.seedCodebook(emb, "vec_id", "embedding", 3)))
     val semBody = s"""{"semantic": {"queryId": 0, "k": 5, "nProbe": 2,
                        "index": "vec"}}"""
     withServer(new GraftHttpServer(spark, ev, documents = Some(docs),
@@ -1562,10 +1572,11 @@ class HttpSpec extends SparkTestBase {
       (i.toLong, (0 until 8).map(j =>
         (((i * 31 + j * 7) % 2001) - 1000) / 1000.0f))
     }.toDF("vid", "emb")
-    graft.pipeline.Similarity.buildPqIndex(emb, "vid", "emb",
-      dims = 8, m = 2, kCents = 4, iters = 1, s"$root/codes")
-    graft.pipeline.Similarity.buildIndex(emb, "vid", "emb",
-      s"$root/ivf", nCells = 4, iters = 1)
+    graft.pipeline.Similarity.build(emb, "vid", "emb", s"$root/codes",
+      graft.pipeline.IndexLayout.PqCodes(m = 2, kCents = 4), Nil, pqIters = 1)
+    graft.pipeline.Similarity.build(emb, "vid", "emb", s"$root/ivf",
+      graft.pipeline.IndexLayout.Flat,
+      Seq(graft.pipeline.Similarity.trainCodebook(emb, "vid", "emb", nCells = 4, iters = 1)))
     withServer(new GraftHttpServer(spark, ev,
         indexes = Map("codes" -> s"$root/codes", "ivf" -> s"$root/ivf"))) { srv =>
       // the codes-only artifact reads as an unretrainable vector index
@@ -1579,12 +1590,12 @@ class HttpSpec extends SparkTestBase {
         """{"maxDriftMicro": 0}""")
       assert(mc == 200 && mbody.contains("\"retrainable\":false") &&
         mbody.contains("\"retrained\":false") &&
-        mbody.contains("buildPqIndex"), mbody)
-      // retrainDispatch refuses it with the same pointer library-side
+        mbody.contains("IndexLayout.PqCodes"), mbody)
+      // retrain refuses it with the same pointer library-side
       val e = intercept[IllegalArgumentException](
-        graft.pipeline.Similarity.retrainDispatch(spark, s"$root/codes",
+        graft.pipeline.Similarity.retrain(spark, s"$root/codes",
           "vid", "emb", maxIters = 1))
-      assert(e.getMessage.contains("buildPqIndex"))
+      assert(e.getMessage.contains("IndexLayout.PqCodes"))
       // drift on NON-default columns: query parameters survive clients
       // that drop GET bodies (the body-only form silently fell back to
       // vec_id/embedding and failed)

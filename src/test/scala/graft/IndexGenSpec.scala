@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{IndexGen, Similarity, TextAnalysis}
+import graft.pipeline.{IndexGen, IndexLayout, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,14 @@ class IndexGenSpec extends SparkTestBase {
     c.filter(col("vec_id") < n)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
 
+  /** A flat index over `c` with a codebook trained from `c` itself. */
+  private def flatIndex(c: DataFrame, path: String, nCells: Int,
+                        iters: Int): Unit =
+    Similarity.build(c, "vec_id", "embedding", path, IndexLayout.Flat,
+      Seq(Similarity.trainCodebook(c, "vec_id", "embedding", nCells, iters)))
+
   private def searchRows(path: String, q: DataFrame): Seq[(Long, Long, Long)] =
-    Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec", path,
+    Similarity.search(spark, q, "q_id", "q_vec", path,
         "vec_id", "embedding", k = 3, nProbe = 2)
       .select(col("q_id"), col("vec_id"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -42,13 +48,13 @@ class IndexGenSpec extends SparkTestBase {
   test("flat artifacts resolve to themselves; first commit flips resolution") {
     val path = tmpDir("gen-flat")
     val c = corpus(80, 8)
-    Similarity.buildIndex(c, "vec_id", "embedding", path, nCells = 4, iters = 1)
+    flatIndex(c, path, nCells = 4, iters = 1)
     assert(IndexGen.currentGen(spark, path).isEmpty)
     assert(IndexGen.resolveRoot(spark, path) == path)
     val flat = searchRows(path, queriesOf(c))
     assert(flat.nonEmpty)
     val gen = IndexGen.commitNewGeneration(spark, path)(dir =>
-      Similarity.buildIndex(c, "vec_id", "embedding", dir, nCells = 4, iters = 1))
+      flatIndex(c, dir, nCells = 4, iters = 1))
     assert(gen == 0L)
     assert(IndexGen.resolveRoot(spark, path) == s"$path/gen=0")
     // same corpus, same training → identical search through the generation
@@ -58,7 +64,7 @@ class IndexGenSpec extends SparkTestBase {
   test("crash mid-rebuild leaves the old generation serving") {
     val path = tmpDir("gen-crash")
     val c = corpus(80, 8)
-    Similarity.buildIndex(c, "vec_id", "embedding", path, nCells = 4, iters = 1)
+    flatIndex(c, path, nCells = 4, iters = 1)
     val before = searchRows(path, queriesOf(c))
     intercept[RuntimeException] {
       IndexGen.commitNewGeneration(spark, path) { dir =>
@@ -72,7 +78,7 @@ class IndexGenSpec extends SparkTestBase {
     assert(IndexGen.currentGen(spark, path).isEmpty)
     assert(searchRows(path, queriesOf(c)) == before)
     // and a LATER retrain reuses/replaces the dead dir cleanly
-    val (gen, steps) = Similarity.retrainIndex(spark, path,
+    val (gen, steps) = Similarity.retrain(spark, path,
       "vec_id", "embedding", maxIters = 1)
     assert(gen == 0L && steps == 1)
     assert(searchRows(path, queriesOf(c)).nonEmpty)
@@ -83,12 +89,12 @@ class IndexGenSpec extends SparkTestBase {
     val q = queriesOf(c)
     // reference: one-shot trained build
     val ref = tmpDir("gen-ref")
-    Similarity.buildIndex(c, "vec_id", "embedding", ref, nCells = 4, iters = 1)
+    flatIndex(c, ref, nCells = 4, iters = 1)
     val expected = searchRows(ref, q)
     // seed build + atomic retrain
     val path = tmpDir("gen-retrain")
-    Similarity.buildIndex(c, "vec_id", "embedding", path, nCells = 4, iters = 0)
-    val (gen, steps) = Similarity.retrainIndex(spark, path,
+    flatIndex(c, path, nCells = 4, iters = 0)
+    val (gen, steps) = Similarity.retrain(spark, path,
       "vec_id", "embedding", maxIters = 1)
     assert(gen == 0L && steps == 1)
     assert(searchRows(path, q) == expected)
@@ -99,7 +105,7 @@ class IndexGenSpec extends SparkTestBase {
       Seq(7L, 11L).toDF("vec_id"), "gdpr")
     val hidden = searchRows(path, q)
     assert(!hidden.exists(r => r._2 == 7L || r._2 == 11L))
-    val (gen2, _) = Similarity.retrainIndex(spark, path,
+    val (gen2, _) = Similarity.retrain(spark, path,
       "vec_id", "embedding", maxIters = 1)
     assert(gen2 == 1L)
     val root2 = IndexGen.resolveRoot(spark, path)
@@ -121,14 +127,12 @@ class IndexGenSpec extends SparkTestBase {
     val cOld = corpus(80, 8)
     val cNew = corpus(80, 8, tag = "w") // different vectors, same ids
     val q = queriesOf(cOld)
-    Similarity.buildIndex(cOld, "vec_id", "embedding", path,
-      nCells = 4, iters = 1)
+    flatIndex(cOld, path, nCells = 4, iters = 1)
     val oldRows = searchRows(path, q)
     // the new generation's expected result, computed via a throwaway
     // index built the same way
     val refNew = tmpDir("gen-conc-ref")
-    Similarity.buildIndex(cNew, "vec_id", "embedding", refNew,
-      nCells = 4, iters = 1)
+    flatIndex(cNew, refNew, nCells = 4, iters = 1)
     val newRows = searchRows(refNew, q)
     assert(oldRows != newRows, "fixture must distinguish generations")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Long, Long, Long)]]()
@@ -140,8 +144,7 @@ class IndexGenSpec extends SparkTestBase {
     })
     searcher.start()
     try IndexGen.commitNewGeneration(spark, path)(dir =>
-      Similarity.buildIndex(cNew, "vec_id", "embedding", dir,
-        nCells = 4, iters = 1))
+      flatIndex(cNew, dir, nCells = 4, iters = 1))
     finally { stop.set(true); searcher.join(60000) }
     assert(err.get() == null, s"concurrent search failed: ${err.get()}")
     // one more search after the commit must serve the new generation
@@ -155,9 +158,9 @@ class IndexGenSpec extends SparkTestBase {
   test("gcGenerations reclaims superseded generations, keeps the serving one") {
     val path = tmpDir("gen-gc")
     val c = corpus(60, 8)
-    Similarity.buildIndex(c, "vec_id", "embedding", path, nCells = 4, iters = 0)
-    Similarity.retrainIndex(spark, path, "vec_id", "embedding", maxIters = 1)
-    Similarity.retrainIndex(spark, path, "vec_id", "embedding", maxIters = 1)
+    flatIndex(c, path, nCells = 4, iters = 0)
+    Similarity.retrain(spark, path, "vec_id", "embedding", maxIters = 1)
+    Similarity.retrain(spark, path, "vec_id", "embedding", maxIters = 1)
     assert(IndexGen.currentGen(spark, path).contains(1L))
     val q = queriesOf(c)
     val served = searchRows(path, q)
@@ -174,28 +177,27 @@ class IndexGenSpec extends SparkTestBase {
   test("composed IVF×PQ retrain commits one generation; search follows") {
     val path = tmpDir("gen-pq")
     val c = corpus(100, 8)
-    Similarity.buildIndexPqJoined(c, "vec_id", "embedding",
-      Similarity.syntheticCodebook(spark, nCells = 4, dims = 8),
-      dims = 8, m = 2, kCents = 4, iters = 1, path)
+    Similarity.build(c, "vec_id", "embedding", path,
+      IndexLayout.Pq(m = 2, kCents = 4),
+      Seq(Similarity.syntheticCodebook(spark, nCells = 4, dims = 8)))
     val q = queriesOf(c)
-    def pqRows() = Similarity.ivfTopKIndexedPq(spark, q, "q_id", "q_vec",
-        path, "vec_id", "embedding", k = 3, shortlist = 6, nProbe = 2)
+    def pqRows() = Similarity.search(spark, q, "q_id", "q_vec",
+        path, "vec_id", "embedding", k = 3, nProbe = 2, shortlist = Some(6))
       .select(col("q_id"), col("vec_id"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSeq.sorted
     val flat = pqRows()
-    val (gen, _) = Similarity.retrainIndexPq(spark, path,
-      "vec_id", "embedding", dims = 8, m = 2, kCents = 4,
-      pqIters = 1, coarseIters = 1)
+    val (gen, _) = Similarity.retrain(spark, path,
+      "vec_id", "embedding", maxIters = 1, pqIters = 1)
     assert(gen == 0L)
     assert(IndexGen.resolveRoot(spark, path) == s"$path/gen=0")
     val retrained = pqRows()
     assert(retrained.nonEmpty)
     assert(flat.nonEmpty)
     // appends now land in the committed generation
-    Similarity.appendToIndexPqJoined(
+    Similarity.append(
       corpus(110, 8).filter(col("vec_id") >= 100), "vec_id", "embedding",
-      dims = 8, m = 2, path)
+      path, batchId = 0L)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val genCells = spark.read.parquet(s"$path/gen=0/cells")
@@ -290,47 +292,44 @@ class IndexGenSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
     // --- two-level artifact ---
     val path2l = tmpDir("gen-2l")
-    Similarity.buildIndexTwoLevel(c, "vec_id", "embedding",
-      fine = Similarity.seedCodebook(c, "vec_id", "embedding", 8),
-      coarse = Similarity.seedCodebook(c, "vec_id", "embedding", 2),
-      coarseProbe = 2, path = path2l)
-    assert(Similarity.readTwoLevelMeta(spark, path2l).contains(2))
-    // a flat retrain refuses the hierarchy; the dispatcher routes it
-    intercept[IllegalArgumentException](
-      Similarity.retrainIndex(spark, path2l, "vec_id", "embedding", 1))
-    assert(Similarity.indexLayout(spark, path2l) == "two_level")
-    val (gen2l, steps2l) = Similarity.retrainDispatch(spark, path2l,
+    Similarity.build(c, "vec_id", "embedding", path2l,
+      IndexLayout.TwoLevel(coarseProbe = 2),
+      Seq(Similarity.seedCodebook(c, "vec_id", "embedding", 8),
+        Similarity.seedCodebook(c, "vec_id", "embedding", 2)))
+    assert(IndexLayout.detect(spark, path2l) == IndexLayout.TwoLevel(2))
+    // the detected layout routes the retrain through the hierarchy
+    assert(IndexLayout.detect(spark, path2l).name == "two_level")
+    val (gen2l, steps2l) = Similarity.retrain(spark, path2l,
       "vec_id", "embedding", maxIters = 1)
     assert(gen2l == 0L && steps2l == 2) // one coarse + one fine step
     val root2l = IndexGen.resolveRoot(spark, path2l)
     assert(root2l.endsWith("gen=0"))
     // the rebuilt generation is a complete two-level artifact with
     // the same persisted knob, and still serves searches
-    assert(Similarity.readTwoLevelMeta(spark, root2l).contains(2))
+    assert(IndexLayout.detect(spark, root2l) == IndexLayout.TwoLevel(2))
     val q = queriesOf(c)
-    val served = Similarity.ivfTopKIndexedTwoLevel(spark, q, "q_id", "q_vec",
-      path2l, "vec_id", "embedding", k = 3, coarseProbe = 2, nProbe = 4)
+    val served = Similarity.search(spark, q, "q_id", "q_vec",
+      path2l, "vec_id", "embedding", k = 3, nProbe = 4)
       .collect()
     assert(served.nonEmpty)
     // --- composed PQ artifact through the dispatcher (geometry
     // inferred from the persisted sub-codebooks, meta says raw) ---
     val pathPq = tmpDir("gen-dpq")
-    Similarity.buildIndexPqJoined(c, "vec_id", "embedding",
-      Similarity.seedCodebook(c, "vec_id", "embedding", 4),
-      dims = 8, m = 2, kCents = 4, iters = 1, pathPq)
-    assert(Similarity.indexLayout(spark, pathPq) == "pq")
-    val (genPq, _) = Similarity.retrainDispatch(spark, pathPq,
+    Similarity.build(c, "vec_id", "embedding", pathPq,
+      IndexLayout.Pq(m = 2, kCents = 4),
+      Seq(Similarity.seedCodebook(c, "vec_id", "embedding", 4)))
+    assert(IndexLayout.detect(spark, pathPq).name == "pq")
+    val (genPq, _) = Similarity.retrain(spark, pathPq,
       "vec_id", "embedding", maxIters = 1)
     assert(genPq == 0L)
-    assert(Similarity.ivfTopKIndexedPq(spark, q, "q_id", "q_vec", pathPq,
-      "vec_id", "embedding", k = 3, shortlist = 6, nProbe = 2)
+    assert(Similarity.search(spark, q, "q_id", "q_vec", pathPq,
+      "vec_id", "embedding", k = 3, nProbe = 2, shortlist = Some(6))
       .collect().nonEmpty)
     // --- drift-triggered policy on a flat artifact: no-op below
     // thresholds, retrain above, drift strictly lower after ---
     val pathF = tmpDir("gen-policy")
-    Similarity.buildIndex(c, "vec_id", "embedding", pathF,
-      nCells = 4, iters = 0) // seed centroids: high drift by design
-    assert(Similarity.indexLayout(spark, pathF) == "flat")
+    flatIndex(c, pathF, nCells = 4, iters = 0) // seed centroids: high drift by design
+    assert(IndexLayout.detect(spark, pathF).name == "flat")
     def maxDrift(): Long = Similarity.indexDriftReport(spark, pathF,
       "vec_id", "embedding")
       .agg(max(col("drift_micro"))).head().getLong(0)
@@ -356,17 +355,19 @@ class IndexGenSpec extends SparkTestBase {
     val fine = Similarity.seedCodebook(base, "vec_id", "embedding", 8)
     val coarse = Similarity.seedCodebook(base, "vec_id", "embedding", 2)
     val appended = tmpDir("gen-2la")
-    Similarity.buildIndexTwoLevel(base, "vec_id", "embedding", fine, coarse,
-      coarseProbe = 2, appended, payload = Seq("label"))
-    Similarity.appendToIndexTwoLevel(batch, "vec_id", "embedding", appended,
+    Similarity.build(base, "vec_id", "embedding", appended,
+      IndexLayout.TwoLevel(coarseProbe = 2), Seq(fine, coarse),
+      payload = Seq("label"))
+    Similarity.append(batch, "vec_id", "embedding", appended,
       batchId = 0L, payload = Seq("label"))
     // the reference: ONE build over the union at the SAME codebooks
     val rebuilt = tmpDir("gen-2lr")
-    Similarity.buildIndexTwoLevel(all, "vec_id", "embedding", fine, coarse,
-      coarseProbe = 2, rebuilt, payload = Seq("label"))
+    Similarity.build(all, "vec_id", "embedding", rebuilt,
+      IndexLayout.TwoLevel(coarseProbe = 2), Seq(fine, coarse),
+      payload = Seq("label"))
     def results(path: String, where: Option[org.apache.spark.sql.Column]) =
-      Similarity.ivfTopKIndexedTwoLevel(spark, queriesOf(all), "q_id",
-          "q_vec", path, "vec_id", "embedding", k = 3, coarseProbe = 2,
+      Similarity.search(spark, queriesOf(all), "q_id",
+          "q_vec", path, "vec_id", "embedding", k = 3,
           nProbe = 4, where = where)
         .select(col("q_id"), col("vec_id"), col("rank"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -377,29 +378,89 @@ class IndexGenSpec extends SparkTestBase {
     // appended row is reachable through its payload value
     val f = Some(col("label") === 1)
     assert(results(appended, f) == results(rebuilt, f))
-    val hit = Similarity.ivfTopKIndexedTwoLevel(spark,
+    val hit = Similarity.search(spark,
         all.filter(col("vec_id") === 101)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")),
         "q_id", "q_vec", appended, "vec_id", "embedding", k = 120,
-        coarseProbe = 2, nProbe = 8)
+        nProbe = 8)
       .filter(col("vec_id") >= 100).collect()
     assert(hit.nonEmpty, "appended rows must be searchable")
     // exactly-once: marker replay AND crash-before-marker replay
     val before = spark.read.parquet(s"$appended/cells").count()
-    Similarity.appendToIndexTwoLevel(batch, "vec_id", "embedding", appended,
+    Similarity.append(batch, "vec_id", "embedding", appended,
       batchId = 0L, payload = Seq("label"))
     assert(spark.read.parquet(s"$appended/cells").count() == before)
     val fs = new org.apache.hadoop.fs.Path(appended)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(appended,
       f".batch-${0L}%09d.done"), false)
-    Similarity.appendToIndexTwoLevel(batch, "vec_id", "embedding", appended,
+    Similarity.append(batch, "vec_id", "embedding", appended,
       batchId = 0L, payload = Seq("label"))
     assert(spark.read.parquet(s"$appended/cells").count() == before,
       "crash-before-marker replay overwrites, never appends")
     // a payload-built hierarchy refuses a payload-less batch
-    intercept[IllegalArgumentException](Similarity.appendToIndexTwoLevel(
+    intercept[IllegalArgumentException](Similarity.append(
       batch, "vec_id", "embedding", appended, batchId = 1L))
+  }
+
+  test("every IndexLayout: fixed-codebook append == rebuild; replayed batchId is a no-op; mismatched payload refused") {
+    val all = corpus(120, 8).withColumn("label", col("vec_id") % 3)
+    val base = all.filter(col("vec_id") < 100)
+    val batch = all.filter(col("vec_id") >= 100)
+    val layouts = Seq(IndexLayout.Flat, IndexLayout.Quantized(),
+      IndexLayout.Pq(m = 2, kCents = 4),
+      IndexLayout.Pq(m = 2, kCents = 4, residual = true),
+      IndexLayout.TwoLevel(coarseProbe = 2), IndexLayout.PqCodes(m = 2, kCents = 4))
+    for (layout <- layouts) {
+      val clue = layout.name + layout.pq.fold("")(_ => s" ${layout}")
+      // codes-only stores no payload; every cells layout carries one
+      val payload = if (layout.hasCells) Seq("label") else Nil
+      val cbs = layout.codebookDirs.map(d => graft.engine.Staging.stage(
+        Similarity.seedCodebook(base, "vec_id", "embedding",
+          if (d == "codebook_coarse") 2 else 4)))
+      val src = (df: DataFrame) =>
+        df.select((Seq("vec_id", "embedding") ++ payload).map(col): _*)
+      val appended = tmpDir("gen-lay")
+      Similarity.build(src(base), "vec_id", "embedding", appended, layout,
+        cbs, payload)
+      assert(IndexLayout.detect(spark, appended) == layout.withPayload(payload),
+        clue)
+      Similarity.append(src(batch), "vec_id", "embedding", appended,
+        batchId = 0L, payload = payload)
+      // the reference: ONE build over the union at the SAME codebooks
+      // (PQ layouts pin the appended artifact's trained pq_codebook)
+      val rebuilt = tmpDir("gen-lay-r")
+      Similarity.build(src(all), "vec_id", "embedding", rebuilt, layout,
+        cbs ++ layout.pq.map(_ =>
+          spark.read.parquet(s"$appended/pq_codebook")), payload)
+      def results(path: String, where: Option[org.apache.spark.sql.Column]) =
+        Similarity.search(spark, queriesOf(all), "q_id", "q_vec", path,
+            "vec_id", "embedding", k = 3, nProbe = 2, shortlist = Some(12),
+            where = where, floats = Some(all))
+          .select(col("q_id"), col("vec_id"), col("rank"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .toSeq.sorted
+      val got = results(appended, None)
+      assert(got.nonEmpty && got == results(rebuilt, None),
+        s"$clue: append+search must equal rebuild+search")
+      if (payload.nonEmpty) {
+        val f = Some(col("label") === 1)
+        assert(results(appended, f) == results(rebuilt, f), clue)
+      }
+      // a replayed batchId writes nothing
+      val data = s"$appended/${if (layout.hasCells) "cells" else "codes"}"
+      val before = spark.read.parquet(data).count()
+      assert(before == 120L, s"$clue: $before rows")
+      Similarity.append(src(batch), "vec_id", "embedding", appended,
+        batchId = 0L, payload = payload)
+      assert(spark.read.parquet(data).count() == before, clue)
+      // a batch whose payload differs from the build's is refused
+      val wrong = if (payload.isEmpty) Seq("label") else Nil
+      intercept[IllegalArgumentException](Similarity.append(
+        batch.select((Seq("vec_id", "embedding") ++ wrong).map(col): _*),
+        "vec_id", "embedding", appended, batchId = 1L, payload = wrong))
+      assert(spark.read.parquet(data).count() == before, clue)
+    }
   }
 
   test("quantized append: int8 patterns re-derived at fixed codebook; append == rebuild; payload rides; replay no-op") {
@@ -409,17 +470,17 @@ class IndexGenSpec extends SparkTestBase {
     val batch = all.filter(col("vec_id") >= 100)
     val cb = Similarity.seedCodebook(base, "vec_id", "embedding", 4)
     val appended = tmpDir("gen-qa")
-    Similarity.buildIndexQuantizedJoined(base, "vec_id", "embedding", cb,
-      appended, payload = Seq("label"))
-    Similarity.appendToIndexQuantized(batch, "vec_id", "embedding",
+    Similarity.build(base, "vec_id", "embedding", appended,
+      IndexLayout.Quantized(), Seq(cb), payload = Seq("label"))
+    Similarity.append(batch, "vec_id", "embedding",
       appended, batchId = 0L, payload = Seq("label"))
     val rebuilt = tmpDir("gen-qr")
-    Similarity.buildIndexQuantizedJoined(all, "vec_id", "embedding", cb,
-      rebuilt, payload = Seq("label"))
+    Similarity.build(all, "vec_id", "embedding", rebuilt,
+      IndexLayout.Quantized(), Seq(cb), payload = Seq("label"))
     def results(path: String, where: Option[org.apache.spark.sql.Column]) =
-      Similarity.ivfTopKIndexedQuantized(spark, queriesOf(all), "q_id",
-          "q_vec", path, "vec_id", "embedding", k = 3, shortlist = 12,
-          nProbe = 2, where = where)
+      Similarity.search(spark, queriesOf(all), "q_id",
+          "q_vec", path, "vec_id", "embedding", k = 3,
+          nProbe = 2, shortlist = Some(12), where = where)
         .select(col("q_id"), col("vec_id"), col("rank"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq.sorted
@@ -434,18 +495,13 @@ class IndexGenSpec extends SparkTestBase {
       streamed.filter(col("q_vec").isNull).count() == 0)
     // replay no-op + payload mismatch refused
     val before = spark.read.parquet(s"$appended/cells").count()
-    Similarity.appendToIndexQuantized(batch, "vec_id", "embedding",
+    Similarity.append(batch, "vec_id", "embedding",
       appended, batchId = 0L, payload = Seq("label"))
     assert(spark.read.parquet(s"$appended/cells").count() == before)
-    intercept[IllegalArgumentException](Similarity.appendToIndexQuantized(
+    intercept[IllegalArgumentException](Similarity.append(
       batch, "vec_id", "embedding", appended, batchId = 1L))
-    // FLAT appends refuse the quantized layout outright: they would
-    // write rows without q_vec/q_vec_scale that the quantized
-    // candidate pass silently never returns (null scores)
-    intercept[IllegalArgumentException](Similarity.appendToIndexJoined(
-      batch, "vec_id", "embedding", appended, payload = Seq("label")))
-    intercept[IllegalArgumentException](Similarity.appendToIndexAtomic(
-      batch, "vec_id", "embedding", appended, batchId = 7L))
+    // (an append always encodes the artifact's DETECTED layout, so
+    // every appended row carries q_vec/q_vec_scale — asserted above)
   }
 
   test("maxsim token-id guard memoizes per committed generation; appends invalidate; violating ids still refused") {
@@ -458,8 +514,8 @@ class IndexGenSpec extends SparkTestBase {
         (0 until dims).map(j => (((i * 31 + j * 7) % 2001) - 1000) / 1000.0))
     }.toDF("tok_id", "doc_id", "d_vec")
     IndexGen.commitNewGeneration(spark, path)(dir =>
-      Similarity.buildIndexJoined(inst, "tok_id", "d_vec",
-        Similarity.syntheticCodebook(spark, 4, dims), dir,
+      Similarity.build(inst, "tok_id", "d_vec", dir, IndexLayout.Flat,
+        Seq(Similarity.syntheticCodebook(spark, 4, dims)),
         payload = Seq("doc_id"))): Unit
     val qt = Seq((0L, 0L, "alpha"), (0L, 1L, "beta"))
       .toDF("q_id", "q_pos", "tok")
@@ -481,7 +537,7 @@ class IndexGenSpec extends SparkTestBase {
     // violating ids instead of trusting the stale cached bound
     val bad = Seq((2000000000000L, 99L,
         (0 until dims).map(_ => 0.5))).toDF("tok_id", "doc_id", "d_vec")
-    Similarity.appendToIndexJoined(bad, "tok_id", "d_vec", path,
+    Similarity.append(bad, "tok_id", "d_vec", path, batchId = 0L,
       payload = Seq("doc_id"))
     val e = intercept[IllegalArgumentException](run())
     assert(e.getMessage.contains("1e12"))
@@ -502,11 +558,11 @@ class IndexGenSpec extends SparkTestBase {
         }
       }.toDF("tok_id", "doc_id", "d_vec")
     val base = instancesFor(0 until 20)
-    Similarity.buildIndexJoined(base, "tok_id", "d_vec",
-      Similarity.syntheticCodebook(spark, 4, dims), path,
+    Similarity.build(base, "tok_id", "d_vec", path, IndexLayout.Flat,
+      Seq(Similarity.syntheticCodebook(spark, 4, dims)),
       payload = Seq("doc_id"))
     val extra = instancesFor(20 until 24)
-    Similarity.appendToIndexJoined(extra, "tok_id", "d_vec", path,
+    Similarity.append(extra, "tok_id", "d_vec", path, batchId = 0L,
       payload = Seq("doc_id"))
     Similarity.compactIndexCells(spark, path, "tok_id",
       Similarity.maxsimIndexMaintenanceOptions("tok_id", "doc_id")): Unit
@@ -546,20 +602,36 @@ class IndexGenSpec extends SparkTestBase {
     assert(self.nonEmpty && self == explicit,
       "file-skipped self-contained maxsim must equal the explicit form")
 
-    // r20: the broadcast HINT rests on measured row evidence (rows ·
-    // ~128 B framed vs the session broadcast budget). Under a 1-byte
-    // budget the hint is withheld everywhere — results must be
-    // identical, just planned without the hinted broadcasts.
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-      val unhinted = rows(Similarity.maxSimTopKIndexedSelf(spark, qt,
-        "q_id", "q_pos", "q_vec", path, "tok_id", "d_vec", "doc_id",
-        k = 5, nProbe = 2, candTok = 10))
-      assert(unhinted == self,
-        "hint-withheld self-contained maxsim must equal the hinted form")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+    // The broadcast HINTs rest on measured row evidence (rows · ~128 B
+    // framed vs the session broadcast budget). Two expectations:
+    def hints(df: DataFrame): Int = df.queryExecution.analyzed.collect {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+    }.size
+    // (rows, broadcast hints in the plan) of one run under `budget`
+    def selfAt(budget: Long): (Seq[String], Int) = {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", budget.toString)
+      try {
+        val df = Similarity.maxSimTopKIndexedSelf(spark, qt,
+          "q_id", "q_pos", "q_vec", path, "tok_id", "d_vec", "doc_id",
+          k = 5, nProbe = 2, candTok = 10)
+        (rows(df), hints(df))
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    // (1) a 1-byte budget trips the measured query-side gate itself
+    val e = intercept[IllegalArgumentException](selfAt(1L))
+    assert(e.getMessage.contains("broadcast budget"), e.getMessage)
+    // (2) the smallest budget that gate admits — the probe-tagged query
+    // side, 3 tokens × nProbe 2 rows of (96 + 8·dims) B — is below the
+    // ~128 B × rows evidence of every candidate frame (≥ 8 rows here),
+    // so each evidence-gated hint is withheld: results are identical,
+    // and the plan keeps only the gate's own broadcast hint
+    val (unhinted, unhintedHints) = selfAt(3L * 2L * (96L + 8L * dims))
+    assert(unhinted == self,
+      "hint-withheld self-contained maxsim must equal the hinted form")
+    val (_, hintedHints) = selfAt(10L << 20)
+    assert(hintedHints - unhintedHints == 2,
+      s"both evidence-gated hints must be withheld: $hintedHints vs $unhintedHints")
   }
 
   test("JSON maxsim route refuses request dims that contradict the artifact") {
@@ -571,8 +643,8 @@ class IndexGenSpec extends SparkTestBase {
       (doc * 1000000L + (i % 10) + 1, doc,
         (0 until dims).map(j => (((i * 29 + j * 5) % 2001) - 1000) / 1000.0))
     }.toDF("tok_id", "doc_id", "d_vec")
-    Similarity.buildIndexJoined(inst, "tok_id", "d_vec",
-      Similarity.syntheticCodebook(spark, 4, dims), path,
+    Similarity.build(inst, "tok_id", "d_vec", path, IndexLayout.Flat,
+      Seq(Similarity.syntheticCodebook(spark, 4, dims)),
       payload = Seq("doc_id"))
     val docs = Seq((0L, "alpha beta"), (1L, "gamma delta"))
       .toDF("doc_id", "text")
@@ -602,29 +674,27 @@ class IndexGenSpec extends SparkTestBase {
       math.cos(2000 * 0.11 + d).toFloat))).toDF("vec_id", "embedding")
     // plain-built index refuses the residual append function...
     val plain = tmpDir("gen-encp")
-    Similarity.buildIndexPqJoined(c, "vec_id", "embedding", cb,
-      dims = 16, m = 4, kCents = 4, iters = 1, plain)
-    intercept[IllegalArgumentException](Similarity.appendToIndexPqResidual(
-      batch, "vec_id", "embedding", dims = 16, m = 4, plain))
-    // ...and a residual-built one refuses the plain append function
+    Similarity.build(c, "vec_id", "embedding", plain,
+      IndexLayout.Pq(m = 4, kCents = 4), Seq(cb))
+    assert(IndexLayout.detect(spark, plain) == IndexLayout.Pq(4, 4))
+    // ...and a residual-built one records its encoding too
     val res = tmpDir("gen-encr")
-    Similarity.buildIndexPqResidual(c, "vec_id", "embedding", cb,
-      dims = 16, m = 4, kCents = 4, iters = 1, res)
-    intercept[IllegalArgumentException](Similarity.appendToIndexPqJoined(
-      batch, "vec_id", "embedding", dims = 16, m = 4, res))
-    // the atomic path IGNORES a wrong caller flag: residual=false on a
-    // residual artifact still writes residual-encoded codes — probing
-    // for the appended vector must rank it first (a plain-encoded row
-    // would decode as garbage residuals and lose the re-rank)
-    Similarity.appendToIndexPqAtomic(batch, "vec_id", "embedding",
-      dims = 16, m = 4, res, batchId = 0L, residual = false)
+    Similarity.build(c, "vec_id", "embedding", res,
+      IndexLayout.Pq(m = 4, kCents = 4, residual = true), Seq(cb))
+    assert(IndexLayout.detect(spark, res) ==
+      IndexLayout.Pq(4, 4, residual = true))
+    // the append takes NO encoding flag: a residual artifact gets
+    // residual-encoded codes — probing for the appended vector must
+    // rank it first (a plain-encoded row would decode as garbage
+    // residuals and lose the re-rank)
+    Similarity.append(batch, "vec_id", "embedding", res, batchId = 0L)
     // q_id 999 ≠ 200: the tail's query≠candidate self-exclusion must
     // not hide the appended row we probe for
     val probe = batch.select(lit(999L).as("q_id"),
       col("embedding").as("q_vec"))
-    val top = Similarity.ivfTopKIndexedPqResidual(spark, probe, "q_id",
-        "q_vec", res, "vec_id", "embedding", k = 1, shortlist = 70,
-        nProbe = 8).collect()
+    val top = Similarity.search(spark, probe, "q_id",
+        "q_vec", res, "vec_id", "embedding", k = 1, nProbe = 8,
+        shortlist = Some(70)).collect()
     assert(top.head.getAs[Long]("vec_id") == 200L, top.toSeq)
   }
 
@@ -639,9 +709,9 @@ class IndexGenSpec extends SparkTestBase {
       .withColumn("d_vec", Similarity.tokenVector(col("token"), dims))
       .select("tok_id", "doc_id", "d_vec")
     val dir = tmpDir("gen-docdel")
-    Similarity.buildIndexJoined(inst, "tok_id", "d_vec",
-      Similarity.syntheticCodebook(spark, nCells = 4, dims = dims),
-      dir, payload = Seq("doc_id"))
+    Similarity.build(inst, "tok_id", "d_vec", dir, IndexLayout.Flat,
+      Seq(Similarity.syntheticCodebook(spark, nCells = 4, dims = dims)),
+      payload = Seq("doc_id"))
     // delete TWO docs by payload key: 8 instance rows behind 2 keys
     Similarity.deleteFromIndex(spark, dir,
       Seq(1L, 4L).toDF("doc_id"), "gdpr-docs")
@@ -686,8 +756,8 @@ class IndexGenSpec extends SparkTestBase {
     // guarded search runs
     val ok = tmpDir("gen-fmax")
     val okInst = inst(5000L)
-    Similarity.buildIndexJoined(okInst, "tok_id", "d_vec", cb, ok,
-      payload = Seq("doc_id"))
+    Similarity.build(okInst, "tok_id", "d_vec", ok, IndexLayout.Flat,
+      Seq(cb), payload = Seq("doc_id"))
     assert(Similarity.footerMaxLong(spark, ok, "tok_id").contains(5029L))
     assert(Similarity.footerMaxLong(spark, ok, "no_such_col").isEmpty)
     assert(Similarity.maxSimTopKIndexed(spark, qt, "q_id", "q_pos", "q_vec",
@@ -697,8 +767,8 @@ class IndexGenSpec extends SparkTestBase {
     // space): the guard fires FROM THE FOOTERS — the docTokens frame
     // passed alongside is compliant, so only the index bound can trip
     val bad = tmpDir("gen-fbad")
-    Similarity.buildIndexJoined(inst(1000000000000L), "tok_id", "d_vec",
-      cb, bad, payload = Seq("doc_id"))
+    Similarity.build(inst(1000000000000L), "tok_id", "d_vec", bad,
+      IndexLayout.Flat, Seq(cb), payload = Seq("doc_id"))
     val e = intercept[IllegalArgumentException](Similarity.maxSimTopKIndexed(
       spark, qt, "q_id", "q_pos", "q_vec", bad, "tok_id", "d_vec",
       okInst, "doc_id", "d_vec", k = 3, nProbe = 4, candTok = 40))
@@ -779,12 +849,12 @@ class IndexGenSpec extends SparkTestBase {
     // committed generation regardless of later retrains
     val path = tmpDir("gen-pin")
     val c = corpus(80, 8)
-    Similarity.buildIndex(c, "vec_id", "embedding", path, nCells = 4, iters = 0)
+    flatIndex(c, path, nCells = 4, iters = 0)
     val q = queriesOf(c)
-    val (g0, _) = Similarity.retrainIndex(spark, path, "vec_id", "embedding",
+    val (g0, _) = Similarity.retrain(spark, path, "vec_id", "embedding",
       maxIters = 1)
     val atG0 = searchRows(path, q)
-    val (g1, _) = Similarity.retrainIndex(spark, path, "vec_id", "embedding",
+    val (g1, _) = Similarity.retrain(spark, path, "vec_id", "embedding",
       maxIters = 1)
     assert(g0 == 0L && g1 == 1L)
     // the live root serves gen=1; the pinned path still serves gen=0

@@ -1026,15 +1026,16 @@ class PipelineSpec extends SparkTestBase {
     }.toDF("vec_id", "v")
     val dir = java.nio.file.Files.createTempDirectory("ivfidx").toFile
     try {
-      Similarity.buildIndex(corpus, "vec_id", "v", dir.getAbsolutePath,
-        nCells = 8, iters = 1)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Flat,
+        Seq(Similarity.trainCodebook(corpus, "vec_id", "v", nCells = 8, iters = 1)))
       // artifact shape: tiny codebook + cell-partitioned corpus dirs
       assert(Similarity.loadCodebook(spark, dir.getAbsolutePath).length == 8)
       val cellDirs = new java.io.File(dir, "cells").listFiles()
         .filter(_.getName.startsWith("cell_id=")).map(_.getName).toSet
       assert(cellDirs.nonEmpty)
       val q = Seq((999L, Array(1.0f, 0.05f))).toDF("q_id", "q_vec")
-      val out = Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec",
+      val out = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = 1)
       // the scan must carry the probed-cell PARTITION filter: only the
       // query's one probed cell directory is listed, not the corpus
@@ -1053,8 +1054,9 @@ class PipelineSpec extends SparkTestBase {
       // query is assigned by the EXISTING codebook and must surface as
       // the new top-1 through the unchanged read path
       val extra = Seq((500L, Array(1.0f, 0.05f))).toDF("vec_id", "v")
-      Similarity.appendToIndex(extra, "vec_id", "v", dir.getAbsolutePath)
-      val after = Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec",
+      Similarity.append(extra, "vec_id", "v", dir.getAbsolutePath,
+        batchId = 0L)
+      val after = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = 1).collect()
       assert(after.exists(r =>
         r.getAs[Long]("vec_id") == 500L && r.getAs[Long]("rank") == 1L),
@@ -1064,9 +1066,9 @@ class PipelineSpec extends SparkTestBase {
       // directory independently (runPartitioned is layout-agnostic),
       // and the search result is unchanged through a plain read
       for (i <- 501L to 505L)
-        Similarity.appendToIndex(
+        Similarity.append(
           Seq((i, Array(1.0f, 0.04f + 0.001f * i))).toDF("vec_id", "v"),
-          "vec_id", "v", dir.getAbsolutePath)
+          "vec_id", "v", dir.getAbsolutePath, batchId = i)
       val cellsDir = new java.io.File(dir, "cells")
       def parquetCount(d: java.io.File): Int = {
         def walk(f: java.io.File): Seq[java.io.File] =
@@ -1079,7 +1081,7 @@ class PipelineSpec extends SparkTestBase {
         spark, dir.getAbsolutePath, "vec_id")
       assert(reports.values.exists(_.merges > 0), reports)
       assert(parquetCount(cellsDir) < before, s"$before -> ${parquetCount(cellsDir)}")
-      val folded = Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec",
+      val folded = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = 1).collect()
       assert(folded.exists(r =>
         r.getAs[Long]("vec_id") == 500L && r.getAs[Long]("rank") == 1L),
@@ -1100,26 +1102,27 @@ class PipelineSpec extends SparkTestBase {
     }.toDF("vec_id", "v")
     val dir = java.nio.file.Files.createTempDirectory("ivfsnap").toFile
     try {
-      Similarity.buildIndex(corpus, "vec_id", "v", dir.getAbsolutePath,
-        nCells = 4, iters = 1)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Flat,
+        Seq(Similarity.trainCodebook(corpus, "vec_id", "v", nCells = 4, iters = 1)))
       // a few appends, then an ADOPTION pass: under the L0 trigger
       // nothing merges, but a manifest generation commits naming the
       // adopted files — the precondition for retention to protect
       // them when a later fold supersedes them
       for (i <- 500L to 502L)
-        Similarity.appendToIndex(
+        Similarity.append(
           Seq((i, Array(1.0f, 0.04f + 0.001f * i))).toDF("vec_id", "v"),
-          "vec_id", "v", dir.getAbsolutePath)
+          "vec_id", "v", dir.getAbsolutePath, batchId = i)
       Similarity.compactIndexCells(spark, dir.getAbsolutePath, "vec_id",
         graft.sources.Compact.Options(retainGenerations = 1))
       // more appends push the hot cell past the L0 trigger
       for (i <- 503L to 508L)
-        Similarity.appendToIndex(
+        Similarity.append(
           Seq((i, Array(1.0f, 0.04f + 0.001f * i))).toDF("vec_id", "v"),
-          "vec_id", "v", dir.getAbsolutePath)
+          "vec_id", "v", dir.getAbsolutePath, batchId = i)
       val q = Seq((999L, Array(1.0f, 0.05f))).toDF("q_id", "q_vec")
       def search(): Set[(Long, Long)] =
-        Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec",
+        Similarity.search(spark, q, "q_id", "q_vec",
           dir.getAbsolutePath, "vec_id", "v", k = 5, nProbe = 2)
           .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank")))
           .toSet
@@ -1171,8 +1174,9 @@ class PipelineSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("ivfdel").toFile
     val refDir = java.nio.file.Files.createTempDirectory("ivfref").toFile
     try {
-      Similarity.buildIndex(corpus, "vec_id", "v", dir.getAbsolutePath,
-        nCells = 6, iters = 1)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Flat,
+        Seq(Similarity.trainCodebook(corpus, "vec_id", "v", nCells = 6, iters = 1)))
       // a MISNAMED key column must fail loudly at delete time, not
       // silently hide nothing from searches
       intercept[IllegalArgumentException] {
@@ -1185,12 +1189,12 @@ class PipelineSpec extends SparkTestBase {
       // the reference: the SAME codebook over the filtered corpus
       // (deletion must not retrain — cells keep their meaning)
       val cb = spark.read.parquet(s"${dir.getAbsolutePath}/codebook")
-      Similarity.buildIndexJoined(corpus.filter(col("vec_id") % 4 =!= 1),
-        "vec_id", "v", cb, refDir.getAbsolutePath)
+      Similarity.build(corpus.filter(col("vec_id") % 4 =!= 1), "vec_id", "v",
+        refDir.getAbsolutePath, IndexLayout.Flat, Seq(cb))
       val q = Seq((999L, Array(1.0f, 0.05f)),
         (998L, Array(0.2f, 0.9f))).toDF("q_id", "q_vec")
       def search(path: String) =
-        Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec", path,
+        Similarity.search(spark, q, "q_id", "q_vec", path,
           "vec_id", "v", k = 5, nProbe = 3)
           .select("q_id", "vec_id", "rank").collect().map(_.toSeq).toSet
       val got = search(dir.getAbsolutePath)
@@ -1204,14 +1208,15 @@ class PipelineSpec extends SparkTestBase {
           (i.toLong, Array.tabulate(16)(j =>
             math.cos(i * 0.11 + j).toFloat))
         }.toDF("vec_id", "v")
-        Similarity.buildPqIndex(wide, "vec_id", "v", dims = 16, m = 4,
-          kCents = 4, iters = 1, pqDir.getAbsolutePath)
+        Similarity.build(wide, "vec_id", "v", pqDir.getAbsolutePath,
+          IndexLayout.PqCodes(m = 4, kCents = 4), Nil, pqIters = 1)
         Similarity.deleteFromIndex(spark, pqDir.getAbsolutePath,
           wide.filter(col("vec_id") % 4 === 1).select("vec_id"), "gdpr-1")
         val qw = Seq((999L, Array.tabulate(16)(j => math.cos(j).toFloat)))
           .toDF("q_id", "q_vec")
-        val pqGot = Similarity.pqTopKIndexed(spark, qw, "q_id", "q_vec",
-          pqDir.getAbsolutePath, wide, "vec_id", "v", k = 5, shortlist = 10)
+        val pqGot = Similarity.search(spark, qw, "q_id", "q_vec",
+          pqDir.getAbsolutePath, "vec_id", "v", k = 5, shortlist = Some(10),
+          floats = Some(wide))
           .collect().map(_.getAs[Long]("vec_id"))
         assert(pqGot.nonEmpty && !pqGot.exists(deleted), pqGot.toSeq)
       } finally {
@@ -1234,8 +1239,9 @@ class PipelineSpec extends SparkTestBase {
         "gdpr-1") == ((0, 0L)))
       // post-purge, the cohort is reinsertable: an append surfaces it
       val back = Seq((1L, Array(1.0f, 0.05f))).toDF("vec_id", "v")
-      Similarity.appendToIndex(back, "vec_id", "v", dir.getAbsolutePath)
-      val after = Similarity.ivfTopKIndexed(spark, q, "q_id", "q_vec",
+      Similarity.append(back, "vec_id", "v", dir.getAbsolutePath,
+        batchId = 0L)
+      val after = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 5, nProbe = 3)
         .filter(col("q_id") === 999L).collect()
       assert(after.exists(r => r.getAs[Long]("vec_id") == 1L &&
@@ -1293,9 +1299,10 @@ class PipelineSpec extends SparkTestBase {
       }
 
       // build + search: probed-cell partition pruning unchanged
-      Similarity.buildIndexJoined(corpus, "vec_id", "v", cb, dir.getAbsolutePath)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Flat, Seq(cb))
       val q = Seq((999L, Array(1.0f, 0.05f))).toDF("q_id", "q_vec")
-      val out = Similarity.ivfTopKIndexedJoined(spark, q, "q_id", "q_vec",
+      val out = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = 64)
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cell_id"),
@@ -1303,7 +1310,7 @@ class PipelineSpec extends SparkTestBase {
       assert(out.collect().nonEmpty)
       // probing EVERY cell makes the candidate set the whole corpus:
       // the result must equal brute-force top-k
-      val full = Similarity.ivfTopKIndexedJoined(spark, q, "q_id", "q_vec",
+      val full = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = nCells)
         .select("q_id", "vec_id", "rank").collect().map(_.toSeq).toSet
       val brute = Similarity.bruteForceTopK(q, corpus, "q_id", "q_vec",
@@ -1313,10 +1320,10 @@ class PipelineSpec extends SparkTestBase {
       // maintenance stays joined: an appended near-identical vector is
       // assigned by the PERSISTED codebook frame (no driver collect)
       // and surfaces as top-1 through the unchanged search
-      Similarity.appendToIndexJoined(
+      Similarity.append(
         Seq((500L, Array(1.0f, 0.05f))).toDF("vec_id", "v"),
-        "vec_id", "v", dir.getAbsolutePath)
-      val after = Similarity.ivfTopKIndexedJoined(spark, q, "q_id", "q_vec",
+        "vec_id", "v", dir.getAbsolutePath, batchId = 0L)
+      val after = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = 64).collect()
       assert(after.exists(r =>
         r.getAs[Long]("vec_id") == 500L && r.getAs[Long]("rank") == 1L),
@@ -1373,8 +1380,8 @@ class PipelineSpec extends SparkTestBase {
     val cb = Similarity.syntheticCodebook(spark, 256, 2)
     val dir = java.nio.file.Files.createTempDirectory("ivfq").toFile
     try {
-      Similarity.buildIndexQuantizedJoined(corpus, "vec_id", "v", cb,
-        dir.getAbsolutePath)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Quantized(), Seq(cb))
       // the artifact carries BOTH representations per cell row
       val cells = spark.read.parquet(s"${dir.getAbsolutePath}/cells")
       assert(Set("vec_id", "v", "q_vec", "q_vec_scale", "cell_id")
@@ -1383,18 +1390,18 @@ class PipelineSpec extends SparkTestBase {
       // shortlist spanning every candidate => the float re-rank IS the
       // ranking, so the result must equal the float-scored joined
       // search over the same artifact and probes
-      val quant = Similarity.ivfTopKIndexedQuantized(spark, q, "q_id",
+      val quant = Similarity.search(spark, q, "q_id",
           "q_vec", dir.getAbsolutePath, "vec_id", "v",
-          k = 3, shortlist = 200, nProbe = 64)
+          k = 3, shortlist = Some(200), nProbe = 64)
         .select("q_id", "vec_id", "rank").collect().map(_.toSeq).toSet
-      val float = Similarity.ivfTopKIndexedJoined(spark, q, "q_id", "q_vec",
+      val float = Similarity.search(spark, q, "q_id", "q_vec",
           dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = 64)
         .select("q_id", "vec_id", "rank").collect().map(_.toSeq).toSet
       assert(quant == float, s"quant $quant vs float $float")
       // a tight shortlist still returns k ranked rows
-      val tight = Similarity.ivfTopKIndexedQuantized(spark, q, "q_id",
+      val tight = Similarity.search(spark, q, "q_id",
         "q_vec", dir.getAbsolutePath, "vec_id", "v",
-        k = 3, shortlist = 3, nProbe = 64).collect()
+        k = 3, shortlist = Some(3), nProbe = 64).collect()
       assert(tight.length == 3 &&
         tight.map(_.getAs[Long]("rank")).sorted.toSeq == Seq(1L, 2L, 3L))
     } finally {
@@ -1826,11 +1833,11 @@ class PipelineSpec extends SparkTestBase {
     // build + search keep the probed-cell partition pruning
     val dir = java.nio.file.Files.createTempDirectory("ivf2l").toFile
     try {
-      Similarity.buildIndexTwoLevel(corpus, "vec_id", "v", fine, coarse,
-        coarseProbe = 2, dir.getAbsolutePath)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.TwoLevel(coarseProbe = 2), Seq(fine, coarse))
       val q = Seq((999L, Array(1.0f, 0.05f))).toDF("q_id", "q_vec")
-      val out = Similarity.ivfTopKIndexedTwoLevel(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 3, coarseProbe = 2, nProbe = 8)
+      val out = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 3, nProbe = 8)
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cell_id"),
         plan.take(2000))
@@ -1906,10 +1913,11 @@ class PipelineSpec extends SparkTestBase {
     // a storage layout, not a semantic change
     val dir = java.nio.file.Files.createTempDirectory("pqidx").toFile
     try {
-      Similarity.buildPqIndex(corpus, "vec_id", "v", dims = 16, m = 4,
-        kCents = 8, iters = 1, dir.getAbsolutePath)
-      val viaIdx = Similarity.pqTopKIndexed(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, corpus, "vec_id", "v", k = 3, shortlist = 12)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.PqCodes(m = 4, kCents = 8), Nil, pqIters = 1)
+      val viaIdx = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = Some(12),
+        floats = Some(corpus))
         .collect().map(_.toSeq).toSet
       assert(viaIdx == out.map(_.toSeq).toSet)
     } finally {
@@ -1929,12 +1937,12 @@ class PipelineSpec extends SparkTestBase {
     val cb = Similarity.syntheticCodebook(spark, nCells = 8, dims = 16)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq").toFile
     try {
-      Similarity.buildIndexPqJoined(corpus, "vec_id", "v", cb,
-        dims = 16, m = 4, kCents = 8, iters = 1, dir.getAbsolutePath)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Pq(m = 4, kCents = 8), Seq(cb), pqIters = 1)
       val q = corpus.filter(col("vec_id") < 3)
         .select(col("vec_id").as("q_id"), col("v").as("q_vec"))
-      val out = Similarity.ivfTopKIndexedPq(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = 12, nProbe = 2)
+      val out = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = Some(12), nProbe = 2)
       val plan = out.queryExecution.executedPlan.toString
       // probed-cell pruning on the cells store
       assert(plan.contains("PartitionFilters") && plan.contains("cell_id"),
@@ -1946,8 +1954,8 @@ class PipelineSpec extends SparkTestBase {
       assert(out.collect().length == 9)
       // probing every cell with a corpus-sized shortlist reduces the
       // index to plain PQ, whose full-shortlist re-rank is brute truth
-      val all = Similarity.ivfTopKIndexedPq(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = 100, nProbe = 8)
+      val all = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = Some(100), nProbe = 8)
         .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
           r.getAs[Long]("rank"))).toSet
       val brute = Similarity.bruteForceTopK(q, corpus, "q_id", "q_vec",
@@ -1962,10 +1970,10 @@ class PipelineSpec extends SparkTestBase {
         .select(col("vec_id").as("q_id"), col("v").as("q_vec"))
       val twin = corpus.filter(col("vec_id") === 42L)
         .select((col("vec_id") + 1000L).as("vec_id"), col("v"))
-      Similarity.appendToIndexPqJoined(twin, "vec_id", "v",
-        dims = 16, m = 4, dir.getAbsolutePath)
-      val after = Similarity.ivfTopKIndexedPq(spark, probe, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 1, shortlist = 5, nProbe = 2)
+      Similarity.append(twin, "vec_id", "v", dir.getAbsolutePath,
+        batchId = 0L)
+      val after = Similarity.search(spark, probe, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 1, shortlist = Some(5), nProbe = 2)
         .collect()
       assert(after.head.getAs[Long]("vec_id") == 1042L,
         s"the appended identical twin must rank first: ${after.toSeq}")
@@ -1986,15 +1994,16 @@ class PipelineSpec extends SparkTestBase {
     val cb = Similarity.syntheticCodebook(spark, nCells = 8, dims = 16)
     val dir = java.nio.file.Files.createTempDirectory("ivfpqfilt").toFile
     try {
-      Similarity.buildIndexPqJoined(corpus, "vec_id", "v", cb,
-        dims = 16, m = 4, kCents = 8, iters = 1, dir.getAbsolutePath,
-        payload = Seq("label"))
-      assert(Similarity.readPqMeta(spark, dir.getAbsolutePath).contains(false))
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Pq(m = 4, kCents = 8), Seq(cb), payload = Seq("label"),
+        pqIters = 1)
+      assert(IndexLayout.detect(spark, dir.getAbsolutePath) ==
+        IndexLayout.Pq(4, 8, residual = false, payload = Seq("label")))
       val q = Seq((999L, Array.tabulate(16)(d => math.cos(d * 0.4).toFloat)),
         (998L, Array.tabulate(16)(d => math.cos(2.0 + d * 0.4).toFloat)))
         .toDF("q_id", "q_vec")
-      val out = Similarity.ivfTopKIndexedPq(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 4, shortlist = 12, nProbe = 2,
+      val out = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 4, shortlist = Some(12), nProbe = 2,
         where = Some(col("label") === 1))
       // the label predicate reaches the probed-cell parquet scan: rows
       // are dropped before their m-code column decodes
@@ -2006,9 +2015,9 @@ class PipelineSpec extends SparkTestBase {
       assert(got.forall(r => r.getAs[Long]("vec_id") % 3 == 1), got.toSeq)
       // probe-all + corpus-sized shortlist reduces to exact top-k over
       // the label-filtered corpus
-      def filteredAll() = Similarity.ivfTopKIndexedPq(spark, q, "q_id",
+      def filteredAll() = Similarity.search(spark, q, "q_id",
         "q_vec", dir.getAbsolutePath, "vec_id", "v", k = 4,
-        shortlist = 120, nProbe = 8, where = Some(col("label") === 1))
+        shortlist = Some(120), nProbe = 8, where = Some(col("label") === 1))
         .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
           r.getAs[Long]("rank"))).toSet
       val brute = Similarity.bruteForceTopK(q,
@@ -2019,13 +2028,13 @@ class PipelineSpec extends SparkTestBase {
       assert(filteredAll() == brute, s"${filteredAll()} vs $brute")
       // payload rides appends: an appended exact match under the
       // filter label ranks first
-      Similarity.appendToIndexPqJoined(
+      Similarity.append(
         Seq((2000L, Array.tabulate(16)(d => math.cos(d * 0.4).toFloat), 1))
           .toDF("vec_id", "v", "label"),
-        "vec_id", "v", dims = 16, m = 4, dir.getAbsolutePath,
+        "vec_id", "v", dir.getAbsolutePath, batchId = 0L,
         payload = Seq("label"))
-      val after = Similarity.ivfTopKIndexedPq(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 1, shortlist = 12,
+      val after = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 1, shortlist = Some(12),
         nProbe = 8, where = Some(col("label") === 1))
         .filter(col("q_id") === 999L).collect()
       assert(after.head.getAs[Long]("vec_id") == 2000L, after.toSeq)
@@ -2033,22 +2042,21 @@ class PipelineSpec extends SparkTestBase {
       // refuse loudly (its rows would read back null labels and be
       // invisible to every filtered search)
       intercept[IllegalArgumentException] {
-        Similarity.appendToIndexPqJoined(
+        Similarity.append(
           Seq((3000L, Array.tabulate(16)(d => math.cos(d * 0.4).toFloat)))
             .toDF("vec_id", "v"),
-          "vec_id", "v", dims = 16, m = 4, dir.getAbsolutePath)
+          "vec_id", "v", dir.getAbsolutePath, batchId = 1L)
       }
       // payload survives a retrain: the new generation still serves
       // filtered search (and keeps the persisted non-residual flag)
-      val (gen, _) = Similarity.retrainIndexPq(spark, dir.getAbsolutePath,
-        "vec_id", "v", dims = 16, m = 4, kCents = 8,
-        pqIters = 1, coarseIters = 1)
+      val (gen, _) = Similarity.retrain(spark, dir.getAbsolutePath,
+        "vec_id", "v", maxIters = 1, pqIters = 1)
       assert(gen == 0L)
-      assert(Similarity.readPqMeta(spark,
+      assert(!IndexLayout.detect(spark,
         graft.pipeline.IndexGen.resolveRoot(spark, dir.getAbsolutePath))
-        .contains(false))
-      val retrained = Similarity.ivfTopKIndexedPq(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 4, shortlist = 121,
+        .asInstanceOf[IndexLayout.Pq].residual)
+      val retrained = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 4, shortlist = Some(121),
         nProbe = 8, where = Some(col("label") === 1))
         .collect()
       assert(retrained.nonEmpty)
@@ -2059,14 +2067,14 @@ class PipelineSpec extends SparkTestBase {
       // corpus (the persisted meta records residual encoding)
       val dirR = java.nio.file.Files.createTempDirectory("ivfpqfiltr").toFile
       try {
-        Similarity.buildIndexPqResidual(corpus, "vec_id", "v", cb,
-          dims = 16, m = 4, kCents = 8, iters = 1, dirR.getAbsolutePath,
-          payload = Seq("label"))
-        assert(Similarity.readPqMeta(spark, dirR.getAbsolutePath)
-          .contains(true))
-        val allR = Similarity.ivfTopKIndexedPqResidual(spark, q, "q_id",
+        Similarity.build(corpus, "vec_id", "v", dirR.getAbsolutePath,
+          IndexLayout.Pq(m = 4, kCents = 8, residual = true), Seq(cb),
+          payload = Seq("label"), pqIters = 1)
+        assert(IndexLayout.detect(spark, dirR.getAbsolutePath)
+          .asInstanceOf[IndexLayout.Pq].residual)
+        val allR = Similarity.search(spark, q, "q_id",
           "q_vec", dirR.getAbsolutePath, "vec_id", "v", k = 4,
-          shortlist = 120, nProbe = 8, where = Some(col("label") === 1))
+          shortlist = Some(120), nProbe = 8, where = Some(col("label") === 1))
           .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
             r.getAs[Long]("rank"))).toSet
         assert(allR == brute, s"$allR vs $brute")
@@ -2092,13 +2100,15 @@ class PipelineSpec extends SparkTestBase {
     }.toDF("vec_id", "v", "label")
     val dir = java.nio.file.Files.createTempDirectory("ivffilt").toFile
     try {
-      Similarity.buildIndex(corpus, "vec_id", "v", dir.getAbsolutePath,
-        nCells = 4, iters = 1, payload = Seq("label"))
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Flat,
+        Seq(Similarity.trainCodebook(corpus, "vec_id", "v", nCells = 4, iters = 1)),
+        payload = Seq("label"))
       val q = Seq((999L, Array(1.0f, 0.05f)),
         (998L, Array(0.0f, 1.0f))).toDF("q_id", "q_vec")
-      val out = Similarity.ivfTopKIndexedWhere(spark, q, "q_id", "q_vec",
+      val out = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 4, nProbe = 2,
-        where = col("label") === 1)
+        where = Some(col("label") === 1))
       // the label predicate reaches the parquet scan of the probed
       // cells — matching is decided before any vector byte scores
       val plan = out.queryExecution.executedPlan.toString
@@ -2109,9 +2119,9 @@ class PipelineSpec extends SparkTestBase {
       assert(got.forall(r => r.getAs[Long]("vec_id") % 3 == 1), got.toSeq)
       // probe-all reduces the filter to exact semantics: top-k over
       // the label-filtered corpus
-      val all = Similarity.ivfTopKIndexedWhere(spark, q, "q_id", "q_vec",
+      val all = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 4, nProbe = 4,
-        where = col("label") === 1)
+        where = Some(col("label") === 1))
         .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
           r.getAs[Long]("rank"))).toSet
       val brute = Similarity.bruteForceTopK(q,
@@ -2121,12 +2131,13 @@ class PipelineSpec extends SparkTestBase {
           r.getAs[Long]("rank"))).toSet
       assert(all == brute, s"$all vs $brute")
       // payload rides appends through the same aggregate
-      Similarity.appendToIndex(
+      Similarity.append(
         Seq((2000L, Array(1.0f, 0.05f), 1)).toDF("vec_id", "v", "label"),
-        "vec_id", "v", dir.getAbsolutePath, payload = Seq("label"))
-      val after = Similarity.ivfTopKIndexedWhere(spark, q, "q_id", "q_vec",
+        "vec_id", "v", dir.getAbsolutePath, batchId = 0L,
+        payload = Seq("label"))
+      val after = Similarity.search(spark, q, "q_id", "q_vec",
         dir.getAbsolutePath, "vec_id", "v", k = 1, nProbe = 4,
-        where = col("label") === 1)
+        where = Some(col("label") === 1))
         .filter(col("q_id") === 999L).collect()
       assert(after.head.getAs[Long]("vec_id") == 2000L, after.toSeq)
     } finally {
@@ -2146,13 +2157,13 @@ class PipelineSpec extends SparkTestBase {
     val cb = Similarity.syntheticCodebook(spark, nCells = 8, dims = 16)
     val dir = java.nio.file.Files.createTempDirectory("ivfqfilt").toFile
     try {
-      Similarity.buildIndexQuantizedJoined(corpus, "vec_id", "v", cb,
-        dir.getAbsolutePath, payload = Seq("label"))
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Quantized(), Seq(cb), payload = Seq("label"))
       val q = Seq((999L, Array.tabulate(16)(d => math.cos(d * 0.4).toFloat)))
         .toDF("q_id", "q_vec")
-      def filteredAll() = Similarity.ivfTopKIndexedQuantized(spark, q,
+      def filteredAll() = Similarity.search(spark, q,
         "q_id", "q_vec", dir.getAbsolutePath, "vec_id", "v", k = 4,
-        shortlist = 120, nProbe = 8, where = Some(col("label") === 1))
+        shortlist = Some(120), nProbe = 8, where = Some(col("label") === 1))
       val plan = filteredAll().queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters") && plan.contains("label"),
         plan.take(2000))
@@ -2167,7 +2178,7 @@ class PipelineSpec extends SparkTestBase {
       assert(got() == brute, s"${got()} vs $brute")
       // the quantized retrain branch re-derives q_vec AND keeps the
       // label payload, so filtered search survives the rebuild
-      val (gen, _) = Similarity.retrainIndex(spark, dir.getAbsolutePath,
+      val (gen, _) = Similarity.retrain(spark, dir.getAbsolutePath,
         "vec_id", "v", maxIters = 1)
       assert(gen == 0L)
       val after = got()
@@ -2231,19 +2242,20 @@ class PipelineSpec extends SparkTestBase {
     // probe-all with a corpus-sized shortlist re-ranks to brute truth
     val dir = java.nio.file.Files.createTempDirectory("ivfpqres").toFile
     try {
-      Similarity.buildIndexPqResidual(corpus, "vec_id", "v", coarseS,
-        dims = 16, m = 4, kCents = 8, iters = 1, dir.getAbsolutePath)
+      Similarity.build(corpus, "vec_id", "v", dir.getAbsolutePath,
+        IndexLayout.Pq(m = 4, kCents = 8, residual = true), Seq(coarseS),
+        pqIters = 1)
       val q = corpus.filter(col("vec_id") < 3)
         .select(col("vec_id").as("q_id"), col("v").as("q_vec"))
-      val out = Similarity.ivfTopKIndexedPqResidual(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = 12, nProbe = 2)
+      val out = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = Some(12), nProbe = 2)
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cell_id"),
         plan.take(1500))
       assert(plan.contains("codes:array<int>"), plan.take(2000))
       assert(out.collect().length == 9)
-      val all = Similarity.ivfTopKIndexedPqResidual(spark, q, "q_id", "q_vec",
-        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = 120, nProbe = 4)
+      val all = Similarity.search(spark, q, "q_id", "q_vec",
+        dir.getAbsolutePath, "vec_id", "v", k = 3, shortlist = Some(120), nProbe = 4)
         .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
           r.getAs[Long]("rank"))).toSet
       val brute = Similarity.bruteForceTopK(q, corpus, "q_id", "q_vec",
@@ -2257,15 +2269,15 @@ class PipelineSpec extends SparkTestBase {
         .select(col("vec_id").as("q_id"), col("v").as("q_vec"))
       val twin = corpus.filter(col("vec_id") === 42L)
         .select((col("vec_id") + 1000L).as("vec_id"), col("v"))
-      Similarity.appendToIndexPqResidual(twin, "vec_id", "v",
-        dims = 16, m = 4, dir.getAbsolutePath)
+      Similarity.append(twin, "vec_id", "v", dir.getAbsolutePath,
+        batchId = 0L)
       // shortlist must clear the cluster population: the cluster's
       // residual reconstructions are near-identical (that is the
       // point of residual coding), so the candidate stage ties and
       // only the float re-rank separates the exact twin
-      val after = Similarity.ivfTopKIndexedPqResidual(spark, probe,
+      val after = Similarity.search(spark, probe,
         "q_id", "q_vec", dir.getAbsolutePath, "vec_id", "v",
-        k = 1, shortlist = 40, nProbe = 2).collect()
+        k = 1, shortlist = Some(40), nProbe = 2).collect()
       assert(after.head.getAs[Long]("vec_id") == 1042L,
         s"the appended identical twin must rank first: ${after.toSeq}")
     } finally {
@@ -2765,19 +2777,16 @@ class PipelineSpec extends SparkTestBase {
     def recallOf(residual: Boolean): Double = {
       val dir = java.nio.file.Files.createTempDirectory("recall").toString
       if (residual)
-        graft.pipeline.Similarity.buildIndexPqResidual(corpus, "vec_id",
-          "embedding", cbS, dims, m = 4, kCents = 8, iters = 1, dir)
+        graft.pipeline.Similarity.build(corpus, "vec_id", "embedding", dir,
+          graft.pipeline.IndexLayout.Pq(m = 4, kCents = 8, residual = true),
+          Seq(cbS), pqIters = 1)
       else
-        graft.pipeline.Similarity.buildIndexPqJoined(corpus, "vec_id",
-          "embedding", cbS, dims, m = 4, kCents = 8, iters = 1, dir)
-      val ann = (if (residual)
-        graft.pipeline.Similarity.ivfTopKIndexedPqResidual(spark, q,
+        graft.pipeline.Similarity.build(corpus, "vec_id", "embedding", dir,
+          graft.pipeline.IndexLayout.Pq(m = 4, kCents = 8), Seq(cbS),
+          pqIters = 1)
+      val ann = graft.pipeline.Similarity.search(spark, q,
           "q_id", "q_vec", dir, "vec_id", "embedding",
-          k = 3, shortlist = 5, nProbe = 2)
-      else
-        graft.pipeline.Similarity.ivfTopKIndexedPq(spark, q,
-          "q_id", "q_vec", dir, "vec_id", "embedding",
-          k = 3, shortlist = 5, nProbe = 2))
+          k = 3, shortlist = Some(5), nProbe = 2)
         .select(col("q_id"), col("vec_id")).as[(Long, Long)].collect().toSet
       (ann intersect truth).size.toDouble / truth.size
     }

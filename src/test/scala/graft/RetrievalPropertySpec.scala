@@ -143,7 +143,7 @@ class RetrievalPropertySpec extends SparkTestBase {
 
   test("randomized corpora: probe-all indexed maxsim equals the brute form") {
     import spark.implicits._
-    import graft.pipeline.Similarity
+    import graft.pipeline.{IndexLayout, Similarity}
     for (trial <- 0 until 3) {
       val rnd = new scala.util.Random(4000 + trial)
       val corpus = randomCorpus(rnd, 40 + rnd.nextInt(40))
@@ -170,9 +170,10 @@ class RetrievalPropertySpec extends SparkTestBase {
       val dir = java.nio.file.Files.createTempDirectory("maxsimprop").toFile
       try {
         val nCells = 4
-        Similarity.buildIndexJoined(inst, "tok_id", "d_vec",
-          Similarity.syntheticCodebook(spark, nCells, dims),
-          dir.getAbsolutePath, payload = Seq("doc_id"))
+        Similarity.build(inst, "tok_id", "d_vec", dir.getAbsolutePath,
+          IndexLayout.Flat,
+          Seq(Similarity.syntheticCodebook(spark, nCells, dims)),
+          payload = Seq("doc_id"))
         // probe EVERY cell with a shortlist covering every instance:
         // the candidate restriction is vacuous, so indexed == brute
         val nInst = inst.count().toInt
@@ -188,7 +189,7 @@ class RetrievalPropertySpec extends SparkTestBase {
 
   test("indexed maxsim JSON route validates request dims against the artifact") {
     import spark.implicits._
-    import graft.pipeline.Similarity
+    import graft.pipeline.{IndexLayout, Similarity}
     val docs = Seq((0L, "alpha beta gamma"), (1L, "beta delta"),
       (2L, "alpha delta epsilon")).toDF("doc_id", "text")
     val dims = 8
@@ -196,9 +197,9 @@ class RetrievalPropertySpec extends SparkTestBase {
       docs, "doc_id", "text", dims)
     val dir = java.nio.file.Files.createTempDirectory("maxsimdims").toFile
     try {
-      Similarity.buildIndexJoined(inst, "tok_id", "d_vec",
-        Similarity.syntheticCodebook(spark, 4, dims),
-        dir.getAbsolutePath, payload = Seq("doc_id"))
+      Similarity.build(inst, "tok_id", "d_vec", dir.getAbsolutePath,
+        IndexLayout.Flat, Seq(Similarity.syntheticCodebook(spark, 4, dims)),
+        payload = Seq("doc_id"))
       def req(d: Int) =
         s"""{"terms": ["alpha", "beta"], "topK": 5,
             "maxsim": {"dims": $d, "nProbe": 4, "candTok": 50},
@@ -257,15 +258,17 @@ class RetrievalPropertySpec extends SparkTestBase {
 
   test("index drift report: counts cover the corpus; self-centroid cells drift 0") {
     import spark.implicits._
-    import graft.pipeline.Similarity
+    import graft.pipeline.{IndexLayout, Similarity}
     val corpus = (0 until 40).map { i =>
       (i.toLong, (0 until 8).map(j =>
         (((i % 4) * 311 + j * 17 + 100) % 997) / 997.0f))
     }.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("driftprop").toFile
     try {
-      Similarity.buildIndex(corpus, "vec_id", "embedding",
-        dir.getAbsolutePath, nCells = 4, iters = 2)
+      Similarity.build(corpus, "vec_id", "embedding", dir.getAbsolutePath,
+        IndexLayout.Flat,
+        Seq(Similarity.trainCodebook(corpus, "vec_id", "embedding",
+          nCells = 4, iters = 2)))
       val rep = Similarity.indexDriftReport(spark, dir.getAbsolutePath,
         "vec_id", "embedding").collect()
       assert(rep.map(_.getAs[Long]("n_rows")).sum == 40L)

@@ -204,7 +204,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming IVF index append: idempotent batches grow the searchable index") {
     import spark.implicits._
-    import graft.pipeline.Similarity
+    import graft.pipeline.{IndexLayout, Similarity}
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-sivf").toString
     // seed index from an initial corpus
@@ -212,9 +212,11 @@ class StreamingSpec extends SparkTestBase {
       val a = i * 0.1
       (i.toLong, Array(math.cos(a).toFloat, math.sin(a).toFloat))
     }.toDF("vec_id", "v")
-    Similarity.buildIndex(corpus, "vec_id", "v", dir, nCells = 4, iters = 1)
+    Similarity.build(corpus, "vec_id", "v", dir, IndexLayout.Flat,
+      Seq(Similarity.trainCodebook(corpus, "vec_id", "v", nCells = 4,
+        iters = 1)))
     val input = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.streamingIndexAppend(
+    val q = Similarity.streamingAppend(
       input.toDF().toDF("vec_id", "v"), "vec_id", "v", dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -225,7 +227,7 @@ class StreamingSpec extends SparkTestBase {
       // query aimed exactly along the STREAMED vector's direction —
       // it must beat the seed corpus's vec 0 at angle 0
       val qv = Seq((999L, Array(1.0f, 0.01f))).toDF("q_id", "q_vec")
-      val top = Similarity.ivfTopKIndexed(spark, qv, "q_id", "q_vec", dir,
+      val top = Similarity.search(spark, qv, "q_id", "q_vec", dir,
         "vec_id", "v", k = 1, nProbe = 1).collect()
       assert(top.head.getAs[Long]("vec_id") == 100L,
         s"streamed vector is the nearest: ${top.toSeq}")
@@ -233,7 +235,7 @@ class StreamingSpec extends SparkTestBase {
       // marker — compaction may have folded the batch files, so the
       // marker (not file existence) is the replay guard
       val before = spark.read.parquet(s"$dir/cells").count()
-      Similarity.appendToIndexAtomic(
+      Similarity.append(
         Seq((101L, Array(0.0f, 1.0f)), (102L, Array(0.8f, 0.6f)))
           .toDF("vec_id", "v"), "vec_id", "v", dir, batchId = 1L)
       assert(spark.read.parquet(s"$dir/cells").count() == before,
@@ -243,7 +245,7 @@ class StreamingSpec extends SparkTestBase {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir, f".batch-${1L}%09d.done"), false)
-      Similarity.appendToIndexAtomic(
+      Similarity.append(
         Seq((101L, Array(0.0f, 1.0f)), (102L, Array(0.8f, 0.6f)))
           .toDF("vec_id", "v"), "vec_id", "v", dir, batchId = 1L)
       assert(spark.read.parquet(s"$dir/cells").count() == before,
@@ -253,21 +255,21 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming PQ append carries payload: streamed rows reach where-filtered search; mismatched batches refused") {
     import spark.implicits._
-    import graft.pipeline.Similarity
+    import graft.pipeline.{IndexLayout, Similarity}
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-spqp").toString
     val corpus = (0 until 64).map { i =>
       (i.toLong, Array.tabulate(16)(d => math.cos(i * 0.11 + d).toFloat),
         (i % 3).toLong)
     }.toDF("vec_id", "v", "label")
-    Similarity.buildIndexPqJoined(corpus, "vec_id", "v",
-      Similarity.syntheticCodebook(spark, nCells = 8, dims = 16),
-      dims = 16, m = 4, kCents = 4, iters = 1, dir,
-      payload = Seq("label"))
+    Similarity.build(corpus, "vec_id", "v", dir,
+      IndexLayout.Pq(m = 4, kCents = 4),
+      Seq(Similarity.syntheticCodebook(spark, nCells = 8, dims = 16)),
+      payload = Seq("label"), pqIters = 1)
     val input = MemoryStream[(Long, Array[Float], Long)]
-    val q = Similarity.streamingIndexAppendPq(
+    val q = Similarity.streamingAppend(
       input.toDF().toDF("vec_id", "v", "label"), "vec_id", "v",
-      dims = 16, m = 4, dir, payload = Seq("label"))
+      dir, payload = Seq("label"))
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       // a novel vector with a payload value NO corpus row has: the
@@ -277,42 +279,42 @@ class StreamingSpec extends SparkTestBase {
       input.addData((1042L, twinVec, 7L))
       q.processAllAvailable()
       val probe = Seq((999L, twinVec)).toDF("q_id", "q_vec")
-      val top = Similarity.ivfTopKIndexedPq(spark, probe, "q_id", "q_vec",
-        dir, "vec_id", "v", k = 3, shortlist = 70, nProbe = 8,
+      val top = Similarity.search(spark, probe, "q_id", "q_vec",
+        dir, "vec_id", "v", k = 3, shortlist = Some(70), nProbe = 8,
         where = Some(org.apache.spark.sql.functions.col("label") === 7L))
         .collect()
       assert(top.map(_.getAs[Long]("vec_id")).toSeq == Seq(1042L), top.toSeq)
       // replay stays a no-op with payload in flight
       val before = spark.read.parquet(s"$dir/cells").count()
-      Similarity.appendToIndexPqAtomic(
+      Similarity.append(
         Seq((1042L, twinVec, 7L)).toDF("vec_id", "v", "label"),
-        "vec_id", "v", dims = 16, m = 4, dir, batchId = 0L,
+        "vec_id", "v", dir, batchId = 0L,
         payload = Seq("label"))
       assert(spark.read.parquet(s"$dir/cells").count() == before,
         "replayed batch must not append duplicate rows")
       // the refusal survives exactly for MISMATCHED batches: a
       // payload-less append to this payload-built index still throws
-      intercept[IllegalArgumentException](Similarity.appendToIndexPqAtomic(
+      intercept[IllegalArgumentException](Similarity.append(
         Seq((1043L, twinVec)).toDF("vec_id", "v"), "vec_id", "v",
-        dims = 16, m = 4, dir, batchId = 9L))
+        dir, batchId = 9L))
     } finally q.stop()
   }
 
   test("streaming IVF x PQ (residual) append: batches assign+encode with persisted codebooks, exactly-once") {
     import spark.implicits._
-    import graft.pipeline.Similarity
+    import graft.pipeline.{IndexLayout, Similarity}
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-spq").toString
     val corpus = (0 until 64).map { i =>
       (i.toLong, Array.tabulate(16)(d => math.cos(i * 0.11 + d).toFloat))
     }.toDF("vec_id", "v")
-    Similarity.buildIndexPqResidual(corpus, "vec_id", "v",
-      Similarity.syntheticCodebook(spark, nCells = 8, dims = 16),
-      dims = 16, m = 4, kCents = 4, iters = 1, dir)
+    Similarity.build(corpus, "vec_id", "v", dir,
+      IndexLayout.Pq(m = 4, kCents = 4, residual = true),
+      Seq(Similarity.syntheticCodebook(spark, nCells = 8, dims = 16)),
+      pqIters = 1)
     val input = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.streamingIndexAppendPq(
-      input.toDF().toDF("vec_id", "v"), "vec_id", "v",
-      dims = 16, m = 4, dir, residual = true)
+    val q = Similarity.streamingAppend(
+      input.toDF().toDF("vec_id", "v"), "vec_id", "v", dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       // stream a NOVEL vector (the i=1000 pattern is outside the
@@ -322,8 +324,8 @@ class StreamingSpec extends SparkTestBase {
       input.addData((1042L, twinVec))
       q.processAllAvailable()
       val probe = Seq((999L, twinVec)).toDF("q_id", "q_vec")
-      val top = Similarity.ivfTopKIndexedPqResidual(spark, probe,
-        "q_id", "q_vec", dir, "vec_id", "v", k = 1, shortlist = 70,
+      val top = Similarity.search(spark, probe,
+        "q_id", "q_vec", dir, "vec_id", "v", k = 1, shortlist = Some(70),
         nProbe = 8).collect()
       assert(top.head.getAs[Long]("vec_id") == 1042L, top.toSeq)
       // streamed rows carry CODES from the persisted (residual)
@@ -336,9 +338,9 @@ class StreamingSpec extends SparkTestBase {
         streamed.toSeq)
       // replay guard: the same batch id is a no-op
       val before = spark.read.parquet(s"$dir/cells").count()
-      Similarity.appendToIndexPqAtomic(
+      Similarity.append(
         Seq((1042L, twinVec)).toDF("vec_id", "v"), "vec_id", "v",
-        dims = 16, m = 4, dir, batchId = 0L, residual = true)
+        dir, batchId = 0L)
       assert(spark.read.parquet(s"$dir/cells").count() == before,
         "replayed batch must not append duplicate rows")
     } finally q.stop()

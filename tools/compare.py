@@ -63,6 +63,11 @@ def main():
     for name, msg in sorted(dumped_failures.items()):
         print(f"FAIL {name}: verify-side failure: {msg}")
         failures += 1
+    # a requested name the oracle does not know compares nothing — a
+    # typo must fail the run, not pass it empty
+    for name in sorted(only - set(oracle)):
+        print(f"FAIL {name}: unknown query name (not in oracle_sql.json)")
+        failures += 1
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
