@@ -52,32 +52,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Keep AQE from serializing tiny-bytes/heavy-CPU stages (LSH
-      // candidate verification): see Dedup.verifiedPairs scaladoc.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // r20: let AQE re-partition the plans that MATERIALIZE cached/
-      // persisted frames (default false pins them at the static
-      // shuffle-partition count). The micro-batch/lifecycle bodies
-      // persist small derived frames, and thread dumps showed their
-      // 32-task materializations spending ~0.5 s/task on per-task
-      // fixed cost (codegen canonicalization, UnifiedMemoryManager
-      // lock contention, block-status RPCs) over near-empty
-      // partitions. Scale-adaptive by definition — partition counts
-      // now track the frame's measured bytes at ANY scale instead of
-      // the session constant (guide §2.2); values are unaffected,
-      // only cached-plan output partitioning may change. Measured:
-      // q_stream_kmv executor task-time 33.9 → 2.0 s, q_ingest_anon
-      // 42.5 → 21.4 s, q_stream_track 17.8 → 7.4 s (StageProfile).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local-iteration filter (comma-separated names); unset for the
+    // driver's full run. A blank/empty value is UNSET (Seq("") would
+    // select nothing), an unknown name fails before Spark starts, and
+    // an active filter stamps the JSON line so a partial run can never
+    // pass as a full one.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+    val selected = SparkEntry.select(only.getOrElse(Nil))
+    val cpus = Sessions.cpus
+    val spark = Sessions.build(cpus, "graft-bench")
 
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings"))
@@ -125,7 +110,7 @@ object Bench {
       import org.apache.spark.sql.functions.{col, count, lit, sum}
       def once(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0, 32L * 1000 * 1000, 1, cpus.toInt)
+        spark.range(0, 32L * 1000 * 1000, 1, cpus)
           .select((col("id") % 65536).as("k"), col("id"))
           .groupBy("k").agg(sum("id").as("s"), count(lit(1)).as("c"))
           .select(sum("s"), sum("c")).collect()
@@ -261,16 +246,6 @@ object Bench {
         System.err.println(f"[bench] $name unstable: pass1=$a%.2fs pass2=$b%.2fs (keeping min)")
       lo
     }
-
-    // local-iteration filter (comma-separated names); unset for the
-    // driver's full run. A blank/empty value is UNSET (Set("") would
-    // silently filter out every query), and an active filter stamps
-    // the JSON line so a partial run can never pass as a full one.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
 
     val winSize = 10
     val windows = selected.grouped(winSize).toSeq
@@ -454,8 +429,7 @@ object Bench {
     // 0.0 = pre-normalization entry (or degraded sentinel):
     // normalization falls back to raw.
     final case class Base(time: Double, fp: String, scope: String, cpuS: Double)
-    val cpusNow = cpus.toInt
-    def benchKey(name: String): String = s"$name@c$cpusNow"
+    def benchKey(name: String): String = s"$name@c$cpus"
     val manifestFile = new java.io.File("BASELINE_QUERIES.json")
     val priorRaw: Map[String, Base] = try {
       if (!manifestFile.isFile) Map.empty
@@ -702,7 +676,7 @@ object Bench {
     // the untrimmed record; the contract line points at it.
     try {
       val side =
-        s"""{"sf":"$sfDir","cpus":$cpusNow,"total":${ms(total)}""" +
+        s"""{"sf":"$sfDir","cpus":$cpus,"total":${ms(total)}""" +
           s""","queries":{${results.map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString(",")}}""" +
           s""","failed":[${failed.map("\"" + _ + "\"").mkString(",")}]""" +
           s""","retried_queries":[${retried.map("\"" + _ + "\"").mkString(",")}]""" +

@@ -1513,6 +1513,16 @@ object SparkEntry {
       .orderBy("d", "event_type")
   }
 
+  /** The queries named in `names`, or every query when `names` is
+    * empty, sorted by name. An unknown name is refused: a typo would
+    * otherwise select nothing and pass as a clean run. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    (if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))).sortBy(_._1)
+  }
+
   // ----------------------------------------------------------------
   // Query map: name -> (spark, sfDir) => DataFrame
   // ----------------------------------------------------------------

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,38 +7,15 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args = run only these queries (local iteration;
     // the driver always passes exactly two args)
-    val only = args.drop(2).toSet
-    // a typo'd name would run nothing and "succeed"
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-      sys.exit(1)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Keep AQE from serializing tiny-bytes/heavy-CPU stages (LSH
-      // candidate verification): see Dedup.verifiedPairs scaladoc.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // r20: AQE under cached plans — same engine config as the bench
-      // session (see Bench.scala), so correctness is proven under the
-      // configuration that runs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(args.drop(2).toSeq)
+    val spark = Sessions.build(app = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Failures must be DURABLE, not just stderr: in round 9 a testdata
     // type change silently failed 15 queries and the correctness
     // artifact simply omitted them (missing ≠ failed to a reader).
     // _failures.json in the dump dir makes a failed query loud.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -254,8 +254,7 @@ object EventSegmentation {
       }
       case _ => true
     })
-    val segsFusible = req.segments.forall(_.conditions.nonEmpty)
-    if (mixedOk && segsFusible) runFused(events, req)
+    if (mixedOk) runFused(events, req)
     else runUnfused(events, req)
   }
 

@@ -21,14 +21,10 @@ object Tables {
     * vectorized reader rejects by default; read it as raw ns longs
     * (legacy.parquet.nanosAsLong) and floor-convert to a µs timestamp
     * — the same truncation DuckDB's epoch_us applies, so oracles
-    * agree. The conf is dynamic, so this works on any caller session. */
+    * agree. [[graft.Sessions.install]] sets that conf and the
+    * time-filter pushdown rule on any caller session. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Make time-range filters on the ns→µs-converted column pushable
-    // (graft.plans.NsTimeFilterPushdown); idempotent registration.
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.NsTimeFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.NsTimeFilterPushdown
+    graft.Sessions.install(spark)
     // CANONICAL layout preference: a maintained `events_by_date/`
     // sibling (the date-partitioned store the streaming sink writes
     // and Compact.runPartitioned folds) wins over the flat file — the

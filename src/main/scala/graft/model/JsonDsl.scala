@@ -661,9 +661,15 @@ object JsonDsl {
     case other => throw JsonError(s"unknown segment condition '$other'")
   }
 
-  private def segment(j: JValue)(implicit reg: Registry): Segment =
-    Segment((j / "name").str,
-      (j / "conditions").arr.map(_.arr.map(segmentCondition)))
+  /** `conditions` is an OR of AND-groups; an empty OR or an empty
+    * group has no users to select and no plan to build. */
+  private def segment(j: JValue)(implicit reg: Registry): Segment = {
+    val name = (j / "name").str
+    val conditions = (j / "conditions").arr.map(_.arr.map(segmentCondition))
+    if (conditions.isEmpty || conditions.exists(_.isEmpty))
+      throw JsonError(s"segment '$name': conditions must be non-empty lists of conditions")
+    Segment(name, conditions)
+  }
 
   // ---------------- funnel fragments ----------------
 

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Rank fusion for hybrid retrieval — the step that combines a
@@ -29,9 +28,9 @@ object Retrieval {
     * 1-based by (rrf_micro DESC, id ASC), at most `topK` rows.
     *
     * Scale shape: the inputs are top-k lists — thousands of rows, not
-    * corpora — so the union + one aggregate + one rank window is
-    * driver-free and broadcast-free; the heavy lifting happened in
-    * the rankers. */
+    * corpora — so the union + one aggregate + a top-k sort numbered in
+    * order is broadcast-free; the heavy lifting happened in the
+    * rankers. */
   def rrfFuse(lists: Seq[DataFrame], idCol: String, rankCol: String,
               topK: Int, kRrf: Int = 60): DataFrame = {
     require(lists.nonEmpty && topK > 0, "need ranked lists and topK > 0")
@@ -40,11 +39,10 @@ object Retrieval {
         floor(lit(1e6) / (lit(kRrf).cast("double") +
           col(rankCol).cast("double"))).cast("long").as("__c"))
     }.reduce(_ unionByName _)
-    val w = Window.orderBy(col("rrf_micro").desc, col(idCol).asc)
-    tagged.groupBy(col(idCol))
+    val order = Seq(col("rrf_micro").desc, col(idCol).asc)
+    val fused = tagged.groupBy(col(idCol))
       .agg(sum(col("__c")).as("rrf_micro"), count(lit(1)).as("lists_hit"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
+    graft.engine.Dictionary.rankRows(fused.orderBy(order: _*).limit(topK), order, "rank")
   }
 
   /** FACET counts over a matched doc set — the search-page sidebar:

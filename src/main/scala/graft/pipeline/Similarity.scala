@@ -1470,12 +1470,10 @@ object Similarity {
                        scale: Long = 1L << 20): DataFrame = {
     val sv = graft.engine.Staging.stage(
       subvectors(corpus.select(col(cId), col(cVec)), cId, cVec, dims, m))
-    val w = Window.orderBy(col(cId).asc)
-    // kCents rows: the single-partition window is trivially bounded
     val seedBase = corpus.orderBy(col(cId).asc).limit(kCents)
       .select(col(cId), col(cVec))
-    val seedCents = seedBase.select(col(cId))
-      .withColumn("__cent", row_number().over(w).cast("long") - 1)
+    val seedCents = graft.engine.Dictionary.rankRows(
+      seedBase.select(col(cId)), Seq(col(cId).asc), "__cent", startAt = -1L)
     val seeds = subvectors(seedBase, cId, cVec, dims, m)
       .join(broadcast(seedCents), Seq(cId))
       .select(col("sub"), col("__cent").as("cent_id"), col("sv").as("centroid"))

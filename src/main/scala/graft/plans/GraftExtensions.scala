@@ -5,19 +5,22 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** One-line engine installation via Spark's extension point:
+/** One-line engine installation via Spark's extension point, which
+  * every [[graft.Sessions.build]] session carries; any other
+  * application adds
   *
   * {{{
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   * }}}
   *
-  * installs (a) the [[NsTimeFilterPushdown]] optimizer rule, so
+  * It installs (a) the [[NsTimeFilterPushdown]] optimizer rule, so
   * time-range filters over ns-long-backed timestamp columns prune
-  * parquet row groups in EVERY query of the session (no per-DataFrame
-  * registration — `Tables.events` remains for callers without the
-  * extension), and (b) the native similarity expressions as SQL
-  * functions, so `spark.sql` text can call the fused codegen kernels:
+  * parquet row groups in EVERY query of the session (on a session
+  * without the extension, `Tables.events` adds the rule once through
+  * [[graft.Sessions.install]]), and (b) the native similarity
+  * expressions as SQL functions, so `spark.sql` text can call the
+  * fused codegen kernels:
   *
   * {{{
   *   SELECT vec_dot(a.embedding, b.embedding)            -- fused dot product

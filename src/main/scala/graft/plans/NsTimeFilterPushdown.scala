@@ -32,8 +32,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * The rule ADDS the raw-column conjunct next to the original
   * predicate (semantically implied, so results are unchanged); the
   * data source then prunes row groups / pages on the raw long stats.
-  * Registered idempotently via `spark.experimental.extraOptimizations`
-  * in Tables.events — no session-construction control needed.
+  * Installed by [[GraftExtensions]] (every `graft.Sessions.build`
+  * session) or, on a session built elsewhere, once by
+  * `graft.Sessions.install`, which Tables.events calls.
   */
 object NsTimeFilterPushdown extends Rule[LogicalPlan] {
 

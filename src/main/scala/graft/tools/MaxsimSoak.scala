@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for the SELF-CONTAINED indexed-maxsim serving route —
@@ -27,15 +27,7 @@ object MaxsimSoak {
     val sfDir = args(0)
     val work = args(1)
     val runs = if (args.length > 2) args(2).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build(app = "graft-maxsim-soak")
 
     val docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()

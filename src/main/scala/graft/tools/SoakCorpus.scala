@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× replica corpus for row-scaling soaks (the r14
@@ -23,13 +23,7 @@ object SoakCorpus {
     val dst = args(1)
     val n = if (args.length > 2) args(2).toInt else 5
     require(n >= 1, "need at least one replica")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build(app = "graft-soak-corpus")
 
     def replicate(df: DataFrame)(per: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until n).map(r => if (r == 0) df else per(df, r)).reduce(_ unionAll _)

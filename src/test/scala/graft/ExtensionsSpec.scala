@@ -239,7 +239,11 @@ class ExtensionsSpec extends SparkTestBase {
     assert(compacted.collect()(0).getAs[String]("event_type") == "v2")
   }
 
-  test("GraftExtensions installs the SQL functions and pushdown rule session-wide") {
+  /** `f` over a session of its own on the shared context, built by the
+    * public builder: with the extensions (the `spark.sql.extensions`
+    * route) or plain, as an embedding application would build it. */
+  private def withOwnSession[A](extended: Boolean)(
+      f: org.apache.spark.sql.SparkSession => A): A = {
     import org.apache.spark.sql.SparkSession
     val base = spark
     SparkSession.clearActiveSession()
@@ -249,10 +253,23 @@ class ExtensionsSpec extends SparkTestBase {
       // "graft.plans.GraftExtensions") only applies when the
       // SparkContext itself starts with it; on the shared test
       // context the programmatic route installs the same class
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftExtensions())
-        .getOrCreate()
+      val b = SparkSession.builder().master("local[2]")
+      f((if (extended) b.withExtensions(new graft.plans.GraftExtensions()) else b)
+        .getOrCreate())
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
+
+  /** How often the ns-timestamp pushdown rule sits in the optimizer,
+    * across the extension rules and the experimental ones. */
+  private def pushdownRules(s: org.apache.spark.sql.SparkSession): Int =
+    (s.sessionState.optimizer.extendedOperatorOptimizationRules ++
+      s.experimental.extraOptimizations).count(_ == graft.plans.NsTimeFilterPushdown)
+
+  test("GraftExtensions installs the SQL functions and pushdown rule session-wide") {
+    withOwnSession(extended = true) { s2 =>
       // native fused expressions callable from SQL text
       val d = s2.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
         .collect()(0).getDouble(0)
@@ -271,9 +288,48 @@ class ExtensionsSpec extends SparkTestBase {
       assert(s2.sessionState.optimizer.extendedOperatorOptimizationRules
         .contains(graft.plans.NsTimeFilterPushdown))
       intercept[Exception] { s2.sql("SELECT lsh_signature(array(1.0D))").collect() }
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("Sessions.build carries the engine config and the extensions") {
+    // the shared test session is a Sessions.build session; building
+    // again returns it
+    val s = Sessions.build(cpus = 4, app = "graft-test")
+    assert(s eq spark)
+    assert(s.sparkContext.master == "local[4]")
+    assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(s.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "16k")
+    assert(s.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+      .collect()(0).getDouble(0) == 11.0)
+    eventsDf(Seq((1L, 0L, "view", "ios", 1.0), (1L, 1000L, "buy", "ios", 1.0)))
+      .createOrReplaceTempView("sessions_ev")
+    val funnel = s.sql("""SELECT * FROM funnel('sessions_ev', '{
+      "time": {"type": "between", "from": "1970-01-01T00:00:00Z", "to": "1970-01-02T00:00:00Z"},
+      "steps": [{"events": [{"eventType": "regular", "eventName": "view"}], "order": {"type": "exact"}},
+                {"events": [{"eventType": "regular", "eventName": "buy"}], "order": {"type": "exact"}}],
+      "timeWindow": {"n": 1, "unit": "day"}}')""")
+    assert(funnel.select("step", "total").collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(1 -> 1L, 2 -> 1L))
+  }
+
+  test("the pushdown rule is installed exactly once, with or without the extensions") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sessions").toString
+    eventsDf(Seq((1L, 0L, "view", "ios", 1.0)))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    // extension session: Tables.events adds no second copy
+    Tables.events(spark, dir).count()
+    Tables.events(spark, dir).count()
+    assert(pushdownRules(spark) == 1)
+    // plain session: install adds it once, and only once
+    withOwnSession(extended = false) { plain =>
+      assert(pushdownRules(plain) == 0)
+      Sessions.install(plain)
+      Sessions.install(plain)
+      assert(pushdownRules(plain) == 1)
+      assert(plain.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     }
   }
 }

@@ -1009,6 +1009,18 @@ class HttpSpec extends SparkTestBase {
     }
   }
 
+  test("a segment with no condition group or an empty group is a 400, not a 500") {
+    withServer(new GraftHttpServer(spark, ev)) { srv =>
+      for (conditions <- Seq("[]", "[[]]");
+           (route, body) <- Seq("event-segmentation" -> esBody, "funnel" -> funnelBody)) {
+        val withSegment = body.trim.stripSuffix("}") +
+          s""", "segments": [{"name": "none", "conditions": $conditions}]}"""
+        val (code, out) = req(srv.port, "POST", s"/api/v1/projects/1/queries/$route", withSegment)
+        assert(code == 400 && out.contains("segment 'none'"), s"$route $conditions: $code $out")
+      }
+    }
+  }
+
   test("admin indexes: delete/purge/retrain routes are the library calls, gated") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -209,6 +209,21 @@ class JsonSpec extends SparkTestBase {
     assert(out == Map(1 -> 1L))
   }
 
+  test("segments with no condition group or an empty group are refused at parse") {
+    val time = """"time": {"type": "between", "from": "1970-01-01T00:00:00Z", "to": "1970-01-02T00:00:00Z"}"""
+    for (conditions <- Seq("[]", "[[]]")) {
+      val segments = s""""segments": [{"name": "none", "conditions": $conditions}]"""
+      val es = intercept[Json.JsonError](JsonDsl.eventSegmentation(s"""{$time,
+        "intervalUnit": "day", $segments,
+        "events": [{"eventType": "regular", "eventName": "view",
+                    "queries": [{"type": "countEvents", "name": "cnt"}]}]}"""))
+      assert(es.message.contains("segment 'none'"), es.message)
+      intercept[Json.JsonError](JsonDsl.funnel(s"""{$time, $segments,
+        "steps": [{"events": [{"eventType": "regular", "eventName": "view"}], "order": {"type": "exact"}}],
+        "timeWindow": {"n": 1, "unit": "day"}}"""))
+    }
+  }
+
   // ---------------- record-search / property-values / group-search DTOs ----------------
 
   test("retrieval search request: sparse weights and passage blocks parse; invalid combinations reject") {

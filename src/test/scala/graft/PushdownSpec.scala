@@ -56,9 +56,7 @@ class PushdownSpec extends SparkTestBase {
       val base = 1704412800000000000L // 2024-01-05T00:00:00Z in ns
       (0L until 64L).map(i => (i, base + i * 3600L * 1000000000L))
         .toDF("event_id", "ts").write.mode("overwrite").parquet(dir)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.NsTimeFilterPushdown))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.NsTimeFilterPushdown
+      Sessions.install(spark)
       val raw = spark.read.parquet(dir)
       assert(raw.schema("ts").dataType == LongType)
       val ev = raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -79,9 +77,7 @@ class PushdownSpec extends SparkTestBase {
         .toDF("event_id", "us")
         .withColumn("ts", timestamp_micros(col("us")).cast(TimestampNTZType)).drop("us")
         .write.mode("overwrite").parquet(dir)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.NsTimeFilterPushdown))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.NsTimeFilterPushdown
+      Sessions.install(spark)
       val raw = spark.read.parquet(dir)
       assert(raw.schema("ts").dataType == TimestampNTZType)
       // Same normalization Tables.events applies for NTZ files.

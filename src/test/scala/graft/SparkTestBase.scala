@@ -5,21 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // tests run under the bench/verify sessions' engine config
-      // (AQE under cached plans — see Bench.scala) so suites pin the
-      // behavior that actually ships
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.build(cpus = 4, app = "graft-test")
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

@@ -15,12 +15,7 @@ class SqlSurfaceSpec extends SparkTestBase {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", 2)
-        .config("spark.sql.session.timeZone", "UTC")
-        .withExtensions(new graft.plans.GraftExtensions())
-        .getOrCreate()
+      val s2 = Sessions.build(cpus = 4, app = "graft-test-sql")
       try f(s2)
       finally {
         SparkSession.clearActiveSession()
