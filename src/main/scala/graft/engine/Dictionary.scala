@@ -42,6 +42,13 @@ object Dictionary {
       StructType(sorted.schema.fields :+ StructField(idCol, LongType)))
   }
 
+  /** The top `topK` rows of `df` in `sortCols` order (a total order),
+    * ranked 1.. as `rank` by [[rankRows]]. The bounded top-k is taken
+    * first, so only ≤ topK rows are numbered — never a single-partition
+    * window over the whole scored set. */
+  def rankTopK(df: DataFrame, sortCols: Seq[Column], topK: Int): DataFrame =
+    rankRows(df.orderBy(sortCols: _*).limit(topK), sortCols, "rank")
+
   /** Build a dictionary for a column: distinct values keyed 1..N in
     * value order (deterministic).
     *

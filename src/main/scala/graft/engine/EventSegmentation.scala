@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   * Final → Unpivot → Pivot → RenameColumnRows → AggregateAndSortColumns
   * → LimitGroups → Merge → ReorderColumns → RenameColumns).
   *
-  * Here the whole pipeline is declarative DataFrame ops: one
-  * `groupBy(bucket, breakdowns).agg(...)` per event block (per
-  * segment), unioned with `unionByName`. Spark's partial/final
+  * Here the whole pipeline is declarative DataFrame ops over ONE
+  * events scan ([[runFused]]): every row explodes into the
+  * (segment × block) cells it belongs to, one aggregate keyed by
+  * (bucket, breakdowns, cell) computes every metric, and one
+  * projection shapes the long-form output — the analog of the
+  * reference's SegmentedAggregate node. Spark's partial/final
   * aggregation replaces the reference's two-node split, and the
   * shuffle on the group keys replaces its single-partition
   * "HashPartitioned(project, user)" declared-but-unused distribution
@@ -20,9 +23,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): one-level metrics are a single shuffle with
   * map-side combine. Two-level (per-user) metrics shuffle once on
-  * (bucket, breakdowns, user) — high cardinality, so it parallelizes —
-  * then re-aggregate the (much smaller) per-user partials; AQE
-  * coalesces the second exchange.
+  * (bucket, breakdowns, cell, user) — high cardinality, so it
+  * parallelizes — then re-aggregate the (much smaller) per-user
+  * partials; AQE coalesces the second exchange. A request mixing
+  * per-user metrics with ones that have no per-user partial (median,
+  * percentile, distinct counts of a property) adds one one-level
+  * aggregate over the same cells, joined on the cell key.
   */
 object EventSegmentation {
 
@@ -30,8 +36,8 @@ object EventSegmentation {
   val UserCol = "user_id"
   val EventCol = "event_type"
 
-  /** Compile one metric into either a one-level agg Column or the
-    * (inner, outer) pair of a two-level per-user agg. */
+  /** One aggregate function over a column — used at either level of
+    * the per-user metrics and for one-level property metrics. */
   private def aggFn(fn: AggFn, c: Column): Column = fn match {
     case AggFn.Count          => count(c)
     case AggFn.Sum            => sum(c)
@@ -42,100 +48,6 @@ object EventSegmentation {
     case AggFn.Percentile(p)  => percentile_approx(c, lit(p), lit(10000))
     case AggFn.DistinctCount  => count_distinct(c)
     case AggFn.ApproxDistinctCount(rsd) => approx_count_distinct(c, rsd)
-  }
-
-  private final case class Compiled(
-      oneLevel: Seq[Column],          // aggs usable directly
-      inner: Seq[Column],             // per-user pre-aggs
-      outer: Seq[Column])             // over per-user rows
-
-  /** True if any metric needs the per-user inner pass. */
-  private def needsInner(qs: Seq[NamedQuery]): Boolean = qs.exists {
-    case NamedQuery(_: Query.CountPerGroup, _)             => true
-    case NamedQuery(_: Query.AggregatePropertyPerGroup, _) => true
-    case NamedQuery(Query.CountUniqueGroups(_), _)         => false
-    case _                                                 => false
-  }
-
-  /** Formula metrics evaluate after aggregation, over the other named
-    * metric columns (reference QueryFormula — unimplemented there). */
-  private def applyFormulas(df: DataFrame, qs: Seq[NamedQuery]): DataFrame =
-    qs.foldLeft(df) {
-      case (acc, NamedQuery(Query.Formula(e), n)) => acc.withColumn(n, expr(e))
-      case (acc, _)                               => acc
-    }
-
-  private def compile(qs: Seq[NamedQuery], groupCol: String): Compiled = {
-    val one = qs.map {
-      case NamedQuery(Query.CountEvents, n)             => count(lit(1)).as(n)
-      case NamedQuery(Query.CountUniqueGroups(_), n)    => count_distinct(col(groupCol)).as(n)
-      case NamedQuery(Query.AggregateProperty(p, f), n) => aggFn(f, col(p)).as(n)
-      case NamedQuery(q, n) => sys.error(s"two-level metric $q/$n in one-level path")
-    }
-    Compiled(one, Nil, Nil)
-  }
-
-  /** Two-level compile: every metric is computed from one shared
-    * per-user inner aggregation (reference evaluates all metrics in a
-    * single pass over user-sorted input — expressions/aggregate/partitioned). */
-  private def compileTwoLevel(qs: Seq[NamedQuery]): Compiled = {
-    val inner = scala.collection.mutable.LinkedHashMap[String, Column]()
-    def innerCol(key: String, c: => Column): Column = {
-      inner.getOrElseUpdate(key, c.as(key)); col(key)
-    }
-    val outer = qs.map {
-      case NamedQuery(Query.CountEvents, n) =>
-        sum(innerCol("__cnt", count(lit(1)))).as(n)
-      case NamedQuery(Query.CountUniqueGroups(_), n) =>
-        count(lit(1)).as(n) // one inner row per user
-      case NamedQuery(Query.AggregateProperty(p, f), n) => f match {
-        case AggFn.Count => sum(innerCol(s"__cnt_$p", count(col(p)))).as(n)
-        case AggFn.Sum   => sum(innerCol(s"__sum_$p", sum(col(p)))).as(n)
-        case AggFn.Min   => min(innerCol(s"__min_$p", min(col(p)))).as(n)
-        case AggFn.Max   => max(innerCol(s"__max_$p", max(col(p)))).as(n)
-        case AggFn.Avg   =>
-          (sum(innerCol(s"__sum_$p", sum(col(p)))) /
-            sum(innerCol(s"__cntnn_$p", count(col(p))))).as(n)
-        case other => sys.error(s"outer-level $other over raw rows unsupported in mixed mode")
-      }
-      case NamedQuery(Query.CountPerGroup(outerFn), n) =>
-        aggFn(outerFn, innerCol("__cnt", count(lit(1)))).as(n)
-      case NamedQuery(Query.AggregatePropertyPerGroup(p, innerFn, outerFn), n) =>
-        aggFn(outerFn, innerCol(s"__i_${p}_$innerFn", aggFn(innerFn, col(p)))).as(n)
-      case NamedQuery(q, n) => sys.error(s"non-aggregate metric $q/$n in two-level path")
-    }
-    Compiled(Nil, inner.values.toSeq, outer)
-  }
-
-  /** One event block → long-form frame
-    * (bucket, breakdowns..., metrics...). */
-  def eventFrame(
-      events: DataFrame,
-      req: EventSegmentationRequest,
-      block: EventBlock): DataFrame = {
-    val preds =
-      Seq(Exprs.timePredicateFor(events, TsCol, req.time)) ++
-        block.eventName.map(Exprs.eventPredicate(col(EventCol), _)).toSeq ++
-        block.customEvent.map(Exprs.customEventPredicate(col(EventCol), _)).toSeq ++
-        (req.filters ++ block.filters).map(Exprs.propPredicate)
-    val filtered = events.filter(Exprs.and(preds))
-    val bucketCol = Exprs.bucket(col(TsCol), req.interval).as("bucket")
-    val bds = (req.breakdowns ++ block.breakdowns).distinct.map(col)
-    val keys = bucketCol +: bds
-
-    val aggQs = block.queries.filterNot(_.query.isInstanceOf[Query.Formula])
-    val aggregated = if (needsInner(aggQs)) {
-      val c = compileTwoLevel(aggQs)
-      filtered
-        .groupBy((keys :+ col(req.groupCol)): _*)
-        .agg(c.inner.head, c.inner.tail: _*)
-        .groupBy(col("bucket") +: bds.map(b => col(b.toString())): _*)
-        .agg(c.outer.head, c.outer.tail: _*)
-    } else {
-      val c = compile(aggQs, req.groupCol)
-      filtered.groupBy(keys: _*).agg(c.oneLevel.head, c.oneLevel.tail: _*)
-    }
-    applyFormulas(aggregated, block.queries)
   }
 
   /** Request normalization (reference `fix_request`,
@@ -158,25 +70,23 @@ object EventSegmentation {
 
   /** Full request → long-form result:
     * (segment, event, bucket, breakdowns..., metrics...).
-    * Multi-event blocks union by name with missing metric columns null
-    * — the Spark analog of the reference's schema-merging MergeNode
+    * Multi-event blocks merge by name, another block's metric columns
+    * null — the Spark analog of the reference's schema-merging MergeNode
     * (reference query/src/logical_plan/merge.rs:21).
     *
-    * Execution: [[runFused]] whenever block breakdowns allow it — ONE
-    * events scan computes every (segment × block × metric) via
-    * conditional aggregation, and segment membership is one
-    * groupBy(user) flag pass ([[Segments.membershipFlags]]). The
-    * per-(segment × block) scan-and-union fallback remains for blocks
-    * whose private breakdowns change the grouping key. */
+    * Execution: [[runFused]] — ONE events scan computes every
+    * (segment × block × metric), and segment membership is one
+    * groupBy(user) flag pass ([[Segments.membershipFlags]]). */
   def run(events0: DataFrame, req: EventSegmentationRequest): DataFrame = {
     require(req.events.nonEmpty,
       "request needs at least one event block (fixRequest defaults empty metrics, not empty blocks)")
     val events = Exprs.tenantScope(events0, req.projectId)
-    applyCompare(applyAnalysis(runRaw(events, req), req), req)
+    applyCompare(applyAnalysis(runFused(events, req), req), req)
   }
 
   /** Every breakdown column present in the long-form output —
-    * request-level plus block-level (the unfused path emits both). */
+    * request-level plus block-level (each masked to null outside the
+    * blocks that own it). */
   private def allBreakdowns(req: EventSegmentationRequest): Seq[String] =
     (req.breakdowns ++ req.events.flatMap(_.breakdowns)).distinct
 
@@ -242,38 +152,6 @@ object EventSegmentation {
             metricNames.map(n => col(s"r.${n}_prev").as(s"${n}_prev")): _*)
     }
 
-  private def runRaw(events: DataFrame, req: EventSegmentationRequest): DataFrame = {
-    val anyInner = req.events.exists(b =>
-      needsInner(b.queries.filterNot(_.query.isInstanceOf[Query.Formula])))
-    // mixed mode restriction: a one-level metric re-expressed over the
-    // per-user inner pass supports only count/sum/min/max/avg
-    val mixedOk = !anyInner || req.events.forall(_.queries.forall {
-      case NamedQuery(Query.AggregateProperty(_, f), _) => f match {
-        case AggFn.Count | AggFn.Sum | AggFn.Min | AggFn.Max | AggFn.Avg => true
-        case _                                                           => false
-      }
-      case _ => true
-    })
-    if (mixedOk) runFused(events, req)
-    else runUnfused(events, req)
-  }
-
-  private def runUnfused(events: DataFrame, req: EventSegmentationRequest): DataFrame = {
-    val segmented: Seq[(String, DataFrame)] =
-      if (req.segments.isEmpty) Seq(("all", events))
-      else req.segments.map { s =>
-        (s.name, Segments.filterToSegment(events, s, req.time, req.groupCol, TsCol, EventCol))
-      }
-    val frames = for {
-      (segName, segEvents) <- segmented
-      block <- req.events
-    } yield eventFrame(segEvents, req, block)
-      .withColumn("event", lit(block.customEvent.map(_.name)
-        .orElse(block.eventName).getOrElse("all")))
-      .withColumn("segment", lit(segName))
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
   /** Stable internal column key for a metric spec, so identical specs
     * across blocks share one aggregate buffer. */
   private def fnKey(f: AggFn): String = f match {
@@ -290,17 +168,18 @@ object EventSegmentation {
     case Query.Formula(_)                        => sys.error("formula has no spec")
   }
 
-  /** Fused execution — ONE events scan for any number of blocks and
-    * segments. Each input row is EXPLODED into the (segment × block)
-    * cells it belongs to before aggregation (amplification ≤ cells,
-    * slim payload, map-side combine), one aggregate runs keyed by
+  /** Fused execution — the one event-segmentation plan: ONE events
+    * scan for any number of blocks and segments. Each input row is
+    * EXPLODED into the (segment × block) cells it belongs to before
+    * aggregation (amplification ≤ cells, slim payload, map-side
+    * combine), one aggregate runs keyed by
     * (bucket, breakdowns, cell), and the long-form output shape is a
     * single projection with per-block when-chains — no union, so the
     * aggregate subplan is never duplicated by branch pruning. The
     * reference evaluates all segments/metrics in one pass the same
     * way (its SegmentedAggregate node). The scan filter keeps the
     * time range AND the OR of block predicates, so single-block
-    * requests push down exactly what the per-block path did. Segment
+    * requests push down the block's own predicate. Segment
     * membership is one groupBy(user) flag pass
     * ([[Segments.membershipFlags]]) joined on the group key. */
   private def runFused(events: DataFrame, req: EventSegmentationRequest): DataFrame = {
@@ -327,8 +206,8 @@ object EventSegmentation {
     val filtered = withFlags.filter(scanPred)
 
     // explode each row into its matching cells: a group for cell
-    // (si, bi) then exists iff the cell matched ≥1 row — identical to
-    // the per-block path's bucket omission semantics
+    // (si, bi) then exists iff the cell matched ≥1 row, so empty
+    // buckets are omitted
     val cellStructs = for {
       (sf, si) <- segFlags.zipWithIndex
       (bp, bi) <- blockPreds.zipWithIndex
@@ -343,9 +222,7 @@ object EventSegmentation {
     // union of request + block-private breakdowns, MASKED per cell: a
     // block groups only by its own breakdowns, so another block's
     // private breakdown column must read null in this block's cells —
-    // otherwise an unrelated column would split its groups. This is
-    // exactly the null the unfused path's unionByName produced, now
-    // inside one scan.
+    // otherwise an unrelated column would split its groups.
     val bds = allBreakdowns(req)
     val bdKeyCols = bds.map { c =>
       val owners = blocks.zipWithIndex.collect {
@@ -360,27 +237,38 @@ object EventSegmentation {
 
     val aggQs = blocks.flatMap(_.queries).map(_.query)
       .filterNot(_.isInstanceOf[Query.Formula]).distinctBy(specKey)
-    val anyInner = blocks.exists(b =>
-      needsInner(b.queries.filterNot(_.query.isInstanceOf[Query.Formula])))
+    val anyInner = aggQs.exists {
+      case _: Query.CountPerGroup | _: Query.AggregatePropertyPerGroup => true
+      case _                                                         => false
+    }
+    def oneLevel(q: Query): Column = (q match {
+      case Query.CountEvents             => count(lit(1))
+      case Query.CountUniqueGroups(_)    => count_distinct(col(req.groupCol))
+      case Query.AggregateProperty(p, f) => aggFn(f, col(p))
+      case other                         => sys.error(s"unexpected $other")
+    }).as(specKey(q))
 
     val aggregated = if (!anyInner) {
-      val aggCols = aggQs.map { q =>
-        (q match {
-          case Query.CountEvents             => count(lit(1))
-          case Query.CountUniqueGroups(_)    => count_distinct(col(req.groupCol))
-          case Query.AggregateProperty(p, f) => aggFn(f, col(p))
-          case other                         => sys.error(s"unexpected $other")
-        }).as(specKey(q))
-      }
+      val aggCols = aggQs.map(oneLevel)
       exploded.groupBy(keys: _*).agg(aggCols.head, aggCols.tail: _*)
     } else {
+      // property metrics with no per-user partial (median, percentile,
+      // distinct counts) cannot be rebuilt from the inner pass; they
+      // run one-level below and join on the cell key
+      val (twoLevelQs, oneLevelQs) = aggQs.partition {
+        case Query.AggregateProperty(_, f) => f match {
+          case AggFn.Count | AggFn.Sum | AggFn.Min | AggFn.Max | AggFn.Avg => true
+          case _                                                           => false
+        }
+        case _ => true
+      }
       // two-level: one shared per-user inner pass; inner rows exist
       // only for users that matched the cell, so no guards are needed
       val inner = scala.collection.mutable.LinkedHashMap[String, Column]()
       def innerCol(key: String, c: => Column): Column = {
         inner.getOrElseUpdate(key, c.as(key)); col(key)
       }
-      val outers = aggQs.map { q =>
+      val outers = twoLevelQs.map { q =>
         (q match {
           case Query.CountEvents =>
             sum(innerCol("__cnt", count(lit(1))))
@@ -394,7 +282,7 @@ object EventSegmentation {
             case AggFn.Avg =>
               sum(innerCol(s"__sum_$p", sum(col(p)))) /
                 sum(innerCol(s"__cntnn_$p", count(col(p))))
-            case other => sys.error(s"outer-level $other unsupported in fused two-level")
+            case other => sys.error(s"$other has no per-user partial")
           }
           case Query.CountPerGroup(outerFn) =>
             aggFn(outerFn, innerCol("__cnt", count(lit(1))))
@@ -403,11 +291,26 @@ object EventSegmentation {
           case other => sys.error(s"unexpected $other")
         }).as(specKey(q))
       }
-      exploded
+      val twoLevel = exploded
         .groupBy((keys :+ col(req.groupCol)): _*)
         .agg(inner.values.head, inner.values.tail.toSeq: _*)
         .groupBy(keyNames.map(col): _*)
         .agg(outers.head, outers.tail: _*)
+      if (oneLevelQs.isEmpty) twoLevel
+      else {
+        // both aggregates group the same exploded rows by the same
+        // keys, so every cell matches exactly once; `<=>` because
+        // masked breakdown keys (and breakdown values) may be null
+        val sideKeys = keyNames.indices.map(i => s"__k$i")
+        val oneCols = oneLevelQs.map(oneLevel)
+        val side = exploded.groupBy(keys: _*).agg(oneCols.head, oneCols.tail: _*)
+          .select(keyNames.zip(sideKeys).map { case (k, sk) => col(k).as(sk) } ++
+            oneLevelQs.map(q => col(specKey(q))): _*)
+        twoLevel
+          .join(side, keyNames.zip(sideKeys).map { case (k, sk) => col(k) <=> col(sk) }
+            .reduce(_ && _))
+          .drop(sideKeys: _*)
+      }
     }
 
     // long-form shape via per-block when-chains — one projection, no

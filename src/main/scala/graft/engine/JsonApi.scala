@@ -26,19 +26,25 @@ object JsonApi {
              registry: Registry = Registry.open): DataFrame =
     Funnel.fromModel(spark, events, JsonDsl.funnel(json, registry))
 
-  /** Run a JSON request and serialize the result in the reference's
-    * columnar response shape (Response.ColumnarTable.toJson). The
-    * end-to-end request is recorded under the reference's metric tag
-    * (Metrics — parse, plan, execute and serialize, like the
-    * reference's handler-scope histogram); the DataFrame-returning
-    * builders above are lazy, so their timing belongs to whichever
-    * action the caller runs. */
-  def eventSegmentationJson(events: DataFrame, json: String): String =
-    Metrics.timed("event_segmentation") {
-      val table = Response.collect(eventSegmentation(events, json))
-      Metrics.recordRows("event_segmentation", table.rowCount)
+  /** Run a request's result frame and serialize it in the
+    * reference's columnar response shape
+    * (Response.ColumnarTable.toJson). The end-to-end request is
+    * recorded under the reference's metric `tag` (Metrics — parse,
+    * plan, execute and serialize, like the reference's handler-scope
+    * histogram): `frame` is by-name, so building it from the JSON body
+    * is inside the timed scope. The DataFrame-returning builders here
+    * are lazy, so their timing belongs to whichever action the caller
+    * runs. */
+  def columnarJson(tag: String)(frame: => DataFrame): String =
+    Metrics.timed(tag) {
+      val table = Response.collect(frame)
+      Metrics.recordRows(tag, table.rowCount)
       table.toJson
     }
+
+  /** [[eventSegmentation]] served as columnar JSON ([[columnarJson]]). */
+  def eventSegmentationJson(events: DataFrame, json: String): String =
+    columnarJson("event_segmentation")(eventSegmentation(events, json))
 
   /** Format-routed event segmentation (reference QueryParams.format →
     * query Context.format; Format::Compact skips the reshaping tail,

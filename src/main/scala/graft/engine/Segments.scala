@@ -12,11 +12,14 @@ import org.apache.spark.sql.functions._
   * physical_plan/segmented_aggregate.rs:365-399 — effectively a
   * broadcast left-semi join on user id).
   *
-  * Spark build: `groupBy(user).agg(...).filter(having).select(user)`
-  * per condition, `intersect`/`union` for And/Or, then a LEFT SEMI
-  * join back onto events. At 100 TB the user-set is small relative to
-  * events, so Catalyst/AQE picks a broadcast semi join — exactly the
-  * reference's HashMap-membership design, but distributed.
+  * Spark build: a condition's meaning is ONE per-user boolean
+  * aggregate ([[flagAgg]]). [[membershipFlags]] evaluates every
+  * segment's conditions in one `groupBy(user)` pass and composes the
+  * Or-of-Ands as boolean columns, which segmentation and funnels join
+  * on the user key. A condition that needs a pass before its
+  * aggregate ([[preScope]]: the per-user first-use window, or a
+  * rolling window key) runs [[userSet]] — the same [[flagAgg]] behind
+  * that pass — and joins in as a flag.
   *
   * The reference leaves `RelativeCount`, `HistoricalCount`,
   * `HasPropertyValue` and `AfterFirstUse` unimplemented
@@ -45,6 +48,24 @@ object Segments {
     case other      => sys.error(s"unsupported segment comparison $other")
   }
 
+  private def conditionTime(c: SegmentCondition): Option[SegmentTime] = c match {
+    case SegmentCondition.DidEventCount(_, _, _, _, t)                   => Some(t)
+    case SegmentCondition.DidEventAggregateProperty(_, _, _, _, _, _, t) => Some(t)
+    case SegmentCondition.DidEventRelativeCount(_, _, _, _, _, t)        => Some(t)
+    case SegmentCondition.HadPropertyValue(_, _, _, t)                   => t
+    case _: SegmentCondition.HasPropertyValue                            => None
+  }
+
+  /** The pass a condition needs BEFORE its per-user aggregate:
+    * `AfterFirstUse` keeps the rows within the user's first-use window
+    * (any condition); `Each` groups a `DidEventCount` by rolling
+    * window. `Each` on the other conditions scopes nothing. */
+  private def preScope(c: SegmentCondition): Option[SegmentTime] = (c, conditionTime(c)) match {
+    case (_, Some(t: SegmentTime.AfterFirstUse))                       => Some(t)
+    case (_: SegmentCondition.DidEventCount, Some(t: SegmentTime.Each)) => Some(t)
+    case _                                                             => None
+  }
+
   /** The scope's resolved `[from, to]` ts bounds, for the three
     * range-shaped scopes (Between/From/Last); None for the
     * structural scopes (Each/AfterFirstUse). `From` has no upper
@@ -63,261 +84,114 @@ object Segments {
     case _ => None
   }
 
-  /** The DATE-partition bounds implied by the scope's ts bounds —
-    * the conjunct that upgrades a segment condition's time scope to
-    * directory pruning on the canonical `event_date=`-partitioned
-    * layout (same construction as
-    * [[Exprs.timePredicateWithPartitionPruning]]: inclusive date
-    * bounds of the ts bounds, so results are identical). */
-  private def dateScopePred(t: SegmentTime, reqTime: QueryTime,
-                            dateCol: Column): Option[Column] =
-    tsBounds(t, reqTime).map { case (from, to) =>
-      to.foldLeft(dateCol >= to_date(lit(from)))((p, t2) =>
-        p && dateCol <= to_date(lit(t2)))
+  /** A condition's range-shaped time scope as a predicate on `on`,
+    * each ts bound mapped through `bound` — the ts column with `lit`,
+    * or the `event_date` partition column with the bounds' dates (the
+    * conjunct that upgrades the scope to directory pruning, as in
+    * [[Exprs.timePredicateWithPartitionPruning]]). Both derive from
+    * one [[tsBounds]], so the two can never disagree per condition,
+    * which the flag pass's prefilter depends on. None for
+    * all-history conditions and structural scopes. */
+  private def scopePred(c: SegmentCondition, reqTime: QueryTime, on: Column,
+                        bound: java.sql.Timestamp => Column): Option[Column] =
+    conditionTime(c).flatMap(tsBounds(_, reqTime)).map { case (from, to) =>
+      to.foldLeft(on >= bound(from))((p, t2) => p && on <= bound(t2))
     }
 
-  /** Restrict events to the condition's time scope. Range scopes on a
-    * date-partitioned frame also carry the implied `event_date`
-    * bounds so the scan prunes directories. `AfterFirstUse` needs the
-    * per-user first event timestamp — one window pass, shuffled by
-    * user, bounded state. */
-  private def timeScoped(events: DataFrame, t: SegmentTime, reqTime: QueryTime,
-                         userCol: String, tsCol: String): DataFrame = t match {
-    case SegmentTime.AfterFirstUse(within, unit) =>
-      val w = Window.partitionBy(col(userCol))
-      events
-        .withColumn("__first_ts", min(col(tsCol)).over(w))
-        .filter(unix_millis(col(tsCol)) - unix_millis(col("__first_ts")) <=
-          within * unit.millis)
-        .drop("__first_ts")
-    case _: SegmentTime.Each => events // rolling window handled by caller
-    case ranged =>
-      val p = timePred(ranged, reqTime, tsCol)
-      val withDate =
-        if (events.columns.contains("event_date"))
-          dateScopePred(ranged, reqTime, col("event_date")).map(p && _).getOrElse(p)
-        else p
-      events.filter(withDate)
+  /** One condition → its per-user boolean aggregate: the one
+    * definition of what the condition means. A range scope folds into
+    * the row guard; structural scopes are applied by [[userSet]]
+    * before the aggregate. */
+  private def flagAgg(c: SegmentCondition, reqTime: QueryTime,
+                      tsCol: String, eventCol: String): Column = {
+    val scope = scopePred(c, reqTime, col(tsCol), lit(_)).toSeq
+    def matching(ev: Option[String], filters: Seq[PropFilter]): Column = Exprs.and(
+      ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
+        filters.map(Exprs.propPredicate) ++ scope)
+    c match {
+      case SegmentCondition.DidEventCount(ev, filters, op, value, _) =>
+        val g = matching(ev, filters)
+        // "did event": membership needs ≥1 matching row even for
+        // zero-satisfiable comparisons (Lt/Neq)
+        count(when(g, 1)) > 0 && cmp(count(when(g, 1)), op, value)
+      case SegmentCondition.DidEventAggregateProperty(ev, filters, prop, fn, op, value, _) =>
+        val g = matching(ev, filters)
+        val guarded = when(g, col(prop))
+        val agg = fn match {
+          case AggFn.Count => count(guarded)
+          case AggFn.Sum   => sum(guarded)
+          case AggFn.Min   => min(guarded)
+          case AggFn.Max   => max(guarded)
+          case AggFn.Avg   => avg(guarded)
+          case other       => sys.error(s"unsupported segment agg $other")
+        }
+        // ≥1 matching row required (count() yields 0, not null, for
+        // zero rows, which would wrongly satisfy Lt/Lte/Neq)
+        count(when(g, 1)) > 0 && cmp(agg, op, value)
+      case SegmentCondition.DidEventRelativeCount(ev, filters, otherEv, otherFilters, op, _) =>
+        // count(A) OP count(B), and the user must appear in the
+        // condition's time scope at all
+        Exprs.and(scope.map(s => count(when(s, 1)) > 0) :+
+          cmpCols(count(when(matching(ev, filters), 1)), op,
+            count(when(matching(otherEv, otherFilters), 1))))
+      case SegmentCondition.HadPropertyValue(prop, op, values, _) =>
+        coalesce(bool_or(Exprs.and(
+          Exprs.propPredicate(PropFilter(prop, op, values)) +: scope)), lit(false))
+      case SegmentCondition.HasPropertyValue(prop, op, values, versionCol) =>
+        // CURRENT value = value on the user's highest-version row
+        // (replacing-table semantics, dedup-on-read)
+        Exprs.propPredicateOn(max_by(col(prop), col(versionCol)),
+          PropFilter(prop, op, values))
+    }
   }
 
-  /** One condition → DataFrame[user_id] of qualifying users. */
+  /** One condition → DataFrame[user] of qualifying users: its
+    * [[preScope]] pass, then its [[flagAgg]] per user. `AfterFirstUse`
+    * needs the per-user first event timestamp — one window pass,
+    * shuffled by user, bounded state. `Each` is a rolling-window count
+    * (reference segmentation/count.rs:29-212 + time_range.rs
+    * `SegmentTime::Each`): qualifies if ANY window of length n*unit
+    * satisfies, approximated as the reference does — ts bucketed by
+    * the window length, the flag per (user, bucket). */
   def userSet(
       events: DataFrame, cond: SegmentCondition, reqTime: QueryTime,
-      userCol: String, tsCol: String, eventCol: String): DataFrame = cond match {
-
-    case SegmentCondition.DidEventCount(ev, filters, op, value, SegmentTime.Each(n, unit)) =>
-      // Rolling-window count (reference segmentation/count.rs:29-212 +
-      // time_range.rs `SegmentTime::Each`): qualifies if ANY window of
-      // length n*unit satisfies. Approximated as the reference does —
-      // bucket ts by the window length, count per (user, bucket),
-      // qualify if any bucket satisfies the comparison.
-      val w = n * unit.millis
-      val pred = Exprs.and(
-        ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++ filters.map(Exprs.propPredicate))
-      events.filter(pred)
-        .groupBy(col(userCol), (unix_millis(col(tsCol)) / lit(w)).cast("long").as("__w"))
-        .agg(count(lit(1)).as("__c"))
-        .filter(cmp(col("__c"), op, value))
-        .select(col(userCol)).distinct()
-
-    case SegmentCondition.DidEventCount(ev, filters, op, value, time) =>
-      val pred = Exprs.and(
-        ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          filters.map(Exprs.propPredicate))
-      timeScoped(events, time, reqTime, userCol, tsCol)
-        .filter(pred).groupBy(col(userCol))
-        .agg(count(lit(1)).as("__c"))
-        .filter(cmp(col("__c"), op, value))
-        .select(col(userCol))
-
-    case SegmentCondition.DidEventAggregateProperty(ev, filters, prop, fn, op, value, time) =>
-      val pred = Exprs.and(
-        ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          filters.map(Exprs.propPredicate))
-      val agg = fn match {
-        case AggFn.Count => count(col(prop))
-        case AggFn.Sum   => sum(col(prop))
-        case AggFn.Min   => min(col(prop))
-        case AggFn.Max   => max(col(prop))
-        case AggFn.Avg   => avg(col(prop))
-        case other       => sys.error(s"unsupported segment agg $other")
-      }
-      timeScoped(events, time, reqTime, userCol, tsCol)
-        .filter(pred).groupBy(col(userCol))
-        .agg(agg.as("__a"))
-        .filter(cmp(col("__a"), op, value))
-        .select(col(userCol))
-
-    case SegmentCondition.DidEventRelativeCount(ev, filters, otherEv, otherFilters, op, time) =>
-      // count(A) OP count(B) per user, both counted in one pass over
-      // the time scope with conditional aggregation — no second scan.
-      val predA = Exprs.and(
-        ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          filters.map(Exprs.propPredicate))
-      val predB = Exprs.and(
-        otherEv.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          otherFilters.map(Exprs.propPredicate))
-      timeScoped(events, time, reqTime, userCol, tsCol)
-        .groupBy(col(userCol))
-        .agg(
-          count(when(predA, 1)).as("__a"),
-          count(when(predB, 1)).as("__b"))
-        .filter(cmpCols(col("__a"), op, col("__b")))
-        .select(col(userCol))
-
-    case SegmentCondition.HadPropertyValue(prop, op, values, time) =>
-      val scoped = time.fold(events)(timeScoped(events, _, reqTime, userCol, tsCol))
-      scoped.filter(Exprs.propPredicate(PropFilter(prop, op, values)))
-        .select(col(userCol)).distinct()
-
-    case SegmentCondition.HasPropertyValue(prop, op, values, versionCol) =>
-      // CURRENT value = the user's latest row (replacing-table
-      // semantics, dedup-on-read)
-      Records.latestPerGroup(events, userCol, versionCol)
-        .filter(Exprs.propPredicate(PropFilter(prop, op, values)))
-        .select(col(userCol))
-  }
-
-  // ---------------------------------------------------------------
-  // Fused membership flags: ALL segments' conditions in ONE
-  // groupBy(user) pass. Each fusible condition becomes a boolean
-  // aggregate expression (count/sum/min/max/avg over `when(pred, …)`
-  // with its time scope folded into the predicate); per-segment
-  // membership is then a plain boolean OR-of-ANDs over the condition
-  // flags. The per-condition scan-and-intersect this replaces
-  // multiplied the events scan by the number of conditions.
-  // ---------------------------------------------------------------
-
-  /** Conditions whose flag is expressible as a single per-user
-    * aggregate. `Each` needs a per-window grouping key and
-    * `AfterFirstUse` a first-event pre-pass — both fall back to
-    * [[userSet]] and join into the flag frame. */
-  private def fusible(c: SegmentCondition): Boolean = {
-    def plainTime(t: SegmentTime) = t match {
-      case _: SegmentTime.Each | _: SegmentTime.AfterFirstUse => false
-      case _                                                  => true
+      userCol: String, tsCol: String, eventCol: String): DataFrame = {
+    val (scoped, window) = preScope(cond) match {
+      case Some(SegmentTime.AfterFirstUse(within, unit)) =>
+        (events
+          .withColumn("__first_ts", min(col(tsCol)).over(Window.partitionBy(col(userCol))))
+          .filter(unix_millis(col(tsCol)) - unix_millis(col("__first_ts")) <=
+            within * unit.millis), Nil)
+      case Some(SegmentTime.Each(n, unit)) =>
+        (events, Seq((unix_millis(col(tsCol)) / lit(n * unit.millis)).cast("long").as("__w")))
+      case _ => (events, Nil)
     }
-    c match {
-      case SegmentCondition.DidEventCount(_, _, _, _, t)                => plainTime(t)
-      case SegmentCondition.DidEventAggregateProperty(_, _, _, _, _, _, t) => plainTime(t)
-      case SegmentCondition.DidEventRelativeCount(_, _, _, _, _, t)    => plainTime(t)
-      case SegmentCondition.HadPropertyValue(_, _, _, t) =>
-        t.forall(plainTime) // Each/AfterFirstUse scopes fall back
-      case _: SegmentCondition.HasPropertyValue                         => true
-    }
-  }
-
-  /** SegmentTime → row predicate (same bounds as [[timeScoped]]). */
-  private def timePred(t: SegmentTime, reqTime: QueryTime, tsCol: String): Column = t match {
-    case SegmentTime.Between(f, to) => col(tsCol) >= lit(f) && col(tsCol) <= lit(to)
-    case SegmentTime.From(f)        => col(tsCol) >= lit(f)
-    case SegmentTime.Last(n, unit) =>
-      val to = reqTime match {
-        case QueryTime.Between(_, t2)  => t2
-        case QueryTime.Last(_, _, now) => now
-        case QueryTime.From(_)         => new java.sql.Timestamp(Long.MaxValue / 2)
-      }
-      val from = new java.sql.Timestamp(to.getTime - n * unit.millis)
-      col(tsCol) >= lit(from) && col(tsCol) <= lit(to)
-    case other => sys.error(s"no row predicate for $other")
-  }
-
-  /** One fusible condition → boolean aggregate expression. */
-  private def flagAgg(c: SegmentCondition, reqTime: QueryTime,
-                      tsCol: String, eventCol: String): Column = c match {
-    case SegmentCondition.DidEventCount(ev, filters, op, value, t) =>
-      val g = Exprs.and(
-        ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          filters.map(Exprs.propPredicate) :+ timePred(t, reqTime, tsCol))
-      // "did event": membership needs ≥1 matching row even for
-      // zero-satisfiable comparisons (Lt/Neq) — same rows the
-      // filter-then-group [[userSet]] path would keep
-      count(when(g, 1)) > 0 && cmp(count(when(g, 1)), op, value)
-    case SegmentCondition.DidEventAggregateProperty(ev, filters, prop, fn, op, value, t) =>
-      val g = Exprs.and(
-        ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          filters.map(Exprs.propPredicate) :+ timePred(t, reqTime, tsCol))
-      val guarded = when(g, col(prop))
-      val agg = fn match {
-        case AggFn.Count => count(guarded)
-        case AggFn.Sum   => sum(guarded)
-        case AggFn.Min   => min(guarded)
-        case AggFn.Max   => max(guarded)
-        case AggFn.Avg   => avg(guarded)
-        case other       => sys.error(s"unsupported segment agg $other")
-      }
-      // ≥1 matching row required (count() yields 0, not null, for
-      // zero rows, which would wrongly satisfy Lt/Lte/Neq)
-      count(when(g, 1)) > 0 && cmp(agg, op, value)
-    case SegmentCondition.DidEventRelativeCount(ev, filters, otherEv, otherFilters, op, t) =>
-      val scope = timePred(t, reqTime, tsCol)
-      val gA = Exprs.and(
-        ev.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          filters.map(Exprs.propPredicate) :+ scope)
-      val gB = Exprs.and(
-        otherEv.map(Exprs.eventPredicate(col(eventCol), _)).toSeq ++
-          otherFilters.map(Exprs.propPredicate) :+ scope)
-      // user must appear in the condition's time scope at all — the
-      // unfused path groups only time-scoped rows
-      count(when(scope, 1)) > 0 &&
-        cmpCols(count(when(gA, 1)), op, count(when(gB, 1)))
-    case SegmentCondition.HadPropertyValue(prop, op, values, time) =>
-      val g = Exprs.and(
-        Seq(Exprs.propPredicate(PropFilter(prop, op, values))) ++
-          time.map(timePred(_, reqTime, tsCol)))
-      coalesce(bool_or(g), lit(false))
-    case SegmentCondition.HasPropertyValue(prop, op, values, versionCol) =>
-      // CURRENT value = value on the user's highest-version row
-      Exprs.propPredicateOn(max_by(col(prop), col(versionCol)),
-        PropFilter(prop, op, values))
-  }
-
-  /** The condition's row-level time scope predicate, when it has
-    * one — used to prune the flag pass's scan to the union of scopes.
-    * Derived from [[scopeTime]] so the ts predicate and the implied
-    * [[dateScopePred]] date bounds can never disagree per condition
-    * (the fused prefilter's soundness depends on exactly that
-    * agreement). All-history conditions return None. */
-  private def scopePred(c: SegmentCondition, reqTime: QueryTime,
-                        tsCol: String): Option[Column] =
-    scopeTime(c).map(timePred(_, reqTime, tsCol))
-
-  /** The condition's RANGE-shaped time scope, when it has one (the
-    * single source of truth behind [[scopePred]] and the fused pass's
-    * date bounds). */
-  private def scopeTime(c: SegmentCondition): Option[SegmentTime] = {
-    def plain(t: SegmentTime): Option[SegmentTime] = t match {
-      case _: SegmentTime.Each | _: SegmentTime.AfterFirstUse => None
-      case t => Some(t)
-    }
-    c match {
-      case SegmentCondition.DidEventCount(_, _, _, _, t)                   => plain(t)
-      case SegmentCondition.DidEventAggregateProperty(_, _, _, _, _, _, t) => plain(t)
-      case SegmentCondition.DidEventRelativeCount(_, _, _, _, _, t)        => plain(t)
-      case SegmentCondition.HadPropertyValue(_, _, _, t)                   => t.flatMap(plain)
-      case _                                                               => None
-    }
+    val users = scoped.groupBy(col(userCol) +: window: _*)
+      .agg(flagAgg(cond, reqTime, tsCol, eventCol).as("__f"))
+      .filter(col("__f")).select(col(userCol))
+    if (window.isEmpty) users else users.distinct()
   }
 
   /** All segments → (userCol, __seg_0 … __seg_{k-1}) membership
-    * flags, computed in ONE aggregation over events for every fusible
-    * condition; non-fusible conditions compute their [[userSet]]
-    * separately and LEFT-join in as a flag. Only users belonging to
-    * at least one segment survive. */
+    * flags: every condition without a [[preScope]] is one [[flagAgg]]
+    * in ONE aggregation over events; the others compute their
+    * [[userSet]] separately and LEFT-join in as a flag. Per-segment
+    * membership is then a boolean Or-of-Ands over the condition flags.
+    * Only users belonging to at least one segment survive. */
   def membershipFlags(
       events: DataFrame, segments: Seq[Segment], reqTime: QueryTime,
       userCol: String, tsCol: String, eventCol: String): DataFrame = {
     require(segments.nonEmpty, "membershipFlags needs segments")
     val conditions = segments.flatMap(_.conditions.flatten).distinct
     val condIdx = conditions.zipWithIndex.toMap
-    val (fused, separate) = conditions.partition(fusible)
+    val (fused, separate) = conditions.partition(preScope(_).isEmpty)
     // when EVERY fused condition carries a time bound AND there are no
-    // non-fusible conditions, the flag scan prunes to the union of
+    // separate conditions, the flag scan prunes to the union of
     // those bounds (each flag still applies its own scope predicate).
-    // A non-fusible condition disables the prune: its users LEFT-join
+    // A separate condition disables the prune: its users LEFT-join
     // onto the base, so the base must keep every user with any event
     // or such users could never become members.
-    val scopes = fused.map(scopePred(_, reqTime, tsCol))
+    val scopes = fused.map(scopePred(_, reqTime, col(tsCol), lit(_)))
     val events0 =
       if (fused.nonEmpty && separate.isEmpty && scopes.forall(_.isDefined)) {
         val tsOr = scopes.flatten.reduce(_ || _)
@@ -328,11 +202,10 @@ object Segments {
         // mixing ts and event_date would not decompose), and it is
         // implied by tsOr, so results are identical.
         val dateOr =
-          if (events.columns.contains("event_date")) {
-            val dps = fused.map(c => scopeTime(c).flatMap(
-              dateScopePred(_, reqTime, col("event_date"))))
-            if (dps.forall(_.isDefined)) Some(dps.flatten.reduce(_ || _)) else None
-          } else None
+          if (events.columns.contains("event_date"))
+            Some(fused.flatMap(scopePred(_, reqTime, col("event_date"),
+              t => to_date(lit(t)))).reduce(_ || _))
+          else None
         events.filter(dateOr.map(tsOr && _).getOrElse(tsOr))
       } else events
     val fusedAggs = fused.map(c =>
@@ -355,26 +228,5 @@ object Segments {
     }
     withAll.select(col(userCol) +: segCols: _*)
       .filter(segments.indices.map(i => col(s"__seg_$i")).reduce(_ || _))
-  }
-
-  /** OR of ANDs composition → one user-set (reference
-    * planner/segment.rs And/Or). */
-  def segmentUsers(
-      events: DataFrame, seg: Segment, reqTime: QueryTime,
-      userCol: String, tsCol: String, eventCol: String): DataFrame = {
-    val ands = seg.conditions.map { conj =>
-      conj.map(userSet(events, _, reqTime, userCol, tsCol, eventCol))
-        .reduce(_.intersect(_))
-    }
-    ands.reduce(_.union(_)).distinct()
-  }
-
-  /** Restrict events to a segment's users — LEFT SEMI join, broadcast
-    * by AQE when the user set is small. */
-  def filterToSegment(
-      events: DataFrame, seg: Segment, reqTime: QueryTime,
-      userCol: String, tsCol: String, eventCol: String): DataFrame = {
-    val users = segmentUsers(events, seg, reqTime, userCol, tsCol, eventCol)
-    events.join(users, Seq(userCol), "left_semi")
   }
 }

@@ -42,7 +42,7 @@ object Retrieval {
     val order = Seq(col("rrf_micro").desc, col(idCol).asc)
     val fused = tagged.groupBy(col(idCol))
       .agg(sum(col("__c")).as("rrf_micro"), count(lit(1)).as("lists_hit"))
-    graft.engine.Dictionary.rankRows(fused.orderBy(order: _*).limit(topK), order, "rank")
+    graft.engine.Dictionary.rankTopK(fused, order, topK)
   }
 
   /** FACET counts over a matched doc set — the search-page sidebar:

@@ -984,14 +984,12 @@ object TextAnalysis {
       when(col("token") === weights.head._1, lit(weights.head._2))) {
       case (acc, (t, w)) => acc.when(col("token") === t, lit(w))
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("score_micro").desc, col("doc_id").asc)
-    tf.withColumn("__w", wcol)
+    val scored = tf.withColumn("__w", wcol)
       .groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("__w")).as("score_micro"),
         count(lit(1)).as("terms_hit"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
+    graft.engine.Dictionary.rankTopK(scored,
+      Seq(col("score_micro").desc, col("doc_id").asc), topK)
   }
 
   /** PASSAGE retrieval — the RAG pattern: documents chunk into
@@ -1032,9 +1030,7 @@ object TextAnalysis {
     val perDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol))
       .orderBy(col("bm25_micro").desc, col("chunk_idx").asc)
-    val docRank = org.apache.spark.sql.expressions.Window
-      .orderBy(col("best_micro").desc, col(idCol).asc)
-    passages
+    val pooled = passages
       // pmod, not %: a negative doc id makes pid negative, and a
       // negative remainder would corrupt BOTH the recovered chunk_idx
       // and the doc id below. pmod keeps chunk in [0, 1e6) always.
@@ -1047,8 +1043,8 @@ object TextAnalysis {
       .filter(col("__rn") === 1)
       .select(col(idCol), col("chunk_idx").as("best_chunk_idx"),
         col("bm25_micro").as("best_micro"))
-      .withColumn("rank", row_number().over(docRank).cast("long"))
-      .filter(col("rank") <= topK)
+    graft.engine.Dictionary.rankTopK(pooled,
+      Seq(col("best_micro").desc, col(idCol).asc), topK)
   }
 
   /** Build a PERSISTED passage index: the corpus chunked
@@ -1139,9 +1135,7 @@ object TextAnalysis {
         floor(log((col("__n") - col("__df") + lit(0.5)) /
           (col("__df") + lit(0.5)) + lit(1.0)) * 1e6).cast("long"))
       .select(col("token"), col("idf_micro"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bm25_micro").desc, col("doc_id").asc)
-    post.join(broadcast(idf), "token")
+    val scored = post.join(broadcast(idf), "token")
       .crossJoin(broadcast(
         stats.select(col("n").as("__n"), col("tot").as("__tot"))))
       .withColumn("__avgdl",
@@ -1156,8 +1150,8 @@ object TextAnalysis {
       .groupBy(col("doc_id"))
       .agg(sum(col("__contrib")).as("bm25_micro"),
         count(lit(1)).as("terms_hit"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
+    graft.engine.Dictionary.rankTopK(scored,
+      Seq(col("bm25_micro").desc, col("doc_id").asc), topK)
   }
 
   /** BATCHED BM25 — many queries served in ONE pass over the index,
@@ -1266,9 +1260,7 @@ object TextAnalysis {
         floor(log((col("__n") - col("__df") + lit(0.5)) /
           (col("__df") + lit(0.5)) + lit(1.0)) * 1e6).cast("long"))
       .select(col("token"), col("idf_micro"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bm25_micro").desc, col(idCol).asc)
-    tf.join(broadcast(idf), "token")
+    val scored = tf.join(broadcast(idf), "token")
       .crossJoin(broadcast(stats))
       .withColumn("__avgdl",
         col("__tot").cast("double") / col("__n").cast("double"))
@@ -1284,7 +1276,7 @@ object TextAnalysis {
       .groupBy(col(idCol))
       .agg(sum(col("__contrib")).as("bm25_micro"),
         count(lit(1)).as("terms_hit"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
+    graft.engine.Dictionary.rankTopK(scored,
+      Seq(col("bm25_micro").desc, col(idCol).asc), topK)
   }
 }

@@ -277,12 +277,8 @@ final class GraftHttpServer(
   private def route(method: String, pid: Long, segs: List[String],
                     body: String, acting: Option[Long]): (Int, String) = (method, segs) match {
     case ("POST", List("queries", "event-segmentation")) =>
-      200 -> Metrics.timed("event_segmentation") {
-        val t = Response.collect(JsonApi.eventSegmentation(
-          events, withProject(body, pid), reg.customEvents, reg))
-        Metrics.recordRows("event_segmentation", t.rowCount)
-        t.toJson
-      }
+      200 -> JsonApi.columnarJson("event_segmentation")(JsonApi.eventSegmentation(
+        events, withProject(body, pid), reg.customEvents, reg))
     case ("POST", List("queries", "funnel")) =>
       200 -> JsonApi.funnelJson(spark, events, withProject(body, pid), reg)
     // retrieval (beyond-reference): lexical BM25, or hybrid RRF when
@@ -318,26 +314,14 @@ final class GraftHttpServer(
         }
       }
     case ("POST", List("event-records", "search")) =>
-      200 -> Metrics.timed("event_records_search") {
-        val t = Response.collect(JsonApi.eventRecordsSearch(
-          events, withProject(body, pid), reg))
-        Metrics.recordRows("event_records_search", t.rowCount)
-        t.toJson
-      }
+      200 -> JsonApi.columnarJson("event_records_search")(JsonApi.eventRecordsSearch(
+        events, withProject(body, pid), reg))
     case ("POST", List("properties", "values")) =>
-      200 -> Metrics.timed("property_values") {
-        val t = Response.collect(JsonApi.propertyValues(
-          events, withProject(body, pid), reg))
-        Metrics.recordRows("property_values", t.rowCount)
-        t.toJson
-      }
+      200 -> JsonApi.columnarJson("property_values")(JsonApi.propertyValues(
+        events, withProject(body, pid), reg))
     case ("POST", List("group-records", "search")) =>
-      200 -> Metrics.timed("group_records_search") {
-        val t = Response.collect(JsonApi.groupRecordsSearch(
-          events, withProject(body, pid), reg))
-        Metrics.recordRows("group_records_search", t.rowCount)
-        t.toJson
-      }
+      200 -> JsonApi.columnarJson("group_records_search")(JsonApi.groupRecordsSearch(
+        events, withProject(body, pid), reg))
     // one group's current profile row (reference group_records.rs:45
     // `GET /:group_id/:id` → get_by_id): point-filter the group's
     // events, then dedup-on-read picks the latest version

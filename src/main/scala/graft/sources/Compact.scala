@@ -1196,6 +1196,28 @@ object Compact {
       .stripPrefix(base).stripPrefix("/"))
   }
 
+  /** The data leaves of a directory-partitioned store: the deepest
+    * directories under `root` that hold parquet files, each with its
+    * store-relative path. Dot and underscore entries are skipped at
+    * every level: underscore dirs are writer bookkeeping (_temporary
+    * holds an in-flight job's task files — compacting THOSE would
+    * delete a concurrent write's uncommitted output), the same
+    * exclusion as loadState's listing. */
+  private def dataLeaves(fs: FileSystem, root: Path): Seq[(Path, String)] = {
+    require(fs.exists(root), s"store directory $root does not exist")
+    def leaves(p: Path): Seq[Path] = {
+      val dirs = fs.listStatus(p).toSeq
+        .filterNot(s => s.getPath.getName.startsWith(".") ||
+          s.getPath.getName.startsWith("_"))
+        .filter(_.isDirectory)
+      if (dirs.isEmpty) Seq(p) else dirs.flatMap(d => leaves(d.getPath))
+    }
+    val base = fs.makeQualified(root).toUri.getPath
+    leaves(root)
+      .filter(l => fs.listStatus(l).exists(_.getPath.getName.endsWith(".parquet")))
+      .map(l => l -> fs.makeQualified(l).toUri.getPath.stripPrefix(base).stripPrefix("/"))
+  }
+
   /** [[purge]] over a directory-partitioned store: tombstones live at
     * the ROOT (`deleteKeys(root, …)`), every leaf purges against
     * them, and the tombstone set is dropped only after ALL leaves
@@ -1205,23 +1227,10 @@ object Compact {
                        opts: Options = Options()): Map[String, PurgeReport] = {
     val root = new Path(rootDir)
     val fs = fsFor(spark, root)
-    require(fs.exists(root), s"store directory $rootDir does not exist")
-    def leaves(p: Path): Seq[Path] = {
-      val st = fs.listStatus(p).toSeq
-        .filterNot(s => s.getPath.getName.startsWith(".") ||
-          s.getPath.getName.startsWith("_"))
-      val dirs = st.filter(_.isDirectory)
-      if (dirs.isEmpty) Seq(p) else dirs.flatMap(d => leaves(d.getPath))
-    }
-    val base = fs.makeQualified(root).toUri.getPath
-    val out = leaves(root)
-      .filter(l => fs.listStatus(l)
-        .exists(_.getPath.getName.endsWith(".parquet")))
-      .map { l =>
-        val rel = fs.makeQualified(l).toUri.getPath.stripPrefix(base).stripPrefix("/")
-        rel -> purgeImpl(spark, l, opts, root, dropTombstones = false)
-      }.toMap
-    fsFor(spark, root).delete(new Path(root, TombstoneDir), true)
+    val out = dataLeaves(fs, root).map { case (l, rel) =>
+      rel -> purgeImpl(spark, l, opts, root, dropTombstones = false)
+    }.toMap
+    fs.delete(new Path(root, TombstoneDir), true)
     out
   }
 
@@ -1271,29 +1280,18 @@ object Compact {
     import org.apache.spark.sql.functions.lit
     val root = new Path(rootDir)
     val fs = fsFor(spark, root)
-    require(fs.exists(root), s"store directory $rootDir does not exist")
-    def leaves(p: Path): Seq[Path] = {
-      val st = fs.listStatus(p).toSeq
-        .filterNot(s => s.getPath.getName.startsWith(".") ||
-          s.getPath.getName.startsWith("_"))
-      val dirs = st.filter(_.isDirectory)
-      if (dirs.isEmpty) Seq(p) else dirs.flatMap(d => leaves(d.getPath))
-    }
     val pruneOn =
       if (opts.replaceOn.isEmpty && opts.sumOn.isEmpty) preds
       else preds.filter(p => (opts.replaceOn ++ opts.sumOn).contains(p.column))
     // ONE recursive listing serves both the kept-file scan and the
     // fold-key derivation below — at 100k leaves a second walk would
     // double the namenode round-trips for nothing.
-    val leafDirs = leaves(root)
-    val keptFiles = leafDirs
-      .filter(l => fs.listStatus(l)
-        .exists(_.getPath.getName.endsWith(".parquet")))
-      .flatMap { l =>
-        val (_, parts, _) = loadState(fs, l, opts)
-        parts.filter(p => pruneOn.forall(pr => partKeeps(p, pr)))
-          .map(p => new Path(l, p.name).toString)
-      }
+    val leaves = dataLeaves(fs, root)
+    val keptFiles = leaves.flatMap { case (l, _) =>
+      val (_, parts, _) = loadState(fs, l, opts)
+      parts.filter(p => pruneOn.forall(pr => partKeeps(p, pr)))
+        .map(p => new Path(l, p.name).toString)
+    }
     val union =
       if (keptFiles.nonEmpty)
         readParts(spark, opts, Some(rootDir), keptFiles)
@@ -1317,9 +1315,8 @@ object Compact {
     val partCols: Seq[String] =
       if (opts.replaceOn.isEmpty && opts.sumOn.isEmpty) Nil
       else {
-        val perLeaf = leafDirs.map { l =>
-          l.toString.stripPrefix(root.toString).split("/").toSeq
-            .filter(_.contains("=")).map(_.split("=", 2)(0))
+        val perLeaf = leaves.map { case (_, rel) =>
+          rel.split("/").toSeq.filter(_.contains("=")).map(_.split("=", 2)(0))
         }.distinct
         require(perLeaf.size <= 1,
           s"heterogeneous partition layouts under $rootDir (" +
@@ -1383,19 +1380,6 @@ object Compact {
                      opts: Options = Options()): Map[String, Report] = {
     val root = new Path(rootDir)
     val fs = fsFor(spark, root)
-    require(fs.exists(root), s"store directory $rootDir does not exist")
-    def leaves(p: Path): Seq[Path] = {
-      // underscore dirs are writer bookkeeping (_temporary holds an
-      // in-flight job's task files — compacting THOSE would delete a
-      // concurrent write's uncommitted output), same exclusion as
-      // loadState's listing
-      val st = fs.listStatus(p).toSeq
-        .filterNot(s => s.getPath.getName.startsWith(".") ||
-          s.getPath.getName.startsWith("_"))
-      val dirs = st.filter(_.isDirectory)
-      if (dirs.isEmpty) Seq(p) else dirs.flatMap(d => leaves(d.getPath))
-    }
-    val base = fs.makeQualified(root).toUri.getPath
     // table-level snapshots pin one generation per leaf; every pinned
     // generation joins that leaf's protected set so per-leaf
     // compaction can never reclaim a snapshot the table still serves
@@ -1412,12 +1396,9 @@ object Compact {
     // parallel. Reports and on-disk results are identical — only the
     // sweep order is nondeterministic, and leaves are independent by
     // layout.
-    val targets = leaves(root)
-      .filter(l => fs.listStatus(l)
-        .exists(_.getPath.getName.endsWith(".parquet")))
+    val targets = dataLeaves(fs, root)
     graft.engine.Staging.concurrently[(String, Report)](
-      targets.map { l => () =>
-        val rel = fs.makeQualified(l).toUri.getPath.stripPrefix(base).stripPrefix("/")
+      targets.map { case (l, rel) => () =>
         rel -> run(spark, l.toString, opts.copy(pinnedGenerations =
           opts.pinnedGenerations ++ pins.getOrElse(rel, Set.empty)))
       }, maxParallel = 8).toMap
@@ -1464,25 +1445,12 @@ object Compact {
   def snapshotPartitioned(spark: SparkSession, rootDir: String): Long = {
     val root = new Path(rootDir)
     val fs = fsFor(spark, root)
-    require(fs.exists(root), s"store directory $rootDir does not exist")
-    def leaves(p: Path): Seq[Path] = {
-      val st = fs.listStatus(p).toSeq
-        .filterNot(s => s.getPath.getName.startsWith(".") ||
-          s.getPath.getName.startsWith("_"))
-      val dirs = st.filter(_.isDirectory)
-      if (dirs.isEmpty) Seq(p) else dirs.flatMap(d => leaves(d.getPath))
+    val entries = dataLeaves(fs, root).map { case (l, rel) =>
+      val gens = manifestVersions(fs, l)
+      require(gens.nonEmpty,
+        s"leaf $rel has parquet but no manifest; runPartitioned first")
+      rel -> gens.last._1
     }
-    val base = fs.makeQualified(root).toUri.getPath
-    val entries = leaves(root)
-      .filter(l => fs.listStatus(l)
-        .exists(_.getPath.getName.endsWith(".parquet")))
-      .map { l =>
-        val rel = fs.makeQualified(l).toUri.getPath.stripPrefix(base).stripPrefix("/")
-        val gens = manifestVersions(fs, l)
-        require(gens.nonEmpty,
-          s"leaf $rel has parquet but no manifest; runPartitioned first")
-        rel -> gens.last._1
-      }
     require(entries.nonEmpty, s"store $rootDir has no leaves to snapshot")
     val id = snapshotStates(fs, root).lastOption.map(_._1).getOrElse(0L) + 1L
     val body = entries.map { case (rel, gen) =>

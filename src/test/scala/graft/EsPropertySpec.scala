@@ -10,9 +10,10 @@ import org.scalacheck.{Gen, rng}
   * event streams × random requests, every result compared EXACTLY
   * against an independent plain-Scala model of the request semantics
   * (time window, event predicate, property filter, day/Monday-week
-  * bucketing, one-level and two-level per-user metrics, breakdowns).
-  * Any divergence between the fused/unfused Spark paths and the model
-  * — wrong bucket, dropped cell, wrong per-user split — fails with
+  * bucketing, one-level and two-level per-user metrics, breakdowns;
+  * one-level medians and distinct counts mixed with per-user metrics).
+  * Any divergence between the Spark plan and the model — wrong
+  * bucket, dropped cell, wrong per-user split — fails with
   * the generating seed printed. (Raw ScalaCheck Gen sampling with a
   * fixed seed — the scalatestplus bridge isn't available offline.)
   */
@@ -43,7 +44,8 @@ class EsPropertySpec extends SparkTestBase {
   private val queryGen: Gen[Query] = Gen.oneOf(
     Gen.const(Query.CountEvents),
     Gen.const(Query.CountUniqueGroups(None)),
-    Gen.oneOf(plainFns).map(f => Query.AggregateProperty("value", f)),
+    Gen.oneOf(plainFns ++ Seq(AggFn.Median, AggFn.DistinctCount))
+      .map(f => Query.AggregateProperty("value", f)),
     Gen.oneOf(Seq[AggFn](AggFn.Sum, AggFn.Max, AggFn.Avg)).map(Query.CountPerGroup),
     for {
       i <- Gen.oneOf(plainFns.filterNot(_ == AggFn.Count))
@@ -106,12 +108,16 @@ class EsPropertySpec extends SparkTestBase {
     case AggFn.Min   => xs.min
     case AggFn.Max   => xs.max
     case AggFn.Avg   => xs.sum / xs.size
+    case AggFn.Median => // exact, interpolated between the middle pair
+      val s = xs.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    case AggFn.DistinctCount => xs.distinct.size.toDouble
     case other       => sys.error(s"unused fn $other")
   }
 
   /** Users qualifying for a segment: DidEventCount over ALL rows
     * (membership ignores the request's time window and filters),
-    * requiring >=1 matching row even for Lte (the engine's userSet
+    * requiring >=1 matching row even for Lte (the engine's flagAgg
     * semantics: "did the event" plus the comparison). */
   private def segmentMembers(rows: Seq[(Long, Long, String, String, Double)],
                              seg: Segment): Set[Long] = {

@@ -1009,6 +1009,30 @@ class HttpSpec extends SparkTestBase {
     }
   }
 
+  test("a block mixing a per-user metric with a median is a 200, byte-identical to JsonApi") {
+    val mixedBody = """{
+      "time": {"type": "between", "from": "2024-01-01T00:00:00Z", "to": "2024-02-01T00:00:00Z"},
+      "group": 0,
+      "intervalUnit": "day",
+      "events": [{
+        "eventType": "regular",
+        "eventName": "view",
+        "queries": [{"type": "countPerGroup", "aggregate": "avg", "name": "avg_epu"},
+                    {"type": "aggregateProperty", "propertyType": "event",
+                     "propertyName": "value", "aggregate": "median", "name": "med"}]
+      }],
+      "breakdowns": []
+    }"""
+    val events = ev
+    withServer(new GraftHttpServer(spark, events)) { srv =>
+      val (code, got) = req(srv.port, "POST",
+        "/api/v1/projects/1/queries/event-segmentation", mixedBody)
+      assert(code == 200, got)
+      assert(got == Response.collect(JsonApi.eventSegmentation(events, mixedBody)).toJson)
+      assert(got.contains("med"))
+    }
+  }
+
   test("a segment with no condition group or an empty group is a 400, not a 500") {
     withServer(new GraftHttpServer(spark, ev)) { srv =>
       for (conditions <- Seq("[]", "[[]]");

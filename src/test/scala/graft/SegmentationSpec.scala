@@ -46,6 +46,44 @@ class SegmentationSpec extends SparkTestBase {
     assert(out("1970-01-02") == ((1.0, 70.0, 2L)))
   }
 
+  test("one block mixing a per-user metric with a median") {
+    val req = EventSegmentationRequest(range, TimeIntervalUnit.Day,
+      Seq(EventBlock(None, queries = Seq(
+        NamedQuery(Query.CountPerGroup(AggFn.Avg), "avg_epu"),
+        NamedQuery(Query.AggregateProperty("value", AggFn.Median), "med")))))
+    val out = EventSegmentation.run(eventsDf(rows), req)
+      .select(to_date(col("bucket")).cast("string").as("d"), col("avg_epu"), col("med"))
+      .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    // day1: 2 events per user, values 10/100/20/30; day2: 50 and 70
+    assert(out == Map("1970-01-01" -> ((2.0, 25.0)), "1970-01-02" -> ((1.0, 60.0))))
+  }
+
+  test("per-user and median blocks under a segment and a breakdown") {
+    val req = EventSegmentationRequest(range, TimeIntervalUnit.Day,
+      Seq(
+        EventBlock(Some("view"), queries = Seq(
+          NamedQuery(Query.CountPerGroup(AggFn.Avg), "avg_epu"))),
+        EventBlock(Some("buy"), queries = Seq(
+          NamedQuery(Query.AggregateProperty("value", AggFn.Median), "med")))),
+      breakdowns = Seq("device"),
+      segments = Seq(Segment("buyers", Seq(Seq(
+        SegmentCondition.DidEventCount(Some("buy"), Nil, PropOp.Gte, 1,
+          SegmentTime.Between(ts("1970-01-01T00:00:00Z"), ts("1971-01-01T00:00:00Z"))))))))
+    val out = EventSegmentation.run(eventsDf(rows), req)
+    assert(out.columns.toSet == Set("bucket", "device", "avg_epu", "med", "event", "segment"))
+    val got = out
+      .select(to_date(col("bucket")).cast("string"), col("device"), col("event"),
+        col("avg_epu"), col("med"), col("segment"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.get(3), r.get(4), r.getString(5))).toSet
+    // u2 never buys, so only u1's and u3's rows count
+    assert(got == Set(
+      ("1970-01-01", "ios", "view", 1.0, null, "buyers"),
+      ("1970-01-01", "ios", "buy", null, 100.0, "buyers"),
+      ("1970-01-02", "ios", "buy", null, 50.0, "buyers"),
+      ("1970-01-02", "osx", "buy", null, 70.0, "buyers")))
+  }
+
   test("event filter + property filter narrow the block") {
     val req = EventSegmentationRequest(range, TimeIntervalUnit.Day,
       Seq(EventBlock(Some("buy"),
@@ -69,8 +107,7 @@ class SegmentationSpec extends SparkTestBase {
 
   test("zero-matching-event users are not members of Lt-count segments") {
     // u2 never buys: "bought fewer than 2 times" must NOT include them
-    // (did-event semantics need >=1 matching row), in the fused flag
-    // path exactly like the filter-then-group userSet path
+    // (did-event semantics need >=1 matching row)
     val req = EventSegmentationRequest(range, TimeIntervalUnit.Day,
       Seq(EventBlock(None, queries = Seq(NamedQuery(Query.CountUniqueGroups(), "users")))),
       segments = Seq(Segment("light_buyers", Seq(Seq(
@@ -86,7 +123,7 @@ class SegmentationSpec extends SparkTestBase {
     val scoped = Segment("ios_day2", Seq(Seq(
       SegmentCondition.HadPropertyValue("device", PropOp.Eq, Seq("ios"),
         time = Some(SegmentTime.Between(ts("1970-01-02T00:00:00Z"), ts("1971-01-01T00:00:00Z")))))))
-    val users = Segments.segmentUsers(eventsDf(rows), scoped, range,
+    val users = Segments.membershipFlags(eventsDf(rows), Seq(scoped), range,
       "user_id", "ts", "event_type").collect().map(_.getLong(0)).toSet
     assert(users == Set(1L)) // u1 buys on day 2 from ios; u2/u3 never ios
     val fusedReq = EventSegmentationRequest(range, TimeIntervalUnit.Day,
@@ -102,7 +139,7 @@ class SegmentationSpec extends SparkTestBase {
       Seq(SegmentCondition.DidEventCount(Some("buy"), Nil, PropOp.Gte, 2,
         SegmentTime.Between(ts("1970-01-01T00:00:00Z"), ts("1971-01-01T00:00:00Z")))),
       Seq(SegmentCondition.HadPropertyValue("device", PropOp.Eq, Seq("osx")))))
-    val users = Segments.segmentUsers(eventsDf(rows), seg, range,
+    val users = Segments.membershipFlags(eventsDf(rows), Seq(seg), range,
       "user_id", "ts", "event_type").collect().map(_.getLong(0)).toSet
     assert(users == Set(1L, 3L))
   }
