@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev main over the driver queries, in the engine session that ships
@@ -20,10 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    small jobs may run before those plans print;
   *  - `profile` runs each query once warm and once timed under a
   *    stage listener, and prints each stage's executor run and CPU
-  *    time, task and record counts beside the wall total — separating
-  *    executor compute from driver overhead (planning, AQE
-  *    re-optimization, codegen) so optimization targets the measured
-  *    hot spot.
+  *    time, task and record counts beside the wall total and the job
+  *    count — separating executor compute from driver overhead
+  *    (planning, AQE re-optimization, codegen) so optimization targets
+  *    the measured hot spot. It times `count()`, whose plan may drop an
+  *    order-insensitive sort that `collect()` would run.
   */
 object Dev {
   def main(args: Array[String]): Unit = {
@@ -62,7 +63,9 @@ object Dev {
     // or late completion events silently vanish from the profile
     val stages = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, Long, Long, Long, Int)]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val m = si.taskMetrics
@@ -93,7 +96,7 @@ object Dev {
     val runSum = snap.map(_._3).sum / 1e3
     val cpuSum = snap.map(_._4).sum / 1e3
     println(f"$name: wall $wall%.2f s, executor-run sum $runSum%.2f s " +
-      f"(cpu $cpuSum%.2f s), ${snap.size} stages")
+      f"(cpu $cpuSum%.2f s), ${jobs.get} jobs, ${snap.size} stages")
     for ((id, nm, run, cpu, recs, nt) <- snap.sortBy(-_._3).take(15))
       println(f"  stage $id%4d run ${run / 1e3}%6.2f s  cpu ${cpu / 1e3}%6.2f s  " +
         f"tasks $nt%3d  outRecs $recs%9d  $nm")

@@ -5587,9 +5587,12 @@ object SparkEntry {
       val hashes = engine.Staging.stage(
         Sketches.kmvHashes(ev, Seq("grp"), col("event_id"), k), eager = false)
       val perType = Sketches.kmvEstimate(hashes, Seq("grp"), k)
+      // the union's sketch = the k smallest distinct hashes over every
+      // type's rows: a sort + limit, no window over a literal group
       val merged = Sketches.kmvEstimate(
-        Sketches.kmvHashes(hashes.withColumn("grp", lit("__all")),
-          Seq("grp"), col("kmv_hash"), k, preHashed = true),
+        hashes.select(col("kmv_hash")).distinct()
+          .orderBy(col("kmv_hash")).limit(k)
+          .select(lit("__all").as("grp"), col("kmv_hash")),
         Seq("grp"), k)
       val exact = ev.cube(col("grp"))
         .agg(countDistinct(col("event_id")).as("n_exact"))

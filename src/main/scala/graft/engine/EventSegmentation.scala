@@ -393,9 +393,13 @@ object EventSegmentation {
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
       .withZone(java.time.ZoneOffset.UTC)
     val bucketNames = buckets.map(b => fmt.format(b.toInstant))
+    // The pivoted frame is result-sized (series × metrics rows), so
+    // the tail runs on one partition: the global sort and the
+    // top-groups aggregate below plan as local operators, with no
+    // range-sampling job and no exchange.
     val wide = Reshape.pivot(
       melted.withColumn("__b", date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss")),
-      idCols :+ "agg_name", "__b", bucketNames, "value")
+      idCols :+ "agg_name", "__b", bucketNames, "value").coalesce(1)
     val sorted = Reshape.aggregateAndSortColumns(wide, bucketNames)
     val limited =
       if (bds.isEmpty) sorted

@@ -18,8 +18,11 @@ import org.apache.spark.sql.functions._
   * clustering and in-group time order as a PLANNER-ENFORCED
   * requirement (Spark's external sort spills to disk, so the
   * invariant holds at 100 TB) — and the state machine emits one row
-  * per funnel attempt with O(steps) state per user. Totals/ratios are
-  * a plain groupBy + window projection. (A hand-rolled
+  * per funnel attempt with O(steps) state per user. Totals are one
+  * groupBy(keys, step); the result-sized tail (first/lag window,
+  * ratios, order) runs on one partition in that aggregate's last
+  * stage, so a funnel plans two exchanges, hash(user) and
+  * hash(keys, step), and runs three jobs under AQE. (A hand-rolled
   * repartition+sortWithinPartitions+mapPartitions equivalent is NOT
   * safe here: AQE may elide the user-specified repartition and apply
   * a local shuffle read under a broadcast-converted join, silently
@@ -437,10 +440,11 @@ object Funnel {
       .filter(col("n_events") > cap)
 
   /** Run the funnel: events → long-form per-step result
-    * (bucket?, breakdowns..., step, total, conversion_ratio,
+    * (bucket?, breakdowns..., step, total, time_to_convert,
+    * time_to_convert_from_start, conversion_ratio,
     * avg_time_to_convert, avg_time_to_convert_from_start,
-    * time_to_convert, time_to_convert_from_start,
-    * dropped_off, drop_off_ratio). Steps are 1-based in the output. */
+    * dropped_off, drop_off_ratio), ordered by (bucket?,
+    * breakdowns..., step). Steps are 1-based in the output. */
   def run(spark: SparkSession, events0: DataFrame, req: Request): DataFrame = {
     import spark.implicits._
     val tenantScoped = Exprs.tenantScope(events0, req.projectId)
@@ -565,68 +569,58 @@ object Funnel {
             .between(a * 1000L, b * 1000L))
     }
 
-    // One row per (attempt, step); unreached steps carry null ts so
-    // zero-total steps still appear in the output shape (the reference
-    // zero-fills its wide per-step schema, funnel.rs:699-906).
-    val bdCols = req.breakdowns.zipWithIndex.map { case (c, i) =>
-      element_at(col("bds"), i + 1).as(c)
-    }
-    val exploded = filtered
-      .select((Seq(col("bucketMs"), col("stepTs")) ++ bdCols): _*)
-      .select(col("*"), posexplode(col("stepTs")).as(Seq("pos", "step_ts")))
-      .withColumn("step", col("pos") + 1)
-      .withColumn("prev_ts", when(col("pos") > 0, element_at(col("stepTs"), col("pos"))))
-      .withColumn("first_ts", element_at(col("stepTs"), 1))
-
-    // A keyless funnel gets a constant-valued grouping key so the
-    // totals window below keeps a real partition spec. It must be
-    // NON-FOLDABLE — `lit(0)` survives the groupBy as a foldable
-    // alias, FoldablePropagation inlines it, and the window collapses
-    // to the warned single-partition plan. `pmod(step, 1)` is always
-    // 0 but derives from a column, so it stays an attribute. The
-    // grouped frame is result-sized (≤ steps × buckets rows) either way.
+    // One row per (attempt, step) in one projection; unreached steps
+    // carry null ts so zero-total steps still appear in the output
+    // shape (the reference zero-fills its wide per-step schema,
+    // funnel.rs:699-906). A keyless funnel keys on `bucketMs`, which
+    // is 0 for every attempt without an interval: constant-valued but
+    // NON-FOLDABLE (a deserialized field, not a literal), so the
+    // totals window below keeps a real partition spec instead of
+    // collapsing to Spark's warned unpartitioned window.
     val keyless = req.interval.isEmpty && req.breakdowns.isEmpty
-    val keyNames =
-      (if (keyless) Seq("__pk") else Nil) ++
-        (if (req.interval.isDefined) Seq("bucket") else Nil) ++ req.breakdowns
-    val withBucket0 =
-      if (req.interval.isDefined)
-        exploded.withColumn("bucket", timestamp_millis(col("bucketMs")))
-      else exploded
-    val withBucket =
-      if (keyless) withBucket0.withColumn("__pk", pmod(col("step"), lit(1))) else withBucket0
-    val grouped = withBucket
+    val outKeys = (if (req.interval.isDefined) Seq("bucket") else Nil) ++ req.breakdowns
+    val keyNames = (if (keyless) Seq("__pk") else Nil) ++ outKeys
+    val keyCols =
+      (if (keyless) Seq(col("bucketMs").as("__pk")) else Nil) ++
+        (if (req.interval.isDefined) Seq(timestamp_millis(col("bucketMs")).as("bucket")) else Nil) ++
+        req.breakdowns.zipWithIndex.map { case (c, i) => element_at(col("bds"), i + 1).as(c) }
+    val stepTs = col("stepTs")
+    val exploded = filtered.select(keyCols ++ Seq(
+      element_at(stepTs, 1).as("first_ts"),
+      inline(transform(stepTs, (ts, i) => struct(
+        (i + 1).as("step"), ts.as("step_ts"),
+        when(i > 0, element_at(stepTs, i)).as("prev_ts"))))): _*)
+    val grouped = exploded
       .groupBy((keyNames :+ "step").map(col): _*)
       .agg(
         count(col("step_ts")).as("total"),
-        coalesce(sum(when(col("step_ts").isNotNull,
-          col("step_ts") - coalesce(col("prev_ts"), col("step_ts")))), lit(0L))
+        coalesce(sum(col("step_ts") - coalesce(col("prev_ts"), col("step_ts"))), lit(0L))
           .as("time_to_convert"),
-        coalesce(sum(when(col("step_ts").isNotNull,
-          col("step_ts") - col("first_ts"))), lit(0L))
+        coalesce(sum(col("step_ts") - col("first_ts")), lit(0L))
           .as("time_to_convert_from_start"))
 
-    val wKeys = Window.partitionBy(keyNames.map(col): _*)
-    val byStep = wKeys.orderBy(col("step"))
-    grouped
-      .withColumn("step0_total",
-        first(col("total")).over(byStep.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("prev_total", lag(col("total"), 1).over(byStep))
-      .withColumn("conversion_ratio",
-        round(when(col("step0_total") === 0, 0.0)
-          .otherwise(col("total") * 100.0 / col("step0_total")), 4))
-      .withColumn("avg_time_to_convert",
-        round(when(col("total") === 0, 0.0)
-          .otherwise(col("time_to_convert").cast("double") / col("total")), 4))
-      .withColumn("avg_time_to_convert_from_start",
-        round(when(col("total") === 0, 0.0)
-          .otherwise(col("time_to_convert_from_start").cast("double") / col("total")), 4))
-      .withColumn("dropped_off", coalesce(col("prev_total") - col("total"), lit(0L)))
-      .withColumn("drop_off_ratio",
-        round(when(coalesce(col("prev_total"), lit(0L)) === 0, 0.0)
-          .otherwise(col("dropped_off") * 100.0 / col("prev_total")), 4))
-      .drop("step0_total", "prev_total")
-      .orderBy((keyNames :+ "step").map(col): _*)
-      .drop("__pk")
+    // The tail works on ≤ steps × buckets × breakdowns rows, so it
+    // runs on one partition in the aggregate's own last stage: over a
+    // SinglePartition child the window and the global order plan as
+    // local sorts, with no exchange and no range-sampling job. The
+    // per-user machine keeps its parallelism — the hash(keys, step)
+    // exchange separates it from the coalesce.
+    val byStep = Window.partitionBy(keyNames.map(col): _*).orderBy(col("step"))
+    val step0Total = first(col("total")).over(byStep)
+    val prevTotal = lag(col("total"), 1).over(byStep)
+    val droppedOff = coalesce(prevTotal - col("total"), lit(0L))
+    def avgOf(c: String): Column =
+      round(when(col("total") === 0, 0.0).otherwise(col(c).cast("double") / col("total")), 4)
+    grouped.coalesce(1)
+      .select((outKeys ++ Seq("step", "total", "time_to_convert",
+          "time_to_convert_from_start")).map(col) ++ Seq(
+        round(when(step0Total === 0, 0.0)
+          .otherwise(col("total") * 100.0 / step0Total), 4).as("conversion_ratio"),
+        avgOf("time_to_convert").as("avg_time_to_convert"),
+        avgOf("time_to_convert_from_start").as("avg_time_to_convert_from_start"),
+        droppedOff.as("dropped_off"),
+        round(when(coalesce(prevTotal, lit(0L)) === 0, 0.0)
+          .otherwise(droppedOff * 100.0 / prevTotal), 4).as("drop_off_ratio")): _*)
+      .orderBy((outKeys :+ "step").map(col): _*)
   }
 }

@@ -21,8 +21,18 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * no-ops — zero overhead beyond one volatile read. */
 object Metrics {
 
+  /** `bucketCounts(i)` = queries that took at most `BucketBounds(i)`
+    * seconds (cumulative, as Prometheus renders `_bucket`). */
   final case class QueryStats(queries: Long, failures: Long, rows: Long,
-                              totalSeconds: Double, maxSeconds: Double)
+                              totalSeconds: Double, maxSeconds: Double,
+                              bucketCounts: IndexedSeq[Long])
+
+  /** Upper bounds (seconds) of the execution-time histogram's
+    * buckets: the Prometheus client libraries' defaults. `+Inf` is
+    * implicit — its cumulative count is `queries`. */
+  val BucketBounds: IndexedSeq[Double] =
+    Vector(0.005, 0.01, 0.025, 0.05, 0.075, 0.1, 0.25, 0.5, 0.75, 1.0, 2.5, 5.0, 7.5, 10.0)
+  private val boundsNs = BucketBounds.map(b => math.round(b * 1e9)).toArray
 
   private final class Cell {
     val queries = new LongAdder
@@ -30,16 +40,27 @@ object Metrics {
     val rows = new LongAdder
     val totalNs = new LongAdder
     val maxNs = new AtomicLong(0L)
+    /** Per-bucket (non-cumulative) counts; a duration above the last
+      * bound lands in none and counts only toward `+Inf`. */
+    val buckets = Array.fill(boundsNs.length)(new LongAdder)
     def record(durationNs: Long, failed: Boolean): Unit = {
       queries.increment()
       if (failed) failures.increment()
       totalNs.add(durationNs)
+      val b = java.util.Arrays.binarySearch(boundsNs, durationNs)
+      val i = if (b >= 0) b else -b - 1 // first bound >= duration
+      if (i < buckets.length) buckets(i).increment()
       var cur = maxNs.get()
       while (durationNs > cur && !maxNs.compareAndSet(cur, durationNs))
         cur = maxNs.get()
     }
-    def snapshot: QueryStats = QueryStats(queries.sum(), failures.sum(),
-      rows.sum(), totalNs.sum() / 1e9, maxNs.get() / 1e9)
+    def snapshot: QueryStats = {
+      // buckets before queries: record() counts the query first, so
+      // a concurrent record never leaves `+Inf` below a finite bucket
+      val cumulative = buckets.map(_.sum()).scanLeft(0L)(_ + _).tail.toIndexedSeq
+      QueryStats(queries.sum(), failures.sum(), rows.sum(),
+        totalNs.sum() / 1e9, maxNs.get() / 1e9, cumulative)
+    }
   }
 
   private val cells = new ConcurrentHashMap[String, Cell]()
@@ -81,12 +102,13 @@ object Metrics {
   }
 
   /** Prometheus text exposition (format 0.0.4) of every tag's
-    * counters — the payload of `GET /metrics`. Metric names are the
+    * instruments — the payload of `GET /metrics`. Metric names are the
     * repo's own (`graft_query_*`); they mirror the reference's
-    * `optiprism_query_queries_total` /
-    * `optiprism_query_execution_time_seconds` pair plus a failures
-    * and a result-rows counter. Tags render sorted so scrapes are
-    * deterministic. */
+    * `optiprism_query_queries_total` counter and
+    * `optiprism_query_execution_time_seconds` histogram (cumulative
+    * `_bucket{le}` over [[BucketBounds]], `_sum`, `_count`), plus a
+    * failures and a result-rows counter and a `_max` gauge. Tags
+    * render sorted so scrapes are deterministic. */
   def prometheusText: String = {
     def esc(s: String): String =
       s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
@@ -103,8 +125,18 @@ object Metrics {
     family("graft_query_queries_total", "counter", _.queries.toString)
     family("graft_query_failures_total", "counter", _.failures.toString)
     family("graft_query_rows_total", "counter", _.rows.toString)
-    family("graft_query_execution_time_seconds_sum", "counter", s => fmt(s.totalSeconds))
-    family("graft_query_execution_time_seconds_max", "gauge", s => fmt(s.maxSeconds))
+    val hist = "graft_query_execution_time_seconds"
+    sb.append(s"# TYPE $hist histogram\n")
+    snap.foreach { case (tag, s) =>
+      val q = s"""query="${esc(tag)}""""
+      BucketBounds.indices.foreach { i =>
+        sb.append(s"""${hist}_bucket{$q,le="${BucketBounds(i)}"} ${s.bucketCounts(i)}\n""")
+      }
+      sb.append(s"""${hist}_bucket{$q,le="+Inf"} ${s.queries}\n""")
+      sb.append(s"${hist}_sum{$q} ${fmt(s.totalSeconds)}\n")
+      sb.append(s"${hist}_count{$q} ${s.queries}\n")
+    }
+    family(s"${hist}_max", "gauge", s => fmt(s.maxSeconds))
     sb.result()
   }
 

@@ -889,15 +889,17 @@ object TextAnalysis {
         "left_semi")
       case None => occ0
     }
-    val starts = occ.select(col("doc_id"), col("pos").as("p")).distinct()
+    // the window starts carry their doc id under their own name, so
+    // the self-join condition is a real doc-id equality by construction
+    val starts = occ.select(col("doc_id").as("s_doc"), col("pos").as("p")).distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
       .orderBy(col("terms_in_window").desc, col("occs_in_window").desc,
         col("p").asc)
     starts.join(occ,
-        starts("doc_id") === occ("doc_id") &&
-          occ("pos") >= starts("p") && occ("pos") < starts("p") + width)
-      .select(starts("doc_id"), col("p"), col("token"))
+        col("s_doc") === col("doc_id") &&
+          col("pos") >= col("p") && col("pos") < col("p") + width)
+      .select(col("s_doc").as("doc_id"), col("p"), col("token"))
       .groupBy(col("doc_id"), col("p"))
       .agg(countDistinct(col("token")).as("terms_in_window"),
         count(lit(1)).as("occs_in_window"))

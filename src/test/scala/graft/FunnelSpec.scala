@@ -338,6 +338,40 @@ class FunnelSpec extends SparkTestBase {
     assert(recsU.max >= (recsU.sum * 3) / 5, s"expected hot-user skew: $recsU")
   }
 
+  test("a funnel plans two shuffles and finishes on one partition") {
+    // the per-user exchange and the (keys, step) aggregate's; the
+    // window, ratios and order run in the aggregate's last stage
+    val rows = for (u <- 1L to 6L; (e, i) <- Seq("A", "B", "C").zipWithIndex)
+      yield (u, u * 24 * H + i * 1000L, e, if (u % 2 == 0) "ios" else "android", 1.0)
+    val day = Some(TimeIntervalUnit.Day)
+    for (req <- Seq(
+        Funnel.Request(steps3, windowMs = 10 * H),
+        Funnel.Request(steps3, windowMs = 10 * H, interval = day),
+        Funnel.Request(steps3, windowMs = 10 * H, interval = day, breakdowns = Seq("device")))) {
+      val out = Funnel.run(spark, eventsDf(rows), req)
+      assert(out.collect().nonEmpty)
+      val plan = out.queryExecution.executedPlan
+      val shuffles = shuffleExchanges(plan)
+      assert(shuffles.size == 2, plan)
+      assert(!shuffles.exists(_.outputPartitioning
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]), plan)
+    }
+  }
+
+  test("funnel rows come back ordered by (bucket, breakdowns, step)") {
+    // 4 day buckets × 2 devices × 3 steps: groups spread over the
+    // session's shuffle partitions before the final order
+    val rows = for (d <- 0L until 4L; u <- 1L to 4L;
+                    (e, i) <- Seq("A", "B", "C").zipWithIndex if i <= u % 3)
+      yield (d * 10 + u, d * 24 * H + i * 1000L, e, if (u % 2 == 0) "ios" else "android", 1.0)
+    val out = Funnel.run(spark, eventsDf(rows), Funnel.Request(steps3, windowMs = 10 * H,
+      interval = Some(TimeIntervalUnit.Day), breakdowns = Seq("device"))).collect().toSeq
+    assert(out.size == 4 * 2 * 3)
+    val sorted = out.sortBy(r => (r.getAs[java.sql.Timestamp]("bucket").getTime,
+      r.getAs[String]("device"), r.getAs[Int]("step")))
+    assert(out == sorted)
+  }
+
   test("any-order golden pair: set semantics vs reference positional matching") {
     // group {A,B} in any order, then C. User sees A, A, C: under SET
     // semantics the second A cannot fill B's slot (distinct events per

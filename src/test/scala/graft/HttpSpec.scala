@@ -148,7 +148,7 @@ class HttpSpec extends SparkTestBase {
       assert(counter(after, "graft_query_queries_total", "event_segmentation") == q0 + 2)
       // the rows counter advances with the collected result size
       assert(counter(after, "graft_query_rows_total", "event_segmentation") > 0)
-      assert(after.contains("# TYPE graft_query_execution_time_seconds_sum counter"))
+      assert(after.contains("# TYPE graft_query_execution_time_seconds histogram"))
     }
   }
 

@@ -54,6 +54,29 @@ class MetricsSpec extends SparkTestBase {
     val qLines = text.linesIterator
       .filter(_.startsWith("graft_query_queries_total{")).toSeq
     assert(qLines == qLines.sorted)
+
+    // execution time is a histogram: per tag, cumulative buckets over
+    // the fixed bounds then +Inf, and +Inf == _count == queries_total
+    Metrics.timed("b") { Thread.sleep(30) }
+    val hist = Metrics.prometheusText
+    def value(series: String): Long =
+      hist.linesIterator.find(_.startsWith(series + " ")).map(_.split(' ').last.toLong)
+        .getOrElse(fail(s"no series $series in\n$hist"))
+    assert(hist.contains("# TYPE graft_query_execution_time_seconds histogram"))
+    for (q <- Seq("query=\"a\\\"tag\"", "query=\"b\"")) {
+      val buckets = hist.linesIterator
+        .filter(_.startsWith(s"graft_query_execution_time_seconds_bucket{$q,le=")).toSeq
+      assert(buckets.size == Metrics.BucketBounds.size + 1, buckets)
+      assert(buckets.last.startsWith(s"""graft_query_execution_time_seconds_bucket{$q,le="+Inf"} """))
+      val counts = buckets.map(_.split(' ').last.toLong)
+      assert(counts == counts.sorted, s"non-cumulative buckets: $buckets")
+      val total = value(s"graft_query_queries_total{$q}")
+      assert(counts.last == total)
+      assert(value(s"graft_query_execution_time_seconds_count{$q}") == total)
+    }
+    // b ran twice; the 30 ms run lies above le="0.025", both below 10 s
+    assert(value("""graft_query_execution_time_seconds_bucket{query="b",le="0.025"}""") <= 1)
+    assert(value("""graft_query_execution_time_seconds_bucket{query="b",le="10.0"}""") == 2)
   }
 
   test("disabled plane records nothing and still runs bodies") {

@@ -63,16 +63,6 @@ class SkewSpec extends SparkTestBase {
     val salted = Skew.saltedAggregate(df, Seq("key"),
       Seq(Skew.count("cnt")), buckets = 8)
     salted.collect()
-    def countExchanges(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        countExchanges(a.executedPlan)
-      // AQE hides materialized exchanges inside leaf query stages
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        countExchanges(s.plan)
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
-        1 + e.children.map(countExchanges).sum
-      case other => other.children.map(countExchanges).sum
-    }
     // input repartition + salted exchange + final exchange
     assert(countExchanges(salted.queryExecution.executedPlan) >= 2,
       salted.queryExecution.executedPlan.toString)

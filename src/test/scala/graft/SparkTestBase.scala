@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
@@ -24,4 +27,16 @@ abstract class SparkTestBase extends AnyFunSuite {
 
   def collectMap(df: DataFrame, keyCol: String, valCol: String): Map[Any, Any] =
     df.collect().map(r => r.getAs[Any](keyCol) -> r.getAs[Any](valCol)).toMap
+
+  /** The shuffle exchanges of a physical plan — after an action, the
+    * final adaptive plan's, since AQE hides materialized exchanges
+    * inside leaf query stages. */
+  def shuffleExchanges(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
+    case a: AdaptiveSparkPlanExec => shuffleExchanges(a.executedPlan)
+    case s: QueryStageExec => shuffleExchanges(s.plan)
+    case e: ShuffleExchangeLike => e +: e.children.flatMap(shuffleExchanges)
+    case other => other.children.flatMap(shuffleExchanges)
+  }
+
+  def countExchanges(p: SparkPlan): Int = shuffleExchanges(p).size
 }
