@@ -23,8 +23,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    time, task and record counts beside the wall total and the job
   *    count — separating executor compute from driver overhead
   *    (planning, AQE re-optimization, codegen) so optimization targets
-  *    the measured hot spot. It times `count()`, whose plan may drop an
-  *    order-insensitive sort that `collect()` would run.
+  *    the measured hot spot. It times `collect()`, the action
+  *    `Response.collect` runs on the serving path, so its job and stage
+  *    counts are the server's (a `count()` plan may drop an
+  *    order-insensitive sort that `collect()` runs).
   */
 object Dev {
   def main(args: Array[String]): Unit = {
@@ -53,7 +55,7 @@ object Dev {
     * builds the query afresh: the warm run's persisted frames are
     * released before timing. */
   private def profile(spark: SparkSession, name: String, query: () => DataFrame): Unit = {
-    query().count()
+    query().collect()
     spark.sparkContext.getPersistentRDDs
       .valuesIterator.foreach(_.unpersist(blocking = true))
     System.gc()
@@ -80,7 +82,7 @@ object Dev {
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    query().count()
+    query().collect()
     val wall = (System.nanoTime() - t0) / 1e9
     // drain: poll until no new completion arrives for two checks
     var seen = -1

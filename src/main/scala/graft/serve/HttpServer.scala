@@ -29,6 +29,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dependency); this transport is a driver-side front door, the data
   * path behind it is the same distributed Spark plan either way.
   *
+  * Every accepted connection gets TCP_NODELAY (see the companion
+  * object): the server sets `sun.net.httpserver.nodelay` before it
+  * creates its first JDK server. The JDK reads that property once per
+  * JVM, so a JVM that started another `com.sun.net.httpserver` server
+  * first keeps that server's setting. Request bodies over
+  * [[GraftHttpServer.MaxBodyBytes]] are answered with 413.
+  *
   * Routes:
   *  - POST queries/event-segmentation   → columnar JSON
   *  - POST queries/funnel               → nested funnel JSON
@@ -200,15 +207,17 @@ final class GraftHttpServer(
   // ONE source of truth — query routes read reg.customEvents
   @volatile private var reg: Registry =
     customEvents.foldLeft(registry) { case (r, (id, ce)) => r.withCustomEvent(id, ce) }
-  /** Serializes schema read-modify-write cycles — the JDK server
-    * dispatches handlers concurrently, and two interleaved renames on
-    * the volatile snapshot would silently drop one. Queries stay
-    * lock-free (they read one volatile snapshot). */
+  /** Serializes schema read-modify-write cycles. The server never
+    * calls `setExecutor`, so today handlers run one at a time on the
+    * JDK dispatcher thread; the lock is there for a handler pool (ROADMAP
+    * D7), under which two interleaved renames on the volatile snapshot
+    * would silently drop one. Queries stay lock-free (they read one
+    * volatile snapshot). */
   private val schemaLock = new Object
   /** Test/embedding hook: the current schema snapshot. */
   def currentRegistry: Registry = reg
 
-  private val server = HttpServer.create(new InetSocketAddress(0), 0)
+  private val server = GraftHttpServer.bind()
   server.createContext("/", (ex: HttpExchange) => handle(ex))
 
   def start(): GraftHttpServer = { server.start(); this }
@@ -238,9 +247,9 @@ final class GraftHttpServer(
       ex.close()
       return
     }
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
     val (status, json) =
       try {
+        val body = readBody(ex)
         ex.getRequestURI.getPath match {
           case ProjectPath(pid, rest) =>
             authorize(ex, pid.toLong) match {
@@ -255,6 +264,7 @@ final class GraftHttpServer(
           case _ => 404 -> err("not found")
         }
       } catch {
+        case e: GraftHttpServer.BodyTooLarge => 413 -> err(e.getMessage)
         case e: graft.model.Auth.ForbiddenError => 403 -> err(e.getMessage)
         case e: Json.JsonError          => 400 -> err(e.message)
         case e: IllegalArgumentException => 400 -> err(e.getMessage)
@@ -271,7 +281,37 @@ final class GraftHttpServer(
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length.toLong)
     ex.getResponseBody.write(bytes)
+    // a refused body is read and dropped, up to one bound more, after
+    // the answer is written: a client that reads the answer only once
+    // it has sent its body (the JDK HttpClient does) would otherwise
+    // meet a reset connection instead of the 413
+    if (status == 413) discard(ex.getRequestBody, GraftHttpServer.MaxBodyBytes)
     ex.close()
+  }
+
+  /** The request body, or [[GraftHttpServer.BodyTooLarge]] when it is
+    * over [[GraftHttpServer.MaxBodyBytes]]. A declared Content-Length
+    * over the bound is refused before any byte is read; a body of
+    * unknown length (chunked) is read up to one byte past the bound. */
+  private def readBody(ex: HttpExchange): String = {
+    import GraftHttpServer.{BodyTooLarge, MaxBodyBytes}
+    val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+      .flatMap(_.trim.toLongOption)
+    if (declared.exists(_ > MaxBodyBytes)) throw new BodyTooLarge
+    val bytes = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+    if (bytes.length > MaxBodyBytes) throw new BodyTooLarge
+    new String(bytes, StandardCharsets.UTF_8)
+  }
+
+  /** Reads and drops up to `limit` bytes. Not `skip`: the JDK body
+    * stream inherits FilterInputStream.skip, which bypasses the body's
+    * length framing. */
+  private def discard(in: java.io.InputStream, limit: Int): Unit = {
+    val buf = new Array[Byte](8192)
+    var left = limit
+    var n = 0
+    while (left > 0 && { n = in.read(buf, 0, math.min(left, buf.length)); n > 0 })
+      left -= n
   }
 
   private def route(method: String, pid: Long, segs: List[String],
@@ -1461,4 +1501,27 @@ final class GraftHttpServer(
       s""""type":${JStr(r.typ).render},"query":${r.queryJson},"tags":$tags,""" +
       s""""description":$desc,"createdAt":${r.createdAt}}"""
   }
+}
+
+object GraftHttpServer {
+  /** Request bodies over this many bytes are refused with 413: 2 MiB,
+    * the default request-body limit of axum, the reference's framework. */
+  val MaxBodyBytes: Int = 2 * 1024 * 1024
+
+  final class BodyTooLarge
+      extends RuntimeException(s"request body over $MaxBodyBytes bytes")
+
+  // TCP_NODELAY on every accepted connection. A handler writes the
+  // response headers (sendResponseHeaders flushes them) and then the
+  // body, so with Nagle's algorithm on, the body segment waits for the
+  // client's ACK of the header segment, and a client in request/response
+  // mode delays that ACK (about 40 ms on Linux). The JDK server sets
+  // TCP_NODELAY on an accepted channel only when this property is true;
+  // it reads the property once, when the JVM's first
+  // com.sun.net.httpserver server is created. [[bind]] creates every
+  // server of this class, so this initializer runs before the first of
+  // them.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def bind(): HttpServer = HttpServer.create(new InetSocketAddress(0), 0)
 }

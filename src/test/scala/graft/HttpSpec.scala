@@ -1642,4 +1642,53 @@ class HttpSpec extends SparkTestBase {
       assert(dc2 != 200, "default columns must not silently fit this index")
     }
   }
+
+  test("a response does not wait for the client's delayed ACK") {
+    // back-to-back requests on one HTTP/1.1 connection put the client's
+    // TCP in request/response mode, where Linux delays an ACK by about
+    // 40 ms; with Nagle on, the response body (written after the
+    // flushed headers) would wait for that ACK
+    val http11 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    withServer(new GraftHttpServer(spark, ev)) { srv =>
+      val get = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${srv.port}/metrics")).build()
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        assert(http11.send(get, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(ms.size / 2) < 20.0, ms.map(m => f"$m%.1f").mkString("ms: ", " ", ""))
+    }
+  }
+
+  test("a request body over the 2 MiB bound gets 413, and the server keeps serving") {
+    val path = "/api/v1/projects/1/queries/event-segmentation"
+    val over = " " * (GraftHttpServer.MaxBodyBytes + 1)
+    withServer(new GraftHttpServer(spark, ev)) { srv =>
+      // declared Content-Length: refused before the body is read
+      val (c1, b1) = req(srv.port, "POST", path, over)
+      assert(c1 == 413 && b1.contains("\"error\""), b1)
+      // unknown length (chunked): refused after bound + 1 bytes
+      val chunked = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}$path"))
+        .POST(HttpRequest.BodyPublishers.fromPublisher(
+          HttpRequest.BodyPublishers.ofString(over)))
+        .build()
+      val r2 = client.send(chunked, HttpResponse.BodyHandlers.ofString())
+      assert(r2.statusCode() == 413 && r2.body().contains("\"error\""), r2.body())
+      val (c3, _) = req(srv.port, "POST", path, esBody)
+      assert(c3 == 200)
+    }
+  }
+
+  test("a request body at the 2 MiB bound is not refused for its size") {
+    val events = ev
+    // trailing whitespace pads a real query to exactly the bound
+    val atBound = esBody + " " * (GraftHttpServer.MaxBodyBytes - esBody.length)
+    withServer(new GraftHttpServer(spark, events)) { srv =>
+      val (c, got) = req(srv.port, "POST",
+        "/api/v1/projects/1/queries/event-segmentation", atBound)
+      assert(c == 200, got)
+      assert(got == Response.collect(JsonApi.eventSegmentation(events, esBody)).toJson)
+    }
+  }
 }
