@@ -4180,7 +4180,7 @@ object SparkEntry {
     // element md5-derived so the oracle regenerates it), corpus
     // assignment is a broadcast cross join + ONE map-side argmax
     // aggregate (Similarity.assignCellsByJoin — nothing driver-side
-    // scales with nCells, unlike loadCodebook/seedCentroids' literal
+    // scales with nCells, unlike seedCentroids' literal
     // inlining), and the search still scans ONLY probed `cell_id=N/`
     // directories (the same PartitionFilters as q_knn_ivf_indexed,
     // pinned in PipelineSpec). nProbe=32 keeps recall sane at 4096
@@ -4298,8 +4298,8 @@ object SparkEntry {
     // pipeline: embedding cosine near-dup PAIRS, LSH-bucketed — the
     // literal ±1 plane matrix shared with the oracle bounds the pair
     // space to within-bucket; every surviving pair is exact-cosine
-    // verified (the production path is Dedup.embeddingDupPairs /
-    // cosineSelfJoinPairs with the fused native signature, unit-tested)
+    // verified (the production path is Similarity.cosineSelfJoinPairs
+    // with the fused native signature, unit-tested)
     "q_embed_dups" -> ((s, dir) => {
       val b = embedBucketed(s, dir)
         .withColumn("__n", Similarity.norm(col("v")))
@@ -5512,7 +5512,7 @@ object SparkEntry {
     }),
 
     // Streaming incremental materialized aggregate view
-    // (Streaming.streamingAggView over a sumOn store): each
+    // (Store.streamingAggView over a sumOn store): each
     // micro-batch of a BOUNDED event slice appends ONE idempotent
     // partial aggregate; the per-batch view read folds partials to
     // O(groups) rows without rescanning raw events. Emitted rows are
@@ -5531,7 +5531,7 @@ object SparkEntry {
       val input = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
       val acc = scala.collection.mutable.ArrayBuffer
         .empty[(Long, java.sql.Date, String, Long, Long)]
-      val q = graft.streaming.Streaming.streamingAggView(
+      val q = graft.sources.Store.streamingAggView(
           input.toDF().toDF("event_id", "ts", "event_type", "value"),
           s"$tmp/view",
           Seq(day(col("ts")).as("d"), col("event_type").as("event")),

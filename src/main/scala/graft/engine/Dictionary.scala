@@ -166,34 +166,6 @@ object Dictionary {
     loadStore(spark, dir)
   }
 
-  /** [[encodeStore]] against parquet-PERSISTED dictionaries: every
-    * dictionary-flagged registry property gets its dict get-or-created
-    * from the events themselves at `storeDir/<column>` — ingest-time
-    * key creation (the reference creates dictionary keys while
-    * ingesting, ingester/src/executor.rs:200-230 property_to_value →
-    * dictionaries.get_key_or_create) — then the standard request
-    * auto-encode runs over those durable dicts. Returns the encoded
-    * events, rewritten request, and the dicts for decode-on-exit. */
-  def encodeStorePersistent(events: DataFrame, req: EventSegmentationRequest,
-                            registry: Registry, storeDir: String, batchTag: String)
-      : (DataFrame, EventSegmentationRequest, Map[String, DataFrame]) = {
-    val dictCols = registry.allProperties.filter(_.isDictionary).map(_.column)
-    val dicts = dictCols.map(c =>
-      c -> getOrCreate(events, c, s"$storeDir/$c", batchTag)).toMap
-    // encode each flagged column in place (value → durable key, same
-    // column name) so the key literals encodeStore rewrites to actually
-    // compare against keys — the stored-table layout the reference
-    // writes at ingest
-    val encoded = dictCols.foldLeft(events) { (ev, c) =>
-      val d = dicts(c).select(col("value").as(s"${c}__v"), col("key").as(s"${c}__k"))
-      ev.join(broadcast(d), ev(c).cast("string") === col(s"${c}__v"), "left")
-        .drop(c).drop(s"${c}__v")
-        .withColumnRenamed(s"${c}__k", c)
-    }
-    val (ev, req2) = encodeStore(encoded, req, registry, dicts)
-    (ev, req2, dicts)
-  }
-
   /** Replace `valueCol` with its dictionary key (null-safe: unseen /
     * null values stay null, mirroring the reference's null handling). */
   def encode(df: DataFrame, dict: DataFrame, valueCol: String,
@@ -228,8 +200,6 @@ object Dictionary {
       values.map(v => v -> found.getOrElse(String.valueOf(v), -1L)).toMap
     }
 
-  def keyOf(dict: DataFrame, value: Any): Long = keysOf(dict, Seq(value))(value)
-
   private def isEqClass(op: PropOp): Boolean =
     op == PropOp.Eq || op == PropOp.Neq
   private def keysWork(op: PropOp): Boolean =
@@ -238,26 +208,11 @@ object Dictionary {
   private def isDictProp(registry: Registry, column: String): Boolean =
     registry.allProperties.exists(m => m.column == column && m.isDictionary)
 
-  /** Registry-driven filter auto-encode (reference query/src/expr.rs:
-    * 168-204): a filter addressing a dictionary-coded property
-    * compares LITERALS, so the literals — not the column — translate
-    * to dict keys at plan build; the rewritten comparison runs and
-    * pushes down on the integer key column. Only equality-class ops
-    * encode here — order/pattern ops need the decoded string
-    * ([[encodeStore]] rewrites them to a decoded companion column). */
-  def encodeFilters(filters: Seq[PropFilter], registry: Registry,
-                    dicts: Map[String, DataFrame]): Seq[PropFilter] =
-    filters.map { f =>
-      dicts.get(f.column) match {
-        case Some(dict) if isDictProp(registry, f.column) && isEqClass(f.op) =>
-          val keys = keysOf(dict, f.values)
-          f.copy(values = f.values.map(keys))
-        case _ => f
-      }
-    }
-
-  /** Full auto-encode of a request against a dictionary-encoded
-    * store. Every filter position — request-level, per-block, and
+  /** Registry-driven auto-encode of a request against a
+    * dictionary-encoded store (reference query/src/expr.rs:168-204): a
+    * filter addressing a dictionary-coded property compares LITERALS,
+    * so the literals — not the column — translate to dict keys at plan
+    * build. Every filter position — request-level, per-block, and
     * inside segment conditions — rewrites:
     *
     *  - Eq/Neq literals → dict keys (pushed-down int comparison);

@@ -127,8 +127,7 @@ object Funnel {
         * events than this (bots, test rigs) is EXCLUDED before the
         * repartition — one pathological user otherwise serializes one
         * task at 100 TB. The reference shares the per-user invariant
-        * and has no cap; None preserves its semantics. Use
-        * [[Funnel.botUsers]] to report what a cap excluded. */
+        * and has no cap; None preserves its semantics. */
       maxEventsPerUser: Option[Long] = None,
       /** Optional time scope, applied before the state machine via
         * [[Exprs.timePredicateFor]] — on a date-partitioned input
@@ -424,21 +423,6 @@ object Funnel {
     run(spark, scoped, req)
   }
 
-  /** Monitoring twin of `Request.maxEventsPerUser`: the users a cap
-    * excludes, with their event counts — run (and log) alongside a
-    * capped funnel so the exclusions are explicit, not silent.
-    * Pass the SAME frame the funnel ran over (after any time/filter
-    * scoping, e.g. what fromModel hands to run) — the in-run cap
-    * counts that frame, and a lifetime count over the raw table would
-    * report different users. */
-  def botUsers(events: DataFrame, cap: Long,
-               userCol: String = "user_id",
-               projectId: Option[Long] = None): DataFrame =
-    Exprs.tenantScope(events, projectId)
-      .groupBy(col(userCol))
-      .agg(count(lit(1)).as("n_events"))
-      .filter(col("n_events") > cap)
-
   /** Run the funnel: events → long-form per-step result
     * (bucket?, breakdowns..., step, total, time_to_convert,
     * time_to_convert_from_start, conversion_ratio,
@@ -509,8 +493,7 @@ object Funnel {
     // keeps every row: inactivity gaps are measured between ALL of a
     // user's events. The bot cap must count the same frame either way
     // — it counts `slim`, the full event stream, because the cap's
-    // contract (and botUsers' report) is events per user, not
-    // step-matching events per user.
+    // contract is events per user, not step-matching events per user.
     val active =
       if (sessionGapUs == 0L)
         slim.filter(col("stepBits") =!= 0L || col("exclBits") =!= 0L)

@@ -42,10 +42,6 @@ object JsonApi {
       table.toJson
     }
 
-  /** [[eventSegmentation]] served as columnar JSON ([[columnarJson]]). */
-  def eventSegmentationJson(events: DataFrame, json: String): String =
-    columnarJson("event_segmentation")(eventSegmentation(events, json))
-
   /** Format-routed event segmentation (reference QueryParams.format →
     * query Context.format; Format::Compact skips the reshaping tail,
     * event_segmentation.rs:349-350): `"format": "json"` (or absent) →

@@ -14,11 +14,7 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * counter the JSON entry points report. State is lock-free adders
   * keyed by tag (driver-side, |distinct tags|-sized), so the
   * instrument never shows up in a profile; [[prometheusText]] renders
-  * the standard text exposition the `GET /metrics` route serves.
-  *
-  * [[setEnabled]](false) turns the whole plane off: [[timed]] runs
-  * its body with no clock read and no map touch, [[recordRows]]
-  * no-ops — zero overhead beyond one volatile read. */
+  * the standard text exposition the `GET /metrics` route serves. */
 object Metrics {
 
   /** `bucketCounts(i)` = queries that took at most `BucketBounds(i)`
@@ -65,17 +61,9 @@ object Metrics {
 
   private val cells = new ConcurrentHashMap[String, Cell]()
 
-  @volatile private var enabled = true
-
-  /** Turn the metrics plane on/off (off = [[timed]] degenerates to
-    * its body, nothing is recorded). */
-  def setEnabled(on: Boolean): Unit = { enabled = on }
-  def isEnabled: Boolean = enabled
-
   /** Record `body`'s wall time (and failure, which rethrows) under
     * `tag`. */
   def timed[A](tag: String)(body: => A): A = {
-    if (!enabled) return body
     val t0 = System.nanoTime()
     try {
       val out = body
@@ -93,7 +81,7 @@ object Metrics {
   /** Add `n` result rows under `tag` — called by the JSON entry
     * points with the collected response size. */
   def recordRows(tag: String, n: Long): Unit =
-    if (enabled) cells.computeIfAbsent(tag, _ => new Cell).rows.add(n)
+    cells.computeIfAbsent(tag, _ => new Cell).rows.add(n)
 
   def snapshot: Map[String, QueryStats] = {
     val out = Map.newBuilder[String, QueryStats]

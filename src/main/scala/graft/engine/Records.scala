@@ -65,22 +65,16 @@ object Records {
     events.filter(col("event_id") === lit(id))
 
   /** Get one group's current profile row (reference
-    * group_records.rs:38-44 `GET /:group_id/:id` → get_by_id). The
+    * group_records.rs:38-44 `GET /:group_id/:id` → get_by_id). The raw
+    * path segment is coerced by the group column's actual type, so
+    * string-keyed group dimensions resolve and numeric ones keep a
+    * pushable long-literal predicate (a `cast(col as string)`
+    * comparison would defeat parquet pushdown AND throw under ANSI on
+    * non-numeric strings). A non-numeric segment against a numeric
+    * column raises NumberFormatException (→ the HTTP 400 plane). The
     * equality filter lands BEFORE the dedup window, so the scan prunes
-    * to the one group's events and the window sorts only those — at
-    * 100 TB that's a pushed-down point lookup, not a full-table
-    * row_number. */
-  def getGroupById(events: DataFrame, groupCol: String, id: Long,
-                   versionCol: String = "event_id"): DataFrame =
-    latestPerGroup(events.filter(col(groupCol) === lit(id)), groupCol, versionCol)
-
-  /** Route-facing variant: coerce the raw path segment by the group
-    * column's actual type, so string-keyed group dimensions resolve
-    * and numeric ones keep a pushable long-literal predicate (a
-    * `cast(col as string)` comparison would defeat parquet pushdown
-    * AND throw under ANSI on non-numeric strings). A non-numeric
-    * segment against a numeric column raises NumberFormatException
-    * (→ the HTTP 400 plane). */
+    * to the one group's events and the window sorts only those — a
+    * pushed-down point lookup, not a full-table row_number. */
   def getGroupByKey(events: DataFrame, groupCol: String, rawId: String,
                     versionCol: String = "event_id"): DataFrame = {
     import org.apache.spark.sql.types._

@@ -78,17 +78,4 @@ object Quality {
   def quarantine(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(
       new org.apache.hadoop.fs.Path(dir, ".quarantine").toString)
-
-  /** Continuous gated ingest: every micro-batch flows through
-    * [[appendChecked]] under a batchId-deterministic name, so a
-    * foreachBatch restart replaying the last batch is exactly-once in
-    * both channels — the same discipline as the other streaming
-    * stores. `sink(batchId, cleanApplied, quarantineApplied)` fires
-    * after each batch. */
-  def streamGate(rows: DataFrame, dir: String, checks: Seq[Check])(
-      sink: (Long, Boolean, Boolean) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val (g, q) = appendChecked(batch, dir, f"batch-$batchId%09d", checks)
-      sink(batchId, g, q)
-    }
 }

@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   *    near-linear; candidates are then verified with exact Jaccard over
   *    64-bit shingle hashes (cheap long-array intersection), never
   *    materializing the quadratic pair space.
-  *  - SimHash: 64-bit sign-aggregated token hashes, computed in one
-  *    typed pass per document; near-dups share a 16-bit chunk
+  *  - SimHash: 60-bit sign-aggregated md5 token hashes, computed in
+  *    one typed pass per document; near-dups share a 15-bit chunk
   *    (banded hamming lookup).
-  *  - n-gram Jaccard: blocked pairwise comparison — blocking key
-  *    (first token, length bucket) keeps the pair space linear-ish.
+  *  - n-gram Jaccard: MinHash-band blocking keeps the pair space
+  *    linear-ish.
   */
 object Dedup {
 
@@ -69,30 +69,13 @@ object Dedup {
       .withColumn(out, shingleHashesFromTokenHashes(col("__tokhash"), n))
       .drop("__tokhash")
 
-  /** MinHash signature: numHashes permutations simulated as
-    * xxhash64(seed, shingle); signature(i) = min over shingles.
-    * Pure Catalyst expressions — codegen'd, no UDF. */
-  def minhashSignature(text: Column, n: Int, numHashes: Int): Column = {
-    val sh = shingles(text, n)
-    array((0 until numHashes).map { seed =>
-      array_min(transform(sh, s => xxhash64(lit(seed), s)))
-    }: _*)
-  }
-
   /** LSH banding: band b's key = hash of signature rows in that band.
     * Docs sharing any band key are candidate pairs. Returns
     * (idCol, band, band_key).
     *
-    * Shape matches [[lshBandsPortable]] — explode to one row per
-    * (doc, shingle hash), then the numHashes "permutations" as SCALAR
-    * `min(xxhash64(seed, h))` aggregates with map-side combine (the
-    * groupBy shuffles only id + numHashes longs). This measured ~40%
-    * faster than the previous 16-array-lambda form, whose band step
-    * also cast the signature longs to STRINGS for concat_ws — band
-    * keys now come from `xxhash64` applied directly to the band's
+    * Band keys come from `xxhash64` applied directly to the band's
     * signature columns. Docs with fewer than `shingleN` tokens emit
-    * nothing (explode of an empty array), matching the portable
-    * variant. */
+    * nothing, matching the portable variant. */
   def lshBands(df: DataFrame, idCol: String, textCol: String,
                shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame =
     lshBandsFromHashes(
@@ -411,30 +394,14 @@ object Dedup {
       .toDF(idCol, "sh")
   }
 
-  /** [[lshBands]] with engine-portable hashing: the shingle hash is
-    * md5-60 (one md5 per shingle, like the oracled simhash), the
-    * `numHashes` "permutations" are affine maps mod 2^31-1 over that
-    * hash (pure integer codegen — no per-seed rehash), and the band
-    * key is an arithmetic fold of the band's rows. A SQL oracle
-    * recomputes identical buckets from the same literals. Emits
-    * (id, band, band_key); docs with no shingles (fewer than
-    * `shingleN` tokens) emit nothing. xxhash-based [[lshBands]] stays
-    * the production path; this variant exists so the banded OPERATOR
-    * is hash-checkable end to end at production-comparable cost. */
-  def lshBandsPortable(df: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int, numHashes: Int, bands: Int): DataFrame =
-    lshBandsPortableFromHashes(
-      portableShingleHashes(df, idCol, textCol, shingleN, "__shh"),
-      idCol, "__shh", numHashes, bands)
-
-  /** [[lshBandsPortable]] over an already-staged (id, md5-60 shingle
-    * hash array) frame — NARROW, like [[lshBandsFromHashes]]: the
-    * numHashes affine permutations are `array_min(transform(...))`
-    * projections over the staged attribute (zero shuffle, identical
-    * min values to the previous explode + scalar-min-agg shape), and
-    * the band keys fold those signature columns arithmetically. Same
-    * attribute-input requirement; docs with no shingles emit
-    * nothing. */
+  /** [[lshBandsFromHashes]] with engine-portable hashing, over an
+    * already-staged (id, md5-60 shingle hash array) frame: the
+    * `numHashes` "permutations" are affine maps mod 2^31-1 over the
+    * hash (`array_min(transform(...))` projections — pure integer
+    * codegen, zero shuffle), and the band key is an arithmetic fold of
+    * the band's rows, so a SQL oracle recomputes identical buckets from
+    * the same literals. Same attribute-input requirement; docs with no
+    * shingles emit nothing. */
   private[graft] def lshBandsPortableFromHashes(sh: DataFrame, idCol: String, shCol: String,
                                          numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
@@ -598,49 +565,12 @@ object Dedup {
     when(union === 0, 0.0).otherwise(inter.cast("double") / union.cast("double"))
   }
 
-  /** SimHash (64-bit), reference Catalyst form: per bit, sum +1/-1
-    * weighted by token-hash bit; sign → fingerprint bit. Prefer
-    * [[simhashed]] in pipelines — one typed pass instead of 64
-    * array-aggregate expressions. */
-  def simhash(text: Column): Column = {
-    val hashes = transform(TextAnalysis.tokens(text), t => xxhash64(t))
-    val bits = (0 until 64).map { i =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(vote > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** (id, simhash) via a single typed pass: token hashes come from
-    * codegen'd xxhash64, the 64 bit-votes fold in plain JVM code.
-    * Narrow transformation — no shuffle. */
-  def simhashed(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id"),
-        transform(TextAnalysis.tokens(col(textCol)), t => xxhash64(t)).as("hs"))
-      .as[(Long, Seq[Long])]
-      .mapPartitions(_.map { case (id, hs) =>
-        val votes = new Array[Int](64)
-        hs.foreach { h =>
-          var i = 0
-          while (i < 64) { if (((h >>> i) & 1L) == 1L) votes(i) += 1 else votes(i) -= 1; i += 1 }
-        }
-        var sim = 0L
-        var i = 0
-        while (i < 64) { if (votes(i) > 0) sim |= (1L << i); i += 1 }
-        (id, sim)
-      })
-      .toDF(idCol, "simhash")
-  }
-
-  /** 60-bit md5-based simhash — ENGINE-PORTABLE hashing: md5 is
-    * standardized, so a SQL oracle (DuckDB) computes the identical
-    * fingerprint from the same text; token hash = first 15 hex digits
-    * of md5 as a 60-bit integer. [[simhashed]] (xxhash, one typed
-    * pass) remains the fast production path; this variant exists so
-    * the simhash OPERATOR is hash-checkable end to end. */
+  /** (id, simhash): 60-bit SimHash in one typed pass — per bit, the
+    * sign of the +1/-1 votes of the token hashes' bits. ENGINE-PORTABLE
+    * hashing: md5 is standardized, so a SQL oracle (DuckDB) computes
+    * the identical fingerprint from the same text; token hash = first
+    * 15 hex digits of md5 as a 60-bit integer. Narrow transformation —
+    * no shuffle. */
   def simhashed60(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -695,49 +625,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Banded-hamming chunk layout sized for the corpus. Pigeonhole: a
-    * pair within hamming distance d differs in ≤ d of the `chunks`
-    * bands, so with `chunks = d+1` full-cover bands it shares at
-    * least one — candidate recall 1 for the budget. Bucket population
-    * is ≈ corpusSize / 2^width, so WIDTH must grow with the corpus or
-    * the in-bucket quadratic explodes (a fixed 16-bit chunk caps out
-    * near 10⁹ docs). When the width needed to keep buckets ≤
-    * `targetBucket` no longer fits `budget+1` bands into 64 bits, the
-    * layout trades budget for width (fewer, wider bands) — the
-    * standard recall/cost dial, now explicit. */
-  def simhashLayout(corpusSize: Long, hammingBudget: Int = 3,
-                    targetBucket: Long = 4096L): (Int, Int) = {
-    val needed = math.max(8,
-      64 - java.lang.Long.numberOfLeadingZeros(
-        math.max(1L, corpusSize / math.max(1L, targetBucket)) - 1))
-    val idealChunks = hammingBudget + 1
-    if (64 / idealChunks >= needed) (idealChunks, 64 / idealChunks)
-    else {
-      val chunks = math.max(1, 64 / needed)
-      (chunks, 64 / chunks)
-    }
-  }
-
-  /** SimHash near-dup candidates: docs whose fingerprints share any
-    * chunk of the layout (pairs within hamming ≤ chunks-1 are always
-    * found; see [[simhashLayout]] for corpus-size-driven sizing). */
-  def simhashDupPairs(df: DataFrame, idCol: String, textCol: String,
-                      chunks: Int = 4, chunkWidth: Int = 16): DataFrame = {
-    require(chunks >= 1 && chunks * chunkWidth <= 64, s"bad layout $chunks x $chunkWidth")
-    val mask = if (chunkWidth == 64) -1L else (1L << chunkWidth) - 1L
-    val withSim = simhashed(df, idCol, textCol)
-    val chunked = withSim.select(col(idCol), col("simhash"),
-      posexplode(array((0 until chunks).map(c =>
-        shiftright(col("simhash"), c * chunkWidth).bitwiseAND(mask)): _*)).as(Seq("chunk", "chunk_val")))
-    val l = chunked.select(col(idCol).as("id_a"), col("simhash").as("sim_a"), col("chunk"), col("chunk_val"))
-    val r = chunked.select(col(idCol).as("id_b"), col("simhash").as("sim_b"), col("chunk"), col("chunk_val"))
-    l.join(r, Seq("chunk", "chunk_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
-      .distinct()
-  }
-
   /** n-gram Jaccard dedup with MinHash-band blocking. An earlier
     * version blocked on (first token, length bucket) — at web scale a
     * dominant first token ("the …") recreates the quadratic blow-up
@@ -745,18 +632,9 @@ object Dedup {
     * key the repo already owns: bucket population is driven by actual
     * content similarity, not by any single token's frequency, and the
     * verification stage computes the same exact Jaccard over 64-bit
-    * shingle hashes. 8 bands × 2 rows → candidate recall
+    * shingle hashes (md5-portable, so a DuckDB oracle recomputes the
+    * pairs bit for bit). 8 bands × 2 rows → candidate recall
     * 1-(1-j²)⁸ (≈0.90 at j=0.5, ≈0.99 at j=0.7). */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, threshold: Double = 0.5,
-                        numHashes: Int = 16, bands: Int = 8,
-                        maxBucket: Int = 1000): DataFrame =
-    minhashDupPairs(df, idCol, textCol, shingleN = n,
-      numHashes = numHashes, bands = bands, threshold = threshold,
-      maxBucket = maxBucket)
-
-  /** [[ngramJaccardPairs]] over the md5-portable banding — the
-    * hash-checkable twin, same parameterization. */
   def ngramJaccardPairsPortable(df: DataFrame, idCol: String, textCol: String,
                                 n: Int = 3, threshold: Double = 0.5,
                                 numHashes: Int = 16, bands: Int = 8,
@@ -764,11 +642,6 @@ object Dedup {
     minhashDupPairsPortable(df, idCol, textCol, shingleN = n,
       numHashes = numHashes, bands = bands, threshold = threshold,
       maxBucket = maxBucket)
-
-  /** Embedding cosine near-dup pairs (delegates to Similarity). */
-  def embeddingDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double): DataFrame =
-    Similarity.cosineSelfJoinPairs(df, idCol, vecCol, threshold)
 
   /** Benchmark decontamination (standard LLM-pipeline step: flag
     * training documents sharing n-grams with a held-out eval set so
@@ -1061,25 +934,5 @@ object Dedup {
       else graft.engine.Staging.stage(narrow)
     curRdds.foreach(_.unpersist(false)); p.unpersist()
     out
-  }
-
-  /** Keep exactly one document per near-dup cluster (the cluster's
-    * minimum id — deterministic) plus every unpaired document: the
-    * corpus-level dedup filter built from [[dupClusters]]. The drop
-    * set is NOT broadcast-hinted — at web scale duplicates can be a
-    * large fraction of the corpus; the anti-join shuffles on the id
-    * and AQE converts it to broadcast when the set is actually small.
-    *
-    * Leak-free by construction: [[dupClusters]] leaves no CacheManager
-    * entries behind — its distributed path returns a lineage-cut
-    * checkpoint frame whose blocks travel with the returned plan and
-    * are context-cleaned when the caller drops it; the driver fast
-    * path holds no executor state at all. Nothing here to release. */
-  def keepRepresentatives(df: DataFrame, pairs: DataFrame, idCol: String,
-                          smallGraphEdges: Long = 1L << 21): DataFrame = {
-    val drop = dupClusters(pairs, smallGraphEdges = smallGraphEdges)
-      .filter(col("id") =!= col("cluster_id"))
-      .select(col("id").cast("long").as(s"__drop_$idCol"))
-    df.join(drop, df(idCol).cast("long") === col(s"__drop_$idCol"), "left_anti")
   }
 }

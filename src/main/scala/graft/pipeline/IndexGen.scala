@@ -83,9 +83,11 @@ object IndexGen {
     * SINGLE REBUILDER at a time, caller-serialized — the standard
     * maintenance-job contract (the events compactor's too): two
     * concurrent rebuilds would race on the same gen number (each
-    * clears the other's in-progress directory; whichever marker lands
-    * commits whatever bytes are there). Readers are never at risk —
-    * the race is between the writers.
+    * clears the other's in-progress directory). The marker create
+    * refuses to overwrite, so the rebuild that commits second throws
+    * instead of silently re-committing the winner's generation; on a
+    * filesystem whose create-if-absent is not atomic (the local one
+    * checks, then creates) a tight race can still pass both.
     *
     * The first commit over a FLAT artifact leaves the flat files in
     * place (still resolvable by any reader that raced the commit);
@@ -101,7 +103,12 @@ object IndexGen {
     if (fs.exists(gp)) fs.delete(gp, true): Unit
     build(genDir)
     val marker = new Path(path, s"$MarkerPrefix$next$MarkerSuffix")
-    fs.create(marker, true).close()
+    try fs.create(marker, false).close()
+    catch {
+      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        throw new IllegalStateException(
+          s"generation $next of $path was committed by a concurrent rebuild", e)
+    }
     next
   }
 

@@ -1,22 +1,20 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads travel as
-  * opaque `binary` columns with typed metadata structs; decode /
-  * feature-extract / resize / frame-sample run as partition-batched
-  * typed transformations (`mapPartitions` over case classes — the
-  * Scala analog of Python's mapInPandas batching).
+  * opaque `binary` columns with typed metadata structs; decode and
+  * frame-sample run as partition-batched typed transformations
+  * (`mapPartitions` over case classes — the Scala analog of Python's
+  * mapInPandas batching).
   *
   * Image decode is REAL: [[ImageIoCodec]] decodes PNG/GIF/BMP/JPEG
   * pixels through `javax.imageio` (the JDK's `java.desktop` module —
-  * present in this runtime) and derives mean-pixel + grid features
-  * from actual pixel data. Video frame sampling remains stubbed
-  * ([[StubCodec]] — no ffmpeg in this environment); unreadable or
-  * non-image payloads also fall back to the stub so the pipeline
-  * never throws on junk bytes.
+  * present in this runtime) and derives exact pixel statistics from
+  * actual pixel data. Video payloads that are not RIFF/AVI fall back
+  * to the stub frame sampler ([[StubCodec]]) so the pipeline never
+  * throws on junk bytes.
   */
 object Multimodal {
 
@@ -28,111 +26,11 @@ object Multimodal {
 
   final case class MediaRow(id: Long, payload: Array[Byte], meta: MediaMeta)
 
-  final case class ImageFeatures(
-      id: Long, width: Int, height: Int, channels: Int,
-      meanPixel: Double, features: Array[Float])
-
   final case class FrameSample(id: Long, frameIdx: Int, frameBytes: Array[Byte])
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("mediaType", StringType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("durationMs", LongType, nullable = false))), nullable = false)))
-
-  /** REAL container-header codec — no media libraries needed: format
-    * sniffing and dimension extraction are pure byte arithmetic over
-    * the container headers (PNG IHDR, GIF logical screen descriptor,
-    * BMP info header, JPEG SOF marker scan). Only the pixel-level
-    * decode remains stubbed ([[StubCodec]]). */
-  object HeaderCodec {
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-    private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-    private def be32(b: Array[Byte], i: Int): Int =
-      (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-    private def le32(b: Array[Byte], i: Int): Int =
-      u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
-    /** Magic-byte format sniff. */
-    def sniff(b: Array[Byte]): Option[String] =
-      if (b == null) None
-      else if (b.length >= 8 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
-        Some("png")
-      else if (b.length >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8')
-        Some("gif")
-      else if (b.length >= 2 && b(0) == 'B' && b(1) == 'M') Some("bmp")
-      else if (b.length >= 3 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8 && u8(b, 2) == 0xff)
-        Some("jpeg")
-      else if (b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-        b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')
-        Some("wav")
-      else None
-
-    /** (width, height) from the container header, None if the payload
-      * is not a recognized/complete image. */
-    def dimensions(b: Array[Byte]): Option[(Int, Int)] = sniff(b).flatMap {
-      case "png" if b.length >= 24 && new String(b, 12, 4, "US-ASCII") == "IHDR" =>
-        Some((be32(b, 16), be32(b, 20)))
-      case "gif" if b.length >= 10 =>
-        Some((le16(b, 6), le16(b, 8)))
-      case "bmp" if b.length >= 26 =>
-        val hdr = le32(b, 14)
-        if (hdr >= 40 && b.length >= 26) Some((le32(b, 18), math.abs(le32(b, 22))))
-        else if (hdr == 12 && b.length >= 24) Some((le16(b, 18), le16(b, 20)))
-        else None
-      case "jpeg" =>
-        // scan markers for a start-of-frame (SOFn except DHT/JPG/DAC);
-        // consecutive 0xFF bytes are legal fill and must be skipped
-        // one at a time, and the SOF read needs bytes through i+8
-        var i = 2
-        var res: Option[(Int, Int)] = None
-        var done = false
-        while (!done && res.isEmpty && i + 1 < b.length && u8(b, i) == 0xff) {
-          val m = u8(b, i + 1)
-          if (m == 0xff) i += 1
-          else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
-            if (i + 9 <= b.length) res = Some((be16(b, i + 7), be16(b, i + 5)))
-            else done = true
-          }
-          else if (m == 0xd8 || (m >= 0xd0 && m <= 0xd9)) i += 2
-          else if (i + 3 < b.length) i += 2 + be16(b, i + 2)
-          else done = true
-        }
-        res
-      case _ => None
-    }
-
-    /** Replace each row's meta format/width/height with header-derived
-      * values where the payload parses; unparseable payloads keep
-      * their caller-supplied meta. Narrow typed pass — no shuffle. */
-    def probeMeta(media: Dataset[MediaRow]): Dataset[MediaRow] = {
-      import media.sparkSession.implicits._
-      media.mapPartitions(_.map { r =>
-        (sniff(r.payload), dimensions(r.payload)) match {
-          case (Some(f), Some((w, h))) =>
-            r.copy(meta = r.meta.copy(format = f, width = w, height = h))
-          case (Some(f), None) => r.copy(meta = r.meta.copy(format = f))
-          case _ => r
-        }
-      })
-    }
-  }
-
-  /** Real pixel decode via the JDK's `javax.imageio` (PNG/GIF/BMP/JPEG —
-    * the same formats [[HeaderCodec]] sniffs). Works headless: decode is
-    * pure byte → raster work, no display needed.
-    *
-    * Feature extraction downsamples the image to a `g × g` grid
-    * (`g = ceil(sqrt(featureDim))`): each cell's feature is the mean of
-    * its pixels' RGB channel values scaled to [0,1]. `meanPixel` is the
-    * whole-image mean of the same quantity. Both are single divisions
-    * of exact integer channel sums, so results are bit-deterministic
-    * regardless of pixel iteration order. */
+  /** Real pixel decode via the JDK's `javax.imageio` (PNG/GIF/BMP/JPEG).
+    * Works headless: decode is pure byte → raster work, no display
+    * needed. */
   object ImageIoCodec {
     System.setProperty("java.awt.headless", "true")
 
@@ -160,41 +58,11 @@ object Multimodal {
       }
       ImageStats(w, h, img.getRaster.getNumBands, sum)
     }
-
-    def decodeImage(payload: Array[Byte], featureDim: Int): Option[ImageFeatures] =
-      readImage(payload).map { img =>
-        val w = img.getWidth; val h = img.getHeight
-        val g = math.ceil(math.sqrt(featureDim.toDouble)).toInt max 1
-        val cellSum = new Array[Long](g * g)
-        val cellN = new Array[Long](g * g)
-        var total = 0L
-        var y = 0
-        while (y < h) {
-          val cy = y * g / h
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            val s = ((rgb >>> 16) & 0xff) + ((rgb >>> 8) & 0xff) + (rgb & 0xff)
-            val c = cy * g + (x * g / w)
-            cellSum(c) += s; cellN(c) += 1; total += s
-            x += 1
-          }
-          y += 1
-        }
-        val feats = Array.tabulate(featureDim) { i =>
-          if (i < g * g && cellN(i) > 0)
-            (cellSum(i) / (cellN(i) * 3.0 * 255.0)).toFloat
-          else 0.0f
-        }
-        ImageFeatures(0L, w, h, img.getRaster.getNumBands,
-          total / (w.toLong * h * 3.0 * 255.0), feats)
-      }
   }
 
   /** Deterministic fake codec: every "decoded" value is a pure
-    * function of the payload bytes. Still used for video frame
-    * sampling (no ffmpeg in this environment) and as the fallback
-    * for payloads `javax.imageio` can't parse. */
+    * function of the payload bytes. The frame-sampling fallback for
+    * video payloads that do not parse as RIFF/AVI. */
   object StubCodec {
     private def mix(z0: Long): Long = {
       var z = z0 + 0x9e3779b97f4a7c15L
@@ -202,32 +70,10 @@ object Multimodal {
       z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
       z ^ (z >>> 31)
     }
-    def decodeImage(payload: Array[Byte], meta: MediaMeta, featureDim: Int): ImageFeatures = {
-      val seed = java.util.Arrays.hashCode(payload).toLong
-      val feats = Array.tabulate(featureDim)(i => (mix(seed + i) % 1000) / 1000.0f)
-      ImageFeatures(0L, meta.width, meta.height, 3,
-        feats.map(_.toDouble).sum / featureDim, feats)
-    }
     def sampleFrames(payload: Array[Byte], meta: MediaMeta, everyMs: Long): Seq[Array[Byte]] = {
       val n = math.max(1, (meta.durationMs / math.max(1, everyMs)).toInt)
       val seed = java.util.Arrays.hashCode(payload).toLong
       (0 until n).map(i => Array.tabulate(16)(j => (mix(seed + i * 16 + j) & 0xFF).toByte))
-    }
-  }
-
-  /** Decode+featurize images in partition-sized batches. Narrow
-    * transformation: no shuffle, scales with input splits. Payloads
-    * that parse as PNG/GIF/BMP/JPEG get REAL pixel features via
-    * [[ImageIoCodec]]; anything else degrades to the deterministic
-    * stub rather than failing the partition. */
-  def extractImageFeatures(media: Dataset[MediaRow], featureDim: Int = 32): Dataset[ImageFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.filter(r => r.payload != null && r.meta.mediaType == "image").map { r =>
-        ImageIoCodec.decodeImage(r.payload, featureDim)
-          .getOrElse(StubCodec.decodeImage(r.payload, r.meta, featureDim))
-          .copy(id = r.id)
-      }
     }
   }
 
@@ -373,17 +219,6 @@ object Multimodal {
         (f.id, f.frameIdx, st.width, st.height, st.channelSum)
       }
     }).toDF("id", "frame", "width", "height", "channel_sum")
-  }
-
-  /** Resize metadata transform (pure column op — the pixel work would
-    * live in the codec): clamps dimensions to maxSide preserving
-    * aspect, recorded in the meta struct. */
-  def resizeMeta(df: DataFrame, maxSide: Int): DataFrame = {
-    val w = col("meta.width"); val h = col("meta.height")
-    val scale = when(greatest(w, h) > maxSide,
-      lit(maxSide).cast("double") / greatest(w, h)).otherwise(lit(1.0))
-    df.withColumn("resized_width", floor(w * scale).cast("int"))
-      .withColumn("resized_height", floor(h * scale).cast("int"))
   }
 
   /** Deterministic synthetic images for end-to-end codec validation:
@@ -543,20 +378,5 @@ object Multimodal {
         }
       }
     }.toDF("id", "window_idx", "n_samples", "abs_sum", "sq_sum", "zero_crossings")
-  }
-
-  /** Build a MediaRow dataset from any table with a binary-able column
-    * — test harness entry. */
-  def fromBinaryColumn(spark: SparkSession, df: DataFrame, idCol: String,
-                       binCol: String, mediaType: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    df.select(
-      col(idCol).cast("long").as("id"),
-      col(binCol).cast("binary").as("payload"),
-      struct(
-        lit(mediaType).as("mediaType"), lit("raw").as("format"),
-        lit(64).as("width"), lit(48).as("height"),
-        lit(5000L).as("durationMs")).as("meta"))
-      .as[MediaRow]
   }
 }

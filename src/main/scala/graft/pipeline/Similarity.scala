@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   *    of k seed centroids (deterministic: corpus rows with lowest ids
   *    act as seeds), probe only matching cells.
   *  - PERSISTED indexes: one generic path — [[build]], [[append]]
-  *    (exactly once per batch id), [[streamingAppend]], [[retrain]]
-  *    (atomic, as a new [[IndexGen]] generation) and [[search]]
-  *    (probe → probed-cell scan → score → optional float re-rank →
-  *    top-k) — over an [[IndexLayout]] that supplies only what
+  *    (exactly once per batch id), [[retrain]] (atomic, as a new
+  *    [[IndexGen]] generation) and [[search]] (probe → probed-cell
+  *    scan → score → optional float re-rank → top-k) — over an
+  *    [[IndexLayout]] that supplies only what
   *    differs between storage layouts: flat floats, int8-quantized,
   *    IVF×PQ (raw or residual codes), two-level coarse→fine, and
   *    codes-only PQ. The layout is detected from the artifact itself.
@@ -40,18 +40,11 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d === 0, 0.0).otherwise(dot(a, b) / d)
-  }
-
-  /** [[cosine]] with PRE-STAGED norms: in any pair join, `cosine`
-    * recomputes both vectors' norms per PAIR — three dot products
-    * where one suffices. Staging `norm(v)` as a real column per SIDE
-    * before the join computes each vector's norm once; the result is
-    * bit-identical (`na * nb` multiplies exactly the doubles
-    * `norm(a)`/`norm(b)` would produce, and the zero guard is the
-    * same), so oracle hashes are unchanged. */
+  /** Cosine from a dot product and PRE-STAGED norms: in any pair
+    * join, computing `norm(a)`/`norm(b)` per PAIR costs three dot
+    * products where one suffices. Staging `norm(v)` as a real column
+    * per SIDE before the join computes each vector's norm once; a zero
+    * norm product gives 0. */
   def cosinePreNormed(dotAb: Column, na: Column, nb: Column): Column = {
     val d = na * nb
     when(d === 0, 0.0).otherwise(dotAb / d)
@@ -662,18 +655,6 @@ object Similarity {
     GenCache.invalidate(path, "footerMax:")
   }
 
-  /** Started-able streaming index maintenance: every micro-batch goes
-    * through [[append]] under its batchId, so a foreachBatch restart is
-    * exactly-once; fold accumulated batch files per cell with
-    * [[compactIndexCells]] (safe concurrently with searches — the
-    * search tail reads through the cells' manifests). The caller picks
-    * trigger/checkpoint and calls `.start()`. */
-  def streamingAppend(vectors: DataFrame, cId: String, cVec: String,
-                      path: String, payload: Seq[String] = Nil) =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      append(batch, cId, cVec, path, batchId, payload)
-    }
-
   /** The index cells store's REQUIRED compaction entry point:
     * replacing on the vector id, so rows duplicated by the
     * crash-between-rename-and-marker replay window (see [[append]])
@@ -808,13 +789,6 @@ object Similarity {
         (affected.length, erased)
     }
   }
-
-  /** The persisted codebook, sorted by cell id (tiny: nCells rows). */
-  def loadCodebook(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Array[(Long, Seq[Double])] =
-    spark.read.parquet(s"${IndexGen.resolveRoot(spark, path)}/codebook")
-      .select(col("cell_id").cast("long"), col("centroid").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
 
   // ---- atomic RETRAIN (versioned generations) ----------------------
 
@@ -1353,8 +1327,8 @@ object Similarity {
     * md5-20-bit hash space (`(h('cb-<cell>-<dim>') % 2001 - 1000) /
     * 1000.0` ∈ [-1, 1]), so a SQL oracle regenerates it bit for bit
     * and NOTHING is ever collected to the driver. This is the
-    * codebook shape past [[loadCodebook]]'s driver ceiling (~64k
-    * cells of literal arrays): cells × dims live as rows/arrays in
+    * codebook shape past the ceiling of codebooks inlined as literal
+    * arrays (~64k cells): cells × dims live as rows/arrays in
     * executors only. */
   def syntheticCodebook(spark: org.apache.spark.sql.SparkSession,
                         nCells: Int, dims: Int,

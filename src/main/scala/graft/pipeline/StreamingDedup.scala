@@ -123,25 +123,12 @@ object StreamingDedup {
         // restarts — re-appends one batch's rows; that duplication is
         // provably output-neutral here (candidate pairs are
         // dropDuplicates'd per (new, dup_of) and jaccard is identical
-        // per duplicate row) and is physically collapsed by
-        // [[compactSignatures]], which is why replacing compaction is
-        // the REQUIRED maintenance path for this store.
+        // per duplicate row) and is physically collapsed by a replacing
+        // fold (Compact.run with `replaceOn` = the doc id), which is why
+        // replacing compaction is the REQUIRED maintenance path for
+        // this store.
         graft.sources.Store.atomicAppendOnce(
           sig, storeDir, f"batch-$batchId%09d"): Unit
       } finally { sig.unpersist(); () }
     }
-
-  /** The signature store's REQUIRED compaction entry point: replacing
-    * on the doc id, so any signature rows duplicated by the
-    * crash-between-append-and-marker replay window (see the foreachBatch
-    * body) collapse back to one row per document at the next fold.
-    * Callers maintaining the store by hand must pass
-    * `replaceOn = Seq(idCol)` to [[graft.sources.Compact.run]] — this
-    * wrapper exists so the requirement has a name. */
-  def compactSignatures(spark: SparkSession, storeDir: String,
-                        idCol: String = "doc_id",
-                        opts: graft.sources.Compact.Options =
-                          graft.sources.Compact.Options()): graft.sources.Compact.Report =
-    graft.sources.Compact.run(spark, storeDir,
-      opts.copy(replaceOn = Seq(idCol), versionCol = None))
 }

@@ -135,14 +135,6 @@ object TextAnalysis {
     (root, readAnalyzer(spark, root))
   }
 
-  def tokenCount(text: Column): Column = size(tokens(text))
-
-  /** A BPE-ish subword count estimate: words plus punctuation marks
-    * counted separately (regexp-based, no UDF). */
-  def subwordCountEstimate(text: Column): Column =
-    size(split(text, "[\\s\\p{Punct}]+")) +
-      size(regexp_extract_all(text, lit("[\\p{Punct}]"), lit(0)))
-
   /** PII redaction — the standard scrub pass a training corpus runs
     * before anything else: emails, IPv4 addresses, and phone-shaped
     * number runs collapse to placeholder tokens. Ordered (emails
@@ -477,18 +469,11 @@ object TextAnalysis {
 
   /** Rolling (polynomial) content hash over tokens — order-sensitive
     * cousin of [[fingerprint]]; pure Catalyst `aggregate`, no UDF.
-    * State is kept below 2^31 so the multiply never overflows under
-    * ANSI mode (Spark 4 default). */
-  def rollingHash(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => (acc * lit(1000003L) + crc32(t).cast("long"))
-        .bitwiseAND(lit(0x7FFFFFFFL)))
-
-  /** Portable variant of [[rollingHash]]: token hash = first 8 md5 hex
-    * digits (DuckDB has no crc32), same polynomial fold — the oracle
-    * replays it bit for bit with list_reduce. Per-token md5 only; no
-    * outer expression subtree enters the lambda, so nothing
-    * re-evaluates per element. */
+    * Token hash = first 8 md5 hex digits, so the oracle replays it bit
+    * for bit with list_reduce. State is kept below 2^31 so the
+    * multiply never overflows under ANSI mode (Spark 4 default).
+    * Per-token md5 only; no outer expression subtree enters the
+    * lambda, so nothing re-evaluates per element. */
   def rollingHashPortable(text: Column): Column =
     aggregate(tokens(text), lit(0L),
       (acc, t) => (acc * lit(1000003L) +
@@ -810,22 +795,6 @@ object TextAnalysis {
     graft.sources.Compact.purge(spark, s"$path/postings", TermIndexOptions): Unit
     graft.sources.Compact.purge(spark, s"$path/doclens"): Unit
   }
-
-  /** Started-able streaming index maintenance: every micro-batch of
-    * documents appends to the text index under a batchId-deterministic
-    * name, so a foreachBatch restart replaying the last batch is
-    * exactly-once in BOTH stores — the text twin of
-    * Similarity.streamingAppend. The caller picks
-    * trigger/checkpoint and calls `.start()`; fold accumulated batches
-    * with Compact off the hot path. */
-  def streamingTextIndexAppend(docs: DataFrame, idCol: String,
-                               textCol: String, path: String) =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // "stream-" prefix: a distinct name space from the build batch
-      // and from any manually named append
-      appendToTextIndex(batch, idCol, textCol, path,
-        f"stream-$batchId%09d"): Unit
-    }
 
   /** Conjunctive (AND) retrieval through a [[buildTextIndex]]
     * artifact: documents containing EVERY query term, with their

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,12 +39,10 @@ object Store {
   }
 
   /** Append a batch into the SAME canonical layout [[writeEvents]]
-    * creates — the batch-ingest twin of the streaming sink
-    * ([[graft.streaming.Streaming.writeEventsStream]]): dynamic
-    * partition APPEND touches only the days present in the batch (a
-    * daily ingest adds one directory; it never rewrites history), and
-    * the in-batch sort keeps per-user row-group locality inside the
-    * new files. Small-file buildup from frequent batches is
+    * creates: dynamic partition APPEND touches only the days present
+    * in the batch (a daily ingest adds one directory; it never
+    * rewrites history), and the in-batch sort keeps per-user row-group
+    * locality inside the new files. Small-file buildup from frequent batches is
     * [[graft.sources.Compact.runPartitioned]]'s job — each hot leaf
     * folds independently. */
   def appendEvents(df: DataFrame, path: String,
@@ -116,6 +114,28 @@ object Store {
       true
     }
   }
+
+  /** Streaming incremental materialized aggregate view — the
+    * continuous-ingest counterpart of [[Compact.Options.sumOn]]: each
+    * micro-batch appends ONE partial additive aggregate
+    * (`groupBy(keys).agg(aggs)` over just the batch) via
+    * [[atomicAppendOnce]], so a foreachBatch restart replaying the last
+    * batch is exactly-once in the store even after compaction consumed
+    * the batch file. The view read folds partials to O(groups) rows
+    * without rescanning any raw event; `sink` receives it after each
+    * batch. Periodic [[Compact.run]] with the same `opts` bounds the
+    * partial count physically — reads are correct at any point in
+    * between, because merge and reader apply the identical fold.
+    * `opts.sumOn` must name the key columns as aliased in `keys`. */
+  def streamingAggView(rows: DataFrame, storeDir: String,
+                       keys: Seq[Column], aggs: Seq[Column],
+                       opts: Compact.Options)(
+                       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
+    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val partial = batch.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+      atomicAppendOnce(partial, storeDir, f"batch-$batchId%09d"): Unit
+      sink(Compact.read(batch.sparkSession, storeDir, opts), batchId)
+    }
 
   /** Replacing-table compaction: keep the latest version per id —
     * the LSM replace-on-merge of the reference's group tables

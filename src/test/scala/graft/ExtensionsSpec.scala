@@ -40,22 +40,34 @@ class ExtensionsSpec extends SparkTestBase {
     val enc = Dictionary.encode(ev, dict, "event_type", "ek")
     val reg = Registry(Seq(PropertyMeta("Event", "ek", "bigint", isDictionary = true)),
       strict = false)
-    val dicts = Map("ek" -> dict)
+    // one event-block filter through encodeStore: (events, rewritten filter)
+    def rewrite(f: PropFilter) = {
+      val req = EventSegmentationRequest(
+        time = QueryTime.From(new java.sql.Timestamp(0L)),
+        interval = TimeIntervalUnit.Day,
+        events = Seq(EventBlock(None, filters = Seq(f),
+          queries = Seq(NamedQuery(Query.CountEvents, "cnt")))))
+      val (ev2, req2) = Dictionary.encodeStore(enc, req, reg, Map("ek" -> dict))
+      (ev2, req2.events.head.filters.head)
+    }
     // Eq "view" -> key comparison; counts only the 2 view rows
-    val eq = Dictionary.encodeFilters(Seq(PropFilter("ek", PropOp.Eq, Seq("view"))), reg, dicts)
-    assert(eq == Seq(PropFilter("ek", PropOp.Eq, Seq(2L))))
-    assert(enc.filter(Exprs.propPredicate(eq.head)).count() == 2)
+    val (_, eq) = rewrite(PropFilter("ek", PropOp.Eq, Seq("view")))
+    assert(eq == PropFilter("ek", PropOp.Eq, Seq(2L)))
+    assert(enc.filter(Exprs.propPredicate(eq)).count() == 2)
     // unseen value: Eq matches nothing, Neq keeps every row (key -1)
-    val miss = Dictionary.encodeFilters(Seq(PropFilter("ek", PropOp.Eq, Seq("nope"))), reg, dicts)
-    assert(miss == Seq(PropFilter("ek", PropOp.Eq, Seq(-1L))))
-    assert(enc.filter(Exprs.propPredicate(miss.head)).count() == 0)
-    val neqMiss = Dictionary.encodeFilters(Seq(PropFilter("ek", PropOp.Neq, Seq("nope"))), reg, dicts)
-    assert(enc.filter(Exprs.propPredicate(neqMiss.head)).count() == 3)
-    // non-equality ops and non-dict columns pass through unchanged
-    val like = Seq(PropFilter("ek", PropOp.Like, Seq("v%")))
-    assert(Dictionary.encodeFilters(like, reg, dicts) == like)
-    val other = Seq(PropFilter("value", PropOp.Gt, Seq(0.5)))
-    assert(Dictionary.encodeFilters(other, reg, dicts) == other)
+    val (_, miss) = rewrite(PropFilter("ek", PropOp.Eq, Seq("nope")))
+    assert(miss == PropFilter("ek", PropOp.Eq, Seq(-1L)))
+    assert(enc.filter(Exprs.propPredicate(miss)).count() == 0)
+    val (_, neqMiss) = rewrite(PropFilter("ek", PropOp.Neq, Seq("nope")))
+    assert(enc.filter(Exprs.propPredicate(neqMiss)).count() == 3)
+    // non-dict columns (order ops included) and null checks on the key
+    // column pass through unchanged, with no decoded companion column
+    for (f <- Seq(PropFilter("value", PropOp.Gt, Seq(0.5)),
+                  PropFilter("ek", PropOp.Exists, Nil))) {
+      val (ev2, out) = rewrite(f)
+      assert(out == f)
+      assert(ev2.columns.toSeq == enc.columns.toSeq)
+    }
   }
 
   test("encodeStore decodes pattern-op columns and encodes segment conditions") {
@@ -112,32 +124,6 @@ class ExtensionsSpec extends SparkTestBase {
     assert(asMap(Dictionary.getOrCreate(b1, "v", path, "0")) == m2)
     // a fresh reader sees the same durable mapping
     assert(asMap(Dictionary.loadStore(spark, path)) == m2)
-  }
-
-  test("encodeStorePersistent creates dicts from the store and encodes the request") {
-    val ev = eventsDf(Seq(
-      (1L, 0L, "view", "ios", 1.0), (2L, 1L, "buy", "ios", 1.0),
-      (3L, 2L, "view", "osx", 1.0)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dictstore2").toString
-    val reg = Registry(Seq(PropertyMeta("Event", "event_type", "string",
-      isDictionary = true)), strict = false)
-    val req = EventSegmentationRequest(
-      time = QueryTime.From(new java.sql.Timestamp(0L)),
-      interval = TimeIntervalUnit.Day,
-      events = Seq(EventBlock(None,
-        filters = Seq(PropFilter("event_type", PropOp.Eq, Seq("view"))),
-        queries = Seq(NamedQuery(Query.CountEvents, "cnt")))))
-    val (_, req2, dicts) =
-      Dictionary.encodeStorePersistent(ev, req, reg, dir, "0")
-    // the literal was translated through the freshly persisted dict
-    val key = Dictionary.keyOf(dicts("event_type"), "view")
-    assert(key > 0L)
-    assert(req2.events.head.filters == Seq(PropFilter("event_type", PropOp.Eq, Seq(key))))
-    // second call with new data reuses the durable keys
-    val ev2 = eventsDf(Seq((4L, 3L, "signup", "web", 1.0)))
-    val (_, _, dicts2) = Dictionary.encodeStorePersistent(ev2, req, reg, dir, "1")
-    assert(Dictionary.keyOf(dicts2("event_type"), "view") == key)
-    assert(Dictionary.keyOf(dicts2("event_type"), "signup") > key)
   }
 
   test("custom event predicate expands recursively with member filters") {

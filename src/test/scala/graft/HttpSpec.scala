@@ -772,8 +772,8 @@ class HttpSpec extends SparkTestBase {
       // missing id 404s like every by-id GET
       val (rc, rec) = req(srv.port, "GET", "/api/v1/projects/1/group-records/0/2")
       assert(rc == 200)
-      assert(rec == Response.collect(graft.engine.Records.getGroupById(
-        events, "user_id", 2L)).toJson)
+      assert(rec == Response.collect(graft.engine.Records.getGroupByKey(
+        events, "user_id", "2")).toJson)
       assert(rec.contains("click"), "latest event of user 2 is its profile row")
       assert(req(srv.port, "GET", "/api/v1/projects/1/group-records/0/999")._1 == 404)
       // a STRING-keyed group dimension resolves through the raw

@@ -84,6 +84,27 @@ class IndexGenSpec extends SparkTestBase {
     assert(searchRows(path, queriesOf(c)).nonEmpty)
   }
 
+  test("a rebuild that loses the race for its generation number throws; readers keep the winner") {
+    val path = tmpDir("gen-race")
+    val c = corpus(80, 8)
+    IndexGen.commitNewGeneration(spark, path)(dir => flatIndex(c, dir, nCells = 4, iters = 1))
+    val w = corpus(80, 8, "w")
+    val winnerOnly = tmpDir("gen-race-w")
+    flatIndex(w, winnerOnly, nCells = 4, iters = 1)
+    val err = intercept[IllegalStateException] {
+      IndexGen.commitNewGeneration(spark, path) { dir =>
+        flatIndex(c, dir, nCells = 4, iters = 1)
+        // a concurrent rebuild that resolved the same current
+        // generation builds and commits generation 1 first
+        assert(IndexGen.commitNewGeneration(spark, path)(d =>
+          flatIndex(w, d, nCells = 4, iters = 1)) == 1L)
+      }
+    }
+    assert(err.getMessage.contains("generation 1"))
+    assert(IndexGen.currentGen(spark, path).contains(1L))
+    assert(searchRows(path, queriesOf(w)) == searchRows(winnerOnly, queriesOf(w)))
+  }
+
   test("retrain(build(iters=0), 1 step) == build(iters=1); deletes purge physically") {
     val c = corpus(100, 8)
     val q = queriesOf(c)

@@ -25,12 +25,12 @@ class MetricsSpec extends SparkTestBase {
   test("JSON response entry points record under the reference's tags") {
     Metrics.reset()
     val df = eventsDf(Seq((1L, 1000L, "view", "ios", 1.0)))
-    JsonApi.eventSegmentationJson(df, """{
+    JsonApi.columnarJson("event_segmentation")(JsonApi.eventSegmentation(df, """{
       "time": {"type": "between", "from": "1970-01-01T00:00:00Z", "to": "1970-01-02T00:00:00Z"},
       "intervalUnit": "day",
       "events": [{"eventType": "regular", "eventName": "view",
                   "queries": [{"type": "countEvents", "name": "cnt"}]}]
-    }""")
+    }"""))
     val s = Metrics.snapshot
     assert(s("event_segmentation").queries == 1)
     assert(s("event_segmentation").totalSeconds > 0)
@@ -77,17 +77,5 @@ class MetricsSpec extends SparkTestBase {
     // b ran twice; the 30 ms run lies above le="0.025", both below 10 s
     assert(value("""graft_query_execution_time_seconds_bucket{query="b",le="0.025"}""") <= 1)
     assert(value("""graft_query_execution_time_seconds_bucket{query="b",le="10.0"}""") == 2)
-  }
-
-  test("disabled plane records nothing and still runs bodies") {
-    Metrics.reset()
-    Metrics.setEnabled(false)
-    try {
-      var ran = false
-      val out = Metrics.timed("off") { ran = true; 42 }
-      Metrics.recordRows("off", 5)
-      assert(out == 42 && ran)
-      assert(Metrics.snapshot.isEmpty)
-    } finally Metrics.setEnabled(true)
   }
 }

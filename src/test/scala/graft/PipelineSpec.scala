@@ -209,10 +209,9 @@ class PipelineSpec extends SparkTestBase {
     assert(out.keys.groupBy(_._1).values.forall(_.size <= 2))
   }
 
-  test("dupClusters closes pairs transitively; keepRepresentatives keeps one per cluster") {
+  test("dupClusters closes pairs transitively") {
     import spark.implicits._
-    // components: {1,2,3} via chain 1-2, 2-3 (1,3 never paired);
-    // {7,9}; 5 is unpaired and must survive keepRepresentatives
+    // components: {1,2,3} via chain 1-2, 2-3 (1,3 never paired); {7,9}
     val pairs = Seq((1L, 2L), (2L, 3L), (9L, 7L)).toDF("id_a", "id_b")
     val clusters = graft.pipeline.Dedup.dupClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -228,11 +227,6 @@ class PipelineSpec extends SparkTestBase {
       .toDF("id_a", "id_b")
     assertThrows[IllegalStateException](
       graft.pipeline.Dedup.dupClusters(chain, maxIter = 2, smallGraphEdges = 0L))
-    val docs = Seq((1L, "a"), (2L, "b"), (3L, "c"), (5L, "e"), (7L, "g"), (9L, "i"))
-      .toDF("doc_id", "text")
-    val kept = graft.pipeline.Dedup.keepRepresentatives(docs, pairs, "doc_id")
-      .collect().map(_.getLong(0)).sorted
-    assert(kept.toSeq == Seq(1L, 5L, 7L))
   }
 
   test("distributed clustering converges in log rounds on a 4096-node chain") {
@@ -254,8 +248,6 @@ class PipelineSpec extends SparkTestBase {
     import spark.implicits._
     val sc = spark.sparkContext
     val pairs = Seq((1L, 2L), (2L, 3L), (9L, 7L)).toDF("id_a", "id_b")
-    val docs = Seq((1L, "a"), (2L, "b"), (3L, "c"), (5L, "e"), (7L, "g"), (9L, "i"))
-      .toDF("doc_id", "text")
     def cachedIds = sc.getPersistentRDDs.keySet
     val base = cachedIds
 
@@ -287,15 +279,6 @@ class PipelineSpec extends SparkTestBase {
     assertThrows[IllegalStateException](
       graft.pipeline.Dedup.dupClusters(chain, maxIter = 2, smallGraphEdges = 0L))
     assert((cachedIds -- preThrow).isEmpty, "failed run must not leak")
-
-    // keepRepresentatives adds no cached state of its own beyond the
-    // drop-set's lineage-cut checkpoint
-    val preKeep = cachedIds
-    val kept = graft.pipeline.Dedup.keepRepresentatives(
-      docs, pairs, "doc_id", smallGraphEdges = 0L)
-    assert((cachedIds -- preKeep).size <= 1,
-      "at most the drop-set's own checkpoint may remain")
-    assert(kept.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 5L, 7L))
   }
 
   private def docs(rows: Seq[(Long, String)]) = {
@@ -324,7 +307,7 @@ class PipelineSpec extends SparkTestBase {
     assert(sh.toSeq == Seq(0, 0, 3))
     // whole near-dup pipelines survive short/empty docs (ANSI mode)
     assert(Dedup.minhashDupPairs(df, "doc_id", "text", shingleN = 3).collect().length == 0)
-    assert(Dedup.ngramJaccardPairs(df, "doc_id", "text", n = 3).count() >= 0)
+    assert(Dedup.ngramJaccardPairsPortable(df, "doc_id", "text", n = 3).count() >= 0)
   }
 
   test("null-text documents contribute no pairs and do not crash either pipeline") {
@@ -403,29 +386,20 @@ class PipelineSpec extends SparkTestBase {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("simhash layout widens chunks as the corpus grows") {
-    assert(Dedup.simhashLayout(1000L) == ((4, 16)))           // small: budget wins
-    assert(Dedup.simhashLayout(100_000_000L) == ((4, 16)))    // 2^16 buckets still ok
-    val (cBig, wBig) = Dedup.simhashLayout(1_000_000_000_000L) // 10^12 docs
-    assert(wBig > 16 && cBig * wBig <= 64 && cBig >= 1)
-    // budget traded for width, never a zero-chunk layout
-    assert(Dedup.simhashLayout(Long.MaxValue)._1 >= 1)
-  }
-
   test("pigeonhole: pairs within hamming <= chunks-1 are always candidates") {
-    // near-identical docs differ in few fingerprint bits; the 4x16
+    // near-identical docs differ in few fingerprint bits; the 4x15
     // layout must surface every pair with hamming <= 3
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val df = docs(Seq(
       (1L, base), (2L, base), (3L, base + " mu"),
       (4L, "unrelated words entirely separate content here now")))
-    val sims = Dedup.simhashed(df, "doc_id", "text")
+    val sims = Dedup.simhashed60(df, "doc_id", "text")
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
     val expected = (for {
       a <- sims.keys; b <- sims.keys if a < b
       if java.lang.Long.bitCount(sims(a) ^ sims(b)) <= 3
     } yield (a, b)).toSet
-    val found = Dedup.simhashDupPairs(df, "doc_id", "text")
+    val found = Dedup.simhashDupPairs60(df, "doc_id", "text")
       .filter(col("hamming") <= 3)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(expected.subsetOf(found))
@@ -433,7 +407,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("simhash identical docs have hamming 0") {
-    val out = Dedup.simhashDupPairs(docs(Seq(
+    val out = Dedup.simhashDupPairs60(docs(Seq(
       (1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
       (3L, "unrelated content entirely different"))), "doc_id", "text")
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Int]("hamming")).toMap
@@ -441,7 +415,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("ngram jaccard pairs detect overlap within blocks") {
-    val out = Dedup.ngramJaccardPairs(docs(Seq(
+    val out = Dedup.ngramJaccardPairsPortable(docs(Seq(
       (1L, "a b c d e"), (2L, "a b c d f"), (3L, "a q r s t"))),
       "doc_id", "text", n = 2, threshold = 0.3)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
@@ -461,7 +435,7 @@ class PipelineSpec extends SparkTestBase {
     assert(fp.distinct.length == 1)
     // rolling hash is order-sensitive
     val rh = docs(Seq((1L, "a b c"), (2L, "c b a")))
-      .select(TextAnalysis.rollingHash(col("text")).as("h"))
+      .select(TextAnalysis.rollingHashPortable(col("text")).as("h"))
       .collect().map(_.getLong(0))
     assert(rh(0) != rh(1))
   }
@@ -1030,7 +1004,8 @@ class PipelineSpec extends SparkTestBase {
         IndexLayout.Flat,
         Seq(Similarity.trainCodebook(corpus, "vec_id", "v", nCells = 8, iters = 1)))
       // artifact shape: tiny codebook + cell-partitioned corpus dirs
-      assert(Similarity.loadCodebook(spark, dir.getAbsolutePath).length == 8)
+      assert(spark.read.parquet(
+        s"${IndexGen.resolveRoot(spark, dir.getAbsolutePath)}/codebook").count() == 8)
       val cellDirs = new java.io.File(dir, "cells").listFiles()
         .filter(_.getName.startsWith("cell_id=")).map(_.getName).toSet
       assert(cellDirs.nonEmpty)
@@ -1515,6 +1490,41 @@ class PipelineSpec extends SparkTestBase {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
       }
       rm(incDir); rm(fullDir)
+    }
+  }
+
+  test("text-index appends: uncompacted batches keep BM25 equal to a full scan") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("textbatches").toFile
+    val words = Seq("alpha", "beta", "scan", "column", "window", "sort")
+    def doc(i: Int): (Long, String) =
+      (i.toLong, (0 until (3 + i % 5)).map(j =>
+        words((i * 7 + j * 3) % words.length)).mkString(" "))
+    try {
+      val path = dir.getAbsolutePath
+      TextAnalysis.buildTextIndex((0 until 40).map(doc).toDF("doc_id", "text"),
+        "doc_id", "text", path)
+      // two batches, neither folded: the index reads across batch files
+      for ((ids, b) <- Seq((40 until 42, 1), (42 until 45, 2)))
+        assert(TextAnalysis.appendToTextIndex(ids.map(doc).toDF("doc_id", "text"),
+          "doc_id", "text", path, f"batch-$b%09d") == ((true, true)))
+      // the index serves BM25 identical to a full scan over the union
+      // corpus: postings rows and folded N/avgdl are equal by
+      // construction, however the documents arrived
+      val union = (0 until 45).map(doc).toDF("doc_id", "text")
+      val viaIdx = TextAnalysis.bm25IndexedTopK(spark, path,
+          Seq("scan", "column"), 15)
+        .collect().map(_.toSeq).toSet
+      val viaScan = TextAnalysis.bm25TopK(union, "doc_id", "text",
+          Seq("scan", "column"), 15)
+        .collect().map(_.toSeq).toSet
+      assert(viaIdx == viaScan && viaIdx.nonEmpty)
+      assert(TextAnalysis.readTextStats(spark, path).head.getAs[Long]("n") == 45L)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
+      }
+      rm(dir)
     }
   }
 
@@ -2351,7 +2361,7 @@ class PipelineSpec extends SparkTestBase {
       (1L, Array(1.0f, 0.0f, 0.0f)), (2L, Array(1.0f, 0.001f, 0.0f)),
       (3L, Array(0.0f, 0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
-    val pairs = Dedup.embeddingDupPairs(df, "vec_id", "embedding", 0.999)
+    val pairs = Similarity.cosineSelfJoinPairs(df, "vec_id", "embedding", 0.999)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(pairs == Set((1L, 2L)))
   }
@@ -2403,62 +2413,6 @@ class PipelineSpec extends SparkTestBase {
     assert(overflow.length == 1 && overflow(0).getAs[Long]("bucket_size") == 500L)
   }
 
-  test("header codec parses real PNG/GIF/BMP/JPEG container headers") {
-    import graft.pipeline.Multimodal.HeaderCodec
-    def png(w: Int, h: Int): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(33) // big-endian by default
-      bb.put(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-      bb.putInt(13); bb.put("IHDR".getBytes("US-ASCII"))
-      bb.putInt(w); bb.putInt(h)
-      bb.put(8.toByte); bb.put(2.toByte); bb.put(0.toByte); bb.put(0.toByte); bb.put(0.toByte)
-      bb.array()
-    }
-    def gif(w: Int, h: Int): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(13).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put("GIF89a".getBytes("US-ASCII"))
-      bb.putShort(w.toShort); bb.putShort(h.toShort)
-      bb.array()
-    }
-    def bmp(w: Int, h: Int): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(54).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put('B'.toByte); bb.put('M'.toByte)
-      bb.putInt(54); bb.putInt(0); bb.putInt(54)     // file header
-      bb.putInt(40); bb.putInt(w); bb.putInt(-h)      // top-down negative height
-      bb.array()
-    }
-    def jpeg(w: Int, h: Int): Array[Byte] = {
-      // SOI, APP0 (4-byte segment), SOF0 with height/width, padding
-      val bb = java.nio.ByteBuffer.allocate(24)
-      bb.put(Array(0xff, 0xd8, 0xff, 0xe0, 0x00, 0x04, 0x00, 0x00).map(_.toByte))
-      bb.put(Array(0xff, 0xc0, 0x00, 0x11, 0x08).map(_.toByte))
-      bb.putShort(h.toShort); bb.putShort(w.toShort)
-      bb.array()
-    }
-    assert(HeaderCodec.sniff(png(1, 1)).contains("png"))
-    assert(HeaderCodec.dimensions(png(640, 480)).contains((640, 480)))
-    assert(HeaderCodec.dimensions(gif(320, 200)).contains((320, 200)))
-    assert(HeaderCodec.dimensions(bmp(800, 600)).contains((800, 600)))
-    assert(HeaderCodec.dimensions(jpeg(1024, 768)).contains((1024, 768)))
-    // 0xFF fill bytes before a marker are legal padding, and a header
-    // truncated exactly after the SOF width must still parse
-    val padded = Array(0xff, 0xd8, 0xff, 0xff, 0xff, 0xc0, 0x00, 0x11, 0x08,
-      0x01, 0x00, 0x02, 0x00).map(_.toByte)
-    assert(HeaderCodec.dimensions(padded).contains((512, 256)))
-    assert(HeaderCodec.dimensions("not an image".getBytes).isEmpty)
-    assert(HeaderCodec.dimensions(null).isEmpty)
-    // probeMeta overrides caller meta where the payload parses
-    import spark.implicits._
-    val rows = Seq(
-      Multimodal.MediaRow(1L, png(12, 34),
-        Multimodal.MediaMeta("image", "raw", 0, 0, 0L)),
-      Multimodal.MediaRow(2L, "junk".getBytes,
-        Multimodal.MediaMeta("image", "raw", 7, 9, 0L))).toDS()
-    val probed = Multimodal.HeaderCodec.probeMeta(rows)
-      .collect().map(r => r.id -> ((r.meta.format, r.meta.width, r.meta.height))).toMap
-    assert(probed(1L) == (("png", 12, 34)))
-    assert(probed(2L) == (("raw", 7, 9)))
-  }
-
   test("ImageIoCodec decodes real PNG/BMP pixels exactly (lossless round trip)") {
     import graft.pipeline.Multimodal.{ImageIoCodec, SyntheticImages}
     // pixel v(id,x,y) = (id*31 + x*7 + y*13) % 256, grayscale in RGB
@@ -2470,59 +2424,10 @@ class PipelineSpec extends SparkTestBase {
       assert((st.width, st.height, st.channels) == ((8, 8, 3)), fmt)
       assert(st.channelSum == vs(5L).map(3L * _).sum, fmt)
     }
-    // featureDim=4 on 8x8 → 2x2 grid of 4x4-pixel cells; every feature
-    // and meanPixel is an exact integer-sum division over REAL pixels
-    val f = ImageIoCodec.decodeImage(SyntheticImages.encode(5L, 8, 8, "png"), 4).get
-    def cellMean(cx: Int, cy: Int): Float = {
-      val cell = for { y <- cy * 4 until cy * 4 + 4; x <- cx * 4 until cx * 4 + 4 }
-        yield SyntheticImages.pixel(5L, x, y)
-      (cell.map(3L * _).sum / (cell.size * 3.0 * 255.0)).toFloat
-    }
-    assert(f.features.toSeq ==
-      Seq(cellMean(0, 0), cellMean(1, 0), cellMean(0, 1), cellMean(1, 1)))
-    assert(f.meanPixel == vs(5L).map(3L * _).sum / (8L * 8 * 3 * 255.0))
-    assert(f.channels == 3)
     // jpeg is lossy: dimensions must still decode
     val j = ImageIoCodec.readImage(SyntheticImages.encode(9L, 8, 8, "jpeg")).get
     assert(j.getWidth == 8 && j.getHeight == 8)
     assert(ImageIoCodec.readImage("junk".getBytes).isEmpty)
-  }
-
-  test("extractImageFeatures uses real decode for parseable payloads") {
-    import spark.implicits._
-    import graft.pipeline.Multimodal.{ImageIoCodec, SyntheticImages}
-    val rows = Seq(
-      Multimodal.MediaRow(1L, SyntheticImages.encode(1L, 8, 8, "png"),
-        Multimodal.MediaMeta("image", "png", 8, 8, 0L)),
-      Multimodal.MediaRow(2L, "not an image".getBytes,
-        Multimodal.MediaMeta("image", "raw", 4, 4, 0L))).toDS()
-    val byId = Multimodal.extractImageFeatures(rows, featureDim = 4)
-      .collect().map(f => f.id -> f).toMap
-    // real path: identical to calling the codec directly
-    val direct = ImageIoCodec.decodeImage(SyntheticImages.encode(1L, 8, 8, "png"), 4).get
-    assert(byId(1L).meanPixel == direct.meanPixel)
-    assert(byId(1L).features.toSeq == direct.features.toSeq)
-    // junk falls back to the deterministic stub instead of failing
-    val stub = Multimodal.StubCodec.decodeImage(
-      "not an image".getBytes, Multimodal.MediaMeta("image", "raw", 4, 4, 0L), 4)
-    assert(byId(2L).features.toSeq == stub.features.toSeq)
-  }
-
-  test("multimodal stub plumbing: features deterministic, frames sampled") {
-    import spark.implicits._
-    val media = Multimodal.fromBinaryColumn(spark,
-      docs(Seq((1L, "payload one"), (2L, "payload one"), (3L, "other"))),
-      "doc_id", "text", "image")
-    val feats = Multimodal.extractImageFeatures(media, featureDim = 8).collect()
-    assert(feats.length == 3)
-    val byId = feats.map(f => f.id -> f.features.toSeq).toMap
-    assert(byId(1L) == byId(2L)) // same payload -> same fake decode
-    assert(byId(1L) != byId(3L))
-    val video = Multimodal.fromBinaryColumn(spark,
-      docs(Seq((7L, "vid"))), "doc_id", "text", "video")
-    val frames = Multimodal.sampleVideoFrames(video, everyMs = 1000).collect()
-    assert(frames.length == 5) // 5000 ms / 1000
-    assert(frames.map(_.frameIdx).toSeq == (0 until 5))
   }
 
   test("AviCodec: MJPEG round trip, header timing, stride, stub fallback") {
@@ -2584,7 +2489,8 @@ class PipelineSpec extends SparkTestBase {
     import Multimodal._
     val samples = Array.tabulate(300)(i => SyntheticAudio.sample(7L, i).toShort)
     val bytes = WavCodec.encodePcm16Mono(samples, 16000)
-    assert(HeaderCodec.sniff(bytes).contains("wav"))
+    assert(new String(bytes, 0, 4, "US-ASCII") == "RIFF" &&
+      new String(bytes, 8, 4, "US-ASCII") == "WAVE")
     val (meta, parsed) = WavCodec.parse(bytes).get
     assert(meta == AudioMeta(16000, 1, 16, 300))
     assert(parsed.toSeq == samples.toSeq)
